@@ -72,6 +72,15 @@ object GraftSession {
       smallBytes: Long = 256L << 20): Int =
     if (bytes >= smallBytes) cores else math.min(cores, 8)
 
+  /** An integer `SPARK_GRAFT_*` knob: `None` when unset, else a value that
+    * must be an integer ≥ `min`. A malformed value throws naming the knob
+    * instead of quietly changing the algorithm.
+    */
+  def intKnob(name: String, raw: Option[String], min: Int): Option[Int] =
+    raw.map(v => v.trim.toIntOption.filter(_ >= min).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name must be an integer >= $min, got '$v'")))
+
   /** [[builder]] with the AQE ceiling conditioned on the session's known
     * input directory. `SPARK_GRAFT_INIT_PARTITIONS` still wins outright.
     */

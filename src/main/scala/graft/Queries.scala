@@ -2956,6 +2956,11 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
+  /** lm_score's collapse margin: duplication factor ≥ 2 (see lmScore),
+    * ~50σ above the probe's estimator noise.
+    */
+  private[graft] val lmScoreMargin = 2.0
+
   /** Bigram-LM fluency score — the CCNet/KenLM-class quality filter:
     * score each document by the average corpus-conditional probability
     * of its word bigrams, P(y|x) = c(xy)/c(x·) with c(x·) = occurrences
@@ -2996,23 +3001,8 @@ object Queries {
     // the explode+count work clears the overhead and grows with g
     // (g = 300 measured 30.0 → 6.4 s steady at the 300× dir). Both
     // branches are exact; the threshold picks performance only.
-    // r19: the probe's distinct count is APPROXIMATE (HLL++ over
-    // xxhash64(text), rsd 0.02 — SpanDedup.collapseWorthIt): the exact
-    // countDistinct shuffled the distinct raw TEXTS just to pick a
-    // branch; sketches keep the probe map-side, and xxhash64 never
-    // returns NULL so a NULL text counts in both n and d̂ (ADVICE r18).
-    // The ≥2 duplication bar is ~50σ above the estimator noise, and at
-    // the bar the two branches measure within the collapse overhead of
-    // each other — both exact, the threshold picks performance only.
-    val collapse = {
-      val c = docs.agg(count(lit(1)).as("n"),
-        approx_count_distinct(xxhash64(col("text")),
-          operators.SpanDedup.probeRsd).as("d")).head()
-      val worth = c.getLong(0) >= 2.0 * c.getLong(1)
-      operators.SpanDedup.logDispatch("lm_score", worth, c.getLong(0),
-        c.getLong(1))
-      worth
-    }
+    val collapse = operators.Dispatch.collapse("lm_score", docs,
+      Seq(col("text")), lmScoreMargin)
     // gk is the span family's 128-bit content-key contract (ADVICE r18:
     // stated here explicitly, not just by inheritance): two
     // constant-first-seeded xxhash64 halves behave as independent 64-bit

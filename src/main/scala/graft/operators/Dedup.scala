@@ -165,60 +165,36 @@ object Dedup {
   private def overTextGroups(docs: DataFrame, id: Column, text: Column,
       extras: Seq[(String, Column)] = Nil, scoreCol: String = "jac",
       intraScore: Column = lit(1.0))(
-      pairsOfReps: DataFrame => DataFrame): DataFrame = {
-    // group key = content fingerprint (+ any blocking columns the pair
-    // generator keys on — identical texts in different blocks must NOT
-    // collapse together, or block semantics would leak)
+      pairsOfReps: DataFrame => DataFrame): DataFrame =
+    textGroups("text_groups_pairs", docs, id, text, extras)(pairsOfReps) { g =>
+      g.expand(pairsOfReps(g.reps), scoreCol).unionByName(g.intraPairs
+        .select(col("id_a"), col("id_b"), intraScore.as(scoreCol)))
+    }
+
+  /** The dispatch shared by [[overTextGroups]] and
+    * [[edgesOverTextGroups]]: probe, then run `raw` over the
+    * (id, text, extras…) rows or `collapsed` over their content groups.
+    *
+    * The group key is the content fingerprint plus any blocking columns
+    * the pair generator keys on — identical texts in different blocks
+    * must NOT collapse together, or block semantics would leak. The probe
+    * reads RAW (text, extras) duplication instead: no normalize+md5 pass
+    * on a dup-free corpus just to pick the branch. That is conservative —
+    * raw-distinct ≥ fingerprint-distinct, so a corpus whose only
+    * duplicates are normalize-equal-but-raw-different takes the
+    * (always-correct) raw branch and merely forgoes the collapse.
+    */
+  private def textGroups(op: String, docs: DataFrame, id: Column,
+      text: Column, extras: Seq[(String, Column)])(
+      raw: DataFrame => DataFrame)(
+      collapsed: Dispatch.Groups => DataFrame): DataFrame = {
+    val named = extras.map { case (n, c) => c.as(n) }
+    val rows = docs.select(id.as("id") +: text.as("text") +: named: _*)
+    if (!Dispatch.collapse(op, docs, text +: extras.map(_._2),
+        Dispatch.margin)) return raw(rows)
     val fpCol = TextAnalysis.fingerprint(text)
-    val gk =
-      if (extras.isEmpty) fpCol
-      else struct(fpCol.as("fp") +: extras.map { case (n, c) => c.as(n) }: _*)
-    // adaptive: a corpus with no verbatim dups needs no collapse. r19
-    // (the span-family probe fix, VERDICT r18 task 5, applied here after
-    // the dedup_stats event-log audit showed this probe's stage carrying
-    // ~100 s CPU/rep at the 300× decade): the probe now reads RAW
-    // (text, extras) duplication with an APPROXIMATE distinct — one
-    // xxhash64 scan + HLL sketch merge, no normalize+md5 fingerprint
-    // pass, no cache materialization, no exact-distinct exchange, all
-    // spent before on dup-free corpora just to pick the branch.
-    // Conservative exactly like sourceOverlap's probe: raw-distinct ≥
-    // fingerprint-distinct, so a corpus whose only duplicates are
-    // normalize-equal-but-raw-different takes the (always-correct) raw
-    // branch and merely forgoes the collapse; both branches produce
-    // identical pair sets (the overTextGroups equivalence contract).
-    val probeKey = xxhash64(text +: extras.map(_._2): _*)
-    val pc = docs.agg(count(lit(1)).as("n"),
-      approx_count_distinct(probeKey, SpanDedup.probeRsd).as("d")).head()
-    val collapse = SpanDedup.collapseWorthIt(pc.getLong(0), pc.getLong(1),
-      SpanDedup.spanMargin)
-    SpanDedup.logDispatch("text_groups_pairs", collapse, pc.getLong(0),
-      pc.getLong(1))
-    val passThrough = docs.select(
-      id.as("id") +: text.as("text") +: extras.map { case (n, c) => c.as(n) }: _*)
-    if (!collapse) return pairsOfReps(passThrough)
-    // cached for the duration of the collapse branch only: the group/rep
-    // joins and the member expansion read it, and the eager
-    // localCheckpoint below guarantees they have all run before the
-    // finally-unpersist releases the memory
-    val members = docs.select(gk.as("gk"), id.as("id")).cache()
-    try {
-      val groups = members.groupBy(col("gk")).agg(min(col("id")).as("rid"))
-      val reps = passThrough.join(groups.select(col("rid").as("id")), "id")
-      val repPairs = pairsOfReps(reps)
-      val gkOf = groups.select(col("rid"), col("gk"))
-      val cross = repPairs
-        .join(gkOf.select(col("rid").as("id_a"), col("gk").as("gk_a")), "id_a")
-        .join(gkOf.select(col("rid").as("id_b"), col("gk").as("gk_b")), "id_b")
-        .join(members.select(col("gk").as("gk_a"), col("id").as("ma")), "gk_a")
-        .join(members.select(col("gk").as("gk_b"), col("id").as("mb")), "gk_b")
-        .select(least(col("ma"), col("mb")).as("id_a"),
-          greatest(col("ma"), col("mb")).as("id_b"), col(scoreCol))
-      val intra = members.select(col("gk"), col("id").as("id_a"))
-        .join(members.select(col("gk"), col("id").as("id_b")), "gk")
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), intraScore.as(scoreCol))
-      cross.unionByName(intra).localCheckpoint(true)
-    } finally members.unpersist(false)
+    val gk = if (extras.isEmpty) fpCol else struct(fpCol.as("fp") +: named: _*)
+    Dispatch.overGroups(rows, docs.select(gk.as("gk"), id.as("id")))(collapsed)
   }
 
   // -------------------------------------------------------------- minhash --
@@ -324,35 +300,11 @@ object Dedup {
     */
   private def edgesOverTextGroups(docs: DataFrame, id: Column, text: Column,
       extras: Seq[(String, Column)] = Nil)(
-      edgesOfReps: DataFrame => DataFrame): DataFrame = {
-    val fpCol = TextAnalysis.fingerprint(text)
-    val gk =
-      if (extras.isEmpty) fpCol
-      else struct(fpCol.as("fp") +: extras.map { case (n, c) => c.as(n) }: _*)
-    // same adaptive probe as overTextGroups (r19: approximate, raw-key,
-    // pre-cache — see the rationale there; this probe's exact form was
-    // the dedup_stats audit's single heaviest stage)
-    val probeKey = xxhash64(text +: extras.map(_._2): _*)
-    val pc = docs.agg(count(lit(1)).as("n"),
-      approx_count_distinct(probeKey, SpanDedup.probeRsd).as("d")).head()
-    val collapse = SpanDedup.collapseWorthIt(pc.getLong(0), pc.getLong(1),
-      SpanDedup.spanMargin)
-    SpanDedup.logDispatch("text_groups_edges", collapse, pc.getLong(0),
-      pc.getLong(1))
-    val passThrough = docs.select(
-      id.as("id") +: text.as("text") +: extras.map { case (n, c) => c.as(n) }: _*)
-    if (!collapse) return edgesOfReps(passThrough)
-    val members = docs.select(gk.as("gk"), id.as("id")).cache()
-    try {
-      val groups = members.groupBy(col("gk")).agg(min(col("id")).as("rid"))
-      val reps = passThrough.join(groups.select(col("rid").as("id")), "id")
-      val repPairs = edgesOfReps(reps)
-      val stars = members.join(groups, "gk")
-        .where(col("id") =!= col("rid"))
-        .select(col("rid").as("id_a"), col("id").as("id_b"))
-      repPairs.unionByName(stars).localCheckpoint(true)
-    } finally members.unpersist(false)
-  }
+      edgesOfReps: DataFrame => DataFrame): DataFrame =
+    textGroups("text_groups_edges", docs, id, text, extras)(edgesOfReps) { g =>
+      edgesOfReps(g.reps).unionByName(
+        g.stars.select(col("rid").as("id_a"), col("id").as("id_b")))
+    }
 
   /** LSH band keys off a k-slot signature array column: band b's key is the
     * xxhash64 of (b, slots[b*r .. b*r+r-1]) — the band index folds into the
@@ -773,8 +725,9 @@ object Dedup {
     * primitive long arrays (16 B/node) broadcast to a distributed frame,
     * never a boxed row seq. Above the cap: iterative min-label propagation, two shuffles
     * per round, rounds = graph diameter (near-dup clusters are shallow;
-    * `maxIter` bounds pathological chains). Both paths produce the
-    * identical min-reachable labeling.
+    * `maxIter` bounds pathological chains, and a loop still unconverged
+    * at `maxIter` throws). Both paths produce the identical min-reachable
+    * labeling.
     */
   def clusters(ids: DataFrame, pairs: DataFrame, maxIter: Int = 10,
       driverEdgeLimit: Long = 1L << 21): DataFrame = {
@@ -852,8 +805,7 @@ object Dedup {
     // rounds. So the shortcut engages only from round `shortcutFrom`
     // on: real corpora (diameter ≲ 5) never pay it, while a
     // pathological deep chain — which plain propagation would leave
-    // UNCONVERGED at maxIter, silently returning non-minimal roots —
-    // still closes within the round budget (reach ≈ shortcutFrom ·
+    // unconverged at maxIter, an error — still closes within the round budget (reach ≈ shortcutFrom ·
     // 2^(maxIter−shortcutFrom), ~96 hops at the defaults vs 10
     // plain). Exactness: every intermediate root is the min over SOME
     // reachable subset (propagation extends it one hop, the shortcut
@@ -864,8 +816,8 @@ object Dedup {
     // SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM overrides the engage round.
     val shortcutOff = sys.env
       .get("SPARK_GRAFT_CLUSTERS_NO_SHORTCUT").exists(_.trim == "1")
-    val shortcutFrom = sys.env
-      .getOrElse("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM", "6").toInt
+    val shortcutFrom =
+      shortcutFromKnob(sys.env.get("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM"))
     var shortcuts = 0
     while (iter < maxIter && !converged) {
       val viaNeighbors = edges
@@ -896,10 +848,25 @@ object Dedup {
     }
     System.err.println(s"[clusters] distributed min-label path: $iter " +
       s"round(s) ($shortcuts shortcut), converged=$converged")
+    // an unconverged loop holds roots that are not yet the component
+    // minimum: fail rather than return them
+    if (!converged)
+      throw new IllegalStateException(s"clusters: min-label propagation " +
+        s"did not converge within maxIter=$maxIter rounds ($shortcuts " +
+        s"shortcut; SPARK_GRAFT_CLUSTERS_NO_SHORTCUT=$shortcutOff, " +
+        s"SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM=$shortcutFrom) — raise " +
+        "maxIter or engage the shortcut earlier")
     // untouched nodes are their own root
     ids.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("root"))
   }
+
+  /** The SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM round: an integer ≥ 0,
+    * default 6.
+    */
+  private[graft] def shortcutFromKnob(raw: Option[String]): Int =
+    graft.GraftSession.intKnob("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM", raw, 0)
+      .getOrElse(6)
 
   // ---------------------------------------------------- embedding near-dup --
 

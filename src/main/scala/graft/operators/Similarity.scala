@@ -40,8 +40,8 @@ object Similarity {
     * embedding corpora deduplicate exactly when documents do, and every
     * member of an identical-vector group scores the same cosine against
     * everything (intra-group pairs score cosine(v, v), computed once per
-    * group — NOT assumed 1.0: the float norm product rounds). A two-count
-    * statistic skips the collapse on duplicate-free input.
+    * group — NOT assumed 1.0: the float norm product rounds). The
+    * [[Dispatch]] probe skips the collapse on duplicate-free input.
     *
     * The group key is the vector VALUE itself (arrays group and join
     * natively): grouping on a 64-bit vector hash would silently merge two
@@ -61,55 +61,25 @@ object Similarity {
     * (verbatim duplicates are quadratic poison for BOTH: all-pairs compute
     * and LSH bucket collisions alike grow as dup_factor²; with the
     * collapse, compute runs on distinct vectors and only the *output*
-    * expansion is dup-sized). Adaptive: a two-count statistic skips the
+    * expansion is dup-sized). Adaptive: the [[Dispatch]] probe skips the
     * machinery on duplicate-free input. Intra-group pairs score
     * cosine(v,v) computed once per group, not an assumed 1.0.
     */
   private def overVectorGroups(v: DataFrame, threshold: Double)(
-      pairsOfReps: DataFrame => DataFrame): DataFrame = {
-    // cached for this call only: the counts probe, the group/rep joins and
-    // the member expansion read it; the eager localCheckpoint below runs
-    // them all before the finally-unpersist releases the memory
-    // r19 (the span-family probe fix): the exact countDistinct here
-    // shuffled the FULL VECTORS (the distinct key is the embedding
-    // itself) just to pick a branch on every dup-free corpus; the
-    // approximate probe hashes each vector in the scan task and merges
-    // HLL sketches — no vector exchange, no cache materialization on
-    // the raw branch. Both branches are exact; the margin only selects
-    // performance (SpanDedup.collapseWorthIt).
-    val pc = v.agg(count(lit(1)).as("n"),
-      approx_count_distinct(xxhash64(col("v")),
-        SpanDedup.probeRsd).as("d")).head()
-    val collapse = SpanDedup.collapseWorthIt(pc.getLong(0), pc.getLong(1),
-      SpanDedup.spanMargin)
-    SpanDedup.logDispatch("vector_groups", collapse, pc.getLong(0),
-      pc.getLong(1))
-    if (!collapse) return pairsOfReps(v)
-    val members = v.select(col("v").as("gk"), col("id")).cache()
-    try {
-      val groups = members.groupBy(col("gk")).agg(min(col("id")).as("rid"))
-      val reps = v.join(groups.select(col("rid").as("id")), "id")
-      val repPairs = pairsOfReps(reps.select(col("id"), col("v")))
-      val gkOf = groups.select(col("rid"), col("gk"))
-      val cross = repPairs
-        .join(gkOf.select(col("rid").as("id_a"), col("gk").as("gk_a")), "id_a")
-        .join(gkOf.select(col("rid").as("id_b"), col("gk").as("gk_b")), "id_b")
-        .join(members.select(col("gk").as("gk_a"), col("id").as("ma")), "gk_a")
-        .join(members.select(col("gk").as("gk_b"), col("id").as("mb")), "gk_b")
-        .select(least(col("ma"), col("mb")).as("id_a"),
-          greatest(col("ma"), col("mb")).as("id_b"), col("cos"))
-      val selfCos = reps.select(col("id").as("rid"),
+      pairsOfReps: DataFrame => DataFrame): DataFrame =
+    // the probe hashes each vector in the scan task: no vector exchange,
+    // no cache on the duplicate-free branch (see Dispatch)
+    if (!Dispatch.collapse("vector_groups", v, Seq(col("v")), Dispatch.margin))
+      pairsOfReps(v)
+    else Dispatch.overGroups(v, v.select(col("v").as("gk"), col("id"))) { g =>
+      val selfCos = g.reps.select(col("id").as("rid"),
         cosine(col("v"), col("v")).as("cos"))
-      val intra = members.select(col("gk"), col("id").as("id_a"))
-        .join(members.select(col("gk"), col("id").as("id_b")), "gk")
-        .where(col("id_a") < col("id_b"))
-        .join(gkOf, "gk")
+      g.expand(pairsOfReps(g.reps), "cos").unionByName(g.intraPairs
+        .join(g.groups, "gk")
         .join(selfCos, "rid")
         .where(col("cos") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cos"))
-      cross.unionByName(intra).localCheckpoint(true)
-    } finally members.unpersist(false)
-  }
+        .select(col("id_a"), col("id_b"), col("cos")))
+    }
 
   private def cosinePairsRaw(v: DataFrame, threshold: Double): DataFrame = {
     val a = v.select(col("id").as("id_a"), col("v").as("v_a"))
@@ -203,33 +173,19 @@ object Similarity {
       threshold: Double, nPlanes: Int = 6, tables: Int = 128,
       dims: Int = 64): DataFrame = {
     val v0 = vectors.select(id.as("id"), vec.as("v"))
-    // approximate raw-key probe — see overVectorGroups (r19): no vector
-    // exchange, no cache on the duplicate-free branch
-    val pc = v0.agg(count(lit(1)).as("n"),
-      approx_count_distinct(xxhash64(col("v")),
-        SpanDedup.probeRsd).as("d")).head()
-    val collapse = SpanDedup.collapseWorthIt(pc.getLong(0), pc.getLong(1),
-      SpanDedup.spanMargin)
-    SpanDedup.logDispatch("lsh_cosine_edges", collapse, pc.getLong(0),
-      pc.getLong(1))
-    if (!collapse)
+    if (!Dispatch.collapse("lsh_cosine_edges", v0, Seq(col("v")),
+        Dispatch.margin))
       return lshCosinePairsRaw(v0, threshold, nPlanes, tables, dims)
         .select(col("id_a"), col("id_b"))
-    val members = v0.select(col("v").as("gk"), col("id")).cache()
-    try {
-      val groups = members.groupBy(col("gk")).agg(min(col("id")).as("rid"))
-      val reps = v0.join(groups.select(col("rid").as("id")), "id")
-      val repPairs = lshCosinePairsRaw(reps, threshold, nPlanes, tables,
+    Dispatch.overGroups(v0, v0.select(col("v").as("gk"), col("id"))) { g =>
+      val repPairs = lshCosinePairsRaw(g.reps, threshold, nPlanes, tables,
         dims).select(col("id_a"), col("id_b"))
-      val selfOk = reps
+      val selfOk = g.reps
         .where(cosine(col("v"), col("v")) >= threshold)
         .select(col("id").as("rid"))
-      val stars = members.join(groups, "gk")
-        .where(col("id") =!= col("rid"))
-        .join(selfOk, "rid")
-        .select(col("rid").as("id_a"), col("id").as("id_b"))
-      repPairs.unionByName(stars).localCheckpoint(true)
-    } finally members.unpersist(false)
+      repPairs.unionByName(g.stars.join(selfOk, "rid")
+        .select(col("rid").as("id_a"), col("id").as("id_b")))
+    }
   }
 
   private def lshCosinePairsRaw(v: DataFrame, threshold: Double,

@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   * pair expansion to per-doc stats) and run the window machinery over
   * DISTINCT texts only; per-doc results are recovered exactly from
   * group size / group min-id (see the equivalence arguments on each
-  * method). A duplication-free corpus skips the collapse entirely — two
-  * scalar counts on a slim (doc_id, 128-bit key) frame decide, the
+  * method). A duplication-free corpus skips the collapse entirely — the
+  * [[Dispatch]] probe on a slim (doc_id, 128-bit key) frame decides, the
   * AQE-style runtime-statistic dispatch used across the dedup family.
   *
   * The window key is TWO xxhash64 halves — h1 = xxhash64(ws) and h2 =
@@ -77,46 +77,6 @@ object SpanDedup {
     */
   private def collapseDisabled: Boolean =
     sys.env.get("SPARK_GRAFT_SPAN_NO_COLLAPSE").exists(_.trim == "1")
-
-  /** Dispatch probe verdict from (row count, APPROXIMATE distinct count):
-    * collapse when the measured duplication factor clears `margin`.
-    *
-    * r19 (VERDICT r18 task 5): the probes used EXACT countDistinct — on a
-    * dup-free 100 TB corpus that is a full distinct-key shuffle (for
-    * source_overlap/lm_score, a shuffle of the raw TEXT) spent only to
-    * decide a branch. Both branches are exact, so the threshold selects
-    * performance only and an approximate count decides just as well:
-    * HLL++ partials (rsd 0.02 → ~2.7k registers, a few KB per task)
-    * merge into one sketch — no Expand, no distinct exchange, map-side
-    * only. The margin absorbs the estimator error: an exact `n == d̂`
-    * test would misroute EVERY dup-free corpus (d̂ ≈ n ± 2% virtually
-    * never equals n), so collapse fires at duplication ≥ margin, where
-    * margin sits ≥ 5σ above the rsd. Corpora in the gray zone (true
-    * duplication within ~rsd of the margin) may take either branch —
-    * both exact, and at ≤ ~margin× duplication the two branches' costs
-    * are within the margin of each other by construction.
-    */
-  private[graft] def collapseWorthIt(n: Long, dApprox: Long,
-      margin: Double): Boolean = n >= margin * dApprox
-
-  /** HLL++ relative standard deviation for every dispatch probe. */
-  private[graft] val probeRsd = 0.02
-
-  /** One stderr line per dispatch decision, so any run (oracle verify,
-    * bench, decade probe) records WHICH branch executed — the collapse
-    * arms fire only on dup-heavy corpora, and without the log a green
-    * verify can't prove it exercised them (VERDICT r18 task 4).
-    */
-  private[graft] def logDispatch(op: String, collapse: Boolean, n: Long,
-      dApprox: Long): Unit =
-    System.err.println(s"[span-dispatch] $op: " +
-      (if (collapse) "collapse" else "raw") + s" (n=$n, d~=$dApprox)")
-
-  /** Span-family margin: the collapse pays at ANY real duplication (the
-    * raw path explodes stride-1 windows per copy), so the margin is just
-    * the estimator-noise floor (5σ of rsd 0.02).
-    */
-  private[graft] val spanMargin = 1.1
 
   /** (key, h) window-instance frame: one row per rolling `n`-word window
     * of `words`, keyed by whatever identity column the caller groups on
@@ -204,20 +164,12 @@ object SpanDedup {
     if (collapseDisabled) return rawSpanStats(k, n)
     val members = k.select(col("doc_id"), col("gk")).cache()
     try {
-      // adaptive: a corpus with no verbatim dups needs no collapse — two
-      // scalar counts on the slim cached key frame decide (the runtime-
-      // statistic dispatch of Dedup.overTextGroups), and the dup-free
-      // path skips the group machinery entirely. The distinct count is
-      // APPROXIMATE (see collapseWorthIt): sketches ride the one scalar
-      // agg, no distinct-key exchange — xxhash64 folds the 128-bit key
-      // struct to the sketch input (never NULL, so the probe's n and d̂
-      // count the same rows)
-      val counts = members.agg(count(lit(1)).as("n"),
-        approx_count_distinct(xxhash64(col("gk")), probeRsd).as("d")).head()
-      val worth = collapseWorthIt(counts.getLong(0), counts.getLong(1),
-        spanMargin)
-      logDispatch("span_stats", worth, counts.getLong(0), counts.getLong(1))
-      if (!worth) return rawSpanStats(k, n)
+      // adaptive: a corpus with no verbatim dups needs no collapse — the
+      // Dispatch probe over the slim cached key frame decides (xxhash64
+      // folds the 128-bit key struct to the sketch input), and the
+      // dup-free path skips the group machinery entirely
+      if (!Dispatch.collapse("span_stats", members, Seq(col("gk")),
+          Dispatch.margin)) return rawSpanStats(k, n)
       val reps = repGroups(k)
       val winsG = windows(reps, Seq("gk"), col("w"), col("nwl"), n)
       // same single-pass window shape as rawSpanStats (one consumer, one
@@ -314,14 +266,9 @@ object SpanDedup {
     if (collapseDisabled) return rawNoveltyStats(k, n)
     val members = k.select(col("doc_id"), col("gk")).cache()
     try {
-      // approximate probe — see spanStats / collapseWorthIt
-      val counts = members.agg(count(lit(1)).as("n"),
-        approx_count_distinct(xxhash64(col("gk")), probeRsd).as("d")).head()
-      val worth = collapseWorthIt(counts.getLong(0), counts.getLong(1),
-        spanMargin)
-      logDispatch("novelty_stats", worth, counts.getLong(0),
-        counts.getLong(1))
-      if (!worth) return rawNoveltyStats(k, n)
+      // same probe as spanStats
+      if (!Dispatch.collapse("novelty_stats", members, Seq(col("gk")),
+          Dispatch.margin)) return rawNoveltyStats(k, n)
       val reps = repGroups(k)
       val winsG = windows(reps, Seq("gk", "min_doc"), col("w"), col("nwl"), n)
       // single-pass window shape (see rawSpanStats): first_doc(h) as a
@@ -387,14 +334,8 @@ object SpanDedup {
     require(minDocs >= 2, s"census threshold must be >= 2 docs, got $minDocs")
     require(k >= 1, s"census cut must keep >= 1 row, got $k")
     val kk = keyed(docs, id, text)
-    val useRaw = collapseDisabled || {
-      // approximate probe — see spanStats / collapseWorthIt
-      val c = kk.agg(count(lit(1)).as("n"),
-        approx_count_distinct(xxhash64(col("gk")), probeRsd).as("d")).head()
-      val worth = collapseWorthIt(c.getLong(0), c.getLong(1), spanMargin)
-      logDispatch("span_census", worth, c.getLong(0), c.getLong(1))
-      !worth
-    }
+    val useRaw = collapseDisabled ||
+      !Dispatch.collapse("span_census", kk, Seq(col("gk")), Dispatch.margin)
     // (src, weight, w, nwl): one row per doc (raw; weight 1) or per
     // distinct text (collapsed; weight = group size). src is doc_id on
     // the raw path — under SPARK_GRAFT_SPAN_NO_COLLAPSE the corpus may
@@ -450,8 +391,8 @@ object SpanDedup {
     * so one representative per group yields the identical (h, src)
     * distinct frame — exact, not approximate — and the corpus is
     * collapsed to distinct (source, text) pairs before the explode
-    * when the two scalar counts differ. Cross-source copies survive
-    * by construction (the collapse key includes the source).
+    * when the [[Dispatch]] probe finds duplication. Cross-source copies
+    * survive by construction (the collapse key includes the source).
     */
   def sourceOverlap(docs: DataFrame, source: Column, text: Column,
       n: Int): DataFrame = {
@@ -461,21 +402,9 @@ object SpanDedup {
     // (~free next to the window build). Conservative: raw-distinct ≥
     // normalized-distinct, so a corpus whose only duplicates are
     // normalize-equal-but-raw-different takes the (always-correct) raw
-    // branch and merely forgoes the collapse. The distinct count is
-    // APPROXIMATE (collapseWorthIt): the exact probe shuffled the full
-    // distinct (source, text) pairs — the raw TEXT bytes — just to pick
-    // a branch; HLL++ over xxhash64(source, text) keeps the probe
-    // map-side (sketches only), and the hash never returns NULL, so a
-    // NULL text/source row counts in both n and d̂ instead of silently
-    // inflating the measured duplication (ADVICE r18).
-    val collapse = !collapseDisabled && {
-      val c = docs.agg(count(lit(1)).as("n"),
-        approx_count_distinct(xxhash64(source, text), probeRsd).as("d"))
-        .head()
-      val worth = collapseWorthIt(c.getLong(0), c.getLong(1), spanMargin)
-      logDispatch("source_overlap", worth, c.getLong(0), c.getLong(1))
-      worth
-    }
+    // branch and merely forgoes the collapse.
+    val collapse = !collapseDisabled && Dispatch.collapse("source_overlap",
+      docs, Seq(source, text), Dispatch.margin)
     val normed = docs
       .select(source.as("src"), TextAnalysis.normalize(text).as("nt"))
     val texts =

@@ -417,8 +417,12 @@ object StreamingIngest {
     */
   def statePartitionsFor(cores: Int, bytes: Long,
       smallBytes: Long = 256L << 20): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(
-      if (bytes < smallBytes) math.min(cores, 8) else cores)
+    statePartitionsKnob(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
+      .getOrElse(if (bytes < smallBytes) math.min(cores, 8) else cores)
+
+  /** The SPARK_GRAFT_STATE_PARTITIONS override: an integer ≥ 1. */
+  private[graft] def statePartitionsKnob(raw: Option[String]): Option[Int] =
+    graft.GraftSession.intKnob("SPARK_GRAFT_STATE_PARTITIONS", raw, 1)
 
   /** Run `body` — which must START and AWAIT its streaming query — with
     * `spark.sql.shuffle.partitions` set to `n`, restoring the session

@@ -146,6 +146,26 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(f(32, 256L << 20, 256L << 20) == 32) // boundary inclusive-large
   }
 
+  test("integer knobs: unset keeps the default, malformed values throw " +
+      "naming the knob") {
+    val state = graft.streaming.StreamingIngest.statePartitionsKnob _
+    val from = graft.operators.Dedup.shortcutFromKnob _
+    assert(state(None) === None)
+    assert(state(Some("12")) === Some(12))
+    assert(from(None) === 6)
+    assert(from(Some("0")) === 0)
+    assert(from(Some(" 3 ")) === 3)
+    Seq(
+      "SPARK_GRAFT_STATE_PARTITIONS" -> (() => state(Some("0"))),
+      "SPARK_GRAFT_STATE_PARTITIONS" -> (() => state(Some("8x"))),
+      "SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM" -> (() => from(Some("-1"))),
+      "SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM" -> (() => from(Some("")))
+    ).foreach { case (name, parse) =>
+      val e = intercept[IllegalArgumentException](parse())
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
   test("bucketsFor: small inputs keep 8 fuller buckets, large inputs " +
       "track cores (the probe's parallelism ceiling)") {
     val mib = 1L << 20

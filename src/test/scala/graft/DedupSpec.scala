@@ -1,8 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Dispatch, Similarity, SpanDedup}
 
 class DedupSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -375,6 +376,47 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
         assert(spark.sharedState.cacheManager.isEmpty,
           s"cache manager not empty after $q")
       }
+    // the queries above are dup-free, so no collapse branch builds its
+    // members cache there; a 3x verbatim-replicated corpus sends every
+    // operator below down its collapse branch (asserted via the probe)
+    def replicate(df: DataFrame, id: String): DataFrame = {
+      val stride = df.agg(max(col(id))).head().getLong(0) + 1
+      (0 until 3).map(k => df.withColumn(id, col(id) + k * stride))
+        .reduce(_ unionByName _)
+    }
+    val docs = replicate(Tables.documents(spark, sf), "doc_id")
+    val vecs = replicate(Tables.embeddings(spark, sf), "vec_id")
+    assert(Dispatch.collapse("docs_x3", docs, Seq($"text"), Dispatch.margin))
+    assert(Dispatch.collapse("vectors_x3", vecs, Seq($"embedding"),
+      Dispatch.margin))
+    Seq[(String, () => DataFrame)](
+      "minhashEdges" -> (() =>
+        Dedup.minhashEdges(docs, $"doc_id", $"text", 0.5)),
+      "cosinePairs" -> (() =>
+        Similarity.cosinePairs(vecs, $"vec_id", $"embedding", 0.46)),
+      "lshCosineEdges" -> (() =>
+        Similarity.lshCosineEdges(vecs, $"vec_id", $"embedding", 0.46)),
+      "spanStats" -> (() => SpanDedup.spanStats(docs, $"doc_id", $"text", 8))
+    ).foreach { case (name, op) =>
+      op().write.format("noop").mode("overwrite").save()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"cache manager not empty after $name on the 3x corpus")
+    }
+  }
+
+  test("dispatch decision: empty and dup-free inputs stay raw, duplication " +
+      "at the margin collapses") {
+    Seq(Dispatch.margin, Queries.lmScoreMargin).foreach { m =>
+      assert(!Dispatch.worthIt(0L, 0L, m), s"margin $m")
+      assert(!Dispatch.worthIt(1000L, 1000L, m), s"margin $m")
+      val d = 400L
+      val atMargin = math.ceil(m * d).toLong
+      assert(Dispatch.worthIt(atMargin, d, m), s"margin $m")
+      assert(!Dispatch.worthIt(atMargin - 1, d, m), s"margin $m")
+      assert(Dispatch.worthIt(3 * d, d, m), s"margin $m")
+    }
+    assert(Dispatch.margin === 1.1)
+    assert(Queries.lmScoreMargin === 2.0)
   }
 
   test("clusters: both strategy paths close transitive chains identically") {
@@ -407,6 +449,13 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     val got = Dedup.clusters(ids, pairs, driverEdgeLimit = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to n).map(_ -> 1L).toMap)
+    // a budget too small to close the chain is an error, never roots
+    // that are not yet the component minimum
+    val e = intercept[IllegalStateException](
+      Dedup.clusters(ids, pairs, maxIter = 2, driverEdgeLimit = 0L))
+    Seq("maxIter=2", "SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM",
+      "SPARK_GRAFT_CLUSTERS_NO_SHORTCUT")
+      .foreach(k => assert(e.getMessage.contains(k), e.getMessage))
   }
 
   test("clusters: Long.MinValue id works on both strategy paths") {

@@ -3,8 +3,9 @@
 
 Creates <out_dir> as a copy of <sf_dir> with every table symlinked except
 documents.parquet, which is replaced by K verbatim replicas of every
-document (same text/lang/source/n_chars, doc_id shifted by 100000*k so
-ids stay distinct and ORDER BY doc_id stays deterministic). Running
+document (same text/lang/source/n_chars, replica k's doc_id shifted by
+k*(max(doc_id)+1) so ids stay distinct whatever their range and ORDER BY
+doc_id stays deterministic). Running
 graft.Verify + tools/compare_oracle.py against the fixture forces every
 verbatim-collapse dispatch (span family, lm_score, the dedup text-group
 collapse) onto its COLLAPSE branch — watch the `[span-dispatch]` stderr
@@ -33,9 +34,17 @@ for f in os.listdir(sf):
 
 con = duckdb.connect()
 ks = ",".join(str(i) for i in range(k))
+# replica stride: one past the largest id, so with non-negative ids no
+# shifted id can land on an original or on another replica's id
+lo, stride = con.execute(
+    f"SELECT min(doc_id), max(doc_id) + 1 "
+    f"FROM read_parquet('{sf}/documents.parquet')").fetchone()
+if lo is None or lo < 0:
+    sys.exit(f"{sf}/documents.parquet: need a non-empty table with "
+             f"non-negative doc_ids")
 con.execute(f"""
 COPY (
-  SELECT doc_id + 100000*k AS doc_id, text, lang, source, n_chars
+  SELECT doc_id + {stride}*k AS doc_id, text, lang, source, n_chars
   FROM read_parquet('{sf}/documents.parquet'),
        (SELECT unnest([{ks}]) AS k)
   ORDER BY doc_id
