@@ -275,9 +275,7 @@ object Bench {
     //    the median makes the column diffable across rounds).
     def timeOne(name: String, reset: Boolean): Double = {
       if (reset) {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        operators.Caching.clearAll(spark)
       }
       val fn = SparkEntry.queries(name)
       // guide §1.5: label the jobs so event-log/UI forensics map cleanly

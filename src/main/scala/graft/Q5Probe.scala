@@ -55,11 +55,7 @@ object Q5Probe {
         GraftSession.initPartitionsFor(
           cpus, GraftSession.inputBytes(dir)).toString))
     spark.range(1000000L).selectExpr("sum(id)").collect() // warm
-    def cold(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
+    def cold(): Unit = operators.Caching.clearAll(spark)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     def time(label: String, resetFirst: Boolean = true)(f: => Unit): Unit = {
       if (resetFirst) cold()

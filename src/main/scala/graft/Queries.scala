@@ -2240,53 +2240,25 @@ object Queries {
 
   /** 7-day moving average of daily order revenue. The ROWS-frame spec —
     * avg over the 6 preceding + current rows of the day-ordered daily
-    * series — is computed WITHOUT a single-partition global window (the
-    * r3 version planned `WindowExec: No Partition Defined`, serializing
-    * the whole series through one task): moving_sum(i) = P(i) − P(i−7)
-    * over inclusive prefix sums, and P is two-level exactly like
-    * `Chunking.packByBudget` — a parallel per-chunk cumulative window
-    * (chunk = day div 64, a STATIC key: no sampling, deterministic) plus
-    * exclusive chunk offsets scanned on the driver from one (count, sum)
-    * row per chunk (AQE-statistic-sized traffic, 1/64th of the series).
-    * All sums stay decimal-exact until the final double division, and
-    * the rn−7 self-join reproduces the frame without any global sort.
+    * series — is computed WITHOUT a single-partition global window:
+    * moving_sum(i) = P(i) − P(i−7) over inclusive prefix sums P, taken
+    * with the row number from the one-group [[Ranks.runningByRange]]
+    * scan, and the rn−7 self-join reproduces the frame without any
+    * global sort. Sums run in integer cents (the daily decimal total is
+    * exact at scale 2), so the only double ops are the final divisions.
     */
   def movingAvg(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val daily = orders(s, dir)
       .groupBy(dayBucket(col("o_orderdate")).as("day"))
       .agg(sum(dec2(col("o_totalprice"))).as("total_dec"))
-    val wChunk = Window.partitionBy(col("ck")).orderBy(col("day"))
-    val local = daily
-      .withColumn("ck", call_function("div", col("day"), lit(64L)))
-      .withColumn("lrn", row_number().over(wChunk).cast("long"))
-      .withColumn("lsum", sum(col("total_dec")).over(
-        wChunk.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint() // feeds the totals collect AND the offset join
-    val totals = local.groupBy(col("ck"))
-      .agg(count(lit(1)).as("c"), sum(col("total_dec")).as("t"))
-      .orderBy(col("ck")).collect()
-    var accC = 0L
-    var accS = java.math.BigDecimal.ZERO
-    val offs = totals.toSeq.map { r =>
-      val row = (r.getLong(0), accC, accS.toPlainString)
-      accC += r.getLong(1)
-      accS = accS.add(r.getDecimal(2))
-      row
-    }
-    // offsets ride as strings → decimal(38,2): exact, no inference quirks
-    val offsDf = offs.toDF("ck", "rn_off", "sum_off_s")
-      .select(col("ck"), col("rn_off"),
-        col("sum_off_s").cast("decimal(38,2)").as("sum_off"))
-    val g = local.join(broadcast(offsDf), "ck")
-      .select(col("day"), col("total_dec"),
-        (col("lrn") + col("rn_off")).as("rn"),
-        (col("lsum") + col("sum_off")).as("p"))
+      .withColumn("cents", (col("total_dec") * lit(100)).cast("long"))
+    val g = Ranks.running(daily, Nil, Seq("day"),
+      Seq("rn" -> lit(1L), "p" -> col("cents")))
     val prev = g.select((col("rn") + lit(7L)).as("rn"), col("p").as("p_prev"))
     g.join(prev, Seq("rn"), "left")
       .select(col("day"), col("total_dec").cast("double").as("total"),
-        ((col("p") - coalesce(col("p_prev"), lit(0).cast("decimal(38,2)")))
-          .cast("double")
+        ((col("p") - coalesce(col("p_prev"), lit(0L))).cast("double")
+          / lit(100.0)
           / least(col("rn"), lit(7L)).cast("double")).as("avg7"))
       .orderBy(col("day"))
   }
@@ -2726,7 +2698,7 @@ object Queries {
 
   /** Training-export shuffle + shard (operators/TrainExport.scala): the
     * corpus in seeded pseudo-random order with exactly-balanced
-    * round-robin shards — global rank via the two-level prefix scheme,
+    * round-robin shards — global rank via [[Ranks.runningByRange]],
     * never a global sort. The oracle IS the single-window spec the
     * two-level computation provably equals.
     */
@@ -2789,9 +2761,9 @@ object Queries {
        ORDER BY doc_id, chunk_idx"""
 
   /** Sequence packing: chunks → fixed 512-word training sequences by
-    * contiguous fill. graft computes the global prefix sum two-level
-    * (per-range-partition cumsum + broadcast offsets); the oracle IS the
-    * single global window the two-level form provably equals.
+    * contiguous fill. graft computes the global prefix sum with
+    * [[Ranks.runningByRange]]; the oracle IS the single global window
+    * the two-level form provably equals.
     */
   def docPacking(s: SparkSession, dir: String): DataFrame = {
     val chunks = Chunking.byWords(documents(s, dir).where(col("doc_id") < 200),
@@ -5825,7 +5797,7 @@ object Queries {
   }
 
   /** E54's wide-group escape, REGISTERED: the same Gini through the
-    * two-level range rank ([[Ranks.groupRankByRange]]) — every group's
+    * two-level range rank ([[Ranks.runningByRange]]) — every group's
     * sort runs range-parallel instead of one task per segment. Must
     * hash-match `gini_concentration`'s oracle exactly (identical ranks ⇒
     * identical decimal sums ⇒ identical division).
@@ -6230,9 +6202,8 @@ object Queries {
   // ------------------------------------ L33 weighted systematic sample ----
 
   /** Deterministic PPS corpus sampling ([[Sampling.weightedSystematic]]):
-    * ~100 draws proportional to document length, via the two-level
-    * prefix-sum cumulative line — no RNG, no global ordered window;
-    * oversized docs carry `n_hits` > 1.
+    * ~100 draws proportional to document length — no RNG, no global
+    * ordered window; oversized docs carry `n_hits` > 1.
     */
   def sampleWeighted(s: SparkSession, dir: String): DataFrame =
     Sampling.weightedSystematic(
@@ -6617,13 +6588,10 @@ object Queries {
     * weight reaches half the total. Pure integer comparisons (2·cum ≥
     * tot avoids any division), and no engine builtin computes the
     * weighted form; the plain median is the w≡1 special case (E6b).
-    * The cumulative weight runs through the E54b two-level range
-    * discipline ([[graft.operators.Ranks.groupCumSumByRange]]) — a plain
-    * per-group window cumsum would sort each of the 5 segments' full
-    * customer set in ONE task (the E54 wide-group wall); the two-level
-    * form range-partitions (segment, x, custkey), cumsums locally, and
-    * broadcasts the |partitions × segments| offset frame back. Totals
-    * reuse the same materialized layout (max cum per group).
+    * The cumulative weight and the segment total come from one
+    * [[Ranks.runningByRange]] scan — a plain per-group window cumsum
+    * would sort each of the 5 segments' full customer set in ONE task
+    * (the E54 wide-group wall).
     */
   def weightedMedian(s: SparkSession, dir: String): DataFrame = {
     val perCust = orders(s, dir).groupBy(col("o_custkey"))
@@ -6631,15 +6599,12 @@ object Queries {
         count(lit(1)).as("w"))
       .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment"), col("c_custkey"), col("x"), col("w"))
-    val cum = graft.operators.Ranks.groupCumSumByRange(perCust,
-      Seq("c_mktsegment"), Seq("x", "c_custkey"), "w", "cum")
-    val tots = cum.groupBy(col("c_mktsegment"))
-      .agg(max(col("cum")).as("tot")) // last running sum = group total
-    cum.join(broadcast(tots), Seq("c_mktsegment"))
-      .where(lit(2L) * col("cum") >= col("tot"))
+    Ranks.running(perCust, Seq("c_mktsegment"), Seq("x", "c_custkey"),
+        Seq("cum" -> col("w")))
+      .where(lit(2L) * col("cum") >= col("cum_total"))
       .groupBy(col("c_mktsegment"))
       .agg(min(col("x")).as("median_rev_c"),
-        min(col("tot")).as("n_orders"))
+        min(col("cum_total")).as("n_orders"))
       .orderBy(col("c_mktsegment"))
   }
 
@@ -7460,23 +7425,22 @@ object Queries {
     * — the cross-source comparison a raw score can't give (every
     * source's own distribution becomes uniform, so "keep the top 20% of
     * EACH source" is one predicate; the curation cut that doesn't let
-    * one verbose source flood the quality band). Ranks run through the
-    * E54b two-level range discipline (`Ranks.groupRankByRange`) — no
-    * source ever sorts in one task, which is the point: sources are few
-    * and wide, the exact shape the per-group window chokes on.
-    * Single-doc sources calibrate to 0.0.
+    * one verbose source flood the quality band). Rank and source size
+    * come from one [[Ranks.runningByRange]] scan — no source ever sorts
+    * in one task, which is the point: sources are few and wide, the
+    * exact shape the per-group window chokes on. Single-doc sources
+    * calibrate to 0.0.
     */
   def qualityCalibrated(s: SparkSession, dir: String): DataFrame = {
     val sc = documents(s, dir).select(col("doc_id"), col("source"),
       TextAnalysis.qualityScore(col("text")).as("score"))
-    val ranked = Ranks.groupRankByRange(sc, group = Seq("source"),
-      order = Seq("score", "doc_id"), out = "rnk")
-    val n = sc.groupBy(col("source")).agg(count(lit(1)).as("n"))
-    ranked.join(broadcast(n), "source")
+    val n = col("rnk_total")
+    Ranks.running(sc, Seq("source"), Seq("score", "doc_id"),
+        Seq("rnk" -> lit(1L)))
       .select(col("source"),
-        when(col("n") === 1, lit(0L)).otherwise(
+        when(n === 1, lit(0L)).otherwise(
           least(floor(((col("rnk") - 1).cast("double")
-            / (col("n") - 1).cast("double")) * 10), lit(9L)))
+            / (n - 1).cast("double")) * 10), lit(9L)))
           .as("decile"))
       .groupBy(col("source"), col("decile"))
       .agg(count(lit(1)).as("n_docs"))
@@ -7817,8 +7781,8 @@ object Queries {
     * the quartile grid in the SAME single pass: the smallest x with
     * 4·cum ≥ tot / 2·cum ≥ tot / 4·cum ≥ 3·tot (pure integer
     * comparisons, no division), read as three conditional MINs over the
-    * one cumulative-weight frame. The cumsum still runs the E54b
-    * two-level range discipline, so no segment ever sorts in one task;
+    * one cumulative-weight frame. The cumsum is the same
+    * [[Ranks.runningByRange]] scan, so no segment ever sorts in one task;
     * adding quantile points costs one `when`-guarded agg each, not
     * another shuffle — the argument for the prefix-sum formulation over
     * per-quantile nth-element passes.
@@ -7829,20 +7793,16 @@ object Queries {
         count(lit(1)).as("w"))
       .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment"), col("c_custkey"), col("x"), col("w"))
-    val cum = graft.operators.Ranks.groupCumSumByRange(perCust,
-      Seq("c_mktsegment"), Seq("x", "c_custkey"), "w", "cum")
-    val tots = cum.groupBy(col("c_mktsegment"))
-      .agg(max(col("cum")).as("tot"))
-    cum.join(broadcast(tots), Seq("c_mktsegment"))
+    val tot = col("cum_total")
+    Ranks.running(perCust, Seq("c_mktsegment"), Seq("x", "c_custkey"),
+        Seq("cum" -> col("w")))
       .groupBy(col("c_mktsegment"))
       .agg(
-        min(when(lit(4L) * col("cum") >= col("tot"), col("x")))
-          .as("p25_rev_c"),
-        min(when(lit(2L) * col("cum") >= col("tot"), col("x")))
-          .as("p50_rev_c"),
-        min(when(lit(4L) * col("cum") >= lit(3L) * col("tot"), col("x")))
+        min(when(lit(4L) * col("cum") >= tot, col("x"))).as("p25_rev_c"),
+        min(when(lit(2L) * col("cum") >= tot, col("x"))).as("p50_rev_c"),
+        min(when(lit(4L) * col("cum") >= lit(3L) * tot, col("x")))
           .as("p75_rev_c"),
-        min(col("tot")).as("n_orders"))
+        min(tot).as("n_orders"))
       .orderBy(col("c_mktsegment"))
   }
 
@@ -8450,11 +8410,11 @@ object Queries {
   /** RFM segmentation: each customer scored 1–5 on Recency (last order
     * day), Frequency (order count) and Monetary (exact decimal cents),
     * reduced to the ≤125-cell segment census — the classic CRM cut, and
-    * a three-fold exercise of the E54b two-level rank (customers are ONE
-    * wide group; a plain ntile window would sort them all in a single
-    * task). Quintile index is pure integer math (⌊(rank−1)·5/n⌋ + 1, a
-    * broadcast one-row n); ties break on custkey so every engine ranks
-    * identically.
+    * a three-fold exercise of the one-group [[Ranks.runningByRange]] rank
+    * (customers are ONE wide group; a plain ntile window would sort them
+    * all in a single task). Quintile index is pure integer math
+    * (⌊(rank−1)·5/n⌋ + 1, n = the scan's group total); ties break on
+    * custkey so every engine ranks identically.
     */
   def rfmSegments(s: SparkSession, dir: String): DataFrame = {
     val perCust = orders(s, dir).groupBy(col("o_custkey"))
@@ -8463,17 +8423,16 @@ object Queries {
         (sum(dec2(col("o_totalprice"))) * lit(100)).cast("long")
           .as("monetary_c"))
       .localCheckpoint() // three rank layouts + the census read it
-    val nFrame = perCust.agg(count(lit(1)).as("n"))
     val ranked = Seq(
       (Seq("recency_day", "o_custkey"), "rk_r"),
       (Seq("freq", "o_custkey"), "rk_f"),
       (Seq("monetary_c", "o_custkey"), "rk_m"))
       .foldLeft(perCust) { case (df, (ord, out)) =>
-        Ranks.groupRankByRange(df, Seq(), ord, out)
+        Ranks.running(df, Nil, ord, Seq(out -> lit(1L)))
       }
     def quint(rk: String) =
-      (call_function("div", (col(rk) - 1) * 5, col("n")) + 1)
-    ranked.crossJoin(broadcast(nFrame))
+      (call_function("div", (col(rk) - 1) * 5, col(s"${rk}_total")) + 1)
+    ranked
       .select(quint("rk_r").as("r_score"), quint("rk_f").as("f_score"),
         quint("rk_m").as("m_score"), col("monetary_c"))
       .groupBy(col("r_score"), col("f_score"), col("m_score"))

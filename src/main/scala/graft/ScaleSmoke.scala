@@ -196,9 +196,7 @@ object ScaleSmoke {
         // current query's own caches at 30× and inflates it up to 4× —
         // the run-order artifact class every round has had to re-measure
         // isolated; clearing makes scale rows diffable directly
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        operators.Caching.clearAll(spark)
         val t0 = System.nanoTime()
         try SparkEntry.queries(name)(spark, out)
           .write.format("noop").mode("overwrite").save()

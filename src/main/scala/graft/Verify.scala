@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * throws is skipped so the rest still dump, then named at the end and
+  * the run exits nonzero. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -29,13 +31,16 @@ object Verify {
     // dev loop: SPARK_GRAFT_VERIFY_ONLY=a,b restricts the dump (driver unset)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -68,6 +73,7 @@ object Verify {
     // the sweep (no python3/duckdb, script absent) warns and passes —
     // only a CLEAN sweep reporting a real divergence fails Verify.
     // SPARK_GRAFT_RENDER_PARITY=0 opts out for dev loops.
+    var renderFailed = false
     if (sys.env.get("SPARK_GRAFT_RENDER_PARITY").forall(_ != "0")) {
       val script = Paths.get("tools/render_parity.py")
       if (Files.exists(script)) {
@@ -82,7 +88,7 @@ object Verify {
               "[verify] RENDER PARITY FAILED — a registered query's " +
                 "rendered frame diverges from its oracle frame (see FAIL " +
                 "lines above); the driver's hash gate would red-flag it")
-            sys.exit(1)
+            renderFailed = true
           } else if (p.exitValue() != 0) {
             System.err.println("[verify] render-parity sweep could not " +
               "run cleanly (non-FAIL failure above) — skipping the gate")
@@ -94,5 +100,8 @@ object Verify {
       } else System.err.println(
         "[verify] tools/render_parity.py not found — render gate skipped")
     }
+    if (failed.nonEmpty) System.err.println(
+      s"[verify] ${failed.size} queries FAILED: ${failed.mkString(", ")}")
+    if (failed.nonEmpty || renderFailed) sys.exit(1)
   }
 }

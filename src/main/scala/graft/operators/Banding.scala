@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Quality banding — exact `ntile(n) OVER (PARTITION BY stratum ORDER BY
   * keys)` without a per-stratum single-task sort.
@@ -12,17 +11,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * sorts the stratum's ENTIRE row set — fine when strata are many and
   * small, a stalled multi-TB stage when they are few and huge (languages
   * over a web corpus: a handful of strata covering 100 TB). This operator
-  * computes the same global rank two-level, the machinery proven in
-  * `Chunking.packByBudget` / `Queries.movingAvg`:
-  *
-  *   1. range-partition by (stratum, keys...) — every task holds a
-  *      contiguous slice of the total order, all tasks sort in parallel;
-  *   2. per-(partition, stratum) local `row_number`;
-  *   3. collect ONE (count) row per (partition, stratum) — AQE-statistic-
-  *      sized driver traffic, never row data — and scan it into exclusive
-  *      per-stratum offsets plus stratum totals;
-  *   4. broadcast the offsets back; global rank = local + offset, and the
-  *      band falls out of the closed-form ntile bucket arithmetic.
+  * takes the global rank and the stratum size from the two-level range
+  * scan [[Ranks.runningByRange]] (rank = running sum of 1, n = its group
+  * total); the band falls out of the closed-form ntile bucket arithmetic.
   *
   * Bucket arithmetic (SQL-standard ntile, bucket sizes differ by ≤ 1,
   * larger buckets first): with n rows and b buckets, q = n div b,
@@ -36,18 +27,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * `orderCols` totally orders each stratum, so the DuckDB ntile window
   * doubles as this operator's oracle.
   *
-  * The few-large-strata premise is ENFORCED, not assumed: the counts
-  * collect in step 3 is bounded at `maxStrata + shuffle.partitions` rows
-  * (range partitioning puts each stratum in contiguous partitions, so the
-  * (partition, stratum) pair count is ≤ strata + partitions − 1 — the cap
-  * trips exactly when distinct strata exceed `maxStrata`). Past the cap,
-  * high-cardinality strata route to the plain window formulation, which is
-  * the right plan for that shape anyway (many strata parallelize across
-  * window tasks; the two-level machinery would instead collect unbounded
-  * offset rows to the driver). The guard rides on the collect the operator
-  * needs anyway — no separate cardinality probe executing the upstream
-  * pipeline once extra (the r7 version ran an `approx_count_distinct`
-  * pre-pass per call).
+  * The few-large-strata premise is ENFORCED, not assumed: `maxStrata` is
+  * the scan's group bound, which rides on the slice collect the scan needs
+  * anyway — no separate cardinality probe executing the upstream pipeline
+  * once extra. Past it, high-cardinality strata route to the plain window
+  * formulation, the right plan for that shape (many strata parallelize
+  * across window tasks).
+  *
+  * Storage: the scan's materialized layout is released before returning
+  * ([[Caching.releasing]]) instead of renting storage memory for the
+  * session lifetime; the banded result is eagerly checkpointed.
   */
 object Banding {
 
@@ -55,93 +44,22 @@ object Banding {
       orderCols: Seq[String], buckets: Int,
       out: String = "band", maxStrata: Int = 256): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val internal = Seq("_pid", "_lrn", "_opid", "_ost", "_off", "_n", out)
-    val clash = df.columns.toSet.intersect(internal.toSet)
-    require(clash.isEmpty,
-      s"ntileByStratum: input columns collide with internal/output names: " +
-        s"${clash.mkString(", ")} — rename them or pass a different `out`")
-    val spark = df.sparkSession
-    val rangeKeys = (stratumCol +: orderCols).map(col)
-    val ranged = df.repartitionByRange(rangeKeys: _*)
-      .withColumn("_pid", spark_partition_id())
-    val wLocal = Window.partitionBy(col("_pid"), col(stratumCol))
-      .orderBy(orderCols.map(col(_).asc): _*)
-    // persisted (not localCheckpoint'ed): it feeds the counts collect AND
-    // the offset join, and a cache-manager entry can be released
-    // deterministically below — Dataset.unpersist is a no-op on a
-    // checkpoint, which is how the r6 version leaked this frame for the
-    // session lifetime
-    val local = ranged
-      .withColumn("_lrn", row_number().over(wLocal).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one scalar per (partition, stratum) — strata are few (guarded), so
-    // this is AQE-statistic-sized driver traffic. The cardinality guard
-    // rides ON this collect: range partitioning by (stratum, keys) keeps
-    // each stratum in contiguous partitions, so (pid, stratum) pairs ≤
-    // strata + partitions − 1 — a LIMIT of maxStrata + partitions bounds
-    // the collect AND trips exactly when distinct strata exceed maxStrata.
-    // The guard reuses the pass the operator needs anyway instead of a
-    // separate approx_count_distinct pre-pass that executed the whole
-    // upstream pipeline once extra per call (r7 shape).
-    val collectCap =
-      maxStrata + spark.sessionState.conf.numShufflePartitions
-    val counts = local.groupBy(col("_pid"), col(stratumCol))
-      .agg(count(lit(1)).as("c")).limit(collectCap + 1).collect()
-    // cap trip = bounded collect truncated; exact distinct count (cheap —
-    // the rows are already on the driver) enforces the documented
-    // "> maxStrata routes to the window path" invariant in the band
-    // between maxStrata and the cap upper bound
-    if (counts.length > collectCap ||
-        counts.iterator.map(_.get(1)).toSet.size > maxStrata) {
-      // too many strata for driver-side offsets; the range shuffle above
-      // is sunk cost on this rare path — return the lazy window plan over
-      // the original frame and release the intermediate
-      local.unpersist(false)
-      val w = Window.partitionBy(col(stratumCol))
-        .orderBy(orderCols.map(col(_).asc): _*)
-      return df.withColumn(out, ntile(buckets).over(w).cast("long"))
-    }
-    val offRows = counts.groupBy(_.get(1)).toSeq.flatMap { case (st, rows) =>
-      // range partitioning makes ascending pid = ascending global order
-      val sorted = rows.sortBy(_.getInt(0))
-      val total = sorted.map(_.getLong(2)).sum
-      var acc = 0L
-      sorted.map { r =>
-        val row = Row(r.getInt(0), st, acc, total)
-        acc += r.getLong(2)
-        row
-      }
-    }
-    val stType = df.schema(stratumCol).dataType
-    val offSchema = StructType(Seq(
-      StructField("_opid", IntegerType, nullable = false),
-      StructField("_ost", stType),
-      StructField("_off", LongType, nullable = false),
-      StructField("_n", LongType, nullable = false)))
-    val offsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1), offSchema)
+    Ranks.requireFree("ntileByStratum", df, Seq(out))
     val b = lit(buckets.toLong)
-    val rank = col("_lrn") + col("_off")
-    val q = call_function("div", col("_n"), b)
-    val r = col("_n") % b
+    val rank = col("_rank")
+    val n = col("_rank_total")
+    val q = call_function("div", n, b)
+    val r = n % b
     val head = r * (q + lit(1L))
     val band = when(rank <= head,
         call_function("div", rank - 1L, q + 1L) + 1L)
       .otherwise(r + call_function("div", rank - head - 1L, q) + 1L)
-    // null-SAFE stratum equality: a window's PARTITION BY groups nulls into
-    // their own partition, so a null stratum must match its offset row —
-    // a plain equi-join would silently drop every null-stratum row
-    val joined = local.join(broadcast(offsDf),
-        col("_pid") === col("_opid") && col(stratumCol) <=> col("_ost"))
-      .withColumn(out, band)
-      .select(df.columns.toIndexedSeq.map(col) :+ col(out): _*)
-    // release `local` deterministically instead of renting storage memory
-    // for the session lifetime: materialize the result eagerly (same
-    // Caching.withCached pattern — the result's own checkpoint is freed by
-    // the ContextCleaner once the frame goes out of scope), then unpersist
-    // the intermediate
-    val result = joined.localCheckpoint(true)
-    local.unpersist(false)
-    result
+    Caching.releasing(
+      Ranks.runningByRange(df, Seq(stratumCol), orderCols,
+          Seq("_rank" -> lit(1L)), maxStrata)
+        .map(_.select(df.columns.toIndexedSeq.map(col) :+ band.as(out): _*)))
+      .getOrElse(df.withColumn(out, ntile(buckets).over(
+        Window.partitionBy(col(stratumCol))
+          .orderBy(orderCols.map(col(_).asc): _*)).cast("long")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Query-scoped cache lifecycle.
   *
@@ -32,5 +32,31 @@ object Caching {
     frames.foreach(_.cache())
     try body.localCheckpoint(true)
     finally frames.foreach(_.unpersist(false))
+  }
+
+  /** Run `body`, eagerly checkpoint the frame it returns, then unpersist
+    * every RDD that `body` registered — checkpoints included, which
+    * `Dataset.unpersist` cannot free. The one residual is the result's own
+    * checkpoint, released by the ContextCleaner. A `None` body releases
+    * its intermediates and materializes nothing. Assumes no concurrent
+    * persist call races `body` (queries build plans one at a time).
+    */
+  def releasing(body: => Option[DataFrame]): Option[DataFrame] = {
+    val sc = SparkSession.active.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    val registered = sc.getPersistentRDDs.keySet.diff(before)
+    try out.map(_.localCheckpoint(true))
+    finally registered.foreach(id =>
+      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+  }
+
+  /** Drop every cached frame and persisted RDD of the session, blocking —
+    * the cold reset between timed queries.
+    */
+  def clearAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
   }
 }

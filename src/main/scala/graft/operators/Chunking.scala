@@ -18,13 +18,11 @@ object Chunking {
     * contiguous fill in a deterministic global order:
     * `pack_id = floor(exclusive_prefix_sum(words) / budget)`.
     *
-    * The global prefix sum is computed two-level — per-range-partition
-    * window cumsum plus per-partition exclusive offsets — so no stage ever
-    * sees more than one partition's rows in one task, yet the assignment
-    * is exactly the single-ordered-window semantics and *independent* of
-    * partition boundaries (the oracle formulation IS the global window).
-    * The offsets are one scalar per partition (AQE-statistics-sized, not
-    * data-sized driver traffic).
+    * The global prefix sum is the one-group [[Ranks.runningByRange]] scan
+    * (exclusive prior = running − own weight): no stage ever sorts the
+    * whole order in one task, yet the assignment is exactly the
+    * single-ordered-window semantics and independent of partition
+    * boundaries (the oracle formulation IS the global window).
     */
   def packByBudget(chunks: DataFrame, orderKeys: Seq[String], words: Column,
       budgetWords: Long): DataFrame = {
@@ -32,43 +30,12 @@ object Chunking {
     // only the order keys + weight ride the prefix-sum shuffles; the full
     // payload (chunk text etc.) joins its pack id back exactly once
     val narrow = chunks.select(keyCols :+ words.as("_w"): _*)
-    val assignment = withExclusivePrior(narrow, orderKeys)
+    val assignment =
+      Ranks.running(narrow, Nil, orderKeys, Seq("_cum" -> col("_w")))
       .withColumn("pack_id",
-        call_function("div", col("_prior"), lit(budgetWords)))
+        call_function("div", col("_cum") - col("_w"), lit(budgetWords)))
       .select(keyCols :+ col("pack_id"): _*)
     chunks.join(assignment, orderKeys)
-  }
-
-  /** `narrow` (order keys + a long `_w` weight) plus `_prior` = the GLOBAL
-    * exclusive prefix sum of `_w` in `orderKeys` order, computed two-level
-    * (per-range-partition window cumsum + one broadcast scalar offset per
-    * partition) — exactly the single-ordered-window semantics, with no
-    * stage ever holding more than one partition and only O(partitions)
-    * driver traffic.
-    */
-  private[operators] def withExclusivePrior(narrow: DataFrame,
-      orderKeys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyCols = orderKeys.map(col)
-    val ranged = narrow.repartitionByRange(keyCols: _*)
-      .withColumn("_pid", spark_partition_id())
-    val wIn = Window.partitionBy(col("_pid")).orderBy(keyCols.map(_.asc): _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withLocal = ranged
-      .withColumn("_local_prior", coalesce(sum(col("_w")).over(wIn), lit(0L)))
-      .localCheckpoint()
-    val totals = withLocal.groupBy(col("_pid"))
-      .agg(sum(col("_w")).as("t")).orderBy(col("_pid"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, t)) =>
-      (pid, acc + t)
-    }.sliding(2).collect { case Array((_, acc), (pid, _)) => (pid, acc) }.toSeq
-    val spark = narrow.sparkSession
-    import spark.implicits._
-    val offsetsDf = offsets.toDF("_pid", "_offset")
-    withLocal.join(broadcast(offsetsDf), "_pid")
-      .withColumn("_prior", col("_local_prior") + col("_offset"))
-      .drop("_pid", "_local_prior", "_offset")
   }
 
   /** GPT-style pretraining packing: the corpus token stream, concatenated
@@ -81,7 +48,8 @@ object Chunking {
     *
     * Zero-token documents contribute no rows. The block explode is
     * per-doc narrow (a doc spans ≤ tokens/blockTokens + 1 blocks); the
-    * only shuffle is the range partition inside the two-level prefix sum.
+    * only shuffle is the range partition of the [[Ranks.runningByRange]]
+    * prefix sum.
     */
   def blockSlice(docs: DataFrame, idCol: String, tokens: Column,
       blockTokens: Long): DataFrame = {
@@ -89,7 +57,8 @@ object Chunking {
     val narrow = docs.select(col(idCol), tokens.cast("long").as("_w"))
       .where(col("_w") > 0)
     val b = lit(blockTokens)
-    withExclusivePrior(narrow, Seq(idCol))
+    Ranks.running(narrow, Nil, Seq(idCol), Seq("_cum" -> col("_w")))
+      .withColumn("_prior", col("_cum") - col("_w"))
       .withColumn("block_id", explode(sequence(
         call_function("div", col("_prior"), b),
         call_function("div", col("_prior") + col("_w") - 1L, b))))

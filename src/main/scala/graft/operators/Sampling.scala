@@ -92,9 +92,8 @@ object Sampling {
     *
     * All arithmetic is non-negative 64-bit integer — ⌈prior/step⌉ via
     * div(prior+step−1, step), so truncating (Spark `div`) and flooring
-    * (DuckDB `//`) division agree. The global cumulative line is the
-    * [[Chunking.withExclusivePrior]] two-level prefix sum — no global
-    * ordered window, O(partitions) driver traffic. Rows with w ≥ step
+    * (DuckDB `//`) division agree. The cumulative line and its total are
+    * the one-group [[Ranks.runningByRange]] scan. Rows with w ≥ step
     * can be sampled multiple times (`n_hits` > 1) — the standard PPS
     * convention for oversized units.
     */
@@ -103,11 +102,10 @@ object Sampling {
     require(k > 0, "k must be positive")
     val keyCols = orderKeys.map(col)
     val narrow = df.select(keyCols :+ weight.cast("long").as("_w"): _*)
-    val total = narrow.agg(sum(col("_w")).as("_total"))
-    Chunking.withExclusivePrior(narrow, orderKeys)
-      .crossJoin(broadcast(total))
+    Ranks.running(narrow, Nil, orderKeys, Seq("_cum" -> col("_w")))
+      .withColumn("_prior", col("_cum") - col("_w"))
       .withColumn("_step",
-        call_function("div", col("_total") + lit(k - 1), lit(k)))
+        call_function("div", col("_cum_total") + lit(k - 1), lit(k)))
       .withColumn("_first", call_function("div",
         col("_prior") + col("_step") - 1, col("_step")) * col("_step"))
       .where(col("_first") < col("_prior") + col("_w"))

@@ -138,10 +138,8 @@ object Stats {
     *
     * Shape: input is the per-entity frame (already one fact agg in the
     * caller); the rank is a per-group window sort. With few large groups
-    * the sort concentrates per-group in one task — the 100 TB path is the
-    * two-level range-partitioned rank ([[Chunking]]'s prefix-sum
-    * discipline applied to ranks) which trades one driver-side
-    * O(partitions×groups) offset pass for full sort parallelism.
+    * the sort concentrates per-group in one task — `twoLevelRank` takes
+    * the rank from [[Ranks.runningByRange]] instead.
     */
   def gini(perEntity: DataFrame, group: Column, ord: Column,
       x: Column, twoLevelRank: Boolean = false): DataFrame = {
@@ -149,12 +147,10 @@ object Stats {
     val ranked = Window.partitionBy(group).orderBy(x.asc, ord.asc)
     val withRank =
       if (twoLevelRank) {
-        // few WIDE groups: the per-group window would sort each group in
-        // one task — rank through [[Ranks.groupRankByRange]] instead.
         // Caller contract: group/ord/x are plain column references.
         val named = perEntity
           .withColumn("_g", group).withColumn("_x", x).withColumn("_o", ord)
-        Ranks.groupRankByRange(named, Seq("_g"), Seq("_x", "_o"), out = "_i")
+        Ranks.running(named, Seq("_g"), Seq("_x", "_o"), Seq("_i" -> lit(1L)))
       } else perEntity
         .withColumn("_i", row_number().over(ranked).cast("long"))
     withRank

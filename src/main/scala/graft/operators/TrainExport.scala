@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Final training-data export: a deterministic global shuffle of the
@@ -19,12 +18,9 @@ import org.apache.spark.sql.functions._
   * Shard = global rank in shuffled order, round-robin mod `nShards` —
   * EXACT balance (sizes differ by ≤ 1), unlike hash-mod sharding whose
   * skew is only bounded in expectation. The global rank never sorts
-  * globally: the same two-level scheme as [[Chunking.packByBudget]] —
-  * range-partition on the shuffle key, per-partition `row_number`, plus
-  * one broadcast scalar offset per partition (collect traffic is
-  * O(partitions), never data-sized). Assignment is provably independent
-  * of partition boundaries, so the oracle's single-window formulation is
-  * the exact spec.
+  * globally: it is the one-group [[Ranks.runningByRange]] scan over the
+  * shuffle key, independent of partition boundaries, so the oracle's
+  * single-window formulation is the exact spec.
   */
 object TrainExport {
 
@@ -35,27 +31,12 @@ object TrainExport {
   def shuffleShard(df: DataFrame, idCol: String, seed: Long,
       nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
+    Ranks.requireFree("shuffleShard", df, Seq("_sk"))
     val keyed = df.withColumn("_sk",
       md5(concat(lit(s"$seed:"), col(idCol).cast("string"))))
-    val ranged = keyed.repartitionByRange(col("_sk"), col(idCol))
-      .withColumn("_pid", spark_partition_id())
-    val w = Window.partitionBy(col("_pid"))
-      .orderBy(col("_sk").asc, col(idCol).asc)
-    val local = ranged
-      .withColumn("_lrn", row_number().over(w).cast("long"))
-      .localCheckpoint()
-    val counts = local.groupBy(col("_pid"))
-      .agg(count(lit(1)).as("c")).orderBy(col("_pid"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) =>
-      (pid, acc + c)
-    }.sliding(2).collect { case Array((_, acc), (pid, _)) => (pid, acc) }.toSeq
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsetsDf = offsets.toDF("_pid", "_offset")
-    local.join(broadcast(offsetsDf), "_pid")
-      .withColumn("shuffle_pos", col("_lrn") + col("_offset") - 1L)
+    Ranks.running(keyed, Nil, Seq("_sk", idCol), Seq("_pos" -> lit(1L)))
+      .withColumn("shuffle_pos", col("_pos") - 1L)
       .withColumn("shard", pmod(col("shuffle_pos"), lit(nShards.toLong)))
-      .drop("_sk", "_pid", "_lrn", "_offset")
+      .drop("_sk", "_pos", "_pos_total")
   }
 }

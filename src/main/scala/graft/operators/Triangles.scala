@@ -44,39 +44,18 @@ object Triangles {
     * `overTextGroups` (dup-collapse on/off).
     */
   def triangleEdges(edges: DataFrame, aCol: Column, bCol: Column,
-      maxBroadcastEdges: Long = 4000000L): DataFrame =
-    // lazy per-edge contract (tests/profiling entry): the edge cache is
-    // released by the ContextCleaner once the frame goes out of scope —
-    // production consumers go through vertexTriangles, which releases it
-    // deterministically after materializing its vertex-sized agg
-    orientedTriangles(edges, aCol, bCol, maxBroadcastEdges)._1
-
-  /** The [[triangleEdges]] body plus a release thunk for the one heavy
-    * intermediate: the distinct-edge frame feeds the degree agg, both
-    * orientation joins, and the measured-size broadcast gate, so it is
-    * materialized once via localCheckpoint — NOT a Dataset.persist: the
-    * cache manager stores columnar CachedBatches whose encode/decode
-    * measured 1.9× on the whole sf0.1 census (r16 A/B, BENCH diff
-    * 3.7 → 7.1 s) against the checkpoint's raw block store. Since
-    * `Dataset.unpersist` cannot free a checkpoint (the Banding r6
-    * lesson), the release thunk captures the RDD ids the checkpoint
-    * call registered and unpersists those directly — deterministic
-    * release with checkpoint-priced storage. The id diff assumes no
-    * concurrent persist call races this one (graft queries build plans
-    * driver-sequentially; harnesses run queries one at a time).
-    */
-  private def orientedTriangles(edges: DataFrame, aCol: Column,
-      bCol: Column, maxBroadcastEdges: Long): (DataFrame, () => Unit) = {
-    val sc = edges.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val e = edges.select(least(aCol, bCol).as("a"), greatest(aCol, bCol).as("b"))
+      maxBroadcastEdges: Long = 4000000L): DataFrame = {
+    // the distinct-edge frame feeds the degree agg, both orientation
+    // joins and the measured-size broadcast gate: materialized once via
+    // localCheckpoint, NOT Dataset.persist — the cache manager's columnar
+    // CachedBatches measured 1.9× on the whole sf0.1 census. Lazy
+    // per-edge contract (tests/profiling entry): the checkpoint is freed
+    // by the ContextCleaner; vertexTriangles releases it deterministically
+    val e = edges
+      .select(least(aCol, bCol).as("a"), greatest(aCol, bCol).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint() // feeds the degree agg and both orientation joins
-    val ckptIds = sc.getPersistentRDDs.keySet.diff(before)
-    val release = () => ckptIds.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
+      .localCheckpoint()
     val small = e.count() <= maxBroadcastEdges
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val deg = e.select(col("a").as("v")).unionByName(e.select(col("b").as("v")))
@@ -98,7 +77,7 @@ object Triangles {
           col("b")).otherwise(col("a")).as("v"))
     val adj = o.groupBy(col("u").as("w0"))
       .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-    val out = o
+    o
       .join(hint(adj.select(col("w0").as("u"), col("nbrs").as("nu"))),
         Seq("u"))
       .join(hint(adj.select(col("w0").as("v"), col("nbrs").as("nv"))),
@@ -112,7 +91,6 @@ object Triangles {
         // elements nullable, which the merge walk's analysis gate rejects
         graft.functions.JaccardFunctions.sortedIntersect(col("nu"),
           coalesce(col("nv"), typedLit(Array.empty[Long]))).as("ws"))
-    (out, release)
   }
 
   /** Per-vertex triangle membership counts: for edge (u, v) closing k
@@ -120,26 +98,23 @@ object Triangles {
     * in one — a SINGLE narrow role explode per edge (u and v carry k,
     * each w carries 1), one vertex agg; only actual triangles explode.
     *
-    * Eager: the vertex-sized agg is materialized (one localCheckpoint,
-    * freed by the ContextCleaner when the result drops out of scope) so
-    * the edge-sized cache behind it can be unpersisted HERE instead of
-    * renting storage memory for the session lifetime — the census is a
-    * one-shot scan, and the r15 300× probes measured in-JVM rep drift
-    * consistent with exactly this kind of retained intermediate.
+    * Eager through [[Caching.releasing]]: the vertex-sized agg is
+    * materialized so the edge-sized checkpoint behind it is released HERE
+    * instead of renting storage memory for the session lifetime — the
+    * census is a one-shot scan, and the 300× probes measured in-JVM rep
+    * drift consistent with exactly this kind of retained intermediate.
     */
   def vertexTriangles(edges: DataFrame, aCol: Column, bCol: Column,
-      maxBroadcastEdges: Long = 4000000L): DataFrame = {
-    val (te, release) = orientedTriangles(edges, aCol, bCol, maxBroadcastEdges)
-    try {
+      maxBroadcastEdges: Long = 4000000L): DataFrame =
+    Caching.releasing(Some {
       val k = size(col("ws")).cast("long")
-      te.where(size(col("ws")) > 0)
+      triangleEdges(edges, aCol, bCol, maxBroadcastEdges)
+        .where(size(col("ws")) > 0)
         .select(explode(concat(
           array(struct(col("u").as("part"), k.as("n")),
             struct(col("v").as("part"), k.as("n"))),
           transform(col("ws"),
             w => struct(w.as("part"), lit(1L).as("n"))))).as("r"))
         .groupBy(col("r.part").as("part")).agg(sum(col("r.n")).as("n_tri"))
-        .localCheckpoint(true)
-    } finally release()
-  }
+    }).get
 }

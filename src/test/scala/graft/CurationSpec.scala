@@ -147,6 +147,12 @@ class CurationSpec extends AnyFunSuite with SparkFixture {
     // the order really is shuffled: the identity order would be a
     // astronomically-unlikely fixed point of the seeded hash
     assert(base.map(_.getLong(1)) !== (0L until n.toLong))
+    // an input column the operator would overwrite is rejected by name
+    val e = intercept[IllegalArgumentException] {
+      TrainExport.shuffleShard(docs.withColumn("_pid", lit(1)), "doc_id",
+        seed = 23L, nShards = 16)
+    }
+    assert(e.getMessage.contains("_pid"), e.getMessage)
   }
 
   test("temperatureMixture: integer apportionment sums to N, flattens " +

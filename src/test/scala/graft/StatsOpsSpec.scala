@@ -208,24 +208,36 @@ class StatsOpsSpec extends AnyFunSuite with SparkFixture {
     assert(hits >= 45L && hits <= 50L) // ≤ k, and near k
   }
 
-  test("groupRankByRange equals the window rank across range boundaries") {
+  test("runningByRange equals the window rank and running sums across " +
+      "range boundaries") {
     import graft.operators.Ranks
     import org.apache.spark.sql.expressions.Window
     // 3 wide groups, enough rows that each spans several range partitions
     val df = (1 to 3).flatMap(g => (1 to 400).map(i =>
-      (s"g$g", (i * 37) % 401, i))).toDF("g", "x", "tie")
-    val two = Ranks.groupRankByRange(df, Seq("g"), Seq("x", "tie"),
-        out = "rk")
-      .select("g", "x", "tie", "rk").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-      .sortBy(t => (t._1, t._2, t._3))
-    val win = df.withColumn("rk", row_number().over(
-        Window.partitionBy(col("g")).orderBy(col("x"), col("tie")))
-        .cast("long"))
-      .select("g", "x", "tie", "rk").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-      .sortBy(t => (t._1, t._2, t._3))
-    assert(two.toSeq === win.toSeq)
+      (s"g$g", (i * 37) % 401, i, (i * 13 % 7 + 1).toLong)))
+      .toDF("g", "x", "tie", "w")
+    // null groups form their own window partition: none may be dropped
+    val withNulls = df.union((1 to 300).map(i =>
+      (null: String, (i * 11) % 301, i, 2L)).toDF("g", "x", "tie", "w"))
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select("g", "x", "tie", "rk", "rk_total", "cw", "cw_total")
+        .collect().map(r => (Option(r.getString(0)), r.getInt(1),
+          r.getInt(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
+        .sortBy(t => (t._1.getOrElse(""), t._2, t._3)).toSeq
+    for ((in, group) <- Seq(df -> Seq("g"), withNulls -> Seq("g"),
+        df -> Nil)) {
+      val two = Ranks.running(in, group, Seq("x", "tie"),
+        Seq("rk" -> lit(1L), "cw" -> col("w")))
+      val part = Window.partitionBy(group.map(col): _*)
+      val ord = part.orderBy(col("x"), col("tie"))
+      val win = in
+        .withColumn("rk", row_number().over(ord).cast("long"))
+        .withColumn("rk_total", count(lit(1)).over(part))
+        .withColumn("cw", sum(col("w")).over(
+          ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("cw_total", sum(col("w")).over(part))
+      assert(rows(two) === rows(win), s"group=$group")
+    }
   }
 
   test("bitemporal stateAt: corrections visible per tx view, valid cut") {

@@ -24,6 +24,12 @@ class TrianglesSpec extends AnyFunSuite with SparkFixture {
     // every K4 vertex sits in C(3,2) = 3 triangles; path vertices in none
     (0L to 3L).foreach(v => assert(pv(v) == 3L))
     assert(!pv.contains(4L) && !pv.contains(6L))
+    // vertexTriangles releases its edge checkpoint: only the result's own
+    // (ContextCleaner-managed) checkpoint may remain
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Triangles.vertexTriangles(edges, col("a"), col("b")).collect()
+    val leaked = spark.sparkContext.getPersistentRDDs.size - before
+    assert(leaked <= 1, s"leaked $leaked persistent RDDs")
   }
 
   test("triangle count is orientation-independent: random graph vs naive") {
