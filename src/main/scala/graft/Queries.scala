@@ -360,21 +360,10 @@ object Queries {
            else qty).as("qty"))
       out.write.format("noop").mode("overwrite").save()
     }
-    // the aborted job's TaskEnd events arrive on the async listener bus —
-    // poll for the guaranteed (>= 1) failed-task record
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (report.failedTasks < 1 && System.nanoTime() < deadline)
-      Thread.sleep(20)
-    // a deadline expiry here means the listener bus never delivered the
-    // TaskEnd, NOT that retry semantics broke — say so, or a downstream
-    // oracle mismatch on failed_task_attempts_recorded is unattributable
-    if (report.failedTasks < 1)
-      System.err.println(
-        "[graft] task_report_retry: 10s listener deadline expired with " +
-        "failedTasks=0 — async bus latency, expect oracle gate mismatch")
-    // detach: the listener would otherwise record a TaskRow for every task
-    // of the rest of the session
-    s.sparkContext.removeSparkListener(report)
+    // the aborted job's TaskEnd events were posted before its failure
+    // returned; draining the bus delivers them, and detaching stops the
+    // report recording every later task of the session
+    report.detach(s)
     import s.implicits._
     Seq(
       ("attempts", attempts.toDouble),

@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -63,7 +65,11 @@ object QualityStatsKernel {
     false
   }
 
-  def compute(input: UTF8String): ArrayData = {
+  def compute(input: UTF8String): ArrayData =
+    new GenericArrayData(counts(input))
+
+  /** [words, stopwords, punct, chars] as a primitive array. */
+  def counts(input: UTF8String): Array[Long] = {
     val bytes = input.getBytes
     val n = bytes.length
     var chars = 0L
@@ -90,8 +96,7 @@ object QualityStatsKernel {
       i += 1
     }
     if (!inWs && n > segStart && isStopword(bytes, segStart, n)) stop += 1
-    val words = wsRuns + 1
-    new GenericArrayData(Array[Any](words, stop, punct, chars))
+    Array(wsRuns + 1, stop, punct, chars)
   }
 }
 
@@ -115,6 +120,53 @@ case class QualityStats(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "quality_stats"
+}
+
+/** `TextAnalysis.qualityScore` as one expression: one [[QualityStatsKernel]]
+  * scan, then the length × punctuation × stopword terms in Java, the same
+  * double operations in the same order as the Column formula they replaced
+  * (the DuckDB `qualityScoreExprSql` fragment still gates it). A `Filter`
+  * gets no common-subexpression elimination, so the formula's four
+  * references to the stats array ran the scan four times per row there.
+  */
+object QualityScoreKernel {
+  def compute(input: UTF8String): Double = {
+    val st = QualityStatsKernel.counts(input)
+    val nWords = st(0)
+    val words = nWords.toDouble
+    val lengthTerm =
+      if (words >= 20 && words <= 1000) 1.0
+      else if (words < 20) words / 20.0
+      else 1000.0 / words
+    val chars = st(3)
+    val pRatio = if (chars == 0) 0.0 else st(2).toDouble / chars.toDouble
+    val punctTerm = 1.0 - pRatio
+    val sRatio = if (nWords == 0) 0.0 else st(1).toDouble / nWords.toDouble
+    val stopTerm = if (sRatio > 0.01) 1.0 else 0.5
+    lengthTerm * punctTerm * stopTerm
+  }
+}
+
+case class QualityScore(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"quality_score requires a string input, got ${child.dataType.simpleString}")
+
+  override def dataType: DataType = DoubleType
+
+  override def nullSafeEval(input: Any): Any =
+    QualityScoreKernel.compute(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.QualityScoreKernel.compute($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "quality_score"
 }
 
 /** One-pass multi-set token counting: for each word set, how many tokens
@@ -145,16 +197,20 @@ object TokenSetCountKernel {
   }
 
   def compute(input: UTF8String,
-      sets: Array[Array[Array[Byte]]]): ArrayData = {
+      sets: Array[Array[Array[Byte]]]): ArrayData =
+    new GenericArrayData(counts(input, sets))
+
+  def counts(input: UTF8String,
+      sets: Array[Array[Array[Byte]]]): Array[Long] = {
     val bytes = input.getBytes
     val n = bytes.length
-    val counts = new Array[Long](sets.length)
+    val hits = new Array[Long](sets.length)
     var inWs = false
     var segStart = 0
     def close(until: Int): Unit = if (until > segStart) {
       var s = 0
       while (s < sets.length) {
-        if (segMatches(bytes, segStart, until, sets(s))) counts(s) += 1
+        if (segMatches(bytes, segStart, until, sets(s))) hits(s) += 1
         s += 1
       }
     }
@@ -166,7 +222,7 @@ object TokenSetCountKernel {
       i += 1
     }
     if (!inWs) close(n)
-    new GenericArrayData(counts)
+    hits
   }
 }
 
@@ -199,6 +255,65 @@ case class TokenSetCount(child: Expression, sets: Seq[Seq[String]])
     copy(child = newChild)
 
   override def prettyName: String = "token_set_count"
+}
+
+/** `TextAnalysis.langId` as one expression: one [[TokenSetCountKernel]]
+  * scan over the [[graft.operators.TextAnalysis.langMarkers]] sets, then
+  * the argmax in probe order (en, de, fr, es; the first maximum wins) —
+  * "und" when no marker matches or the text is null, as the CASE chain it
+  * replaced gave. That chain referenced the counts array once per branch
+  * and in its `greatest`, and a `Filter` (no common-subexpression
+  * elimination) ran the scan for every reference.
+  */
+object LangIdKernel {
+  private val markers = graft.operators.TextAnalysis.langMarkers
+  private val sets: Array[Array[Array[Byte]]] =
+    markers.map(_._2.map(_.getBytes(
+      java.nio.charset.StandardCharsets.UTF_8)).toArray).toArray
+  private val langs: Array[UTF8String] =
+    markers.map(m => UTF8String.fromString(m._1)).toArray
+  private val und = UTF8String.fromString("und")
+
+  def compute(input: UTF8String): UTF8String =
+    if (input == null) und
+    else {
+      val counts = TokenSetCountKernel.counts(input, sets)
+      var best = 0
+      var i = 1
+      while (i < counts.length) {
+        if (counts(i) > counts(best)) best = i
+        i += 1
+      }
+      if (counts(best) > 0) langs(best) else und
+    }
+}
+
+case class LangId(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"lang_id requires a string input, got ${child.dataType.simpleString}")
+
+  override def dataType: DataType = StringType
+
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    LangIdKernel.compute(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      UTF8String ${ev.value} = graft.functions.LangIdKernel.compute(
+        ${c.isNull} ? null : ${c.value});""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "lang_id"
 }
 
 /** One-pass BPE-ish pre-token count — the L10 token-budget operator.
@@ -266,6 +381,14 @@ object QualityFunctions {
   /** [words, stopwords, punct, chars] of a text column in one scan. */
   def qualityStats(text: Column): Column =
     ColumnBridge.column(QualityStats(ColumnBridge.expression(text)))
+
+  /** Quality score in [0, 1] of a text column in one scan. */
+  def qualityScore(text: Column): Column =
+    ColumnBridge.column(QualityScore(ColumnBridge.expression(text)))
+
+  /** Marker-vote language of a text column in one scan ("und" if none). */
+  def langId(text: Column): Column =
+    ColumnBridge.column(LangId(ColumnBridge.expression(text)))
 
   /** Per-set token membership counts of a text column in one scan. */
   def tokenSetCounts(text: Column, sets: Seq[Seq[String]]): Column =

@@ -60,6 +60,14 @@ object Dedup {
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.TextFunctions.wordShingles(TextAnalysis.normalize(text), n)
 
+  /** Whether any of [[shingles]]`(text, n)` is in the broadcast `grams` set
+    * (false for null text), without building the shingle array.
+    */
+  def sharesShingle(text: Column, n: Int,
+      grams: org.apache.spark.broadcast.Broadcast[
+        java.util.Set[org.apache.spark.unsafe.types.UTF8String]]): Column =
+    graft.functions.TextFunctions.ngramHit(TextAnalysis.normalize(text), n, grams)
+
   /** Exact Jaccard similarity of two shingle-array columns — int/int double,
     * so bit-identical across engines.
     */

@@ -4,9 +4,16 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for LLM training-data pipelines (SURVEY §2
-  * L8-L11). All are pure `functions._` compositions — codegen'd, no UDFs —
-  * and all arithmetic that reaches query output is either integer or an
-  * int/int double division (IEEE-identical across engines, see SURVEY §6).
+  * L8-L11). Most are pure `functions._` compositions; `langId`,
+  * `qualityScore` and `bpeTokenCount` are single codegen'd kernel
+  * expressions. No UDFs. All arithmetic that reaches query output is either
+  * integer or an int/int double division (IEEE-identical across engines,
+  * see SURVEY §6).
+  *
+  * `langId` and `qualityScore` must be one expression each because Spark's
+  * `Filter` does no common-subexpression elimination: a composition that
+  * names the kernel's result several times runs the kernel once per
+  * reference in a `where`, though a `select` would run it once.
   */
 object TextAnalysis {
 
@@ -70,51 +77,25 @@ object TextAnalysis {
     "fr" -> Seq("le", "et", "les", "est"),
     "es" -> Seq("el", "y", "los", "es"))
 
-  /** Marker counts come from the one-pass [[graft.functions
-    * .TokenSetCountKernel]] (four `filter(tokens, isin(...))` passes →
-    * one byte scan); the argmax chain is unchanged, so the DuckDB
-    * `langExprSql` fragment keeps gating it.
+  /** One [[graft.functions.LangId]] expression: a single
+    * [[graft.functions.TokenSetCountKernel]] scan, then the argmax in probe
+    * order, "und" for no evidence or null text. The DuckDB `langExprSql`
+    * fragment gates it.
     */
-  def langId(text: Column): Column = {
-    val counts = graft.functions.QualityFunctions.tokenSetCounts(
-      text, langMarkers.map(_._2))
-    val scores = langMarkers.zipWithIndex.map { case ((lang, _), i) =>
-      lang -> element_at(counts, i + 1)
-    }
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.foldRight(lit("und"): Column) { case ((lang, s), els) =>
-      when(s === best && best > 0, lit(lang)).otherwise(els)
-    }
-  }
+  def langId(text: Column): Column = graft.functions.QualityFunctions.langId(text)
 
   /** Quality score in [0,1]: rewards mid-length docs, penalizes punctuation
-    * soup and stopword-free keyword stuffing. All terms are int/int doubles.
+    * soup and stopword-free keyword stuffing. All terms are int/int doubles:
+    * lengthTerm (1 for 20..1000 words, else words/20 or 1000/words) ×
+    * (1 − punct/chars) × (1 if stopwords/words > 0.01 else 0.5).
     *
-    * Counts come from the one-pass native kernel
-    * ([[graft.functions.QualityStatsKernel]]) instead of three regex
-    * passes (split + a punctuation `regexp_extract_all` that materialized
-    * an array per row + a stopword token filter) — the per-row scoring
-    * floor of quality_bands / source_quota / the config curation
-    * pipelines at scale. The kernel's counting contract is mirror-exact
-    * with the regex formulation (QualitySpec pins them against each
-    * other), so the DuckDB oracle fragment is unchanged.
+    * One [[graft.functions.QualityScore]] expression: the one-pass
+    * [[graft.functions.QualityStatsKernel]] counts (mirror-exact with the
+    * regex formulation, QualitySpec pins them against each other), then the
+    * arithmetic in Java, so the DuckDB oracle fragment is unchanged.
     */
-  def qualityScore(text: Column): Column = {
-    val st = graft.functions.QualityFunctions.qualityStats(text)
-    val nWords = element_at(st, 1)
-    val words = nWords.cast("double")
-    val lengthTerm = when(words >= 20 && words <= 1000, lit(1.0))
-      .when(words < 20, words / lit(20.0))
-      .otherwise(lit(1000.0) / words)
-    val chars = element_at(st, 4)
-    val pRatio = when(chars === 0, lit(0.0))
-      .otherwise(element_at(st, 3).cast("double") / chars.cast("double"))
-    val punctTerm = lit(1.0) - pRatio
-    val sRatio = when(nWords === 0, lit(0.0))
-      .otherwise(element_at(st, 2).cast("double") / nWords.cast("double"))
-    val stopTerm = when(sRatio > 0.01, lit(1.0)).otherwise(lit(0.5))
-    lengthTerm * punctTerm * stopTerm
-  }
+  def qualityScore(text: Column): Column =
+    graft.functions.QualityFunctions.qualityScore(text)
 
   /** Canonical normalization for fingerprinting/dedup: lowercase, strip
     * non-alphanumerics to spaces, collapse whitespace, trim.

@@ -85,7 +85,6 @@ object ConfigJson {
             k = int(f \ "k").getOrElse(50))
           case "decontaminate" => Pipeline.Decontaminate(
             textCol = str(f \ "column").get,
-            idCol = str(f \ "id").get,
             evalPath = str(f \ "eval" \ "path").getOrElse(
               throw new IllegalArgumentException(
                 "config: decontaminate.eval.path is required")),

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.{ErrorPolicy, TimePartitioning}
 
 /** Config-driven ETL pipeline — the Spark re-expression of the reference's
@@ -110,33 +111,36 @@ object Pipeline {
     */
   private[pipeline] def dqRulesAuditIndexed(spark: SparkSession,
       df: DataFrame, rules: Seq[DqRule]): DataFrame = {
-    val frames = rules.zipWithIndex.map { case (r, i) =>
-      val viol: DataFrame = r.rule match {
-        case "not_null" =>
-          df.agg(sum(when(col(r.column).isNull, 1L).otherwise(0L)).as("v"))
-        case "unique" =>
-          df.agg((count(col(r.column)) - count_distinct(col(r.column)))
-            .as("v"))
-        case "min" =>
-          df.agg(sum(when(col(r.column) < lit(r.value.get.toDouble), 1L)
-            .otherwise(0L)).as("v"))
-        case "max" =>
-          df.agg(sum(when(col(r.column) > lit(r.value.get.toDouble), 1L)
-            .otherwise(0L)).as("v"))
-        case "fk" =>
-          val ref = spark.read.parquet(r.refPath.get)
-            .select(col(r.refColumn.get).as("_ref")).distinct()
-          df.select(col(r.column).as("_k")).where(col("_k").isNotNull)
-            .join(ref, col("_k") === col("_ref"), "left_anti")
-            .agg(count(lit(1)).as("v"))
-        case other =>
-          throw new IllegalArgumentException(s"unknown dq rule: $other")
-      }
-      viol.select(lit(i).as("rule_idx"), lit(r.rule).as("rule"),
+    def row(i: Int, r: DqRule, v: Column): Column =
+      struct(lit(i).as("rule_idx"), lit(r.rule).as("rule"),
         lit(r.column).as("col_name"),
-        coalesce(col("v").cast("long"), lit(0L)).as("n_violations"))
+        coalesce(v.cast("long"), lit(0L)).as("n_violations"))
+    def violations(r: DqRule): Column = r.rule match {
+      case "not_null" => sum(when(col(r.column).isNull, 1L).otherwise(0L))
+      case "unique" => count(col(r.column)) - count_distinct(col(r.column))
+      case "min" =>
+        sum(when(col(r.column) < lit(r.value.get.toDouble), 1L).otherwise(0L))
+      case "max" =>
+        sum(when(col(r.column) > lit(r.value.get.toDouble), 1L).otherwise(0L))
+      case other =>
+        throw new IllegalArgumentException(s"unknown dq rule: $other")
     }
-    frames.reduce(_ unionByName _)
+    // every scalar rule in ONE aggregation pass, then one row per rule
+    val scalar = rules.zipWithIndex.filter(_._1.rule != "fk")
+    val scalarRows = Option.when(scalar.nonEmpty) {
+      df.select(scalar.map { case (r, i) => violations(r).as(s"_v$i") }: _*)
+        .select(inline(array(scalar.map { case (r, i) =>
+          row(i, r, col(s"_v$i")) }: _*)))
+    }
+    val fkRows = rules.zipWithIndex.collect { case (r, i) if r.rule == "fk" =>
+      val ref = spark.read.parquet(r.refPath.get)
+        .select(col(r.refColumn.get).as("_ref")).distinct()
+      df.select(col(r.column).as("_k")).where(col("_k").isNotNull)
+        .join(ref, col("_k") === col("_ref"), "left_anti")
+        .agg(count(lit(1)).as("v"))
+        .select(inline(array(row(i, r, col("v")))))
+    }
+    (scalarRows.toSeq ++ fkRows).reduce(_ unionByName _)
   }
   /** Per-source quota as a config step (the `source_quota` curation cut):
     * keep the top-`k` rows per `keyCol` by quality score over `textCol`
@@ -155,13 +159,18 @@ object Pipeline {
   final case class QualityBandKeep(stratumCol: String, textCol: String,
     idCol: String, buckets: Int, keepBands: Seq[Int]) extends Transform
   /** Benchmark decontamination as a config step (the `decontaminate`
-    * pass): drop rows sharing any `n`-gram with the eval set read from
-    * `evalPath` (optionally filtered by `evalWhere`). Both sides reduce
-    * to 16-byte gram hashes before the join; the eval gram set is tiny by
-    * premise, so the contaminated-id set resolves through broadcast-sized
-    * joins — never a corpus shuffle beyond the narrow gram scan.
+    * pass): drop rows sharing any `n`-gram ([[graft.operators.Dedup
+    * .shingles]]) with the eval set read from `evalPath` (optionally
+    * filtered by `evalWhere`). Row-level: each row is judged by its own
+    * text alone, so a null text is kept and a null id does not matter.
+    * Planning collects the eval slice's distinct grams EAGERLY (a side job
+    * over the eval slice only; the set is small by the decontamination
+    * premise) and ships them as one `Broadcast` set. The step is then one
+    * narrow predicate on the corpus ([[graft.operators.Dedup
+    * .sharesShingle]]), comparing gram strings exactly: no join, no
+    * second pass over the upstream steps, no corpus shuffle.
     */
-  final case class Decontaminate(textCol: String, idCol: String,
+  final case class Decontaminate(textCol: String,
     evalPath: String, evalFormat: String = "parquet",
     evalWhere: Option[String] = None, n: Int = 8) extends Transform
 
@@ -279,25 +288,17 @@ object Pipeline {
               Seq("_gq_score", idCol), buckets, out = "_gq_band")
             .where(col("_gq_band").isin(keep.map(_.toLong): _*))
             .drop("_gq_score", "_gq_band")
-        case Decontaminate(textCol, idCol, evalPath, fmt, evalWhere, n) =>
+        case Decontaminate(textCol, evalPath, fmt, evalWhere, n) =>
           val evalRaw = spark.read.format(fmt).load(evalPath)
           val evalSet = evalWhere.fold(evalRaw)(evalRaw.where)
-          val evalGrams = evalSet
-            .select(explode(graft.operators.Dedup.shingles(col(textCol), n))
-              .as("_g"))
-            .select(md5(col("_g")).as("_gh")).distinct()
-          // eval grams and the surviving contaminated-id set are both tiny
-          // by the decontamination premise — broadcast them explicitly so
-          // the corpus never shuffles for either join
-          val contaminated = df
-            .select(col(idCol).as("_did"),
-              explode(graft.operators.Dedup.shingles(col(textCol), n))
-                .as("_g"))
-            .select(col("_did"), md5(col("_g")).as("_gh"))
-            .join(broadcast(evalGrams), "_gh")
-            .select(col("_did")).distinct()
-          df.join(broadcast(contaminated),
-            df(idCol) === contaminated("_did"), "left_anti")
+          // the set dedups the grams: no shuffle for a `distinct`
+          val grams = new java.util.HashSet[UTF8String]()
+          evalSet.select(explode(graft.operators.Dedup.shingles(col(textCol), n)))
+            .collect()
+            .foreach(r => grams.add(UTF8String.fromString(r.getString(0))))
+          val shipped = spark.sparkContext
+            .broadcast[java.util.Set[UTF8String]](grams)
+          df.where(!graft.operators.Dedup.sharesShingle(col(textCol), n, shipped))
       }
     }
     config.localModeMaxTasks match {
@@ -363,23 +364,25 @@ object Pipeline {
     * `map_side_partition_split` salting hot buckets across that many
     * reducer tasks; map-only configs write directly in the configured
     * output format. Returns the task report for the run (the reference's
-    * job report surface).
+    * job report surface), complete and detached from the session.
     */
   def run(spark: SparkSession, config: Config, outPath: String): TaskReport = {
     val report = TaskReport.attach(spark)
-    val df = plan(spark, config)
-    config.partitioning match {
-      case Some(p) =>
-        val buckets = bucketCols(df, p)
-        graft.sources.Sinks.write(df, outPath, config.out.format,
-          bucket = Some(buckets.head._2), reducers = config.reducers,
-          options = config.out.options,
-          splitHotBuckets = p.mapSidePartitionSplit,
-          extraBuckets = buckets.tail)
-      case None =>
-        graft.sources.Sinks.write(df, outPath, config.out.format,
-          options = config.out.options)
-    }
+    try {
+      val df = plan(spark, config)
+      config.partitioning match {
+        case Some(p) =>
+          val buckets = bucketCols(df, p)
+          graft.sources.Sinks.write(df, outPath, config.out.format,
+            bucket = Some(buckets.head._2), reducers = config.reducers,
+            options = config.out.options,
+            splitHotBuckets = p.mapSidePartitionSplit,
+            extraBuckets = buckets.tail)
+        case None =>
+          graft.sources.Sinks.write(df, outPath, config.out.format,
+            options = config.out.options)
+      }
+    } finally report.detach(spark)
     report
   }
 }

@@ -35,6 +35,15 @@ final class TaskReport extends SparkListener {
       if (m != null) m.shuffleWriteMetrics.recordsWritten else 0L)
   }
 
+  /** Wait until every event posted so far has reached this report, then
+    * remove it from the session, so it stops recording later tasks. The
+    * rows recorded so far stay readable.
+    */
+  def detach(spark: org.apache.spark.sql.SparkSession): Unit = {
+    org.apache.spark.sql.graftbridge.BusDrain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(this)
+  }
+
   def taskRows: Seq[TaskRow] = synchronized(rows.toSeq)
   def failedTasks: Int = synchronized(failed)
 
@@ -56,7 +65,8 @@ final class TaskReport extends SparkListener {
 }
 
 object TaskReport {
-  /** Attach a fresh report listener to the session. */
+  /** Attach a fresh report listener to the session; pair with
+    * [[TaskReport#detach]]. */
   def attach(spark: org.apache.spark.sql.SparkSession): TaskReport = {
     val r = new TaskReport
     spark.sparkContext.addSparkListener(r)

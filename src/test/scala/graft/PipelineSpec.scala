@@ -93,21 +93,74 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(dirty.nonEmpty) // the synthetic corpus plants overlaps
   }
 
+  /** Run a decontaminate step over a hand-built corpus and eval slice;
+    * returns the kept ids (a null id reads as -1).
+    */
+  private def decontaminated(corpus: Seq[(java.lang.Long, String)],
+      eval: Seq[String], n: Int = 8): Set[Long] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_decon_").toString
+    corpus.toDF("doc_id", "text").write.parquet(s"$dir/corpus")
+    eval.toDF("text").write.parquet(s"$dir/eval")
+    val json = s"""{"in": {"path": "$dir/corpus"},
+      "filters": [{"type": "decontaminate", "column": "text",
+        "eval": {"path": "$dir/eval"}, "ngram": $n}]}"""
+    Pipeline.plan(spark, graft.pipeline.ConfigJson.parse(json))
+      .select(coalesce($"doc_id", lit(-1L))).collect().map(_.getLong(0)).toSet
+  }
+
+  private val evalDoc = "one two three four five six seven eight nine"
+
+  test("decontaminate keeps a corpus row with null text") {
+    assert(decontaminated(Seq((1L, null), (2L, s"x $evalDoc")),
+      Seq(evalDoc)) === Set(1L))
+  }
+
+  test("decontaminate with an empty eval slice drops nothing") {
+    val corpus: Seq[(java.lang.Long, String)] =
+      Seq((1L, evalDoc), (2L, null), (3L, ""), (null, "a b"))
+    assert(decontaminated(corpus, Nil) === Set(1L, 2L, 3L, -1L))
+  }
+
+  test("decontaminate matches an eval document shorter than n words " +
+      "as one whole-string gram") {
+    // "Alpha, beta GAMMA!" normalizes to the eval doc's one gram; a longer
+    // row holding the same words has only 8-grams and survives
+    val corpus: Seq[(java.lang.Long, String)] = Seq(
+      (1L, "Alpha, beta GAMMA!"), (2L, "alpha beta gamma delta"),
+      (3L, "alpha beta gamma a b c d e f"))
+    assert(decontaminated(corpus, Seq("alpha beta gamma")) === Set(2L, 3L))
+  }
+
+  test("decontaminate drops a contaminated row whose id is null") {
+    // row-level: the row's own text decides, the id plays no part
+    val corpus: Seq[(java.lang.Long, String)] =
+      Seq((null, s"prefix $evalDoc"), (2L, "unrelated text here"))
+    assert(decontaminated(corpus, Seq(evalDoc)) === Set(2L))
+  }
+
   test("partitioned config writes bucket directories and reports tasks") {
-    val out = java.nio.file.Files.createTempDirectory("graft_pipe_").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_").toString
     val cfg = Pipeline.Config(
       inputPath = s"$sf/orders.parquet",
       partitioning = Some(Pipeline.Partitioning("o_orderdate", "day")),
       reducers = Some(4))
-    val report = Pipeline.run(spark, cfg, out)
+    val listeners = org.apache.spark.sql.graftbridge.ListenerCount(
+      spark.sparkContext)
+    val reports = (1 to 3).map(i => Pipeline.run(spark, cfg, s"$dir/out$i"))
+    // each run detaches its report: no listener outlives the call
+    assert(org.apache.spark.sql.graftbridge.ListenerCount(spark.sparkContext)
+      === listeners)
+    val out = s"$dir/out1"
     val dirs = new java.io.File(out).listFiles()
       .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
     assert(dirs.nonEmpty)
     assert(spark.read.parquet(out).count() ===
       spark.read.parquet(s"$sf/orders.parquet").count())
-    Thread.sleep(2000) // listener bus drains asynchronously
-    assert(report.taskRows.nonEmpty)
-    assert(report.failedTasks === 0)
+    // the returned reports are complete: the run drained the bus
+    reports.foreach { report =>
+      assert(report.taskRows.nonEmpty)
+      assert(report.failedTasks === 0)
+    }
   }
 
   test("long-column partitioning config uses unix_timestamp_unit") {
@@ -260,7 +313,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   test("task report aggregates per-stage records (AttemptState surface)") {
     val report = TaskReport.attach(spark)
     Tables.lineitem(spark, sf).groupBy($"l_returnflag").count().collect()
-    Thread.sleep(2000)
+    report.detach(spark)
     val stages = report.stageReport(spark).collect()
     assert(stages.nonEmpty)
     assert(stages.map(_.getAs[Long]("records_read")).sum > 0)

@@ -163,6 +163,57 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
   }
 
+  test("curation config plans one filtered documents scan: one kernel " +
+      "call per score, no decontamination anti-join") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.{LangId, QualityScore, QualityStats, TokenSetCount}
+    // the benchmark's curate_corpus filter chain, over the sf0.01 corpus
+    val docs = s"${new java.io.File(sf).getParent}/sf0.01/documents.parquet"
+    val cfg = graft.pipeline.ConfigJson.parse(s"""{
+      "in": {"path": "$docs"},
+      "filters": [
+        {"type": "nfc_clean", "column": "text"},
+        {"type": "dq_check", "fail": false, "rules": [
+          {"rule": "not_null", "column": "doc_id"},
+          {"rule": "unique", "column": "doc_id"},
+          {"rule": "min", "column": "n_chars", "value": "1"}]},
+        {"type": "dedup", "id": "doc_id", "column": "text", "normalized": true},
+        {"type": "lang_filter", "column": "text", "keep": ["en", "de"]},
+        {"type": "quality_filter", "column": "text", "min_score": 0.6},
+        {"type": "pii_redact", "column": "text"},
+        {"type": "decontaminate", "column": "text", "id": "doc_id",
+         "eval": {"path": "$docs", "where": "doc_id < 50"}, "ngram": 8},
+        {"type": "source_quota", "key": "source", "column": "text",
+         "id": "doc_id", "k": 150}]}""")
+    val plan = graft.pipeline.Pipeline.plan(spark, cfg)
+      .queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val text = plan.toString
+    assert(helper.collect(plan) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty, text)
+    // the filtered scan and the dedup keep-side scan, nothing else
+    val scans = helper.collect(plan) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.endsWith(
+            "documents.parquet")) => f }
+    assert(scans.length === 2, text)
+    def count(e: Expression)(p: PartialFunction[Expression, Unit]) =
+      e.collect(p).length
+    val conds = helper.collect(plan) { case f: FilterExec => f.condition }
+    assert(conds.exists(c => count(c) { case _: LangId => } == 1 &&
+      count(c) { case _: QualityScore => } == 1), text)
+    conds.foreach { c =>
+      assert(count(c) { case _: LangId => } <= 1, c.toString)
+      assert(count(c) { case _: QualityScore => } <= 1, c.toString)
+      assert(count(c) { case _: TokenSetCount | _: QualityStats => } === 0,
+        c.toString)
+    }
+  }
+
   test("knn_label_ivf scores candidates through the cell equi-join, " +
       "never a corpus x query nested loop") {
     val df = Queries.knnLabelIvf(spark, sf)

@@ -85,6 +85,27 @@ class QualitySpec extends AnyFunSuite with SparkFixture {
         .head()
       assert(zero.getLong(0) === 7L)
       assert(zero.getSeq[Long](1) === Seq(7L, 8L))
+      // the one-expression scores and the decontamination probe, in a
+      // projection and in a filter, null input included
+      val grams = spark.sparkContext.broadcast[java.util.Set[
+        org.apache.spark.unsafe.types.UTF8String]](new java.util.HashSet(
+          java.util.Arrays.asList(
+            org.apache.spark.unsafe.types.UTF8String.fromString("a b"))))
+      val texts = Seq("the a b!", "der und é 中", "", "  ", null).toDF("t")
+      val scored = texts.select(
+        graft.functions.QualityFunctions.qualityScore($"t").as("q"),
+        graft.functions.QualityFunctions.langId($"t").as("l"),
+        graft.operators.Dedup.sharesShingle($"t", 2, grams).as("h"))
+        .collect()
+      assert(scored.map(_.getString(1)).toSeq ===
+        Seq("en", "de", "und", "und", "und"))
+      assert(scored.map(_.getBoolean(2)).toSeq ===
+        Seq(true, false, false, false, false))
+      assert(scored(4).isNullAt(0))
+      assert(texts.where(
+        graft.functions.QualityFunctions.langId($"t") === "en" &&
+          graft.functions.QualityFunctions.qualityScore($"t") > 0.0 &&
+          graft.operators.Dedup.sharesShingle($"t", 2, grams)).count() === 1)
     } finally spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 
@@ -93,8 +114,36 @@ class QualitySpec extends AnyFunSuite with SparkFixture {
     val both = docs.select(
       TextAnalysis.qualityScore($"text").as("kernel"),
       regexScore($"text").as("regex"))
-    assert(both.where($"kernel" =!= $"regex").count() === 0)
+    assert(both.where(!($"kernel" <=> $"regex")).count() === 0)
     assert(both.count() > 0)
+    // null, empty and whitespace-only text: null in, null out
+    val edge = Seq(null, "", " ", "\t\n ").toDF("t").select(
+      TextAnalysis.qualityScore($"t").as("kernel"),
+      regexScore($"t").as("regex"))
+    assert(edge.where(!($"kernel" <=> $"regex")).count() === 0)
+    assert(edge.where($"kernel".isNull).count() === 1)
+  }
+
+  test("langId and qualityScore are one kernel expression each") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.expression
+    val t = $"t"
+    assert(expression(TextAnalysis.langId(t)) ===
+      graft.functions.LangId(expression(t)))
+    assert(expression(TextAnalysis.qualityScore(t)) ===
+      graft.functions.QualityScore(expression(t)))
+  }
+
+  test("kernel filters keep exactly the ids of the reference formulas") {
+    val docs = Tables.documents(spark, sf)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val keep = Seq("en", "de")
+    val byLang = ids(docs.where(TextAnalysis.langId($"text").isin(keep: _*)))
+    assert(byLang.nonEmpty)
+    assert(byLang === ids(docs.where(regexLang($"text").isin(keep: _*))))
+    val byScore = ids(docs.where(TextAnalysis.qualityScore($"text") >= 0.6))
+    assert(byScore.nonEmpty)
+    assert(byScore === ids(docs.where(regexScore($"text") >= 0.6)))
   }
 
   // the pre-kernel langId formulation, verbatim
@@ -115,8 +164,8 @@ class QualitySpec extends AnyFunSuite with SparkFixture {
       .cast("long")
 
   test("langId kernel equals the filter-isin formulation everywhere") {
-    val cases = Seq("", " ", "the cat", "der hund ist", "le chat et",
-      "el gato y los", "xyz qqq", "the und", "is ist est es",
+    val cases = Seq(null, "", " ", "\t\n ", "the cat", "der hund ist",
+      "le chat et", "el gato y los", "xyz qqq", "the und", "is ist est es",
       "  der  ", "und") ++ {
       val rnd = new scala.util.Random(11)
       val vocab = Seq("the", "of", "und", "der", "le", "el", "es", "is",
@@ -127,12 +176,41 @@ class QualitySpec extends AnyFunSuite with SparkFixture {
     }
     val df = cases.toDF("t").select(
       TextAnalysis.langId($"t").as("kernel"), regexLang($"t").as("regex"))
-    assert(df.where($"kernel" =!= $"regex").count() === 0)
+    assert(df.where(!($"kernel" <=> $"regex")).count() === 0)
+    // null, empty and whitespace-only text carry no evidence
+    assert(df.limit(4).collect().map(_.getString(0)).toSeq ===
+      Seq.fill(4)("und"))
     // corpus too
     val docs = Tables.documents(spark, sf).select(
       TextAnalysis.langId($"text").as("kernel"),
       regexLang($"text").as("regex"))
-    assert(docs.where($"kernel" =!= $"regex").count() === 0)
+    assert(docs.where(!($"kernel" <=> $"regex")).count() === 0)
+  }
+
+  test("ngram hit equals membership of the word_shingles windows") {
+    // the probe must walk exactly the windows WordShingles emits, split
+    // quirks included: empty tokens from double spaces, a leading space,
+    // trailing spaces dropped by split, and the short-text whole-string gram
+    val rnd = new scala.util.Random(23)
+    val pool = Vector("a", "b", "c", " ", "  ", "é", "")
+    val texts = Seq(null, "", " ", "  ", "a", "a b", " a b", "a b ", "a  b",
+      "a b c", "b c a b", "é a") ++ (0 until 400).map(_ =>
+        (0 until rnd.nextInt(8)).map(_ => pool(rnd.nextInt(pool.length)))
+          .mkString(if (rnd.nextBoolean()) " " else ""))
+    val gramList = Seq("a b", "", " ", "c", "a", "b  a", "é a", "b c a")
+    val grams = spark.sparkContext.broadcast[java.util.Set[
+      org.apache.spark.unsafe.types.UTF8String]](new java.util.HashSet(
+        java.util.Arrays.asList(gramList.map(
+          org.apache.spark.unsafe.types.UTF8String.fromString): _*)))
+    val df = texts.toDF("t")
+    for (n <- 1 to 3) {
+      val got = df.select($"t",
+        graft.functions.TextFunctions.ngramHit($"t", n, grams).as("k"),
+        coalesce(exists(graft.functions.TextFunctions.wordShingles($"t", n),
+          g => g.isin(gramList.map(lit(_)): _*)), lit(false)).as("re"))
+      val bad = got.where($"k" =!= $"re").collect()
+      assert(bad.isEmpty, s"n=$n: ${bad.take(5).mkString(", ")}")
+    }
   }
 
   test("bpe count kernel equals the regexp_extract_all formulation") {
