@@ -91,6 +91,20 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
           initPartitionsFor(cores, inputBytes(inputDir)).toString))
 
+  /** The confs every graft query's results depend on, applied by
+    * [[builder]] and by Verify's dump session: UTC session time; ANSI off,
+    * because graft uses wrap-around 64-bit affine hashes (MinHash
+    * permutations) that ANSI overflow checking would reject; µs parquet
+    * timestamps written, and the nanos `events.ts` read as a long, so the
+    * DuckDB oracle reads identical values.
+    */
+  val contractConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -105,13 +119,7 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
           (cores * 2).toString))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // graft uses wrap-around 64-bit affine hashes (MinHash permutations);
-      // ANSI overflow checking would reject that arithmetic.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(contractConfs)
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -97,27 +97,30 @@ object Queries {
     while (p != null) { rmTree(p.toFile); p = tempDirs.poll() }
   }
 
+  /** `/dev/shm` when it is writable with at least `bytes` usable, else
+    * None. Many containers mount it at the 64 MB default, and a tiny shm
+    * holding warehouse, landing or spill trees fails mid-run with ENOSPC,
+    * so each caller states the headroom its own use needs.
+    */
+  private[graft] def shmWithHeadroom(bytes: Long): Option[java.nio.file.Path] = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val usable = try {
+      if (java.nio.file.Files.isWritable(shm))
+        java.nio.file.Files.getFileStore(shm).getUsableSpace
+      else 0L
+    } catch { case _: java.io.IOException => 0L }
+    if (usable >= bytes) Some(shm) else None
+  }
+
   /** tmpfs-preferring base for harness dirs; also used by Bench for the
     * warehouse/local dirs so `join_bucketed`'s table writes stay off the
-    * data disk.
+    * data disk. The 4 GiB floor ≈ the largest harness residue observed at
+    * sf0.1 plus shuffle spill margin.
     */
   private[graft] lazy val tempBase: java.nio.file.Path = {
     val base = sys.env.get("SPARK_GRAFT_TMPDIR")
       .map(java.nio.file.Paths.get(_))
-      .orElse {
-        // prefer RAM-backed tmpfs ONLY when it has real headroom: many
-        // containers mount /dev/shm at the 64 MB default, and with the
-        // warehouse + spark.local.dir (shuffle spill) also pointed here a
-        // tiny shm fails mid-run with ENOSPC. 4 GiB floor ≈ the largest
-        // harness residue observed at sf0.1 plus shuffle spill margin.
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val usable = try {
-          if (java.nio.file.Files.isWritable(shm))
-            java.nio.file.Files.getFileStore(shm).getUsableSpace
-          else 0L
-        } catch { case _: java.io.IOException => 0L }
-        if (usable >= (4L << 30)) Some(shm) else None
-      }
+      .orElse(shmWithHeadroom(4L << 30))
       .getOrElse(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
     java.nio.file.Files.createDirectories(base)
     base
@@ -126,7 +129,7 @@ object Queries {
   private val purgeHookInstalled =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def tempDir(prefix: String): String = {
+  private[graft] def tempDir(prefix: String): String = {
     if (purgeHookInstalled.compareAndSet(false, true))
       Runtime.getRuntime.addShutdownHook(new Thread(() => purgeTempDirs()))
     val d = java.nio.file.Files.createTempDirectory(tempBase, prefix)
@@ -736,48 +739,14 @@ object Queries {
     // decimal rescale at the end (DECIMAL(38,0)/10000 → DECIMAL(38,6),
     // exact, then a single cast to double) reproduces the oracle's
     // decimal→double rounding bit-exactly.
-    q5PlanOver(s, dir, lineitem(s, dir))
-  }
-
-  /** [[q5RegionRevenue]]'s plan over an ARBITRARY lineitem frame: the
-    * registered query passes the parquet scan; the `Q5Probe` study main
-    * passes a table bucketed on `l_orderkey` so the per-order partial agg
-    * runs bucket-local with zero exchange — the layout arm of the r16
-    * verdict's per-task group-cardinality experiment (task 1). Plan and
-    * results are otherwise identical by construction.
-    */
-  private[graft] def q5PlanOver(s: SparkSession, dir: String,
-      li: DataFrame): DataFrame =
-    q5Tail(s, dir, q5PerCust(s, dir, li))
-
-  /** q5 up to the per-customer aggregate (per-order agg → orders join →
-    * per-cust agg) — the Q5Probe arm that splits the join tail: at the
-    * fourth decade the per-order agg alone is SUB-linear (2.0× per 3.33×
-    * data on the mp basis) and the residual super-linear term lives in
-    * this join-and-reaggregate middle plus the customer join after it.
-    */
-  private[graft] def q5PerCust(s: SparkSession, dir: String,
-      li: DataFrame): DataFrame =
-    q5PerOrder(li)
+    val revE4 = (dec2(col("l_extendedprice")) * lit(100)).cast("long") *
+      (lit(100L) - (dec2(col("l_discount")) * lit(100)).cast("long"))
+    lineitem(s, dir)
+      .groupBy(col("l_orderkey"))
+      .agg(sum(revE4).as("_rev"), count(lit(1)).as("_n"))
       .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
       .agg(sum(col("_rev")).as("_rev"), sum(col("_n")).as("_n"))
-
-  /** q5's per-order partial aggregate alone — the stage the 300× event-log
-    * forensics put ~60% of the wall in, exposed for the Q5Probe study
-    * main's arm isolation (exact LONG 1e-4-unit sums; see
-    * [[q5RegionRevenue]] for the overflow budget).
-    */
-  private[graft] def q5PerOrder(li: DataFrame): DataFrame = {
-    val revE4 = (dec2(col("l_extendedprice")) * lit(100)).cast("long") *
-      (lit(100L) - (dec2(col("l_discount")) * lit(100)).cast("long"))
-    li.groupBy(col("l_orderkey"))
-      .agg(sum(revE4).as("_rev"), count(lit(1)).as("_n"))
-  }
-
-  private def q5Tail(s: SparkSession, dir: String,
-      perCust: DataFrame): DataFrame =
-    perCust
       .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(region(s, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -786,6 +755,7 @@ object Queries {
         .cast("double").as("revenue"),
         sum(col("_n")).as("n_items"))
       .orderBy(col("r_name"), col("n_name"))
+  }
 
   val q5RegionRevenueSql: String =
     s"""SELECT r_name, n_name, CAST(SUM($sqlRev) AS DOUBLE) AS revenue,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: run the flagship queries on an N×-unioned copy of the sf0.1
@@ -29,26 +29,27 @@ object ScaleSmoke {
     "triangle_parts", "q5_region_revenue", "dedup_stats",
     "dedup_clusters", "dedup_levenshtein_clusters", "containment_stats")
 
-  /** The decade-harness SparkSession, factored for reuse by the study
-    * mains (Q5Probe): tmpfs-or-disk spill base sized to the decade,
-    * leak-proof local dir, and the `SPARK_GRAFT_MASTER` local-cluster
-    * override with app-jar shipping. Returns the session; the shutdown
-    * hook reclaims the local dir.
+  /** The decade-harness SparkSession: tmpfs-or-disk spill base sized to
+    * the decade, leak-proof local dir, and the `SPARK_GRAFT_MASTER`
+    * local-cluster override with app-jar shipping. The shutdown hook
+    * reclaims the local dir.
+    *
+    * Shuffle/sort spill goes to tmpfs when it can actually hold the
+    * spill: at the 300× decade the external sorts spill tens of GB, and
+    * a slow backing disk absorbs that at pathological throughput
+    * (measured: triangle_parts 297→112 s at 300× from the spill
+    * destination alone) — a cluster's local SSDs are the production
+    * analogue. SPARK_GRAFT_SPILL_DIR overrides; otherwise /dev/shm is
+    * used only with headroom PROPORTIONAL to the decade (Queries
+    * .tempBase's 4 GiB floor is sized for harness landing residue, not
+    * shuffle spill — a modest shm would ENOSPC mid-run or eat the RAM
+    * the spill was meant to relieve), else the system tmpdir.
     */
-  private[graft] def scaleSession(cpus: Int, factor: Int): org.apache.spark.sql.SparkSession = {
+  private def scaleSession(cpus: Int, factor: Int): SparkSession = {
     val spillBase = sys.env.get("SPARK_GRAFT_SPILL_DIR")
       .map(java.nio.file.Paths.get(_))
-      .getOrElse {
-        val needBytes = math.max(8L, factor.toLong / 4) << 30
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val usable = try {
-          if (java.nio.file.Files.isWritable(shm))
-            java.nio.file.Files.getFileStore(shm).getUsableSpace
-          else 0L
-        } catch { case _: java.io.IOException => 0L }
-        if (usable >= needBytes) shm
-        else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      }
+      .orElse(Queries.shmWithHeadroom(math.max(8L, factor.toLong / 4) << 30))
+      .getOrElse(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
     java.nio.file.Files.createDirectories(spillBase)
     val local = java.nio.file.Files
       .createTempDirectory(spillBase, "graft_scale_local_")
@@ -126,18 +127,6 @@ object ScaleSmoke {
           .getOrElse("") != stamp
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // shuffle/sort spill on tmpfs when it can actually hold the spill:
-    // at the 300× decade the external sorts spill tens of GB, and this
-    // sandbox's backing disk absorbs that at pathological throughput
-    // (measured: triangle_parts 297→112 s at 300× from the spill
-    // destination alone) — a cluster's local SSDs are the production
-    // analogue. SPARK_GRAFT_SPILL_DIR overrides; otherwise /dev/shm is
-    // used only with headroom PROPORTIONAL to the decade (Queries
-    // .tempBase's 4 GiB floor is sized for harness landing residue, not
-    // shuffle spill — a modest shm would ENOSPC mid-run or eat the RAM
-    // the spill was meant to relieve), else the system tmpdir. All of
-    // this plus the local-cluster master override lives in scaleSession
-    // (shared with the study mains).
     val spark = scaleSession(cpus, factor)
     def amplify(name: String, keyCols: Map[String, Long]): Unit = {
       val src = Tables.table(spark, base, name)
@@ -174,14 +163,12 @@ object ScaleSmoke {
         GraftSession.initPartitionsFor(
           cpus, GraftSession.inputBytes(out)).toString))
 
-    // the full registered surface (the report queries drain the listener
-    // bus / run their own fault-injected actions, not timeable queries;
-    // SPARK_GRAFT_SCALE_ONLY restricts for iteration)
-    val skip = Set("task_report", "task_report_retry")
+    // the full registered surface (SPARK_GRAFT_SCALE_ONLY restricts for
+    // iteration)
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(v => if (v.trim == "flagship") flagshipSet
                 else v.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.filterNot(skip).sorted
+    val names = SparkEntry.queries.keys.toSeq.filterNot(Bench.untimed).sorted
       .filter(n => only.forall(_.contains(n)))
     spark.range(1000000L).selectExpr("sum(id)").collect() // warm
     // SPARK_GRAFT_SCALE_REPS=N times each query N times in THIS JVM and
@@ -189,27 +176,25 @@ object ScaleSmoke {
     // ±30-50% (page-cache / JIT / first-run state), so arm comparisons
     // need in-JVM repeats where those confounds are shared
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
-    val results = names.flatMap { name =>
-      (1 to reps).map { r =>
-        // cold per rep (same reset as Bench's cold pass): accumulated
-        // checkpoint/cache state from earlier queries otherwise evicts the
-        // current query's own caches at 30× and inflates it up to 4× —
-        // the run-order artifact class every round has had to re-measure
-        // isolated; clearing makes scale rows diffable directly
-        operators.Caching.clearAll(spark)
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, out)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] $name failed: ${e.getMessage}") }
-        Queries.purgeTempDirs()
-        (if (reps == 1) name else s"$name#$r") ->
-          (System.nanoTime() - t0) / 1e9
-      }
+    // cold per rep (same reset as Bench's cold pass): accumulated
+    // checkpoint/cache state from earlier queries otherwise evicts the
+    // current query's own caches at 30× and inflates it up to 4× — the
+    // run-order artifact class every round has had to re-measure
+    // isolated; clearing makes scale rows diffable directly
+    val timed = names.map { name =>
+      name -> (1 to reps).map(_ => Bench.timeQuery(spark, name, out,
+        SparkEntry.queries(name), reset = true))
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + Bench.jnum(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"scale${factor}x","queries":$qs,"base":"$base","master":"${spark.sparkContext.master}"}""")
+    // a query with any failed rep is listed under "failed" and keeps no
+    // reps: an evidence table must not commit a phantom fast rep
+    val failed = timed.collect { case (n, ts) if ts.contains(None) => n }
+    val qs = timed.collect { case (name, ts) if !ts.contains(None) =>
+      ts.flatten.zipWithIndex.map { case (t, i) =>
+        val k = if (reps == 1) name else s"$name#${i + 1}"
+        "\"" + k + "\":" + Bench.jnum(t)
+      }
+    }.flatten.mkString("{", ",", "}")
+    println(s"""{"metric":"scale${factor}x","queries":$qs,"failed":${Bench.jlist(failed)},"base":"$base","master":"${spark.sparkContext.master}"}""")
     spark.stop()
   }
 }

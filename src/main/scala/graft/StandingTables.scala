@@ -43,7 +43,8 @@ object StandingTables {
 
   /** Child stdout → the rep timings of `query` (parsed from ScaleSmoke's
     * scale{N}x JSON line; reps print as name#1..name#N, a single rep as
-    * the bare name). Pure; unit-tested.
+    * the bare name). A query that threw is listed under the line's
+    * "failed" key with no reps, so it parses to none. Pure; unit-tested.
     */
   private[graft] def parseReps(lines: Seq[String], query: String)
       : Seq[Double] = {
@@ -84,17 +85,6 @@ object StandingTables {
       "SPARK_GRAFT_MASTER" -> basis.master)
     val (lines, exit) = ChildJvm.run(cmd, env, timeoutS,
       s"$query@${factor}x/${basis.key}")
-    // a query that THREW still gets a timing printed by ScaleSmoke (it
-    // records the elapsed time around the catch) — an evidence table
-    // must not commit a phantom fast rep for a failed run, so the
-    // failure marker voids the whole cell
-    val failed = lines.filter(_.contains(s"[scale] $query failed"))
-    if (failed.nonEmpty) {
-      System.err.println(
-        s"[standing] $query@${factor}x/${basis.key} FAILED in-child: " +
-          failed.head.takeRight(160))
-      return Seq.empty
-    }
     val ts = parseReps(lines, query)
     if (ts.isEmpty) {
       System.err.println(

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Throwaway-style stage profiler for the E66 triangle census — kept as a
-  * dev main (the SkewBench pattern) so plan work on the graph family has
-  * a measured baseline per stage.
+  * dev main so plan work on the graph family has a measured baseline per
+  * stage.
   */
 object TriProfile {
   def main(args: Array[String]): Unit = {

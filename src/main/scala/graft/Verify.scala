@@ -16,14 +16,8 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // graft engine contract: wrap-around 64-bit hash arithmetic (ANSI off),
-      // µs parquet timestamps so the DuckDB oracle reads identical values.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(GraftSession.contractConfs)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * consumers — count_distinct + join back — and relied on ReuseExchange
   * to fold their twin exchanges; it never did, because the outer
   * n_windows join infers isnotnull(doc_id) into only the probe-side
-  * copy, breaking canonical equality. See graft.ReuseProbe.)
+  * copy, breaking canonical equality; BASELINE.md r18 records the
+  * diagnosis.)
   *
   * Verbatim-dup collapse (r16): web-scale corpora are dominated by
   * verbatim copies, and stride-1 windows multiply that redundancy by
@@ -218,7 +219,7 @@ object SpanDedup {
     // only feeds count_distinct, which infers no constraint), so the two
     // subtrees stopped canonicalizing equal and both ReuseExchange and
     // AQE's stage cache missed — measured twice-run ~4,000 s-CPU build
-    // stages at the 1000× decade (graft.ReuseProbe; BASELINE r18).
+    // stages at the 1000× decade (BASELINE r18).
     val dup = wins.groupBy(col("h"), col("doc_id"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("nd", count(lit(1)).over(Window.partitionBy(col("h"))))

@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * column so pushdown prunes whole files, or by lowering `waves`. The
   * manifests add only ONE extra read of the OUTPUT per pass total: each
   * wave's counts come from a partition-pruned read-back of its own
-  * leaves, never a second input scan. Measured (`graft.ResumeTradeBench`,
-  * BASELINE.md r11 rows): waves=4 unfaulted pass = 2.0–2.5× a plain
+  * leaves, never a second input scan. Measured (BASELINE.md r11
+  * ResumableWrite trade rows): waves=4 unfaulted pass = 2.0–2.5× a plain
   * partitioned write at both 10× and 30× events — flat across the
   * decade, and well under the naive 4× because pushdown discards the
   * other waves' rows at the scan. The recovery path: a pass faulted

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{lit, raise_error}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench contention guard (VERDICT r14 task 1): a partial or
@@ -8,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 205.5 s against 154.9 s for the same tree measured quiet, polluting
   * the round-over-round signal.
   */
-class BenchGuardSpec extends AnyFunSuite {
+class BenchGuardSpec extends AnyFunSuite with SparkFixture {
 
   test("full quiet sweep writes the committed artifact") {
     assert(Bench.fullOutputTarget(None, isPartial = false,
@@ -258,6 +260,70 @@ class BenchGuardSpec extends AnyFunSuite {
     val single = """{"metric":"scale1000x","queries":{"q1_pricing":61.2}}"""
     assert(StandingTables.parseReps(Seq(single), "q1_pricing") == Seq(61.2))
     assert(StandingTables.parseReps(Seq("no json here"), "q").isEmpty)
+    // a query that threw is listed under "failed" with no reps; its
+    // neighbours still parse
+    val failed = """{"metric":"scale30x","queries":{"p#1":1.5,"p#2":1.7},""" +
+      """"failed":["q"],"base":"b"}"""
+    assert(StandingTables.parseReps(Seq(failed), "q").isEmpty)
+    assert(StandingTables.parseReps(Seq(failed), "p") == Seq(1.5, 1.7))
+  }
+
+  test("timeQuery: a query that throws gives no timing and leaves no " +
+      "temp dir queued") {
+    var made: String = null
+    val atPlan: (SparkSession, String) => DataFrame = (_, _) => {
+      made = Queries.tempDir("graft_boom_")
+      throw new IllegalStateException("boom")
+    }
+    assert(Bench.timeQuery(spark, "boom", sf, atPlan, reset = true).isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(made)))
+    // a failure inside the forced execution is caught the same way
+    val atRun: (SparkSession, String) => DataFrame =
+      (s, _) => s.range(3).select(raise_error(lit("boom")))
+    assert(Bench.timeQuery(spark, "boom", sf, atRun, reset = false).isEmpty)
+    assert(Bench.timeQuery(spark, "ok", sf, (s, _) => s.range(3).toDF(),
+      reset = false).exists(_ >= 0.0))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description")
+      == null)
+  }
+
+  test("a query that fails in any pass is listed under failed, timed " +
+      "nowhere, and forces regression_suspect") {
+    val s = Bench.sweep(
+      inRun = Seq("a" -> Some(1.0), "b" -> Some(2.0), "c" -> Some(4.0)),
+      coldDraws = Seq(
+        "a" -> Seq(Some(0.5), Some(0.7), Some(0.6)),
+        "b" -> Seq(Some(1.0), None, Some(1.0)),
+        "c" -> Seq(Some(5.0), Some(5.0), Some(5.0))),
+      fork = Seq("a" -> Some(0.9), "b" -> Some(0.1)))
+    assert(s.failed == Seq("b"))
+    // the committed line knows b: neither its cold median nor its
+    // envelope may be compared or carried forward
+    val committed = """{"queries_cold":{"a":0.6,"b":9.0,"c":5.0},""" +
+      """"queries_cold_minmax_own":{"b":[0.1,9.0]},"cpus":4,"sf":"sf"}"""
+    val r = Bench.report(s, _ => "pure", Some(committed), loadavgPre = 0.0,
+      cpus = 4, sfDir = "sf", explicitTarget = None, isPartial = false)
+    for (line <- Seq(r.full, r.compact)) {
+      assert(line.contains(""""failed":["b"]"""), line)
+      assert(!line.contains(""""b":"""), line)
+    }
+    assert(r.full.contains(""""value":5.0,"""))
+    assert(Bench.parseColdMap(r.full) == Map("a" -> 0.6, "c" -> 5.0))
+    assert(r.full.contains(""""total_fork":0.9,"queries_fork":{"a":0.900}"""))
+    assert(r.full.contains(""""by_class":{"pure":5.000}"""))
+    assert(r.full.contains(""""compared":2,"""))
+    assert(r.full.contains(""""regression_suspect":true"""))
+    assert(r.compact.contains(""""queries":{"a":0.60,"c":5.00}"""))
+    // the sentinel itself is clean: only the failure forced the flag
+    assert(!r.sentinelSuspect && !r.contended)
+    assert(r.target == "BENCH_full.json")
+    // nothing failed: the key is present and empty, nothing is forced
+    val clean = Bench.report(
+      Bench.sweep(Seq("a" -> Some(1.0)), Seq("a" -> Seq(Some(1.0))), Nil),
+      _ => "pure", None, 0.0, 4, "sf", None, isPartial = true)
+    for (line <- Seq(clean.full, clean.compact))
+      assert(line.contains(""""failed":[]"""), line)
+    assert(clean.full.contains(""""regression_suspect":false"""))
   }
 
   test("jnum formats with '.' decimals independent of default locale") {
