@@ -287,6 +287,58 @@ object Bench {
       inRun.map(_._1).filter(bad))
   }
 
+  /** Runs a sweep's timed passes: `time(name, reset)` times one query in
+    * this JVM, `fork` one query in a fresh JVM. Two in-process passes are
+    * reported side by side, because in-run numbers are warm-flattered by
+    * cache/codegen reuse from earlier queries and swing ~3x with run
+    * order:
+    *  - in-run: queries back-to-back, session state accumulating — the
+    *    historical number, comparable to prior rounds;
+    *  - cold: before each timing every cached plan and persisted RDD
+    *    (localCheckpoints included) is dropped, so each query pays its
+    *    own reads and materializations. JIT/codegen JVM warmth remains —
+    *    only a fresh JVM per query would shed it — so "cold" isolates
+    *    cache state, which is what moved between rounds. Each cold value
+    *    is the MEDIAN of `coldReps` runs (single cold timings
+    *    were run-order-sensitive — GC/JIT/page-cache pressure
+    *    from the preceding 70 queries inflated outliers up to 3.7×;
+    *    the median makes the column diffable across rounds).
+    *
+    * Multi-draw rule: rows whose first-pass cold
+    * median is under the spread threshold draw extra samples, and every
+    * sub-threshold row commits a [min,max] envelope (queries_cold_minmax)
+    * next to its median — the committed artifact then self-annotates which
+    * per-query deltas clear the row's own intrinsic variance. Extra draws
+    * cost only where rows are cheap by construction (sum of sub-3s
+    * medians, not the heavy tail).
+    *
+    * A query that fails is not run again: its first failure decides its
+    * row (listed under `failed`), so its remaining cold reps, extra draws
+    * and fork are skipped.
+    */
+  private[graft] def passes(names: Seq[String], forkNames: Seq[String],
+      time: (String, Boolean) => Option[Double],
+      fork: String => Option[Double]): Sweep = {
+    def draws(n: String, k: Int): Seq[Option[Double]] = {
+      val ts = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
+      while (ts.length < k && !ts.contains(None)) ts += time(n, true)
+      ts.toSeq
+    }
+    val inRun = names.map(n => n -> time(n, false))
+    val inRunFailed = inRun.collect { case (n, None) => n }.toSet
+    val coldDraws = names.filterNot(inRunFailed).map { n =>
+      val first = draws(n, coldReps)
+      val extra =
+        if (!first.contains(None) && median(first.flatten) < spreadThresh)
+          draws(n, spreadExtra)
+        else Nil
+      n -> (first ++ extra)
+    }
+    val coldFailed = coldDraws.collect { case (n, ts) if ts.contains(None) => n }
+    val forked = forkNames.filterNot(n => inRunFailed(n) || coldFailed.contains(n))
+    sweep(inRun, coldDraws, forked.map(n => n -> fork(n)))
+  }
+
   /** A sweep's two JSON lines and where the full one goes. `full`
     * (envelopes, fork column, class subtotals, sentinel) is written only
     * to `target`; `compact` is the one stdout line. `sentinelSuspect` is
@@ -436,38 +488,8 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
       .sortBy(n => (classOrder(qClass(n)), n))
 
-    // two passes, reported side by side (the r5 verdict's honest-signal
-    // fix: in-run numbers are warm-flattered by cache/codegen reuse from
-    // earlier queries and swing ~3x with run order):
-    //  - in-run: queries back-to-back, session state accumulating — the
-    //    historical number, comparable to prior rounds;
-    //  - cold: before each timing every cached plan and persisted RDD
-    //    (localCheckpoints included) is dropped, so each query pays its
-    //    own reads and materializations. JIT/codegen JVM warmth remains —
-    //    only a fresh JVM per query would shed it — so "cold" isolates
-    //    cache state, which is what moved between rounds. Each cold value
-    //    is the MEDIAN of `coldReps` runs (r6 verdict: single cold
-    //    timings were run-order-sensitive — GC/JIT/page-cache pressure
-    //    from the preceding 70 queries inflated outliers up to 3.7×;
-    //    the median makes the column diffable across rounds).
     def timeOne(n: String, reset: Boolean): Option[Double] =
       timeQuery(spark, n, sfDir, SparkEntry.queries(n), reset)
-    val inRun = names.map(n => n -> timeOne(n, reset = false))
-    // multi-draw rule as a harness feature (r16 verdict task 3): rows whose
-    // first-pass cold median is under the spread threshold draw extra
-    // samples, and every sub-threshold row commits a [min,max] envelope
-    // (queries_cold_minmax) next to its median — the committed artifact
-    // then self-annotates which per-query deltas clear the row's own
-    // intrinsic variance. Extra draws cost only where rows are cheap by
-    // construction (sum of sub-3s medians, not the heavy tail).
-    val coldDraws = names.map { n =>
-      val first = (1 to coldReps).map(_ => timeOne(n, reset = true))
-      val extra =
-        if (!first.contains(None) && median(first.flatten) < spreadThresh)
-          (1 to spreadExtra).map(_ => timeOne(n, reset = true))
-        else Nil
-      n -> (first ++ extra)
-    }
     // fresh-JVM true-cold mode: each selected query runs in a forked JVM
     // via BenchFork, shedding the JIT/codegen warmth that the in-process
     // "cold" column necessarily keeps (the r17 instrumented rep read 278 s
@@ -522,7 +544,7 @@ object Bench {
         System.err.println(s"[bench] fork of $n failed (no FORK_NANOS line)")
       t
     }
-    val sw = sweep(inRun, coldDraws, forkNames.map(n => n -> forkOne(n)))
+    val sw = passes(names, forkNames, timeOne, forkOne)
     val committedRaw =
       if (only.isDefined) None
       else scala.util.Try(java.nio.file.Files.readString(
@@ -554,7 +576,7 @@ object Bench {
     val target = r.target
     if (dirMismatch) System.err.println(
       s"[bench] sf-dir mismatch: committed artifact ran " +
-        s"${committedSf.getOrElse("?")}, this sweep ran $sfDir — " +
+        s"${committedSf.getOrElse("?")}, this sweep ran $sfDir - " +
         (if (sys.env.contains("SPARK_GRAFT_BENCH_FULL"))
           s"explicit SPARK_GRAFT_BENCH_FULL override in effect, writing " +
             s"$target (cross-scale compares still skipped)"
@@ -562,16 +584,16 @@ object Bench {
     if (cpuMismatch) System.err.println(
       s"[bench] cpus mismatch: committed artifact ran " +
         s"${committedRaw.flatMap(parseCpus).getOrElse(-1)} cores, this " +
-        s"sweep ran $cpus — writing $target, NOT BENCH_full.json " +
+        s"sweep ran $cpus - writing $target, NOT BENCH_full.json " +
         s"(cross-CPU compares skipped)")
     if (r.contended) System.err.println(
       s"[bench] contention guard tripped (loadavg_pre=$loadavgPre, " +
-        s"pure-class cold medians vs committed artifact inflated) — " +
+        s"pure-class cold medians vs committed artifact inflated) - " +
         s"writing $target, NOT BENCH_full.json")
     if (r.sentinelSuspect) System.err.println(
       s"[bench] REGRESSION SUSPECT: pure-class cold medians >1.2x the " +
         s"committed artifact on a quiet machine (loadavg_pre=$loadavgPre)" +
-        s" — committing the slow numbers; see sentinel.regression_suspect" +
+        s" - committing the slow numbers; see sentinel.regression_suspect" +
         s" in $target")
     if (sw.failed.nonEmpty) System.err.println(
       s"[bench] ${sw.failed.size} queries FAILED, untimed: " +

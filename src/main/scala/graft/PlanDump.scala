@@ -36,7 +36,7 @@ object PlanDump {
       "decontaminate_fuzzy" -> "cross-corpus LSH: eval band table BROADCAST against the corpus band scan, candidates broadcast back over the corpus shingle scan — no corpus self-join, no corpus shuffle",
       "pipeline_config_quota_bands" -> "JSON config -> TopKPerKey quota cut feeding the two-level exact-ntile band cut — no window, no corpus sort, all from the declarative filter chain",
       "knn_label" -> "label propagation: the FIXED query side broadcasts against the streaming labeled-corpus scan; per-query argmax through TopKPerKey — corpus never shuffles",
-      "knn_label_ivf" -> "label propagation at query-set scale: native IvfNearestCell/IvfProbeCells kernels (centroid matrix as a reference object, fused codegen loops) -> cell equi-join candidates -> TopKPerKey argmax; no nested-loop join anywhere",
+      "knn_label_ivf" -> "label propagation at query-set scale: native IvfNearestCell/IvfProbeCells kernels (centroid matrix as a reference object, one kernel call per row) -> cell equi-join candidates -> TopKPerKey argmax; no nested-loop join anywhere",
       "corpus_freq_score" -> "narrow bigram explode ONCE (the (doc,bg) frame checkpoints; df counts and mass join both read it — r18) -> one groupBy(bigram) pass -> join back on the bigram key -> groupBy(doc) — all linear, count table stays distributed",
       "ann_ivf_refined" -> "Lloyd refinement stays an aggregate over the cell equi-join assignment — 2 rounds = 2 small agg jobs on the collected centroid matrix, the corpus scans stay candidate-pruned",
       "text_bpe_tokens" -> "real-vocab BPE counting is ONE narrow codegen map (BpeTokenCount kernel, ranks + memo as reference objects) — zero exchanges before the output sort",

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -277,12 +276,7 @@ object BpeEncodeKernel {
   * stage to interpreted eval.
   */
 case class BpeTokenCount(child: Expression, merges: Array[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bpe_token_count requires a string input, got ${child.dataType.simpleString}")
+    extends UnaryKernel {
 
   override def dataType: DataType = LongType
 
@@ -293,14 +287,11 @@ case class BpeTokenCount(child: Expression, merges: Array[(String, String)])
   override def nullSafeEval(input: Any): Any =
     BpeEncodeKernel.compute(input.asInstanceOf[UTF8String], ranks, cache)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ranksRef = ctx.addReferenceObj("bpeRanks", ranks,
-      "java.util.HashMap<String, Integer>")
-    val cacheRef = ctx.addReferenceObj("bpeCache", cache,
-      "java.util.concurrent.ConcurrentHashMap<String, Integer>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeEncodeKernel.compute($c, $ranksRef, $cacheRef);")
-  }
+  protected def kernel = "graft.functions.BpeEncodeKernel.compute"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] = Seq(
+    ctx.addReferenceObj("bpeRanks", ranks, "java.util.HashMap<String, Integer>"),
+    ctx.addReferenceObj("bpeCache", cache,
+      "java.util.concurrent.ConcurrentHashMap<String, Integer>"))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -319,12 +310,7 @@ case class BpeTokenCount(child: Expression, merges: Array[(String, String)])
   * [[BpeTokenCount]]).
   */
 case class BpeEncode(child: Expression, merges: Array[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode requires a string input, got ${child.dataType.simpleString}")
+    extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
@@ -336,16 +322,12 @@ case class BpeEncode(child: Expression, merges: Array[(String, String)])
   override def nullSafeEval(input: Any): Any =
     BpeEncodeKernel.computeIds(input.asInstanceOf[UTF8String], ranks, vocab, cache)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ranksRef = ctx.addReferenceObj("bpeRanks", ranks,
-      "java.util.HashMap<String, Integer>")
-    val vocabRef = ctx.addReferenceObj("bpeVocab", vocab,
-      "java.util.HashMap<String, Integer>")
-    val cacheRef = ctx.addReferenceObj("bpeIdCache", cache,
-      "java.util.concurrent.ConcurrentHashMap<String, int[]>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeEncodeKernel.computeIds($c, $ranksRef, $vocabRef, $cacheRef);")
-  }
+  protected def kernel = "graft.functions.BpeEncodeKernel.computeIds"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] = Seq(
+    ctx.addReferenceObj("bpeRanks", ranks, "java.util.HashMap<String, Integer>"),
+    ctx.addReferenceObj("bpeVocab", vocab, "java.util.HashMap<String, Integer>"),
+    ctx.addReferenceObj("bpeIdCache", cache,
+      "java.util.concurrent.ConcurrentHashMap<String, int[]>"))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -18,23 +18,76 @@ import org.apache.spark.sql.types._
   * whole corpus scan silently drops to interpreted eval with per-row
   * struct/array allocation — measured 3.8 ms/row at the r8 100× scale probe
   * (the stage went from ~1 s isolated to 760 CPU-seconds inside the join
-  * stage). These kernels generate one fused loop over the matrix instead:
-  * tiny code, no allocation, centroids read from a reference object.
+  * stage). These kernels are one static call per row instead, over
+  * centroids read from a reference object, not literals.
   *
-  * Numeric contract: per cell, the affinity is EXACTLY [[CosineSim]]'s
-  * left-fold — x/y widened per element, `dot / (sqrt(na) * sqrt(nb))` — so
-  * results are bit-identical to the `graft_cosine` column formulation and
-  * to the DuckDB oracle's `list_reduce` replay. Ties (equal affinity) go to
-  * the LOWEST cell id: cells are scanned in ascending id order and only a
-  * strictly greater affinity displaces, which equals the oracle's
-  * `ORDER BY aff DESC, cell ASC`. A NaN affinity (zero-norm or empty
-  * vector) ranks GREATEST — normalized to +∞ before comparison (a real
-  * cosine is ≤ 1, so the mapping is unambiguous) — because that is how
-  * both Spark's sort order and DuckDB's ORDER BY … DESC place NaN, so the
-  * kernels stay order-identical to the window/oracle formulations even on
-  * degenerate vectors.
+  * Numeric contract: per cell, the affinity is EXACTLY [[CosineKernel]]'s
+  * left-fold, so results are bit-identical to the `graft_cosine` column
+  * formulation and to the DuckDB oracle's `list_reduce` replay. Ties
+  * (equal affinity) go to the LOWEST cell id: cells are scanned in
+  * ascending id order and only a strictly greater affinity displaces,
+  * which equals the oracle's `ORDER BY aff DESC, cell ASC`. A NaN affinity
+  * (zero-norm or empty vector) ranks GREATEST — normalized to +∞ before
+  * comparison (a real cosine is ≤ 1, so the mapping is unambiguous) —
+  * because that is how both Spark's sort order and DuckDB's ORDER BY …
+  * DESC place NaN, so the kernels stay order-identical to the
+  * window/oracle formulations even on degenerate vectors.
   */
-abstract class IvfKernel extends UnaryExpression {
+object IvfCellKernel {
+  /** CosineKernel's fold of the widened vector `x` against centroid `c`,
+    * NaN normalized to +∞.
+    */
+  private def affinity(x: Array[Double], n: Int, c: Array[Double]): Double = {
+    val a = CosineKernel.fold(x, c, math.min(n, c.length))
+    if (a != a) Double.PositiveInfinity else a
+  }
+
+  /** Cell id of the max-affinity centroid (ties → lowest cell id). */
+  def nearest(vec: ArrayData, isFloat: Boolean, cents: Array[Array[Double]],
+      cellIds: Array[Long]): Long = {
+    val n = vec.numElements()
+    val x = CosineKernel.widen(vec, isFloat, n)
+    var best = Double.NegativeInfinity
+    var bestCell = cellIds(0)
+    var c = 0
+    while (c < cents.length) {
+      val aff = affinity(x, n, cents(c))
+      if (aff > best) { best = aff; bestCell = cellIds(c) }
+      c += 1
+    }
+    bestCell
+  }
+
+  /** The `nprobe` highest-affinity cell ids, ordered (aff desc, cell asc).
+    * Insertion into a bounded sorted pair of arrays; only strictly greater
+    * affinity displaces, so equal affinities keep ascending cell order.
+    */
+  def probe(vec: ArrayData, isFloat: Boolean, cents: Array[Array[Double]],
+      cellIds: Array[Long], nprobe: Int): ArrayData = {
+    val n = vec.numElements()
+    val x = CosineKernel.widen(vec, isFloat, n)
+    val np = math.min(nprobe, cents.length)
+    val ba = Array.fill(np)(Double.NegativeInfinity)
+    val bc = new Array[Long](np)
+    var filled = 0
+    var c = 0
+    while (c < cents.length) {
+      val aff = affinity(x, n, cents(c))
+      var pos = filled
+      while (pos > 0 && aff > ba(pos - 1)) pos -= 1
+      if (pos < np) {
+        var j = math.min(filled, np - 1)
+        while (j > pos) { ba(j) = ba(j - 1); bc(j) = bc(j - 1); j -= 1 }
+        ba(pos) = aff; bc(pos) = cellIds(c)
+        if (filled < np) filled += 1
+      }
+      c += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(bc, filled))
+  }
+}
+
+abstract class IvfKernel extends UnaryKernel {
   def cents: Array[Array[Double]]
   def cellIds: Array[Long]
 
@@ -53,98 +106,23 @@ abstract class IvfKernel extends UnaryExpression {
   @transient protected lazy val elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  /** Affinity of `vec` to centroid `c` — CosineSim's exact fold, with NaN
-    * normalized to +∞ (see class doc).
-    */
-  protected final def affinity(vec: ArrayData, cv: Array[Double]): Double = {
-    val isF = elemIsFloat
-    val n = math.min(vec.numElements(), cv.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (vec.isNullAt(i)) 0.0
-        else if (isF) vec.getFloat(i).toDouble else vec.getDouble(i)
-      val y = cv(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val a = dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
-    if (a != a) Double.PositiveInfinity else a
-  }
-
-  /** Shared generated affinity loop; emits code computing `double $aff`
-    * for centroid `double[] $cv` against ArrayData `$vec`. Every local is
-    * `freshName`'d: enclosing operators (Expand, Generate, the row loop)
-    * own method-scope locals like `i`, and Java rejects nested-block
-    * shadowing — janino then fails the whole method and Spark silently
-    * drops to interpreted execution.
-    */
-  protected final def affinityCode(ctx: CodegenContext, vec: String,
-      cv: String, aff: String): String = {
-    val n = ctx.freshName("n")
-    val dot = ctx.freshName("dot")
-    val na = ctx.freshName("na")
-    val nb = ctx.freshName("nb")
-    val i = ctx.freshName("i")
-    val x = ctx.freshName("x")
-    val y = ctx.freshName("y")
-    val getX = if (elemIsFloat) s"(double) $vec.getFloat($i)"
-               else s"$vec.getDouble($i)"
-    s"""
-      int $n = java.lang.Math.min($vec.numElements(), $cv.length);
-      double $dot = 0.0, $na = 0.0, $nb = 0.0;
-      for (int $i = 0; $i < $n; $i++) {
-        double $x = $vec.isNullAt($i) ? 0.0 : $getX;
-        double $y = $cv[$i];
-        $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-      }
-      $aff = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-      if (java.lang.Double.isNaN($aff)) $aff = java.lang.Double.POSITIVE_INFINITY;
-    """
-  }
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] = Seq(
+    elemIsFloat.toString,
+    ctx.addReferenceObj("cents", cents, "double[][]"),
+    ctx.addReferenceObj("cellIds", cellIds, "long[]"))
 }
 
-/** Cell id of the max-affinity centroid (ties → lowest cell id). */
+/** Cell id of the max-affinity centroid ([[IvfCellKernel.nearest]]). */
 case class IvfNearestCell(child: Expression, cents: Array[Array[Double]],
     cellIds: Array[Long]) extends IvfKernel {
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    var best = Double.NegativeInfinity
-    var bestCell = cellIds(0)
-    var c = 0
-    while (c < cents.length) {
-      val aff = affinity(vec, cents(c))
-      if (aff > best) { best = aff; bestCell = cellIds(c) }
-      c += 1
-    }
-    bestCell
-  }
+  protected def kernel = "graft.functions.IvfCellKernel.nearest"
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, vec => {
-      val cs = ctx.addReferenceObj("cents", cents, "double[][]")
-      val ids = ctx.addReferenceObj("cellIds", cellIds, "long[]")
-      val best = ctx.freshName("best")
-      val bestCell = ctx.freshName("bestCell")
-      val c = ctx.freshName("c")
-      val cv = ctx.freshName("cv")
-      val aff = ctx.freshName("aff")
-      s"""
-        double $best = Double.NEGATIVE_INFINITY;
-        long $bestCell = $ids[0];
-        for (int $c = 0; $c < $cs.length; $c++) {
-          double[] $cv = $cs[$c];
-          double $aff;
-          { ${affinityCode(ctx, vec, cv, aff)} }
-          if ($aff > $best) { $best = $aff; $bestCell = $ids[$c]; }
-        }
-        ${ev.value} = $bestCell;
-      """
-    })
+  override def nullSafeEval(input: Any): Any =
+    IvfCellKernel.nearest(input.asInstanceOf[ArrayData], elemIsFloat, cents,
+      cellIds)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -152,10 +130,8 @@ case class IvfNearestCell(child: Expression, cents: Array[Array[Double]],
   override def prettyName: String = "graft_ivf_nearest_cell"
 }
 
-/** The `nprobe` highest-affinity cell ids, ordered (aff desc, cell asc) —
-  * the query-side probe list. Insertion into a bounded sorted pair of
-  * arrays; only strictly greater affinity displaces, so equal affinities
-  * keep ascending cell order.
+/** The `nprobe` highest-affinity cell ids — the query-side probe list
+  * ([[IvfCellKernel.probe]]).
   */
 case class IvfProbeCells(child: Expression, cents: Array[Array[Double]],
     cellIds: Array[Long], nprobe: Int) extends IvfKernel {
@@ -163,72 +139,13 @@ case class IvfProbeCells(child: Expression, cents: Array[Array[Double]],
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val np = math.min(nprobe, cents.length)
-    val ba = Array.fill(np)(Double.NegativeInfinity)
-    val bc = new Array[Long](np)
-    var filled = 0
-    var c = 0
-    while (c < cents.length) {
-      val aff = affinity(vec, cents(c))
-      var pos = filled
-      while (pos > 0 && aff > ba(pos - 1)) pos -= 1
-      if (pos < np) {
-        val stop = math.min(filled, np - 1)
-        var j = stop
-        while (j > pos) { ba(j) = ba(j - 1); bc(j) = bc(j - 1); j -= 1 }
-        ba(pos) = aff; bc(pos) = cellIds(c)
-        if (filled < np) filled += 1
-      }
-      c += 1
-    }
-    new GenericArrayData(bc.take(filled))
-  }
+  protected def kernel = "graft.functions.IvfCellKernel.probe"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    super.kernelArgs(ctx) :+ nprobe.toString
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, vec => {
-      val cs = ctx.addReferenceObj("cents", cents, "double[][]")
-      val ids = ctx.addReferenceObj("cellIds", cellIds, "long[]")
-      val np = ctx.freshName("np")
-      val ba = ctx.freshName("ba")
-      val bc = ctx.freshName("bc")
-      val filled = ctx.freshName("filled")
-      val c = ctx.freshName("c")
-      val out = ctx.freshName("out")
-      val cv = ctx.freshName("cv")
-      val aff = ctx.freshName("aff")
-      val pos = ctx.freshName("pos")
-      val stop = ctx.freshName("stop")
-      val j = ctx.freshName("j")
-      s"""
-        int $np = java.lang.Math.min($nprobe, $cs.length);
-        double[] $ba = new double[$np];
-        java.util.Arrays.fill($ba, Double.NEGATIVE_INFINITY);
-        long[] $bc = new long[$np];
-        int $filled = 0;
-        for (int $c = 0; $c < $cs.length; $c++) {
-          double[] $cv = $cs[$c];
-          double $aff;
-          { ${affinityCode(ctx, vec, cv, aff)} }
-          int $pos = $filled;
-          while ($pos > 0 && $aff > $ba[$pos - 1]) $pos--;
-          if ($pos < $np) {
-            int $stop = java.lang.Math.min($filled, $np - 1);
-            for (int $j = $stop; $j > $pos; $j--) {
-              $ba[$j] = $ba[$j - 1]; $bc[$j] = $bc[$j - 1];
-            }
-            $ba[$pos] = $aff; $bc[$pos] = $ids[$c];
-            if ($filled < $np) $filled++;
-          }
-        }
-        long[] $out = new long[$filled];
-        System.arraycopy($bc, 0, $out, 0, $filled);
-        ${ev.value} =
-          new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+  override def nullSafeEval(input: Any): Any =
+    IvfCellKernel.probe(input.asInstanceOf[ArrayData], elemIsFloat, cents,
+      cellIds, nprobe)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,10 +2,54 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+/** The two-pointer merge walk over two SORTED distinct long arrays
+  * (hashed shingle sets, sorted neighbour lists) — no per-pair hash set,
+  * no boxing. `count` gives |A∩B|, `values` the matches in ascending
+  * order; the three sorted-walk expressions below are thin shells over
+  * these two walks.
+  */
+object SortedWalkKernel {
+  def count(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0; var j = 0; var ni = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x == y) { ni += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    ni
+  }
+
+  def values(a: ArrayData, b: ArrayData): ArrayData = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    val buf = new Array[Long](math.min(na, nb))
+    var i = 0; var j = 0; var k = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x == y) { buf(k) = x; k += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(buf, k))
+  }
+
+  def jaccard(a: ArrayData, b: ArrayData): Double = {
+    val ni = count(a, b)
+    ni.toDouble / (a.numElements() + b.numElements() - ni).toDouble
+  }
+
+  def overlap(a: ArrayData, b: ArrayData): Double =
+    count(a, b).toDouble / math.min(a.numElements(), b.numElements()).toDouble
+}
 
 /** Shared input gate for the three merge-walk expressions below: the walks
   * read elements via `getLong` and never dedup, so their documented
@@ -18,15 +62,15 @@ import org.apache.spark.sql.types._
   * the triangle census's sorted `collect_list`) types containsNull=false
   * already; this gate is for the future caller that doesn't.
   */
-private[functions] object SortedWalkCheck {
-  def apply(name: String, left: Expression, right: Expression): TypeCheckResult = {
+abstract class SortedWalk extends BinaryKernel {
+  override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
       case ArrayType(LongType, containsNull) => !containsNull
       case _ => false
     }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$name requires array<bigint> inputs with non-nullable elements " +
+      s"$prettyName requires array<bigint> inputs with non-nullable elements " +
         s"(the merge walk reads primitive longs and cannot represent null), " +
         s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}. " +
         s"Parquet-sourced arrays are often typed element-nullable even when " +
@@ -36,8 +80,7 @@ private[functions] object SortedWalkCheck {
   }
 }
 
-/** Jaccard similarity of two SORTED long arrays (hashed shingle sets) via a
-  * two-pointer merge walk — no per-pair hash set, no boxing.
+/** Jaccard similarity of two SORTED long arrays (hashed shingle sets).
   *
   * `array_intersect` on string/long arrays builds a boxed HashSet per pair;
   * at 1.9M verified pairs (sf0.1) that was ~6 µs/pair and the dedup
@@ -47,49 +90,14 @@ private[functions] object SortedWalkCheck {
   * `array_intersect` formulation and the DuckDB oracle (SURVEY §6).
   */
 case class SortedJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    SortedWalkCheck("sorted_jaccard", left, right)
+    extends SortedWalk {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val av = a.asInstanceOf[ArrayData]
-    val bv = b.asInstanceOf[ArrayData]
-    val na = av.numElements()
-    val nb = bv.numElements()
-    var i = 0; var j = 0; var ni = 0
-    while (i < na && j < nb) {
-      val x = av.getLong(i)
-      val y = bv.getLong(j)
-      if (x == y) { ni += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    ni.toDouble / (na + nb - ni).toDouble
-  }
+  protected def kernel = "graft.functions.SortedWalkKernel.jaccard"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (aV, bV) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val ni = ctx.freshName("ni")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-        int $na = $aV.numElements();
-        int $nb = $bV.numElements();
-        int $i = 0, $j = 0, $ni = 0;
-        while ($i < $na && $j < $nb) {
-          long $x = $aV.getLong($i);
-          long $y = $bV.getLong($j);
-          if ($x == $y) { $ni++; $i++; $j++; }
-          else if ($x < $y) $i++;
-          else $j++;
-        }
-        ${ev.value} = (double) $ni / (double) ($na + $nb - $ni);
-      """
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedWalkKernel.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -99,55 +107,20 @@ case class SortedJaccard(left: Expression, right: Expression)
 }
 
 /** Overlap coefficient (Szymkiewicz–Simpson: |A∩B| / min(|A|,|B|)) of two
-  * SORTED long arrays — the same two-pointer merge walk as
-  * [[SortedJaccard]] with the containment denominator; reproduces the
+  * SORTED long arrays — the same merge-walk count as [[SortedJaccard]]
+  * with the containment denominator; reproduces the
   * `array_intersect`/`least` formulation exactly for distinct-element
   * inputs (int/int IEEE division, SURVEY §6).
   */
 case class SortedOverlap(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    SortedWalkCheck("sorted_overlap", left, right)
+    extends SortedWalk {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val av = a.asInstanceOf[ArrayData]
-    val bv = b.asInstanceOf[ArrayData]
-    val na = av.numElements()
-    val nb = bv.numElements()
-    var i = 0; var j = 0; var ni = 0
-    while (i < na && j < nb) {
-      val x = av.getLong(i)
-      val y = bv.getLong(j)
-      if (x == y) { ni += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    ni.toDouble / math.min(na, nb).toDouble
-  }
+  protected def kernel = "graft.functions.SortedWalkKernel.overlap"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (aV, bV) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val ni = ctx.freshName("ni")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-        int $na = $aV.numElements();
-        int $nb = $bV.numElements();
-        int $i = 0, $j = 0, $ni = 0;
-        while ($i < $na && $j < $nb) {
-          long $x = $aV.getLong($i);
-          long $y = $bV.getLong($j);
-          if ($x == $y) { $ni++; $i++; $j++; }
-          else if ($x < $y) $i++;
-          else $j++;
-        }
-        ${ev.value} = (double) $ni / (double) ($na < $nb ? $na : $nb);
-      """
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedWalkKernel.overlap(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -157,11 +130,10 @@ case class SortedOverlap(left: Expression, right: Expression)
 }
 
 /** Intersection VALUES of two SORTED distinct long arrays via the same
-  * two-pointer merge walk — emits the matches in ascending order into a
-  * primitive long buffer (no boxed HashSet, no post-sort). For
-  * sorted-distinct inputs this is exactly
-  * `sort_array(array_intersect(a, b))`: `array_intersect` keeps the
-  * first array's order and dedups, and a sorted-distinct first array
+  * merge walk — the matches in ascending order in a primitive long buffer
+  * (no boxed HashSet, no post-sort). For sorted-distinct inputs this is
+  * exactly `sort_array(array_intersect(a, b))`: `array_intersect` keeps
+  * the first array's order and dedups, and a sorted-distinct first array
   * makes that output already sorted and duplicate-free. Built for the
   * triangle census (`operators/Triangles.scala`), whose per-edge
   * N⁺(u) ∩ N⁺(v) probe runs once per oriented edge — the boxed HashSet
@@ -169,53 +141,14 @@ case class SortedOverlap(left: Expression, right: Expression)
   * allocation at the 300× decade.
   */
 case class SortedIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    SortedWalkCheck("sorted_intersect", left, right)
+    extends SortedWalk {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val av = a.asInstanceOf[ArrayData]
-    val bv = b.asInstanceOf[ArrayData]
-    val na = av.numElements()
-    val nb = bv.numElements()
-    val buf = new Array[Long](math.min(na, nb))
-    var i = 0; var j = 0; var k = 0
-    while (i < na && j < nb) {
-      val x = av.getLong(i)
-      val y = bv.getLong(j)
-      if (x == y) { buf(k) = x; k += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(buf, k))
-  }
+  protected def kernel = "graft.functions.SortedWalkKernel.values"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (aV, bV) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val k = ctx.freshName("k"); val buf = ctx.freshName("buf")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-        int $na = $aV.numElements();
-        int $nb = $bV.numElements();
-        long[] $buf = new long[$na < $nb ? $na : $nb];
-        int $i = 0, $j = 0, $k = 0;
-        while ($i < $na && $j < $nb) {
-          long $x = $aV.getLong($i);
-          long $y = $bV.getLong($j);
-          if ($x == $y) { $buf[$k++] = $x; $i++; $j++; }
-          else if ($x < $y) $i++;
-          else $j++;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(java.util.Arrays.copyOf($buf, $k));
-      """
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedWalkKernel.values(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -133,7 +133,7 @@ object BoundedLevKernel {
 }
 
 case class BoundedLevenshtein(left: Expression, right: Expression, maxDist: Int)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == StringType && right.dataType == StringType)
@@ -148,9 +148,9 @@ case class BoundedLevenshtein(left: Expression, right: Expression, maxDist: Int)
     BoundedLevKernel.compute(a.asInstanceOf[UTF8String],
       b.asInstanceOf[UTF8String], maxDist)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (aV, bV) =>
-      s"${ev.value} = graft.functions.BoundedLevKernel.compute($aV, $bV, $maxDist);")
+  protected def kernel = "graft.functions.BoundedLevKernel.compute"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    Seq(maxDist.toString)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

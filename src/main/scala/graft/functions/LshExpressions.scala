@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -107,7 +107,7 @@ object LshBucketsKernel {
 }
 
 case class LshBuckets(child: Expression, nPlanes: Int, tables: Int, dims: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -125,10 +125,9 @@ case class LshBuckets(child: Expression, nPlanes: Int, tables: Int, dims: Int)
     LshBucketsKernel.compute(input.asInstanceOf[ArrayData], elemIsFloat,
       nPlanes, tables, dims)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LshBucketsKernel.compute(" +
-        s"$c, $elemIsFloat, $nPlanes, $tables, $dims);")
+  protected def kernel = "graft.functions.LshBucketsKernel.compute"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    Seq(elemIsFloat, nPlanes, tables, dims).map(_.toString)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -63,7 +63,7 @@ object MinHashKernel {
   }
 }
 
-case class MinHashSlots(child: Expression, k: Int) extends UnaryExpression {
+case class MinHashSlots(child: Expression, k: Int) extends UnaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) if k >= 1 => TypeCheckResult.TypeCheckSuccess
@@ -76,9 +76,9 @@ case class MinHashSlots(child: Expression, k: Int) extends UnaryExpression {
   override def nullSafeEval(input: Any): Any =
     MinHashKernel.compute(input.asInstanceOf[ArrayData], k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashKernel.compute($c, $k);")
+  protected def kernel = "graft.functions.MinHashKernel.compute"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    Seq(k.toString)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,21 +45,14 @@ object NfcCleanKernel {
   }
 }
 
-case class NfcClean(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_clean requires a string input, got ${child.dataType.simpleString}")
+case class NfcClean(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = StringType
 
   override def nullSafeEval(input: Any): Any =
     NfcCleanKernel.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcCleanKernel.compute($c);")
+  protected def kernel = "graft.functions.NfcCleanKernel.compute"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -100,21 +100,14 @@ object QualityStatsKernel {
   }
 }
 
-case class QualityStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"quality_stats requires a string input, got ${child.dataType.simpleString}")
+case class QualityStats(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any =
     QualityStatsKernel.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QualityStatsKernel.compute($c);")
+  protected def kernel = "graft.functions.QualityStatsKernel.compute"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -147,21 +140,14 @@ object QualityScoreKernel {
   }
 }
 
-case class QualityScore(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"quality_score requires a string input, got ${child.dataType.simpleString}")
+case class QualityScore(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = DoubleType
 
   override def nullSafeEval(input: Any): Any =
     QualityScoreKernel.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QualityScoreKernel.compute($c);")
+  protected def kernel = "graft.functions.QualityScoreKernel.compute"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -227,7 +213,7 @@ object TokenSetCountKernel {
 }
 
 case class TokenSetCount(child: Expression, sets: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   @transient private lazy val setBytes: Array[Array[Array[Byte]]] =
     sets.map(_.map(_.getBytes(
@@ -244,12 +230,9 @@ case class TokenSetCount(child: Expression, sets: Seq[Seq[String]])
   override def nullSafeEval(input: Any): Any =
     TokenSetCountKernel.compute(input.asInstanceOf[UTF8String], setBytes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setsRef = ctx.addReferenceObj("tokenSets", setBytes,
-      "byte[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenSetCountKernel.compute($c, $setsRef);")
-  }
+  protected def kernel = "graft.functions.TokenSetCountKernel.compute"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    Seq(ctx.addReferenceObj("tokenSets", setBytes, "byte[][][]"))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -288,12 +271,12 @@ object LangIdKernel {
     }
 }
 
-case class LangId(child: Expression) extends UnaryExpression {
+/** Not null-in-null-out ("und" for null text), so it keeps its own
+  * eval and doGenCode over [[UnaryKernel]]'s input check.
+  */
+case class LangId(child: Expression) extends UnaryKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"lang_id requires a string input, got ${child.dataType.simpleString}")
+  protected def kernel = "graft.functions.LangIdKernel.compute"
 
   override def dataType: DataType = StringType
 
@@ -306,7 +289,7 @@ case class LangId(child: Expression) extends UnaryExpression {
     val c = child.genCode(ctx)
     ev.copy(code = code"""
       ${c.code}
-      UTF8String ${ev.value} = graft.functions.LangIdKernel.compute(
+      UTF8String ${ev.value} = $kernel(
         ${c.isNull} ? null : ${c.value});""", isNull = FalseLiteral)
   }
 
@@ -353,21 +336,14 @@ object BpeCountKernel {
   }
 }
 
-case class BpeCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bpe_count requires a string input, got ${child.dataType.simpleString}")
+case class BpeCount(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = LongType
 
   override def nullSafeEval(input: Any): Any =
     BpeCountKernel.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeCountKernel.compute($c);")
+  protected def kernel = "graft.functions.BpeCountKernel.compute"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -54,21 +52,14 @@ object SimHash64Kernel {
   }
 }
 
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires a string input, got ${child.dataType.simpleString}")
+case class SimHash64(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = LongType
 
   override def nullSafeEval(input: Any): Any =
     SimHash64Kernel.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64Kernel.compute($c);")
+  protected def kernel = "graft.functions.SimHash64Kernel.compute"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -57,7 +57,7 @@ object WordShinglesKernel {
 }
 
 case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType && n >= 1) TypeCheckResult.TypeCheckSuccess
@@ -70,9 +70,9 @@ case class WordShingles(child: Expression, n: Int)
   override def nullSafeEval(input: Any): Any =
     WordShinglesKernel.compute(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordShinglesKernel.compute($c, $n);")
+  protected def kernel = "graft.functions.WordShinglesKernel.compute"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    Seq(n.toString)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

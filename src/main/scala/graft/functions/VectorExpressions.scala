@@ -2,17 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst kernel for cosine similarity over embedding arrays.
-  *
-  * The composable route (`zip_with` + `aggregate`) evaluates higher-order
-  * lambdas per element per row — interpreted, allocation-heavy, and outside
-  * whole-stage codegen. This expression generates a single fused loop, which
-  * is what a 100 TB similarity join spends its time in.
+/** The cosine fold, written once. Each embedding is first widened into
+  * a per-thread double buffer (`widen`: the float/double choice is made
+  * once per vector, and the per-element ArrayData reads stay out of the
+  * fold); `fold` then runs over two double vectors. [[CosineSim]] widens
+  * both sides of a pair; the IVF affinity ([[IvfCellKernel]]) widens the
+  * row once and folds it against every centroid row.
   *
   * Numeric contract (SURVEY §6): each accumulator (dot, ‖a‖², ‖b‖²) is a
   * left-fold over exact float→double products, and the result is
@@ -26,8 +26,62 @@ import org.apache.spark.sql.types._
   * columns written with non-null elements, where the bit-identical claim
   * holds exactly.
   */
+object CosineKernel {
+  // two per-thread buffers, one per side of a pair; reused across rows
+  private val scratch = new ThreadLocal[Array[Array[Double]]] {
+    override def initialValue(): Array[Array[Double]] =
+      Array(new Array[Double](0), new Array[Double](0))
+  }
+
+  /** The first `n` elements of `v` widened to double (exact) in per-thread
+    * buffer `side`. A null ELEMENT reads 0.0 — explicitly, on every
+    * ArrayData implementation: UnsafeArrayData already returns 0.0 for a
+    * null slot's primitive read, but GenericArrayData would NPE on the
+    * unboxing. The float/double choice is made once, outside the loop.
+    */
+  private[functions] def widen(v: ArrayData, isFloat: Boolean, n: Int,
+      side: Int = 0): Array[Double] = {
+    val bufs = scratch.get()
+    if (bufs(side).length < n) bufs(side) = new Array[Double](n)
+    val buf = bufs(side)
+    var i = 0
+    if (isFloat) while (i < n) {
+      buf(i) = if (v.isNullAt(i)) 0.0 else v.getFloat(i).toDouble; i += 1
+    }
+    else while (i < n) {
+      buf(i) = if (v.isNullAt(i)) 0.0 else v.getDouble(i); i += 1
+    }
+    buf
+  }
+
+  /** The fold over the first `n` elements of two widened vectors. */
+  private[functions] def fold(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val a = x(i); val b = y(i)
+      dot += a * b; na += a * a; nb += b * b
+      i += 1
+    }
+    dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
+  }
+
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    fold(widen(a, aFloat, n), widen(b, bFloat, n, side = 1), n)
+  }
+}
+
+/** Cosine similarity of two embedding arrays ([[CosineKernel]]).
+  *
+  * The composable route (`zip_with` + `aggregate`) evaluates higher-order
+  * lambdas per element per row — interpreted, allocation-heavy, and outside
+  * whole-stage codegen. This expression is one static kernel call inside
+  * the generated stage, which is what a 100 TB similarity join spends its
+  * time in.
+  */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
@@ -42,61 +96,18 @@ case class CosineSim(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  private def elemIsFloat(e: Expression): Boolean =
+  private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  @transient private lazy val aFloat = isFloat(left)
+  @transient private lazy val bFloat = isFloat(right)
 
-  // Null ELEMENTS read as 0.0 — explicitly, on every ArrayData
-  // implementation. UnsafeArrayData already returns 0.0 for a null slot's
-  // primitive read, but GenericArrayData would NPE on the unboxing; pinning
-  // the semantics (null element contributes nothing to dot or norms) makes
-  // the kernel total instead of representation-dependent.
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val av = a.asInstanceOf[ArrayData]
-    val bv = b.asInstanceOf[ArrayData]
-    val n = math.min(av.numElements(), bv.numElements())
-    val aF = elemIsFloat(left)
-    val bF = elemIsFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (av.isNullAt(i)) 0.0
-        else if (aF) av.getFloat(i).toDouble else av.getDouble(i)
-      val y = if (bv.isNullAt(i)) 0.0
-        else if (bF) bv.getFloat(i).toDouble else bv.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
-  }
+  protected def kernel = "graft.functions.CosineKernel.cosine"
+  override protected def kernelArgs(ctx: CodegenContext): Seq[String] =
+    Seq(aFloat.toString, bFloat.toString)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (aV, bV) => {
-      // every local is freshName'd: two CosineSim instances can land in one
-      // generated function (e.g. full-precision vs quantized side by side)
-      // and a bare `i` would collide — janino rejects, Spark silently
-      // falls back to interpreted for the whole projection
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val getA = if (elemIsFloat(left)) s"(double) $aV.getFloat($i)"
-                 else s"$aV.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double) $bV.getFloat($i)"
-                 else s"$bV.getDouble($i)"
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      s"""
-        int $n = java.lang.Math.min($aV.numElements(), $bV.numElements());
-        double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = $aV.isNullAt($i) ? 0.0 : $getA;
-          double $y = $bV.isNullAt($i) ? 0.0 : $getB;
-          $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-        }
-        ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-      """
-    })
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineKernel.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      aFloat, bFloat)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

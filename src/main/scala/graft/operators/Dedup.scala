@@ -207,21 +207,6 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash --
 
-  /** MinHash signatures via the native one-pass kernel
-    * ([[graft.functions.MinHashSlots]]): all k affine-map minima fold per
-    * document inside one narrow codegen'd expression — no explode, no
-    * groupBy shuffle, no k-column aggregation buffer. At 100 TB signature
-    * computation is a pure map over the scan.
-    *
-    * Output: (id, m0..m{k-1}) — one long column per signature slot.
-    */
-  def minhashSigs(shingled: DataFrame, k: Int): DataFrame = {
-    val sig = graft.functions.MinhashFunctions.minhashSlots(col("sh"), k)
-    shingled.select(col("id"), sig.as("sig"))
-      .select(col("id") +:
-        (0 until k).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*)
-  }
-
   /** MinHash+LSH near-dup pairs, exact-verified:
     * shingles → explode → xxhash64 → groupBy(id) k-slot signature →
     * band keys (xxhash64 of each band's slots) → explode bands (b tiny

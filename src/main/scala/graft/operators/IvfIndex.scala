@@ -135,7 +135,7 @@ object IvfIndex {
     * the native [[graft.functions.IvfNearestCell]] /
     * [[graft.functions.IvfProbeCells]] kernels as a plan reference
     * object, so cell assignment and probe selection are narrow codegen'd
-    * projections — one fused loop over the matrix per row, no centroid
+    * projections — one kernel call over the matrix per row, no centroid
     * join at all, and — unlike the window formulation in `annTopK` — no
     * per-query shuffle to pick probe cells. (The r8 first cut inlined the
     * centroids as literal vectors inside an `array_max(struct(…))` tree;

@@ -25,9 +25,9 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity via the native codegen'd kernel
+  /** Cosine similarity via the native kernel
     * ([[graft.functions.CosineSim]]); bit-identical to
-    * `dot(a,b) / (norm(a) * norm(b))` — same fold order, fused loop.
+    * `dot(a,b) / (norm(a) * norm(b))` — same fold order, one pass.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.cosineSim(a, b)

@@ -60,13 +60,6 @@ object TextAnalysis {
     when(n === 0, lit(0.0)).otherwise(p.cast("double") / n.cast("double"))
   }
 
-  /** Mean word length = non-space chars / words. */
-  def meanWordLen(text: Column): Column = {
-    val n = wordCount(text)
-    val chars = length(regexp_replace(text, "\\s+", ""))
-    when(n === 0, lit(0.0)).otherwise(chars.cast("double") / n.cast("double"))
-  }
-
   /** Heuristic language ID via stopword evidence: one marker-word set per
     * language; predict the language with the most marker hits, "und" when no
     * evidence. Deterministic tie-break by probe order (en,de,fr,es).

@@ -12,107 +12,109 @@ import org.json4s.jackson.JsonMethods
   */
 object ConfigJson {
 
+  private def fail(msg: String): Nothing = throw new IllegalArgumentException(s"config: $msg")
+
+  /** An optional key: None when absent or null. A value of another JSON
+    * type fails naming `key` — it never reads as the default, which for a
+    * gate like `stop_on_invalid_record` would switch it off.
+    */
+  private def opt[T](v: JValue, key: String, kind: String)(
+      read: PartialFunction[JValue, T]): Option[T] = v match {
+    case JNothing | JNull => None
+    case x => Some(read.applyOrElse(x, (_: JValue) => fail(s"$key must be $kind")))
+  }
+  private def str(v: JValue, key: String): Option[String] =
+    opt(v, key, "a string") { case JString(s) => s }
+  private def int(v: JValue, key: String): Option[Int] =
+    opt(v, key, "an integer") { case JInt(i) if i.isValidInt => i.toInt }
+  private def bool(v: JValue, key: String): Option[Boolean] =
+    opt(v, key, "a boolean") { case JBool(b) => b }
+  private def num(v: JValue, key: String): Option[Double] =
+    opt(v, key, "a number") {
+      case JDouble(d) => d
+      case JInt(i) => i.toDouble
+      case JDecimal(d) => d.toDouble
+    }
+  private def arr(v: JValue, key: String): List[JValue] =
+    opt(v, key, "an array") { case JArray(xs) => xs }.getOrElse(Nil)
+  private def strs(v: JValue, key: String): List[String] =
+    arr(v, key).map { case JString(s) => s; case _ => fail(s"$key must hold only strings") }
+  private def strMap(v: JValue, key: String): Map[String, String] =
+    opt(v, key, "an object") { case JObject(fs) => fs }.getOrElse(Nil)
+      .map { case (k, x) => k -> required(str(x, s"$key.$k"), s"$key.$k") }.toMap
+  private def required[T](o: Option[T], key: String): T =
+    o.getOrElse(fail(s"$key is required"))
+
   def parse(json: String): Pipeline.Config = {
     val root = JsonMethods.parse(json)
-    def str(v: JValue): Option[String] = v match {
-      case JString(s) => Some(s); case _ => None
-    }
-    def int(v: JValue): Option[Int] = v match {
-      case JInt(i) => Some(i.toInt); case _ => None
-    }
     val in = root \ "in"
-    val inputPath = str(in \ "path").getOrElse(
-      throw new IllegalArgumentException("config: in.path is required"))
-    val format = str(in \ "format").getOrElse("parquet")
+    val inputPath = required(str(in \ "path", "in.path"), "in.path")
+    val format = str(in \ "format", "in.format").getOrElse("parquet")
 
-    val transforms = (root \ "filters") match {
-      case JArray(items) => items.map { f =>
-        str(f \ "type").getOrElse("") match {
-          case "where" => Pipeline.Where(str(f \ "predicate").get)
-          case "rename" => Pipeline.Rename(str(f \ "from").get, str(f \ "to").get)
-          case "cast" => Pipeline.Cast(str(f \ "col").get, str(f \ "to").get)
-          case "derive" =>
-            Pipeline.Derive(str(f \ "name").get, str(f \ "expression").get)
-          case "select" => Pipeline.Select((f \ "cols") match {
-            case JArray(cs) => cs.flatMap(str)
-            case _ => Nil
+    val transforms = arr(root \ "filters", "filters").map { f =>
+      val t = required(str(f \ "type", "filters.type"), "filters.type")
+      // every key is read as `<step>.<key>`, so a failure names it
+      def s(k: String) = str(f \ k, s"$t.$k")
+      def rs(k: String) = required(s(k), s"$t.$k")
+      def i(k: String) = int(f \ k, s"$t.$k")
+      t match {
+        case "where" => Pipeline.Where(rs("predicate"))
+        case "rename" => Pipeline.Rename(rs("from"), rs("to"))
+        case "cast" => Pipeline.Cast(rs("col"), rs("to"))
+        case "derive" => Pipeline.Derive(rs("name"), rs("expression"))
+        case "select" => Pipeline.Select(strs(f \ "cols", "select.cols"))
+        case "dedup" => Pipeline.DedupRows(
+          idCol = rs("id"), textCol = rs("column"),
+          normalized = bool(f \ "normalized", "dedup.normalized").getOrElse(false))
+        case "lang_filter" => Pipeline.LangFilter(
+          textCol = rs("column"), keep = strs(f \ "keep", "lang_filter.keep"))
+        case "quality_filter" => Pipeline.QualityFilter(
+          textCol = rs("column"),
+          minScore = required(num(f \ "min_score", "quality_filter.min_score"),
+            "quality_filter.min_score"))
+        case "pii_redact" => Pipeline.RedactPii(textCol = rs("column"))
+        case "nfc_clean" => Pipeline.NfcCleanCol(textCol = rs("column"))
+        case "pseudonymize" => Pipeline.PseudonymizeCol(
+          keyCol = rs("column"), salt = rs("salt"), bits = i("bits").getOrElse(64))
+        case "dq_check" => Pipeline.DqCheck(
+          rules = arr(f \ "rules", "dq_check.rules").map { r =>
+            def rule(k: String) = str(r \ k, s"dq_check.rules.$k")
+            Pipeline.DqRule(
+              rule = required(rule("rule"), "dq_check.rules.rule"),
+              column = required(rule("column"), "dq_check.rules.column"),
+              value = rule("value"),
+              refPath = rule("ref_path"),
+              refColumn = rule("ref_column"))
+          },
+          failOnViolation = bool(f \ "fail", "dq_check.fail").getOrElse(false))
+        case "source_quota" => Pipeline.SourceQuota(
+          keyCol = rs("key"), textCol = rs("column"), idCol = rs("id"),
+          k = i("k").getOrElse(50))
+        case "decontaminate" =>
+          val eval = f \ "eval"
+          Pipeline.Decontaminate(
+            textCol = rs("column"),
+            evalPath = required(str(eval \ "path", "decontaminate.eval.path"),
+              "decontaminate.eval.path"),
+            evalFormat = str(eval \ "format", "decontaminate.eval.format")
+              .getOrElse("parquet"),
+            evalWhere = str(eval \ "where", "decontaminate.eval.where"),
+            n = i("ngram").getOrElse(8))
+        case "quality_bands" => Pipeline.QualityBandKeep(
+          stratumCol = rs("stratum"), textCol = rs("column"), idCol = rs("id"),
+          buckets = i("buckets").getOrElse(4),
+          // `keep` decides which rows survive — a typo'd or missing value
+          // must fail loudly, never default to "keep nothing"
+          keepBands = (f \ "keep") match {
+            case JArray(bs) if bs.nonEmpty => bs.map {
+              case JInt(b) if b.isValidInt => b.toInt
+              case _ => fail("quality_bands.keep must contain only integers")
+            }
+            case _ =>
+              fail("quality_bands.keep must be a non-empty array of band numbers")
           })
-          case "dedup" => Pipeline.DedupRows(
-            idCol = str(f \ "id").get, textCol = str(f \ "column").get,
-            normalized = (f \ "normalized") match {
-              case JBool(b) => b; case _ => false
-            })
-          case "lang_filter" => Pipeline.LangFilter(
-            textCol = str(f \ "column").get,
-            keep = (f \ "keep") match {
-              case JArray(ls) => ls.flatMap(str); case _ => Nil
-            })
-          case "quality_filter" => Pipeline.QualityFilter(
-            textCol = str(f \ "column").get,
-            minScore = (f \ "min_score") match {
-              case JDouble(d) => d
-              case JInt(i) => i.toDouble
-              case JDecimal(d) => d.toDouble
-              case _ => 0.0
-            })
-          case "pii_redact" =>
-            Pipeline.RedactPii(textCol = str(f \ "column").get)
-          case "nfc_clean" =>
-            Pipeline.NfcCleanCol(textCol = str(f \ "column").get)
-          case "pseudonymize" => Pipeline.PseudonymizeCol(
-            keyCol = str(f \ "column").get,
-            salt = str(f \ "salt").get,
-            bits = int(f \ "bits").getOrElse(64))
-          case "dq_check" => Pipeline.DqCheck(
-            rules = (f \ "rules") match {
-              case JArray(rs) => rs.map { r =>
-                Pipeline.DqRule(
-                  rule = str(r \ "rule").get,
-                  column = str(r \ "column").get,
-                  value = str(r \ "value"),
-                  refPath = str(r \ "ref_path"),
-                  refColumn = str(r \ "ref_column"))
-              }
-              case _ => Nil
-            },
-            failOnViolation = (f \ "fail") match {
-              case JBool(b) => b; case _ => false
-            })
-          case "source_quota" => Pipeline.SourceQuota(
-            keyCol = str(f \ "key").get,
-            textCol = str(f \ "column").get,
-            idCol = str(f \ "id").get,
-            k = int(f \ "k").getOrElse(50))
-          case "decontaminate" => Pipeline.Decontaminate(
-            textCol = str(f \ "column").get,
-            evalPath = str(f \ "eval" \ "path").getOrElse(
-              throw new IllegalArgumentException(
-                "config: decontaminate.eval.path is required")),
-            evalFormat = str(f \ "eval" \ "format").getOrElse("parquet"),
-            evalWhere = str(f \ "eval" \ "where"),
-            n = int(f \ "ngram").getOrElse(8))
-          case "quality_bands" => Pipeline.QualityBandKeep(
-            stratumCol = str(f \ "stratum").get,
-            textCol = str(f \ "column").get,
-            idCol = str(f \ "id").get,
-            buckets = int(f \ "buckets").getOrElse(4),
-            // `keep` decides which rows survive — a typo'd or missing value
-            // must fail loudly, never default to "keep nothing"
-            keepBands = (f \ "keep") match {
-              case JArray(bs) if bs.nonEmpty =>
-                val bands = bs.flatMap(int)
-                if (bands.length != bs.length)
-                  throw new IllegalArgumentException(
-                    "config: quality_bands.keep must contain only integers")
-                bands
-              case _ => throw new IllegalArgumentException(
-                "config: quality_bands.keep must be a non-empty array of band numbers")
-            })
-          case other =>
-            throw new IllegalArgumentException(s"config: unknown filter '$other'")
-        }
+        case other => fail(s"unknown filter '$other'")
       }
-      case _ => Nil
     }
 
     val partitioning = (root \ "partitioning") match {
@@ -135,22 +137,21 @@ object ConfigJson {
           case _ => throw new IllegalArgumentException(
             "config: partitioning must be an object")
         }
-        str(p \ "timezone").foreach { tz =>
-          if (tz != "UTC")
-            throw new IllegalArgumentException(
-              s"config: partitioning.timezone must be UTC, got '$tz'")
+        def ps(k: String) = str(p \ k, s"partitioning.$k")
+        def pi(k: String) = int(p \ k, s"partitioning.$k")
+        ps("timezone").foreach { tz =>
+          if (tz != "UTC") fail(s"partitioning.timezone must be UTC, got '$tz'")
         }
         Some(Pipeline.Partitioning(
-        column = str(p \ "column").getOrElse(
-          throw new IllegalArgumentException("config: partitioning.column is required")),
-        unit = str(p \ "unit").getOrElse("hour"),
-        unixTimestampUnit = str(p \ "unix_timestamp_unit"),
-        mapSidePartitionSplit = int(p \ "map_side_partition_split").getOrElse(1),
+        column = required(ps("column"), "partitioning.column"),
+        unit = ps("unit").getOrElse("hour"),
+        unixTimestampUnit = ps("unix_timestamp_unit"),
+        mapSidePartitionSplit = pi("map_side_partition_split").getOrElse(1),
         // the reference's type-name dispatch (Partitioning.java:16-30);
         // "timestamp" is the default exactly as there
-        ptype = str(p \ "type").getOrElse("timestamp"),
-        hashBuckets = int(p \ "buckets").getOrElse(32),
-        secondColumn = str(p \ "second_column")))
+        ptype = ps("type").getOrElse("timestamp"),
+        hashBuckets = pi("buckets").getOrElse(32),
+        secondColumn = ps("second_column")))
     }
 
     // output stage (the reference config's `out:` section): format +
@@ -158,12 +159,8 @@ object ConfigJson {
     val out = (root \ "out") match {
       case JNothing | JNull => Pipeline.Out()
       case o => Pipeline.Out(
-        format = str(o \ "format").getOrElse("parquet"),
-        options = (o \ "options") match {
-          case JObject(fields) =>
-            fields.collect { case (k, JString(v)) => k -> v }.toMap
-          case _ => Map.empty[String, String]
-        })
+        format = str(o \ "format", "out.format").getOrElse("parquet"),
+        options = strMap(o \ "options", "out.options"))
     }
 
     Pipeline.Config(
@@ -171,16 +168,15 @@ object ConfigJson {
       format = format,
       transforms = transforms,
       partitioning = partitioning,
-      reducers = int(root \ "reducers"),
-      localModeMaxTasks = int(root \ "local_mode_input_tasks"),
-      stopOnInvalidRecord = (root \ "stop_on_invalid_record") match {
-        case JBool(b) => b; case _ => false
-      },
+      reducers = int(root \ "reducers", "reducers"),
+      localModeMaxTasks = int(root \ "local_mode_input_tasks", "local_mode_input_tasks"),
+      stopOnInvalidRecord = bool(root \ "stop_on_invalid_record",
+        "stop_on_invalid_record").getOrElse(false),
       out = out,
       // the reference's `job_name` (MapReduceExecutorTask.java:20-22) and
       // `config` passthrough (ib:24-30, arbitrary Hadoop conf injection):
       // job_name labels the Spark jobs, `config` sets runtime SQL confs
-      jobName = str(root \ "job_name"),
+      jobName = str(root \ "job_name", "job_name"),
       // `config_files` (MapReduceExecutorTask.java:24-26, merged at
       // MapReduceExecutor.java:207-218): a LIST of config files folded
       // into the job conf in order, with the inline `config` block
@@ -188,11 +184,7 @@ object ConfigJson {
       // are JSON objects of string pairs — the engine's config dialect —
       // rather than Hadoop XML resources; a missing file fails loudly
       // with the reference's exact message contract, never a silent skip.
-      sparkConf = configFiles(root) ++ ((root \ "config") match {
-        case JObject(fields) =>
-          fields.collect { case (k, JString(v)) => k -> v }.toMap
-        case _ => Map.empty[String, String]
-      }))
+      sparkConf = configFiles(root) ++ strMap(root \ "config", "config"))
   }
 
   private def configFiles(root: JValue): Map[String, String] =

@@ -326,6 +326,28 @@ class BenchGuardSpec extends AnyFunSuite with SparkFixture {
     assert(clean.full.contains(""""regression_suspect":false"""))
   }
 
+  test("passes: a query that failed is not run again") {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a fails in-run; b fails on its second cold draw; c is healthy
+    val coldSeen = scala.collection.mutable.Map.empty[String, Int]
+    def time(n: String, reset: Boolean): Option[Double] = {
+      calls += s"$n:${if (reset) "cold" else "inrun"}"
+      if (!reset) Option.when(n != "a")(1.0)
+      else {
+        coldSeen(n) = coldSeen.getOrElse(n, 0) + 1
+        Option.when(!(n == "b" && coldSeen(n) == 2))(1.0)
+      }
+    }
+    def fork(n: String): Option[Double] = { calls += s"$n:fork"; Some(1.0) }
+    val s = Bench.passes(Seq("a", "b", "c"), Seq("a", "b", "c"), time, fork)
+    assert(s.failed == Seq("a", "b"))
+    assert(calls.count(_.startsWith("a:")) == 1)
+    assert(calls.filter(_.startsWith("b:")) == Seq("b:inrun", "b:cold", "b:cold"))
+    // c: one in-run, three cold reps, two extra draws (sub-threshold), fork
+    assert(calls.count(_ == "c:cold") == 5 && calls.contains("c:fork"))
+    assert(s.coldDraws == Seq("c" -> Seq.fill(5)(1.0)))
+  }
+
   test("jnum formats with '.' decimals independent of default locale") {
     val prev = java.util.Locale.getDefault
     try {

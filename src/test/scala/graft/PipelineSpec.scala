@@ -290,6 +290,49 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(out.where(TextAnalysis.qualityScore($"text") < 0.8).count() === 0)
   }
 
+  test("ConfigJson names a missing required key or a mistyped key") {
+    import graft.pipeline.ConfigJson
+    def rejects(body: String, message: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        ConfigJson.parse(s"""{"in": {"path": "x"}, $body}""")
+      }
+      assert(e.getMessage === s"config: $message", body)
+    }
+    def step(f: String) = s""""filters": [$f]"""
+    rejects(step("""{"type": "where"}"""), "where.predicate is required")
+    rejects(step("""{"type": "rename", "from": "a"}"""), "rename.to is required")
+    rejects(step("""{"type": "dedup", "column": "t"}"""), "dedup.id is required")
+    rejects(step("""{"type": "dq_check", "rules": [{"rule": "not_null"}]}"""),
+      "dq_check.rules.column is required")
+    rejects(step("""{"type": "quality_filter", "column": "t"}"""),
+      "quality_filter.min_score is required")
+    rejects(step("""{"column": "t"}"""), "filters.type is required")
+    // present with the wrong JSON type: fails, never reads as the default
+    rejects(""""stop_on_invalid_record": "true"""",
+      "stop_on_invalid_record must be a boolean")
+    rejects(step("""{"type": "dq_check", "fail": "true", "rules": []}"""),
+      "dq_check.fail must be a boolean")
+    rejects(""""partitioning": {"column": "ts", "map_side_partition_split": "4"}""",
+      "partitioning.map_side_partition_split must be an integer")
+    rejects(""""reducers": "8"""", "reducers must be an integer")
+    rejects(step("""{"type": "quality_filter", "column": "t", "min_score": "0.5"}"""),
+      "quality_filter.min_score must be a number")
+    rejects(step("""{"type": "lang_filter", "column": "t", "keep": ["en", 1]}"""),
+      "lang_filter.keep must hold only strings")
+    rejects(""""out": {"options": {"header": true}}""",
+      "out.options.header must be a string")
+    // the well-typed spellings still parse to their values
+    val ok = ConfigJson.parse("""{"in": {"path": "x"}, "reducers": 8,
+      "stop_on_invalid_record": true,
+      "partitioning": {"column": "ts", "map_side_partition_split": 4},
+      "filters": [{"type": "dq_check", "fail": true, "rules": []},
+                  {"type": "quality_filter", "column": "t", "min_score": 1}]}""")
+    assert(ok.reducers === Some(8) && ok.stopOnInvalidRecord)
+    assert(ok.partitioning.get.mapSidePartitionSplit === 4)
+    assert(ok.transforms === Seq(Pipeline.DqCheck(Nil, failOnViolation = true),
+      Pipeline.QualityFilter("t", 1.0)))
+  }
+
   test("pseudonymize config step keeps tables joinable across runs") {
     val cfg = graft.pipeline.ConfigJson.parse(s"""{
       "in": {"path": "$sf/orders.parquet"},
