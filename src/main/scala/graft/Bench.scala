@@ -458,7 +458,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = GraftSession.intKnob("SPARK_GRAFT_CPUS", sys.env.get, 1)
+      .getOrElse(4)
     // 1-min load BEFORE the session spins up: recorded in the JSON line as
     // contention telemetry, and egregious pre-existing load (another
     // process actively churning half the machine) trips the guard even if

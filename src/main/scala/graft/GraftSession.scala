@@ -43,10 +43,11 @@ object GraftSession {
     * box — so inputs under `smallBytes` (256 MiB default) keep the
     * plain `cores` layout, and the ceiling engages only where the r15
     * A/B measured its wins (the decade dirs start at 477 MB). On a real
-    * cluster, scale the ceiling with total-executor-cores via
-    * SPARK_GRAFT_INIT_PARTITIONS — the trade is per-task constant
-    * overhead vs per-task sort footprint, and the right ceiling grows
-    * with the data-to-memory ratio.
+    * cluster, scale the ceiling with total-executor-cores by setting
+    * Spark's own `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+    * on the returned builder or on the session (a later conf wins) — the
+    * trade is per-task constant overhead vs per-task sort footprint, and
+    * the right ceiling grows with the data-to-memory ratio.
     */
   def initPartitionsFor(cores: Int, bytes: Long,
       smallBytes: Long = 256L << 20): Int =
@@ -72,24 +73,26 @@ object GraftSession {
       smallBytes: Long = 256L << 20): Int =
     if (bytes >= smallBytes) cores else math.min(cores, 8)
 
-  /** An integer `SPARK_GRAFT_*` knob: `None` when unset, else a value that
-    * must be an integer ≥ `min`. A malformed value throws naming the knob
-    * instead of quietly changing the algorithm.
+  /** An integer `SPARK_GRAFT_*` harness setting (core count, scale factor,
+    * reps, timeouts) looked up in `env` (the harness mains pass the
+    * process environment): `None` when unset, else a value that must be an
+    * integer ≥ `min`. A malformed value throws naming the knob instead of
+    * a bare `NumberFormatException`.
     */
-  def intKnob(name: String, raw: Option[String], min: Int): Option[Int] =
-    raw.map(v => v.trim.toIntOption.filter(_ >= min).getOrElse(
+  def intKnob(name: String, env: String => Option[String],
+      min: Int): Option[Int] =
+    env(name).map(v => v.trim.toIntOption.filter(_ >= min).getOrElse(
       throw new IllegalArgumentException(
         s"$name must be an integer >= $min, got '$v'")))
 
   /** [[builder]] with the AQE ceiling conditioned on the session's known
-    * input directory. `SPARK_GRAFT_INIT_PARTITIONS` still wins outright.
+    * input directory ([[initPartitionsFor]]).
     */
   def builderFor(master: String, cores: Int,
       inputDir: String): SparkSession.Builder =
     builder(master, cores)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-          initPartitionsFor(cores, inputBytes(inputDir)).toString))
+        initPartitionsFor(cores, inputBytes(inputDir)).toString)
 
   /** The confs every graft query's results depend on, applied by
     * [[builder]] and by Verify's dump session: UTC session time; ANSI off,
@@ -116,8 +119,7 @@ object GraftSession {
       // initPartitionsFor for the measured rationale and the
       // small-input carve-out builderFor applies)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-          (cores * 2).toString))
+        (cores * 2).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config(contractConfs)
       .config("spark.ui.enabled", "false")

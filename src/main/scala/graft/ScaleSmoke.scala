@@ -87,24 +87,26 @@ object ScaleSmoke {
           sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM",
             s"${math.max(1024L, workerMb - 1024L)}m"))
     } else b0
-    // SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs applied last —
-    // the A/B instrument for session-level knobs the harness doesn't
-    // model (e.g. spark.sql.files.maxPartitionBytes for the q5 per-task
-    // group-cardinality experiment, r16 verdict task 1). Study knob, not
-    // a production path: values land verbatim in the session.
-    val withExtra = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Nil)
-      .foldLeft(b1) { (b, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
-          case _ => b
-        }
-      }
-    val spark = withExtra.getOrCreate()
+    val spark = b1.config(extraConf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs applied last —
+    * the A/B instrument for session-level confs the harness doesn't
+    * model (e.g. spark.sql.files.maxPartitionBytes for the q5 per-task
+    * group-cardinality experiment, r16 verdict task 1, or Spark's
+    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` to
+    * replace the input-conditional AQE ceiling). Study knob, not a
+    * production path: values land verbatim in the session.
+    */
+  private def extraConf: Map[String, String] =
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.nonEmpty))
+      .flatMap(kv => kv.split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -114,7 +116,8 @@ object ScaleSmoke {
     val pinned = sys.env.get("SPARK_GRAFT_SCALE_DIR")
     val out = pinned.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_scale_").toString)
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
+    val factor = GraftSession
+      .intKnob("SPARK_GRAFT_SCALE_FACTOR", sys.env.get, 1).getOrElse(10)
     // reuse only a COMPLETE build OF THIS SHAPE: the marker (written after
     // the last table commits) records base+factor, so a pinned dir built
     // at 10× is rebuilt — not silently reused — when a 30× run asks for
@@ -126,7 +129,8 @@ object ScaleSmoke {
         scala.util.Try(java.nio.file.Files.readString(marker.toPath).trim)
           .getOrElse("") != stamp
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.intKnob("SPARK_GRAFT_CPUS", sys.env.get, 1)
+      .getOrElse(32)
     val spark = scaleSession(cpus, factor)
     def amplify(name: String, keyCols: Map[String, Long]): Unit = {
       val src = Tables.table(spark, base, name)
@@ -156,12 +160,12 @@ object ScaleSmoke {
     // so size it and apply the same rule Bench uses at session build —
     // a runtime SQL conf, settable post-build. Decade dirs (477 MB+)
     // always clear the small-input threshold, keeping the measured
-    // 2×-cores ceiling the r15 A/B chose there.
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-        GraftSession.initPartitionsFor(
-          cpus, GraftSession.inputBytes(out)).toString))
+    // 2×-cores ceiling the r15 A/B chose there. An extra-conf ceiling
+    // still wins, as every extra conf does.
+    val ceiling = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    if (!extraConf.contains(ceiling))
+      spark.conf.set(ceiling, GraftSession.initPartitionsFor(
+        cpus, GraftSession.inputBytes(out)).toString)
 
     // the full registered surface (SPARK_GRAFT_SCALE_ONLY restricts for
     // iteration)
@@ -175,7 +179,8 @@ object ScaleSmoke {
     // reports every rep: single fresh-JVM probes at the 300× decade swing
     // ±30-50% (page-cache / JIT / first-run state), so arm comparisons
     // need in-JVM repeats where those confounds are shared
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
+    val reps = GraftSession.intKnob("SPARK_GRAFT_SCALE_REPS", sys.env.get, 1)
+      .getOrElse(1)
     // cold per rep (same reset as Bench's cold pass): accumulated
     // checkpoint/cache state from earlier queries otherwise evicts the
     // current query's own caches at 30× and inflates it up to 4× — the

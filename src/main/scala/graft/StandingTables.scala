@@ -66,19 +66,17 @@ object StandingTables {
       s"-Xmx${basis.driverMem}",
       "-cp", sys.props("java.class.path"),
       "graft.ScaleSmoke", base)
-    // basis-defining and semantics-changing vars are SET OR REMOVED
-    // explicitly — the parent may be running from the exact shell whose
-    // hand-driven incantations this main replaces, and an inherited
-    // SPARK_GRAFT_MASTER would silently turn every "sj" row into an mp
-    // measurement (likewise SPAN_NO_COLLAPSE would flip span/novelty to
-    // the raw study path). SPARK_GRAFT_EXTRA_CONF stays inherited on
-    // purpose: it is the documented instrumentation passthrough.
+    // basis-defining vars are SET OR REMOVED explicitly — the parent may
+    // be running from the exact shell whose hand-driven incantations this
+    // main replaces, and an inherited SPARK_GRAFT_MASTER would silently
+    // turn every "sj" row into an mp measurement. SPARK_GRAFT_EXTRA_CONF
+    // stays inherited on purpose: it is the documented instrumentation
+    // passthrough.
     val env = Map[String, Option[String]](
       "SPARK_GRAFT_SCALE_DIR" -> Some(scaleDir),
       "SPARK_GRAFT_SCALE_FACTOR" -> Some(factor.toString),
       "SPARK_GRAFT_SCALE_ONLY" -> Some(query),
       "SPARK_GRAFT_SCALE_REPS" -> Some(reps.toString),
-      "SPARK_GRAFT_SPAN_NO_COLLAPSE" -> None,
       // local-cluster's executor launcher resolves its classpath through
       // the scala-version-suffixed dir name
       "SPARK_SCALA_VERSION" -> basis.master.map(_ => "2.13"),
@@ -135,7 +133,8 @@ object StandingTables {
     val queries = sys.env.get("SPARK_GRAFT_ST_ONLY")
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(ScaleSmoke.flagshipSet.toSeq.sorted)
-    val timeoutS = sys.env.getOrElse("SPARK_GRAFT_ST_TIMEOUT_S", "900").toLong
+    val timeoutS = GraftSession
+      .intKnob("SPARK_GRAFT_ST_TIMEOUT_S", sys.env.get, 1).getOrElse(900).toLong
     val activeBases = bases.filter(b => basisKeys.contains(b.key))
     if (activeBases.exists(_.master.isDefined)) {
       // same jar resolution ScaleSmoke's local-cluster path uses: an
@@ -155,8 +154,9 @@ object StandingTables {
       require(hasJar, "mp basis needs the app jar — run `sbt package` " +
         "first (or point SPARK_GRAFT_APP_JAR at one)")
     }
-    val buildTimeoutS = sys.env
-      .getOrElse("SPARK_GRAFT_ST_BUILD_TIMEOUT_S", "3600").toLong
+    val buildTimeoutS = GraftSession
+      .intKnob("SPARK_GRAFT_ST_BUILD_TIMEOUT_S", sys.env.get, 1)
+      .getOrElse(3600).toLong
     for (factor <- decades) {
       val scaleDir = sys.env.getOrElse(s"SPARK_GRAFT_ST_DIR_$factor",
         s"/dev/shm/graft_scale$factor")

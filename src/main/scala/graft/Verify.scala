@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.intKnob("SPARK_GRAFT_CPUS", sys.env.get, 1)
+      .getOrElse(4).toString
     // managed-table queries (join_bucketed, resume harness) write through
     // the warehouse: keep it on the harness tmpfs, not the repo CWD
     val wh = Files.createTempDirectory(Queries.tempBase, "graft_wh_")

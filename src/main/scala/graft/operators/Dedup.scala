@@ -795,22 +795,16 @@ object Dedup {
     // UNCONDITIONAL shortcut cut rounds 7 → 4 but COST wall (best-rep
     // 51.0 → 67.7 s) — near-dup graphs are shallow, and each shortcut
     // round's extra self-join + checkpoint outweighs three saved
-    // rounds. So the shortcut engages only from round `shortcutFrom`
+    // rounds. So the shortcut engages only from round `ShortcutFrom`
     // on: real corpora (diameter ≲ 5) never pay it, while a
     // pathological deep chain — which plain propagation would leave
-    // unconverged at maxIter, an error — still closes within the round budget (reach ≈ shortcutFrom ·
-    // 2^(maxIter−shortcutFrom), ~96 hops at the defaults vs 10
-    // plain). Exactness: every intermediate root is the min over SOME
-    // reachable subset (propagation extends it one hop, the shortcut
-    // unions it with the root's own subset — still reachable); the
-    // fixpoint is the component min either way, and the rootSum
-    // convergence probe is unchanged. A/B escapes:
-    // SPARK_GRAFT_CLUSTERS_NO_SHORTCUT=1 forces plain rounds,
-    // SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM overrides the engage round.
-    val shortcutOff = sys.env
-      .get("SPARK_GRAFT_CLUSTERS_NO_SHORTCUT").exists(_.trim == "1")
-    val shortcutFrom =
-      shortcutFromKnob(sys.env.get("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM"))
+    // unconverged at maxIter, an error — still closes within the round
+    // budget (reach ≈ ShortcutFrom · 2^(maxIter−ShortcutFrom), ~96 hops
+    // at the defaults vs 10 plain). Exactness: every intermediate root
+    // is the min over SOME reachable subset (propagation extends it one
+    // hop, the shortcut unions it with the root's own subset — still
+    // reachable); the fixpoint is the component min either way, and the
+    // rootSum convergence probe is unchanged.
     var shortcuts = 0
     while (iter < maxIter && !converged) {
       val viaNeighbors = edges
@@ -820,7 +814,7 @@ object Dedup {
         .groupBy(col("id")).agg(min(col("root")).as("root"))
         .localCheckpoint()
       labels =
-        if (shortcutOff || iter < shortcutFrom) propagated
+        if (iter < ShortcutFrom) propagated
         else {
           shortcuts += 1
           propagated
@@ -846,20 +840,16 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(s"clusters: min-label propagation " +
         s"did not converge within maxIter=$maxIter rounds ($shortcuts " +
-        s"shortcut; SPARK_GRAFT_CLUSTERS_NO_SHORTCUT=$shortcutOff, " +
-        s"SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM=$shortcutFrom) — raise " +
-        "maxIter or engage the shortcut earlier")
+        s"shortcut, engaged from round $ShortcutFrom) — raise maxIter")
     // untouched nodes are their own root
     ids.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("root"))
   }
 
-  /** The SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM round: an integer ≥ 0,
-    * default 6.
+  /** The propagation round from which [[clusters]] appends the
+    * pointer-doubling shortcut (see the measured rationale in its loop).
     */
-  private[graft] def shortcutFromKnob(raw: Option[String]): Int =
-    graft.GraftSession.intKnob("SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM", raw, 0)
-      .getOrElse(6)
+  private val ShortcutFrom = 6
 
   // ---------------------------------------------------- embedding near-dup --
 

@@ -67,18 +67,6 @@ object SpanDedup {
   private def winKey(ws: Column): Column =
     struct(xxhash64(ws).as("h1"), xxhash64(lit(1L), ws).as("h2"))
 
-  /** A/B escape hatch for scale probes: the pinned decade dirs are
-    * amplified by verbatim replication, so the collapsed path measures
-    * the (tiny) distinct-text corpus there — setting
-    * SPARK_GRAFT_SPAN_NO_COLLAPSE=1 forces the raw full-window-shuffle
-    * path so BASELINE keeps an honest number for the unique-window
-    * worst case. Results are identical either way (the equivalence
-    * arguments below); production always dispatches on the measured
-    * counts.
-    */
-  private def collapseDisabled: Boolean =
-    sys.env.get("SPARK_GRAFT_SPAN_NO_COLLAPSE").exists(_.trim == "1")
-
   /** (key, h) window-instance frame: one row per rolling `n`-word window
     * of `words`, keyed by whatever identity column the caller groups on
     * (doc_id on the raw path, the content-group key on the collapsed
@@ -162,7 +150,6 @@ object SpanDedup {
       n: Int): DataFrame = {
     require(n >= 2, s"window must be >= 2 words, got $n")
     val k = keyed(docs, id, text)
-    if (collapseDisabled) return rawSpanStats(k, n)
     val members = k.select(col("doc_id"), col("gk")).cache()
     try {
       // adaptive: a corpus with no verbatim dups needs no collapse — the
@@ -264,7 +251,6 @@ object SpanDedup {
       n: Int): DataFrame = {
     require(n >= 2, s"window must be >= 2 words, got $n")
     val k = keyed(docs, id, text)
-    if (collapseDisabled) return rawNoveltyStats(k, n)
     val members = k.select(col("doc_id"), col("gk")).cache()
     try {
       // same probe as spanStats
@@ -335,13 +321,13 @@ object SpanDedup {
     require(minDocs >= 2, s"census threshold must be >= 2 docs, got $minDocs")
     require(k >= 1, s"census cut must keep >= 1 row, got $k")
     val kk = keyed(docs, id, text)
-    val useRaw = collapseDisabled ||
+    val useRaw =
       !Dispatch.collapse("span_census", kk, Seq(col("gk")), Dispatch.margin)
     // (src, weight, w, nwl): one row per doc (raw; weight 1) or per
     // distinct text (collapsed; weight = group size). src is doc_id on
-    // the raw path — under SPARK_GRAFT_SPAN_NO_COLLAPSE the corpus may
-    // still hold verbatim copies, and keying instances by gk there would
-    // merge two docs' instances under one weight-1 row.
+    // the raw path — a corpus the probe sends raw may still hold
+    // verbatim copies below the dispatch margin, and keying instances by
+    // gk there would merge two docs' instances under one weight-1 row.
     val frame =
       if (useRaw)
         kk.select(col("doc_id").as("src"), lit(1L).as("weight"),
@@ -404,7 +390,7 @@ object SpanDedup {
     // normalized-distinct, so a corpus whose only duplicates are
     // normalize-equal-but-raw-different takes the (always-correct) raw
     // branch and merely forgoes the collapse.
-    val collapse = !collapseDisabled && Dispatch.collapse("source_overlap",
+    val collapse = Dispatch.collapse("source_overlap",
       docs, Seq(source, text), Dispatch.margin)
     val normed = docs
       .select(source.as("src"), TextAnalysis.normalize(text).as("nt"))

@@ -155,18 +155,4 @@ object TimePartitioning {
       .drop("_salt")
     staged.groupBy(col("bucket")).agg(finalAggs.head, finalAggs.tail: _*)
   }
-
-  /** The reference's end-to-end partitioned load
-    * (`EmbulkPartitioningMapReduce.java:39,145,186`): map → shuffle by time
-    * bucket → reduce writes one directory per bucket. `repartition(n, bucket)`
-    * is the shuffle; `partitionBy` makes reducer-local files, so each output
-    * partition holds exactly one bucket — same contract as the reference's
-    * reducer-side output plugin. `maxRecordsPerFile` caps file size at scale.
-    */
-  def writePartitioned(df: DataFrame, bucketCol: Column, outDir: String,
-      reducers: Option[Int] = None, maxRecordsPerFile: Long = 5000000L,
-      split: Int = 1, saltOn: Option[Column] = None): Unit =
-    graft.sources.Sinks.write(df, outDir, "parquet", Some(bucketCol),
-      reducers, maxRecordsPerFile, Map.empty, splitHotBuckets = split,
-      saltOn = saltOn)
 }

@@ -45,67 +45,94 @@ object ConfigJson {
   private def required[T](o: Option[T], key: String): T =
     o.getOrElse(fail(s"$key is required"))
 
+  /** A config object that records which keys the parser reads. [[closed]]
+    * then rejects any key nobody read, so the accepted set is exactly the
+    * keys the parser asks for and a misspelt optional key fails instead of
+    * quietly taking the default.
+    */
+  private final class Obj(v: JValue) {
+    private val seen = scala.collection.mutable.Set.empty[String]
+    def apply(k: String): JValue = { seen += k; v \ k }
+    def closed(where: String): Unit = v match {
+      case JObject(fields) =>
+        val unknown = fields.map(_._1).filterNot(seen)
+        if (unknown.nonEmpty)
+          fail(s"unknown $where key(s): ${unknown.mkString(", ")}")
+      case _ => fail(s"$where must be an object")
+    }
+  }
+
   def parse(json: String): Pipeline.Config = {
     val root = JsonMethods.parse(json)
     val in = root \ "in"
     val inputPath = required(str(in \ "path", "in.path"), "in.path")
     val format = str(in \ "format", "in.format").getOrElse("parquet")
 
-    val transforms = arr(root \ "filters", "filters").map { f =>
-      val t = required(str(f \ "type", "filters.type"), "filters.type")
+    val transforms = arr(root \ "filters", "filters").map { step =>
+      val f = new Obj(step)
+      val t = required(str(f("type"), "filters.type"), "filters.type")
       // every key is read as `<step>.<key>`, so a failure names it
-      def s(k: String) = str(f \ k, s"$t.$k")
+      def s(k: String) = str(f(k), s"$t.$k")
       def rs(k: String) = required(s(k), s"$t.$k")
-      def i(k: String) = int(f \ k, s"$t.$k")
-      t match {
+      def i(k: String) = int(f(k), s"$t.$k")
+      val transform = t match {
         case "where" => Pipeline.Where(rs("predicate"))
         case "rename" => Pipeline.Rename(rs("from"), rs("to"))
         case "cast" => Pipeline.Cast(rs("col"), rs("to"))
         case "derive" => Pipeline.Derive(rs("name"), rs("expression"))
-        case "select" => Pipeline.Select(strs(f \ "cols", "select.cols"))
+        case "select" => Pipeline.Select(strs(f("cols"), "select.cols"))
         case "dedup" => Pipeline.DedupRows(
           idCol = rs("id"), textCol = rs("column"),
-          normalized = bool(f \ "normalized", "dedup.normalized").getOrElse(false))
+          normalized = bool(f("normalized"), "dedup.normalized").getOrElse(false))
         case "lang_filter" => Pipeline.LangFilter(
-          textCol = rs("column"), keep = strs(f \ "keep", "lang_filter.keep"))
+          textCol = rs("column"), keep = strs(f("keep"), "lang_filter.keep"))
         case "quality_filter" => Pipeline.QualityFilter(
           textCol = rs("column"),
-          minScore = required(num(f \ "min_score", "quality_filter.min_score"),
+          minScore = required(num(f("min_score"), "quality_filter.min_score"),
             "quality_filter.min_score"))
         case "pii_redact" => Pipeline.RedactPii(textCol = rs("column"))
         case "nfc_clean" => Pipeline.NfcCleanCol(textCol = rs("column"))
         case "pseudonymize" => Pipeline.PseudonymizeCol(
           keyCol = rs("column"), salt = rs("salt"), bits = i("bits").getOrElse(64))
         case "dq_check" => Pipeline.DqCheck(
-          rules = arr(f \ "rules", "dq_check.rules").map { r =>
-            def rule(k: String) = str(r \ k, s"dq_check.rules.$k")
-            Pipeline.DqRule(
+          rules = arr(f("rules"), "dq_check.rules").map { ruleJson =>
+            val r = new Obj(ruleJson)
+            def rule(k: String) = str(r(k), s"dq_check.rules.$k")
+            val dq = Pipeline.DqRule(
               rule = required(rule("rule"), "dq_check.rules.rule"),
               column = required(rule("column"), "dq_check.rules.column"),
               value = rule("value"),
               refPath = rule("ref_path"),
               refColumn = rule("ref_column"))
+            r.closed("dq_check.rules")
+            dq
           },
-          failOnViolation = bool(f \ "fail", "dq_check.fail").getOrElse(false))
+          failOnViolation = bool(f("fail"), "dq_check.fail").getOrElse(false))
         case "source_quota" => Pipeline.SourceQuota(
           keyCol = rs("key"), textCol = rs("column"), idCol = rs("id"),
           k = i("k").getOrElse(50))
         case "decontaminate" =>
-          val eval = f \ "eval"
-          Pipeline.Decontaminate(
+          // `id` was required while decontamination joined back on the doc
+          // id; configs written then still pass it, so it is accepted and
+          // ignored
+          f("id")
+          val eval = new Obj(f("eval"))
+          val step = Pipeline.Decontaminate(
             textCol = rs("column"),
-            evalPath = required(str(eval \ "path", "decontaminate.eval.path"),
+            evalPath = required(str(eval("path"), "decontaminate.eval.path"),
               "decontaminate.eval.path"),
-            evalFormat = str(eval \ "format", "decontaminate.eval.format")
+            evalFormat = str(eval("format"), "decontaminate.eval.format")
               .getOrElse("parquet"),
-            evalWhere = str(eval \ "where", "decontaminate.eval.where"),
+            evalWhere = str(eval("where"), "decontaminate.eval.where"),
             n = i("ngram").getOrElse(8))
+          eval.closed("decontaminate.eval")
+          step
         case "quality_bands" => Pipeline.QualityBandKeep(
           stratumCol = rs("stratum"), textCol = rs("column"), idCol = rs("id"),
           buckets = i("buckets").getOrElse(4),
           // `keep` decides which rows survive — a typo'd or missing value
           // must fail loudly, never default to "keep nothing"
-          keepBands = (f \ "keep") match {
+          keepBands = f("keep") match {
             case JArray(bs) if bs.nonEmpty => bs.map {
               case JInt(b) if b.isValidInt => b.toInt
               case _ => fail("quality_bands.keep must contain only integers")
@@ -115,34 +142,25 @@ object ConfigJson {
           })
         case other => fail(s"unknown filter '$other'")
       }
+      f.closed(t)
+      transform
     }
 
     val partitioning = (root \ "partitioning") match {
       case JNothing | JNull => None
-      case p =>
+      case p: JObject =>
         // the reference validates the partitioning block LOUDLY: unknown
         // keys never pass silently, and `timezone` accepts only UTC
         // (TimestampPartitioning.java:34-36,128-131 throws ConfigException
         // for anything else) — a silently-ignored timezone would bucket
         // every timestamp wrong by the offset
-        val known = Set("column", "unit", "unix_timestamp_unit",
-          "map_side_partition_split", "type", "buckets", "second_column",
-          "timezone")
-        p match {
-          case JObject(fields) =>
-            val unknown = fields.map(_._1).filterNot(known)
-            if (unknown.nonEmpty)
-              throw new IllegalArgumentException(
-                s"config: unknown partitioning key(s): ${unknown.mkString(", ")}")
-          case _ => throw new IllegalArgumentException(
-            "config: partitioning must be an object")
-        }
-        def ps(k: String) = str(p \ k, s"partitioning.$k")
-        def pi(k: String) = int(p \ k, s"partitioning.$k")
+        val o = new Obj(p)
+        def ps(k: String) = str(o(k), s"partitioning.$k")
+        def pi(k: String) = int(o(k), s"partitioning.$k")
         ps("timezone").foreach { tz =>
           if (tz != "UTC") fail(s"partitioning.timezone must be UTC, got '$tz'")
         }
-        Some(Pipeline.Partitioning(
+        val part = Pipeline.Partitioning(
         column = required(ps("column"), "partitioning.column"),
         unit = ps("unit").getOrElse("hour"),
         unixTimestampUnit = ps("unix_timestamp_unit"),
@@ -151,7 +169,10 @@ object ConfigJson {
         // "timestamp" is the default exactly as there
         ptype = ps("type").getOrElse("timestamp"),
         hashBuckets = pi("buckets").getOrElse(32),
-        secondColumn = ps("second_column")))
+        secondColumn = ps("second_column"))
+        o.closed("partitioning")
+        Some(part)
+      case _ => fail("partitioning must be an object")
     }
 
     // output stage (the reference config's `out:` section): format +
@@ -201,8 +222,9 @@ object ConfigJson {
             throw new IllegalArgumentException(
               s"Config file '$path' does not exist")
           JsonMethods.parse(java.nio.file.Files.readString(f.toPath)) match {
-            case JObject(fields) =>
-              acc ++ fields.collect { case (k, JString(v)) => k -> v }
+            // the inline `config` block's rule: a non-string value fails
+            // naming the file and key, never a silent drop
+            case o: JObject => acc ++ strMap(o, s"config_files[$path]")
             case _ => throw new IllegalArgumentException(
               s"config: config file '$path' must be a JSON object of string values")
           }

@@ -413,16 +413,11 @@ object StreamingIngest {
     * under 256 MiB cap the store count at 8; at scale the session
     * default (cores) stands — state stores are the parallelism unit of
     * stateful recovery, and a 100 TB stream wants MORE of them, not
-    * fewer (raise via SPARK_GRAFT_STATE_PARTITIONS, which wins outright).
+    * fewer.
     */
   def statePartitionsFor(cores: Int, bytes: Long,
       smallBytes: Long = 256L << 20): Int =
-    statePartitionsKnob(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
-      .getOrElse(if (bytes < smallBytes) math.min(cores, 8) else cores)
-
-  /** The SPARK_GRAFT_STATE_PARTITIONS override: an integer ≥ 1. */
-  private[graft] def statePartitionsKnob(raw: Option[String]): Option[Int] =
-    graft.GraftSession.intKnob("SPARK_GRAFT_STATE_PARTITIONS", raw, 1)
+    if (bytes < smallBytes) math.min(cores, 8) else cores
 
   /** Run `body` — which must START and AWAIT its streaming query — with
     * `spark.sql.shuffle.partitions` set to `n`, restoring the session

@@ -150,22 +150,47 @@ class BenchGuardSpec extends AnyFunSuite with SparkFixture {
 
   test("integer knobs: unset keeps the default, malformed values throw " +
       "naming the knob") {
-    val state = graft.streaming.StreamingIngest.statePartitionsKnob _
-    val from = graft.operators.Dedup.shortcutFromKnob _
-    assert(state(None) === None)
-    assert(state(Some("12")) === Some(12))
-    assert(from(None) === 6)
-    assert(from(Some("0")) === 0)
-    assert(from(Some(" 3 ")) === 3)
-    Seq(
-      "SPARK_GRAFT_STATE_PARTITIONS" -> (() => state(Some("0"))),
-      "SPARK_GRAFT_STATE_PARTITIONS" -> (() => state(Some("8x"))),
-      "SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM" -> (() => from(Some("-1"))),
-      "SPARK_GRAFT_CLUSTERS_SHORTCUT_FROM" -> (() => from(Some("")))
-    ).foreach { case (name, parse) =>
-      val e = intercept[IllegalArgumentException](parse())
-      assert(e.getMessage.contains(name), e.getMessage)
+    // the harness integer settings, each with its default; every harness
+    // main reads them through GraftSession.intKnob
+    val knobs = Seq("SPARK_GRAFT_CPUS" -> 4, "SPARK_GRAFT_SCALE_FACTOR" -> 10,
+      "SPARK_GRAFT_SCALE_REPS" -> 1, "SPARK_GRAFT_ST_TIMEOUT_S" -> 900,
+      "SPARK_GRAFT_ST_BUILD_TIMEOUT_S" -> 3600)
+    val harness = Seq("Bench", "ScaleSmoke", "StandingTables", "Verify")
+      .map(f => java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"src/main/scala/graft/$f.scala")))
+      .mkString("\n")
+    knobs.foreach { case (name, default) =>
+      def knob(raw: Option[String]) =
+        GraftSession.intKnob(name, Map(name -> raw).apply, 1).getOrElse(default)
+      assert(harness.contains(s"""intKnob("$name", sys.env.get"""), name)
+      assert(knob(None) === default)
+      assert(knob(Some(" 12 ")) === 12)
+      Seq("0", "-1", "8x", "").foreach { bad =>
+        val e = intercept[IllegalArgumentException](knob(Some(bad)))
+        assert(e.getMessage.contains(name), e.getMessage)
+      }
     }
+  }
+
+  test("engine code reads no environment variable but SPARK_GRAFT_TMPDIR") {
+    // an algorithm or sizing choice is a function of the inputs and the
+    // session conf, never of a private env override
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val engine = Seq("operators", "functions", "pipeline", "streaming",
+      "plans", "sources", "multimodal").flatMap { d =>
+      root.resolve(d).toFile.listFiles().filter(_.getName.endsWith(".scala"))
+    } ++ Seq("GraftSession", "Queries", "Tables", "SparkEntry")
+      .map(f => root.resolve(s"$f.scala").toFile)
+    assert(engine.forall(_.isFile))
+    val read = """(?:sys\.env|System\.getenv)\b[^\n]*""".r
+    val found = engine.flatMap { f =>
+      read.findAllIn(java.nio.file.Files.readString(f.toPath))
+        .map(m => s"${f.getName}: $m").toSeq
+    }
+    val (allowed, rest) = found.partition(_.contains("\"SPARK_GRAFT_TMPDIR\""))
+    assert(rest.isEmpty, rest.mkString("\n"))
+    assert(allowed.size === 1, allowed.mkString("\n"))
   }
 
   test("bucketsFor: small inputs keep 8 fuller buckets, large inputs " +

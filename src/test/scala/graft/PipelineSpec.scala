@@ -333,6 +333,49 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       Pipeline.QualityFilter("t", 1.0)))
   }
 
+  test("ConfigJson rejects a filter key the step does not read") {
+    import graft.pipeline.ConfigJson
+    def rejects(f: String, message: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        ConfigJson.parse(s"""{"in": {"path": "x"}, "filters": [$f]}""")
+      }
+      assert(e.getMessage === s"config: $message", f)
+    }
+    // a misspelt optional key fails instead of taking the default
+    rejects("""{"type": "decontaminate", "column": "t", "ngrams": 4,
+      "eval": {"path": "e"}}""", "unknown decontaminate key(s): ngrams")
+    rejects("""{"type": "dedup", "id": "i", "column": "t", "normalised": true}""",
+      "unknown dedup key(s): normalised")
+    rejects("""{"type": "decontaminate", "column": "t",
+      "eval": {"path": "e", "fromat": "csv"}}""",
+      "unknown decontaminate.eval key(s): fromat")
+    rejects("""{"type": "dq_check", "rules": [{"rule": "min", "column": "c",
+      "vaule": "1"}]}""", "unknown dq_check.rules key(s): vaule")
+    // a key another step reads is still unknown to this one
+    rejects("""{"type": "where", "predicate": "true", "column": "t"}""",
+      "unknown where key(s): column")
+    // decontaminate still accepts the `id` older configs pass, and ignores it
+    val ok = ConfigJson.parse("""{"in": {"path": "x"}, "filters": [
+      {"type": "decontaminate", "column": "t", "id": "doc_id",
+       "eval": {"path": "e"}, "ngram": 4}]}""")
+    assert(ok.transforms === Seq(Pipeline.Decontaminate(textCol = "t",
+      evalPath = "e", evalFormat = "parquet", evalWhere = None, n = 4)))
+  }
+
+  test("config_files names the file and key of a non-string value") {
+    val f = java.nio.file.Files.createTempFile("graft_cfg_", ".json")
+    try {
+      java.nio.file.Files.writeString(f,
+        """{"spark.sql.shuffle.partitions": 8, "k": "v"}""")
+      val e = intercept[IllegalArgumentException] {
+        graft.pipeline.ConfigJson.parse(
+          s"""{"in": {"path": "x"}, "config_files": ["$f"]}""")
+      }
+      assert(e.getMessage === s"config: config_files[$f]" +
+        ".spark.sql.shuffle.partitions must be a string")
+    } finally java.nio.file.Files.delete(f)
+  }
+
   test("pseudonymize config step keeps tables joinable across runs") {
     val cfg = graft.pipeline.ConfigJson.parse(s"""{
       "in": {"path": "$sf/orders.parquet"},

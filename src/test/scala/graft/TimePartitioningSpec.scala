@@ -114,8 +114,8 @@ class TimePartitioningSpec extends AnyFunSuite with SparkFixture {
   test("partitioned write produces one directory per bucket (reduce-side output)") {
     val out = java.nio.file.Files.createTempDirectory("graft_part_").toString
     val ev = Tables.events(spark, sf)
-    TimePartitioning.writePartitioned(
-      ev, TimePartitioning.bucket($"ts", Day), out, reducers = Some(4))
+    graft.sources.Sinks.write(ev, out,
+      bucket = Some(TimePartitioning.bucket($"ts", Day)), reducers = Some(4))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("bucket=")).sorted
     val expected = ev.select(TimePartitioning.bucket($"ts", Day).as("b")).distinct()
