@@ -48,9 +48,13 @@ case class RequireTimestampLike(child: Expression) extends UnaryExpression {
   *    nano}: toSeconds = v / unit (`TimestampPartitioning.java:89-106`);
   *  - `map_side_partition_split` skew mitigation: the reference round-robins
   *    each hot bucket across N reducer keys (`key=(bucket<<16)|rr`,
-  *    `TimestampPartitioning.java:273-289`). Here the salt is a deterministic
-  *    row-hash mod N and aggregation is two-stage (partial per (bucket,salt),
-  *    final per bucket) — associative aggs make the result split-invariant.
+  *    `TimestampPartitioning.java:273-289`). For aggregation the salt is a
+  *    deterministic row-hash mod N and aggregation is two-stage (partial per
+  *    (bucket,salt), final per bucket) — associative aggs make the result
+  *    split-invariant. The partitioned write (`Sinks.write`) rebalances on
+  *    the bucket key when no reducer count is fixed, so AQE splits only a
+  *    bucket above a 1/N share of the write; with a fixed count it salts
+  *    every bucket N ways with [[salt]].
   *
   * All arithmetic is 64-bit integer division (`div`), never floating point,
   * so bucket ids are exact and cross-engine reproducible.

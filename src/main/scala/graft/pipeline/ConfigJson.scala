@@ -27,6 +27,15 @@ object ConfigJson {
     opt(v, key, "a string") { case JString(s) => s }
   private def int(v: JValue, key: String): Option[Int] =
     opt(v, key, "an integer") { case JInt(i) if i.isValidInt => i.toInt }
+  /** A count (buckets, reducers, split factor): an integer >= 1. Zero
+    * would fail inside Spark without naming the key, or for `buckets`
+    * silently null every row's bucket (`pmod(_, 0)` with ANSI off).
+    */
+  private def count(v: JValue, key: String): Option[Int] =
+    int(v, key).map { i =>
+      if (i < 1) fail(s"$key must be an integer >= 1, got $i")
+      i
+    }
   private def bool(v: JValue, key: String): Option[Boolean] =
     opt(v, key, "a boolean") { case JBool(b) => b }
   private def num(v: JValue, key: String): Option[Double] =
@@ -63,12 +72,15 @@ object ConfigJson {
   }
 
   def parse(json: String): Pipeline.Config = {
-    val root = JsonMethods.parse(json)
-    val in = root \ "in"
-    val inputPath = required(str(in \ "path", "in.path"), "in.path")
-    val format = str(in \ "format", "in.format").getOrElse("parquet")
+    val root = new Obj(JsonMethods.parse(json))
+    // the root, `in` and `out` are closed like every other block: a
+    // misspelt `"reducer": 8` must fail, not quietly pick another write
+    val in = new Obj(root("in"))
+    val inputPath = required(str(in("path"), "in.path"), "in.path")
+    val format = str(in("format"), "in.format").getOrElse("parquet")
+    in.closed("in")
 
-    val transforms = arr(root \ "filters", "filters").map { step =>
+    val transforms = arr(root("filters"), "filters").map { step =>
       val f = new Obj(step)
       val t = required(str(f("type"), "filters.type"), "filters.type")
       // every key is read as `<step>.<key>`, so a failure names it
@@ -146,7 +158,7 @@ object ConfigJson {
       transform
     }
 
-    val partitioning = (root \ "partitioning") match {
+    val partitioning = root("partitioning") match {
       case JNothing | JNull => None
       case p: JObject =>
         // the reference validates the partitioning block LOUDLY: unknown
@@ -156,7 +168,7 @@ object ConfigJson {
         // every timestamp wrong by the offset
         val o = new Obj(p)
         def ps(k: String) = str(o(k), s"partitioning.$k")
-        def pi(k: String) = int(o(k), s"partitioning.$k")
+        def pn(k: String) = count(o(k), s"partitioning.$k")
         ps("timezone").foreach { tz =>
           if (tz != "UTC") fail(s"partitioning.timezone must be UTC, got '$tz'")
         }
@@ -164,11 +176,11 @@ object ConfigJson {
         column = required(ps("column"), "partitioning.column"),
         unit = ps("unit").getOrElse("hour"),
         unixTimestampUnit = ps("unix_timestamp_unit"),
-        mapSidePartitionSplit = pi("map_side_partition_split").getOrElse(1),
+        mapSidePartitionSplit = pn("map_side_partition_split").getOrElse(1),
         // the reference's type-name dispatch (Partitioning.java:16-30);
         // "timestamp" is the default exactly as there
         ptype = ps("type").getOrElse("timestamp"),
-        hashBuckets = pi("buckets").getOrElse(32),
+        hashBuckets = pn("buckets").getOrElse(32),
         secondColumn = ps("second_column"))
         o.closed("partitioning")
         Some(part)
@@ -177,27 +189,31 @@ object ConfigJson {
 
     // output stage (the reference config's `out:` section): format +
     // free-form writer options (header, delimiter, compression, ...)
-    val out = (root \ "out") match {
+    val out = root("out") match {
       case JNothing | JNull => Pipeline.Out()
-      case o => Pipeline.Out(
-        format = str(o \ "format", "out.format").getOrElse("parquet"),
-        options = strMap(o \ "options", "out.options"))
+      case v =>
+        val o = new Obj(v)
+        val sink = Pipeline.Out(
+          format = str(o("format"), "out.format").getOrElse("parquet"),
+          options = strMap(o("options"), "out.options"))
+        o.closed("out")
+        sink
     }
 
-    Pipeline.Config(
+    val config = Pipeline.Config(
       inputPath = inputPath,
       format = format,
       transforms = transforms,
       partitioning = partitioning,
-      reducers = int(root \ "reducers", "reducers"),
-      localModeMaxTasks = int(root \ "local_mode_input_tasks", "local_mode_input_tasks"),
-      stopOnInvalidRecord = bool(root \ "stop_on_invalid_record",
+      reducers = count(root("reducers"), "reducers"),
+      localModeMaxTasks = int(root("local_mode_input_tasks"), "local_mode_input_tasks"),
+      stopOnInvalidRecord = bool(root("stop_on_invalid_record"),
         "stop_on_invalid_record").getOrElse(false),
       out = out,
       // the reference's `job_name` (MapReduceExecutorTask.java:20-22) and
       // `config` passthrough (ib:24-30, arbitrary Hadoop conf injection):
       // job_name labels the Spark jobs, `config` sets runtime SQL confs
-      jobName = str(root \ "job_name", "job_name"),
+      jobName = str(root("job_name"), "job_name"),
       // `config_files` (MapReduceExecutorTask.java:24-26, merged at
       // MapReduceExecutor.java:207-218): a LIST of config files folded
       // into the job conf in order, with the inline `config` block
@@ -205,11 +221,14 @@ object ConfigJson {
       // are JSON objects of string pairs — the engine's config dialect —
       // rather than Hadoop XML resources; a missing file fails loudly
       // with the reference's exact message contract, never a silent skip.
-      sparkConf = configFiles(root) ++ strMap(root \ "config", "config"))
+      sparkConf = configFiles(root("config_files")) ++
+        strMap(root("config"), "config"))
+    root.closed("root")
+    config
   }
 
-  private def configFiles(root: JValue): Map[String, String] =
-    (root \ "config_files") match {
+  private def configFiles(files: JValue): Map[String, String] =
+    files match {
       case JNothing | JNull => Map.empty
       case JArray(paths) =>
         paths.map {

@@ -20,8 +20,11 @@ import graft.operators.{ErrorPolicy, TimePartitioning}
   *    `Partitioning.java:16-30` ("timestamp" built in, "column_hash" the
   *    second type proving the dispatch is an extension point);
   *  - `reducers` ⇒ shuffle partition count (`MapReduceExecutorTask.java:44`);
-  *  - `map_side_partition_split` ⇒ hot buckets salted across N reducer
-  *    tasks in the partitioned write (`TimestampPartitioning.java:273-289`);
+  *  - `map_side_partition_split` ⇒ a hot bucket spreads over up to N
+  *    reducer tasks in the partitioned write
+  *    (`TimestampPartitioning.java:273-289`): without `reducers`, AQE
+  *    rebalances on the bucket key and splits only the oversized buckets;
+  *    with `reducers`, every bucket is salted N ways;
   *  - `stop_on_invalid_record` ⇒ cast-parse failures abort the run
   *    (`embulk_mapred_stop_on_invalid_record_config.yml` failfast);
   *  - `localModeMaxTasks` ⇒ coalesce tiny inputs, the analogue of
@@ -361,9 +364,11 @@ object Pipeline {
 
   /** Execute: plan (incl. the failfast gate) → sink. Partitioned configs
     * write one directory per bucket through `Sinks.write`, with
-    * `map_side_partition_split` salting hot buckets across that many
-    * reducer tasks; map-only configs write directly in the configured
-    * output format. Returns the task report for the run (the reference's
+    * `map_side_partition_split` = N letting a hot bucket spread over up to
+    * N reducer tasks — by a rebalance that splits only the buckets above a
+    * 1/N share of the write when `reducers` is unset, by an N-way salt on
+    * every bucket when it is set; map-only configs write directly in the
+    * configured output format. Returns the task report for the run (the reference's
     * job report surface), complete and detached from the session.
     */
   def run(spark: SparkSession, config: Config, outPath: String): TaskReport = {

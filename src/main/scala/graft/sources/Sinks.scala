@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Output sinks — the reference's output-plugin stage (reducer-side output
   * in `EmbulkPartitioningMapReduce.java:186`, task-side in
@@ -10,36 +12,39 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Sinks {
 
   /** Write with optional bucket-directory partitioning — the partitioned
-    * load's output contract (one directory per key). `splitHotBuckets` > 1
-    * is the reference's `map_side_partition_split` skew mitigation
-    * (`TimestampPartitioning.java:273-289`, `key=(bucket<<16)|rr`): the
-    * shuffle key becomes (bucket, salt) so one hot bucket's rows spread
-    * over that many reducer tasks, while `partitionBy` still lands every
-    * row in its bucket directory — the salt only widens task parallelism,
-    * never the layout.
+    * load's output contract (one directory per key). The shuffle key is
+    * the FULL bucket key: `bucket` plus `extraBuckets`, the further
+    * (name, expr) partition levels under it (the composite (time, column)
+    * layout a curated corpus usually lands in — day + source), so rows
+    * co-locate per leaf directory.
     *
-    * Salt source (the r5 verdict's fix — the old default xxhash64'd EVERY
-    * column, full document text included, per row, and identical duplicate
-    * rows always collided on one salt, so a duplicate-heavy hot bucket —
-    * the web-corpus norm — never actually spread):
-    *  - `saltOn = Some(col)`: hash only that cheap stable column (a unique
-    *    id). O(id-width) per row and spreads everything, duplicates
-    *    included, provided the column is distinct-per-row.
-    *  - default: hash `spark_partition_id()` — O(1) per row, touches no
-    *    data columns, and duplicate rows spread at input-partition
-    *    granularity (duplicates *within* one map partition share a salt;
-    *    map partitions are maxPartitionBytes-bounded, so each (map task,
-    *    bucket) slice is small by construction — the same per-mapper
-    *    spreading the reference's round-robin counter gives). Stable under
-    *    task retry as long as the upstream partitioning is deterministic,
-    *    which holds for the file-scan pipelines this sink serves — unlike
-    *    the reference's in-memory counter, which is not retry-idempotent.
-    */
-  /** `extraBuckets` appends further (name, expr) partition levels under the
-    * primary bucket — the composite (time, column) layout a curated corpus
-    * usually lands in (day + source). The shuffle key is the FULL compound
-    * key, so rows co-locate per leaf directory and the salt (if any)
-    * spreads a hot (bucket, …) leaf, not just a hot time bucket.
+    * `splitHotBuckets` = N > 1 is the reference's `map_side_partition_split`
+    * skew mitigation (`TimestampPartitioning.java:273-289`,
+    * `key=(bucket<<16)|rr`): a hot bucket may spread over up to N reducer
+    * tasks, while `partitionBy` still lands every row in its bucket
+    * directory. It takes one of two shapes:
+    *  - `reducers` unset (and no `saltOn`): one rebalance on the bucket
+    *    key, whose advisory partition size is the larger of the session's
+    *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` and the write's
+    *    estimated size / N. AQE coalesces the cold buckets into balanced
+    *    tasks and splits only a partition above that size; no partition
+    *    holds more than the whole write, so a hot bucket lands in at most
+    *    about N tasks and every other bucket in one. The N-way spread is
+    *    decided from runtime sizes, not applied to every bucket.
+    *  - `reducers` set, or `saltOn` given: the static salt. The shuffle
+    *    key becomes (bucket key, salt) over exactly `reducers` tasks
+    *    (Spark's rebalance cannot take both a partition count and an
+    *    advisory size), so EVERY bucket spreads over up to N tasks. Salt
+    *    source:
+    *    - `saltOn = Some(col)`: hash only that cheap stable column (a
+    *      unique id), so duplicates spread too, provided the column is
+    *      distinct-per-row.
+    *    - default: hash `spark_partition_id()` — O(1) per row, touches no
+    *      data columns; duplicate rows spread at input-partition
+    *      granularity, the per-mapper spreading the reference's
+    *      round-robin counter gives. Stable under task retry as long as
+    *      the upstream partitioning is deterministic, which holds for the
+    *      file-scan pipelines this sink serves.
     */
   def write(df: DataFrame, path: String, format: String = "parquet",
       bucket: Option[Column] = None, reducers: Option[Int] = None,
@@ -49,23 +54,31 @@ object Sinks {
       saltOn: Option[Column] = None,
       extraBuckets: Seq[(String, Column)] = Nil): Unit = {
     import org.apache.spark.sql.functions.{col, spark_partition_id}
+    require(splitHotBuckets >= 1,
+      s"splitHotBuckets must be >= 1, got $splitHotBuckets")
     val (frame, partCols) = bucket match {
       case Some(b) =>
         val named = ("bucket" -> b) +: extraBuckets
         val withB = named.foldLeft(df) { case (d, (n, c)) =>
           d.withColumn(n, c)
         }
-        val keyCols = named.map { case (n, _) => col(n) }
-        val shuffleKeys =
-          if (splitHotBuckets > 1)
-            keyCols :+ graft.operators.TimePartitioning.salt(
-              saltOn.getOrElse(spark_partition_id()), splitHotBuckets)
-          else keyCols
+        val names = named.map(_._1)
         val shuffled = reducers match {
-          case Some(n) => withB.repartition(n, shuffleKeys: _*)
-          case None => withB.repartition(shuffleKeys: _*)
+          case None if splitHotBuckets > 1 && saltOn.isEmpty =>
+            rebalance(withB, names, splitHotBuckets)
+          case _ =>
+            val keyCols = names.map(col)
+            val shuffleKeys =
+              if (splitHotBuckets > 1)
+                keyCols :+ graft.operators.TimePartitioning.salt(
+                  saltOn.getOrElse(spark_partition_id()), splitHotBuckets)
+              else keyCols
+            reducers match {
+              case Some(n) => withB.repartition(n, shuffleKeys: _*)
+              case None => withB.repartition(shuffleKeys: _*)
+            }
         }
-        (shuffled, named.map(_._1))
+        (shuffled, names)
       case None => (df, Nil)
     }
     val w = frame.write.format(format)
@@ -73,6 +86,26 @@ object Sinks {
       .options(options)
       .mode("overwrite")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).save(path)
+  }
+
+  /** One `RebalancePartitions` on the columns `keys` whose advisory
+    * partition size is max(session advisory size, estimated size / `split`),
+    * so AQE splits only a partition larger than a 1/`split` share of the
+    * write. The keys are the analyzed plan's own output attributes: the
+    * logical node is built below the Column API, where an unresolved
+    * column would fail at run time.
+    */
+  private def rebalance(df: DataFrame, keys: Seq[String],
+      split: Int): DataFrame = {
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    val attrs = keys.map(k => plan.output.find(_.name == k).get)
+    val sessionSize = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    val share = df.queryExecution.optimizedPlan.stats.sizeInBytes / split
+    val advisory = share.max(BigInt(sessionSize)).min(BigInt(Long.MaxValue)).toLong
+    ColumnBridge.ofRows(spark, RebalancePartitions(attrs, plan,
+      optNumPartitions = None, optAdvisoryPartitionSize = Some(advisory)))
   }
 
   /** Drop a managed table AND its warehouse directory. The in-memory

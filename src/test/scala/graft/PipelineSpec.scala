@@ -362,6 +362,51 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       evalPath = "e", evalFormat = "parquet", evalWhere = None, n = 4)))
   }
 
+  test("ConfigJson rejects unknown keys at the root and in `in` and `out`") {
+    import graft.pipeline.ConfigJson
+    def rejects(json: String, message: String): Unit = {
+      val e = intercept[IllegalArgumentException](ConfigJson.parse(json))
+      assert(e.getMessage === s"config: $message", json)
+    }
+    // a misspelt `reducers` would otherwise quietly pick the other write
+    rejects("""{"in": {"path": "x"}, "reducer": 8}""",
+      "unknown root key(s): reducer")
+    rejects("""{"in": {"path": "x"}, "filter": [], "jobname": "j"}""",
+      "unknown root key(s): filter, jobname")
+    rejects("""{"in": {"path": "x", "fromat": "csv"}}""",
+      "unknown in key(s): fromat")
+    rejects("""{"in": {"path": "x"}, "out": {"format": "csv", "option": {}}}""",
+      "unknown out key(s): option")
+    // every root, `in` and `out` key the parser reads still parses
+    val ok = ConfigJson.parse("""{"in": {"path": "x", "format": "csv"},
+      "filters": [], "reducers": 2, "local_mode_input_tasks": 1,
+      "stop_on_invalid_record": false, "job_name": "j", "config_files": [],
+      "config": {"k": "v"}, "partitioning": {"column": "ts"},
+      "out": {"format": "json", "options": {"compression": "none"}}}""")
+    assert(ok.format === "csv" && ok.reducers === Some(2) &&
+      ok.out === Pipeline.Out("json", Map("compression" -> "none")))
+  }
+
+  test("ConfigJson requires counts of at least 1, naming the key") {
+    import graft.pipeline.ConfigJson
+    def rejects(body: String, message: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        ConfigJson.parse(s"""{"in": {"path": "x"}, $body}""")
+      }
+      assert(e.getMessage === s"config: $message", body)
+    }
+    rejects(""""reducers": 0""", "reducers must be an integer >= 1, got 0")
+    rejects(""""partitioning": {"column": "ts", "map_side_partition_split": 0}""",
+      "partitioning.map_side_partition_split must be an integer >= 1, got 0")
+    rejects(""""partitioning": {"type": "column_hash", "column": "c", "buckets": -2}""",
+      "partitioning.buckets must be an integer >= 1, got -2")
+    val one = ConfigJson.parse("""{"in": {"path": "x"}, "reducers": 1,
+      "partitioning": {"column": "ts", "map_side_partition_split": 1, "buckets": 1}}""")
+    assert(one.reducers === Some(1) &&
+      one.partitioning.get.mapSidePartitionSplit === 1 &&
+      one.partitioning.get.hashBuckets === 1)
+  }
+
   test("config_files names the file and key of a non-string value") {
     val f = java.nio.file.Files.createTempFile("graft_cfg_", ".json")
     try {

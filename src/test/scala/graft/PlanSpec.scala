@@ -393,6 +393,68 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(plan.contains("HashAggregate"), plan.take(3000))
   }
 
+  /** The shuffle exchanges of the one write `body` runs, read from the
+    * executed plan a `QueryExecutionListener` sees (the sink returns
+    * Unit). Walked through AQE's final plan, so each exchange counts once.
+    */
+  private def writeExchanges(body: => Unit)
+      : Seq[(org.apache.spark.sql.execution.exchange.ShuffleExchangeExec, String)] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.BusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new AdaptiveSparkPlanHelper {}
+    import scala.jdk.CollectionConverters._
+    val writes = plans.asScala.toSeq.filter(p =>
+      helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    assert(writes.size === 1, plans.asScala.mkString("\n"))
+    val exchanges = helper.collect(writes.head) { case e: ShuffleExchangeExec => e }
+    exchanges.map(e => e -> e.outputPartitioning.toString)
+  }
+
+  test("partitioned write without reducers rebalances on the bucket key; " +
+      "with reducers it keeps the salted repartition") {
+    import org.apache.spark.sql.execution.exchange.{
+      REBALANCE_PARTITIONS_BY_COL, REPARTITION_BY_NUM}
+    def config(reducers: String) = graft.pipeline.ConfigJson.parse(s"""{
+      "in": {"path": "$sf/orders.parquet"},
+      "partitioning": {"type": "composite", "column": "o_orderdate",
+        "unit": "day", "second_column": "o_orderstatus",
+        "map_side_partition_split": 4}$reducers}""")
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_write_")
+    val rebalanced = writeExchanges(graft.pipeline.Pipeline.run(spark,
+      config(""), s"$dir/rebalance"))
+    assert(rebalanced.size === 1, rebalanced)
+    val (rb, rbKeys) = rebalanced.head
+    assert(rb.shuffleOrigin === REBALANCE_PARTITIONS_BY_COL, rbKeys)
+    assert(rbKeys.matches("""hashpartitioning\(bucket#\d+L, o_orderstatus#\d+, \d+\)"""),
+      rbKeys)
+    assert(!rb.toString.toLowerCase.contains("spark_partition_id") &&
+      !rb.toString.contains("xxhash64"), rb.toString)
+    assert(rb.advisoryPartitionSize.exists(_ > 0), rb.toString)
+
+    val salted = writeExchanges(graft.pipeline.Pipeline.run(spark,
+      config(""", "reducers": 8"""), s"$dir/salted"))
+    assert(salted.size === 1, salted)
+    val (sl, slKeys) = salted.head
+    assert(sl.shuffleOrigin === REPARTITION_BY_NUM, slKeys)
+    // the salt's spark_partition_id() is projected below the exchange
+    assert(slKeys.contains("xxhash64") &&
+      sl.toString.toLowerCase.contains("spark_partition_id"), sl.toString)
+  }
+
   test("flagship queries keep whole-stage codegen in the hot path") {
     // AQE finalizes the physical plan lazily — execute first. Codegen'd
     // operators print with a `*(stageId)` prefix in the final plan.

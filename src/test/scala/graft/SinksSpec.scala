@@ -142,6 +142,74 @@ class SinksSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(out).count() === 2000)
   }
 
+  /** 40,000 rows in 8 map partitions: bucket 0 holds half of them, the
+    * other half spreads over 30 cold buckets. The payload is hex, which
+    * the shuffle codec barely compresses, so the shuffle's bytes stay
+    * close to the plan's size estimate.
+    */
+  private def hotInput = spark.range(0, 40000, 1, 8).select($"id",
+    when($"id" % 2 === 0, 0L).otherwise($"id" % 60).as("b"),
+    substring(sha2($"id".cast("string"), 256), 1, 16).as("payload"))
+
+  private def filesPerBucket(out: String): Map[Long, Int] =
+    new java.io.File(out).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+      .map(d => d.getName.stripPrefix("bucket=").toLong ->
+        d.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+
+  private def landed(out: String): Seq[String] =
+    spark.read.parquet(out)
+      .select($"bucket".cast("long"), $"id", $"b", $"payload")
+      .collect().map(_.toString).sorted.toSeq
+
+  test("splitHotBuckets without reducers rebalances on the bucket key: " +
+      "one file per bucket until a bucket outgrows a 1/N share") {
+    val split = 4
+    val salted = tmp("graft_salted_")
+    Sinks.write(hotInput, salted, bucket = Some($"b"), reducers = Some(8),
+      splitHotBuckets = split)
+    val want = landed(salted)
+    val saltedFiles = filesPerBucket(salted).values.sum
+
+    // (a) default advisory size: the whole write is far below it, so AQE
+    // coalesces and splits nothing — every bucket is exactly one file
+    val plain = tmp("graft_rebalance_")
+    Sinks.write(hotInput, plain, bucket = Some($"b"), splitHotBuckets = split)
+    val plainFiles = filesPerBucket(plain)
+    assert(plainFiles.size === 31)
+    assert(plainFiles.values.forall(_ == 1), plainFiles)
+    assert(landed(plain) === want)
+
+    // (b) advisory size below the write's 1/N share: the share caps it, so
+    // only the partition holding the hot bucket splits, into at most ~N
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    val small = tmp("graft_rebalance_small_")
+    try Sinks.write(hotInput, small, bucket = Some($"b"),
+      splitHotBuckets = split)
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    val smallFiles = filesPerBucket(small)
+    assert(smallFiles.size === 31)
+    assert(smallFiles(0L) >= 2 && smallFiles(0L) <= split, smallFiles)
+    assert(smallFiles.values.forall(_ <= split), smallFiles)
+    assert(smallFiles.values.sum < saltedFiles,
+      s"rebalanced ${smallFiles.values.sum} files, salted $saltedFiles")
+    assert(landed(small) === want)
+  }
+
+  test("splitHotBuckets must be at least 1") {
+    val e = intercept[IllegalArgumentException] {
+      Sinks.write(hotInput, tmp("graft_split0_"), bucket = Some($"b"),
+        splitHotBuckets = 0)
+    }
+    assert(e.getMessage.contains("splitHotBuckets must be >= 1, got 0"))
+  }
+
   test("watermark drops events later than the lateness bound") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val input = MemoryStream[Long](spark)

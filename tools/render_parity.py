@@ -20,11 +20,16 @@ rendering drift — fails HERE, before the driver's CORRECTNESS gate does.
 Usage: python3 tools/render_parity.py <verify_out_dir> <sf_dir>
 (run graft.Verify into <verify_out_dir> first; exits 1 on any mismatch;
 result dirs absent from a restricted Verify run are skipped, not failed)
+
+Each OK/FAIL line ends with the seconds the query's DuckDB side took, and
+the five slowest are listed before the summary line, so a slow oracle
+query on a large fixture is named rather than guessed.
 """
 import glob
 import json
 import math
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -108,6 +113,7 @@ def main(out_dir, sf_dir):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     bad, ran = 0, 0
+    secs = {}
     for name in sorted(oracle):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
@@ -117,21 +123,27 @@ def main(out_dir, sf_dir):
         # not duckdb — this is the path on which decimals stay Decimal
         got = pd.concat([pq.read_table(f).to_pandas() for f in files],
                         ignore_index=True)
+        t0 = time.perf_counter()
         try:
             want = con.sql(oracle[name]).df()
+            err = None
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL failed: {e}")
+            err = e
+        secs[name] = time.perf_counter() - t0
+        took = f" [duckdb {secs[name]:.2f} s]"
+        if err is not None:
+            print(f"FAIL {name}: oracle SQL failed: {err}{took}")
             bad += 1
             continue
         if sorted(got.columns) != sorted(want.columns):
             print(f"FAIL {name}: columns {sorted(got.columns)} "
-                  f"!= {sorted(want.columns)}")
+                  f"!= {sorted(want.columns)}{took}")
             bad += 1
             continue
         gc, gr = canon(got)
         wc, wr = canon(want)
         if len(gr) != len(wr):
-            print(f"FAIL {name}: rows {len(gr)} != {len(wr)}")
+            print(f"FAIL {name}: rows {len(gr)} != {len(wr)}{took}")
             bad += 1
             continue
         diff = next((i for i, (a, b) in enumerate(zip(gr, wr)) if a != b),
@@ -141,10 +153,14 @@ def main(out_dir, sf_dir):
             cols = [(c, x, y) for c, x, y in zip(gc, a, b) if x != y]
             print(f"FAIL {name}: render diff at sorted-row {diff}: "
                   + "; ".join(f"{c}: spark={x!r} oracle={y!r}"
-                              for c, x, y in cols[:3]))
+                              for c, x, y in cols[:3]) + took)
             bad += 1
         else:
-            print(f"OK   {name} ({len(gr)} rows)")
+            print(f"OK   {name} ({len(gr)} rows){took}")
+    if secs:
+        print("\nslowest DuckDB queries:")
+        for name in sorted(secs, key=secs.get, reverse=True)[:5]:
+            print(f"  {secs[name]:8.2f} s  {name}")
     print(f"\n{ran - bad}/{ran} dumped queries render-parity clean "
           f"({len(oracle) - ran} not dumped)")
     return 1 if bad else 0
