@@ -60,10 +60,63 @@ case class NfcClean(child: Expression) extends UnaryKernel {
   override def prettyName: String = "nfc_clean"
 }
 
+/** The fingerprint normalization after lower-casing, in one byte scan:
+  * keep `[a-z0-9]` bytes, turn each run of any other bytes into one space,
+  * and never emit a leading or trailing space. Byte-identical to
+  * `trim(regexp_replace(regexp_replace(t, '[^a-z0-9]+', ' '), '\s+', ' '))`:
+  * every byte of a multi-byte UTF-8 character (and every invalid byte) is
+  * >= 0x80, so a character the regex replaces is exactly a run of bytes
+  * the scan replaces; after the first replace the only whitespace left is
+  * single spaces between kept runs, so the `\s+` pass changes nothing.
+  * The output is ASCII.
+  */
+object NormalizeTextKernel {
+  def compute(input: UTF8String): UTF8String = {
+    val bytes = input.getBytes
+    val out = new Array[Byte](bytes.length)
+    var len = 0
+    var gap = false
+    var i = 0
+    while (i < bytes.length) {
+      val b = bytes(i)
+      if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) {
+        if (gap) { out(len) = ' '; len += 1; gap = false }
+        out(len) = b
+        len += 1
+      } else if (len > 0) gap = true // a leading run drops
+      i += 1
+    }
+    UTF8String.fromBytes(out, 0, len) // a trailing run never emits
+  }
+}
+
+/** [[NormalizeTextKernel]] over its child; `TextAnalysis.normalize` builds
+  * it over Spark's own `lower(text)`, so case mapping stays Spark's.
+  */
+case class NormalizeText(child: Expression) extends UnaryKernel {
+
+  override def dataType: DataType = StringType
+
+  override def nullSafeEval(input: Any): Any =
+    NormalizeTextKernel.compute(input.asInstanceOf[UTF8String])
+
+  protected def kernel = "graft.functions.NormalizeTextKernel.compute"
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "normalize_text"
+}
+
 object NormalizeFunctions {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** NFC-compose + control-strip + whitespace-collapse a text column. */
   def nfcClean(text: Column): Column =
     ColumnBridge.column(NfcClean(ColumnBridge.expression(text)))
+
+  /** Fingerprint normalization: [[NormalizeText]] over `lower(text)`. */
+  def normalize(text: Column): Column =
+    ColumnBridge.column(NormalizeText(ColumnBridge.expression(
+      org.apache.spark.sql.functions.lower(text))))
 }

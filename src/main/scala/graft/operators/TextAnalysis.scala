@@ -91,10 +91,19 @@ object TextAnalysis {
     graft.functions.QualityFunctions.qualityScore(text)
 
   /** Canonical normalization for fingerprinting/dedup: lowercase, strip
-    * non-alphanumerics to spaces, collapse whitespace, trim.
+    * non-alphanumerics to spaces, collapse whitespace, trim. One
+    * [[graft.functions.NormalizeText]] kernel over Spark's own `lower`, so
+    * case mapping (ICU or not, per `spark.sql.icu.caseMappings.enabled`)
+    * is Spark's. The kernel's single byte scan keeps `[a-z0-9]` bytes and
+    * turns every other run into one inner space; that is byte-identical to
+    * `trim(regexp_replace(regexp_replace(lower(t), '[^a-z0-9]+', ' '),
+    * '\s+', ' '))`, because every byte of a multi-byte UTF-8 character is
+    * >= 0x80 and the `\s+` pass has nothing left to change. The DuckDB
+    * oracle replays that regex form (`Queries.normalizeSql`), and
+    * TextAnalysisSpec pins the kernel against it.
     */
   def normalize(text: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9]+", " "), "\\s+", " "))
+    graft.functions.NormalizeFunctions.normalize(text)
 
   /** Document fingerprint = md5 of the normalized text. Stands in for the
     * reference-free "rolling hash" fingerprint; md5 exists verbatim in both

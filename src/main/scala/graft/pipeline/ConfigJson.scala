@@ -71,6 +71,30 @@ object ConfigJson {
     }
   }
 
+  /** A `dq_check` rule is checked here, not when its audit is built: a
+    * non-failing check builds no audit, so a bad rule would pass silently.
+    */
+  private def dqRule(r: Pipeline.DqRule): Pipeline.DqRule = {
+    def need(key: String, v: Option[String]): Unit =
+      if (v.isEmpty) fail(s"dq_check.rules.$key is required for ${r.rule}")
+    r.rule match {
+      case "not_null" | "unique" =>
+      case "min" | "max" =>
+        need("value", r.value)
+        r.value.foreach { v =>
+          if (v.toDoubleOption.isEmpty)
+            fail(s"dq_check.rules.value must be a number for ${r.rule}, got '$v'")
+        }
+      case "fk" =>
+        need("ref_path", r.refPath)
+        need("ref_column", r.refColumn)
+      case other =>
+        fail("dq_check.rules.rule must be one of not_null, unique, min, " +
+          s"max, fk, got '$other'")
+    }
+    r
+  }
+
   def parse(json: String): Pipeline.Config = {
     val root = new Obj(JsonMethods.parse(json))
     // the root, `in` and `out` are closed like every other block: a
@@ -117,7 +141,7 @@ object ConfigJson {
               refPath = rule("ref_path"),
               refColumn = rule("ref_column"))
             r.closed("dq_check.rules")
-            dq
+            dqRule(dq)
           },
           failOnViolation = bool(f("fail"), "dq_check.fail").getOrElse(false))
         case "source_quota" => Pipeline.SourceQuota(

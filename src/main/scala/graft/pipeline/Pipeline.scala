@@ -79,12 +79,19 @@ object Pipeline {
     refColumn: Option[String] = None)
   /** Dataset-level quality gate as a config step — the E44 audit wired
     * into the R14 config pipeline, with the `stop_on_invalid_record`
-    * failure discipline lifted from rows to RULES: the rule set is
-    * evaluated EAGERLY when the plan is built (the gate is the point),
-    * and any violation with `failOnViolation` aborts the run with the
-    * per-rule counts in the exception. Scalar rules share one aggregation
-    * pass; `unique` is n − distinct; `fk` is a key-projected anti-join
-    * count (the E44 shape).
+    * failure discipline lifted from rows to RULES. Two modes:
+    *  - `failOnViolation`: the rule set is evaluated eagerly when the plan
+    *    is built (the gate is the point), one side job, and any violation
+    *    aborts the run with the per-rule counts in a
+    *    [[DqViolationException]]. Scalar rules share one aggregation
+    *    pass; `unique` is n − distinct; `fk` is a key-projected anti-join
+    *    count (the E44 shape).
+    *  - otherwise: no job runs. Planning only checks that every rule's
+    *    column resolves against the input schema, naming any that does
+    *    not, and passes the frame through; an `fk` reference is not
+    *    opened. The counts of a non-failing check come from
+    *    [[dqRulesAudit]] (the registered `dq_rules` query), which a caller
+    *    runs when it wants them.
     */
   final case class DqCheck(rules: Seq[DqRule],
     failOnViolation: Boolean = false) extends Transform
@@ -267,14 +274,23 @@ object Pipeline {
           df.withColumn(c, graft.functions.NormalizeFunctions.nfcClean(col(c)))
         case PseudonymizeCol(c, salt, bits) =>
           df.withColumn(c, graft.operators.Privacy.pseudonym(col(c), salt, bits))
-        case DqCheck(rules, failOnViolation) =>
+        case DqCheck(rules, true) =>
           // the gate evaluates EAGERLY — the point is to stop a bad load;
           // counts join back to rules POSITIONALLY (rule_idx), so two
           // rules sharing (rule, column) each keep their own count
           val counts = dqRulesAuditIndexed(spark, df, rules).collect()
             .map(r => (rules(r.getInt(0)), r.getLong(3)))
-          if (failOnViolation && counts.exists(_._2 > 0))
+          if (counts.exists(_._2 > 0))
             throw new DqViolationException(counts.toSeq)
+          df
+        case DqCheck(rules, false) =>
+          // nothing would read the counts: resolve the columns, run no job
+          val missing = rules.map(_.column).distinct
+            .filter(c => scala.util.Try(df.select(col(c))).isFailure)
+          if (missing.nonEmpty)
+            throw new IllegalArgumentException(
+              s"dq_check: no column ${missing.mkString(", ")} in the input " +
+                s"(${df.columns.mkString(", ")})")
           df
         case SourceQuota(key, textCol, idCol, k) =>
           requireNoInternalCols(df, "source_quota")

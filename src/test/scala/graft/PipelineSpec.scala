@@ -362,6 +362,80 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       evalPath = "e", evalFormat = "parquet", evalWhere = None, n = 4)))
   }
 
+  test("ConfigJson checks each dq_check rule at parse, naming the key") {
+    import graft.pipeline.ConfigJson
+    def rejects(rule: String, message: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        ConfigJson.parse(s"""{"in": {"path": "x"}, "filters": [
+          {"type": "dq_check", "fail": false, "rules": [$rule]}]}""")
+      }
+      assert(e.getMessage === s"config: $message", rule)
+    }
+    rejects("""{"rule": "not-null", "column": "c"}""",
+      "dq_check.rules.rule must be one of not_null, unique, min, max, fk, " +
+        "got 'not-null'")
+    rejects("""{"rule": "min", "column": "c"}""",
+      "dq_check.rules.value is required for min")
+    rejects("""{"rule": "max", "column": "c", "value": "ten"}""",
+      "dq_check.rules.value must be a number for max, got 'ten'")
+    rejects("""{"rule": "fk", "column": "c", "ref_column": "k"}""",
+      "dq_check.rules.ref_path is required for fk")
+    rejects("""{"rule": "fk", "column": "c", "ref_path": "p"}""",
+      "dq_check.rules.ref_column is required for fk")
+    val ok = ConfigJson.parse("""{"in": {"path": "x"}, "filters": [
+      {"type": "dq_check", "rules": [{"rule": "not_null", "column": "a"},
+        {"rule": "unique", "column": "a"},
+        {"rule": "min", "column": "b", "value": "-1.5"},
+        {"rule": "max", "column": "b", "value": "1e3"},
+        {"rule": "fk", "column": "a", "ref_path": "p", "ref_column": "k"}]}]}""")
+    assert(ok.transforms === Seq(Pipeline.DqCheck(Seq(
+      Pipeline.DqRule("not_null", "a"), Pipeline.DqRule("unique", "a"),
+      Pipeline.DqRule("min", "b", value = Some("-1.5")),
+      Pipeline.DqRule("max", "b", value = Some("1e3")),
+      Pipeline.DqRule("fk", "a", refPath = Some("p"), refColumn = Some("k"))))))
+  }
+
+  test("a non-failing dq_check starts no job at plan time and names a " +
+      "missing column") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.BusDrain
+    def config(dq: String) = graft.pipeline.ConfigJson.parse(s"""{
+      "in": {"path": "$sf/orders.parquet"},
+      "filters": [{"type": "where", "predicate": "o_totalprice > 0"}$dq]}""")
+    def jobs(cfg: Pipeline.Config): Int = {
+      val sc = spark.sparkContext
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          started.incrementAndGet()
+      }
+      BusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        Pipeline.plan(spark, cfg)
+        BusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      started.get
+    }
+    // every rule kind, the fk reference included: none of them is counted
+    val dq = s""", {"type": "dq_check", "fail": false, "rules": [
+      {"rule": "not_null", "column": "o_custkey"},
+      {"rule": "unique", "column": "o_orderkey"},
+      {"rule": "min", "column": "o_totalprice", "value": "0"},
+      {"rule": "max", "column": "o_totalprice", "value": "1e9"},
+      {"rule": "fk", "column": "o_custkey",
+       "ref_path": "$sf/customer.parquet", "ref_column": "c_custkey"}]}"""
+    jobs(config("")) // warm the file listing and schema reads
+    val without = jobs(config(""))
+    assert(jobs(config(dq)) === without)
+    val e = intercept[IllegalArgumentException](Pipeline.plan(spark, config(
+      """, {"type": "dq_check", "rules": [
+        {"rule": "not_null", "column": "o_custkey"},
+        {"rule": "unique", "column": "o_nokey"}]}""")))
+    assert(e.getMessage.startsWith("dq_check: no column o_nokey in the input"),
+      e.getMessage)
+  }
+
   test("ConfigJson rejects unknown keys at the root and in `in` and `out`") {
     import graft.pipeline.ConfigJson
     def rejects(json: String, message: String): Unit = {

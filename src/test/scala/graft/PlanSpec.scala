@@ -201,6 +201,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
           if f.relation.location.rootPaths.exists(_.toString.endsWith(
             "documents.parquet")) => f }
     assert(scans.length === 2, text)
+    // normalize is one kernel scan: none of its old regex passes is left
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpReplace}
+    val normalizeRegexes = helper.flatMap(plan)(_.expressions.flatMap(_.collect {
+      case r @ RegExpReplace(_, Literal(p, _), _, _)
+          if Set("[^a-z0-9]+", "\\s+")(String.valueOf(p)) => r }))
+    assert(normalizeRegexes.isEmpty, text)
     def count(e: Expression)(p: PartialFunction[Expression, Unit]) =
       e.collect(p).length
     val conds = helper.collect(plan) { case f: FilterExec => f.condition }

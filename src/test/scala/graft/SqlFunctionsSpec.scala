@@ -122,6 +122,7 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkFixture {
         IvfProbeCells(e("fa"), cents, cellIds, 3),
         IvfProbeCells(e("da"), cents, cellIds, 9),
         LangId(e("t")), NgramHit(e("t"), 2, grams), NgramHit(e("t"), 1, grams),
+        NormalizeText(e("t")), NormalizeText(ColumnBridge.expression(lower(col("t")))),
         TokenSetCount(e("t"), Seq(Seq("the", "der"), Seq("el", "y"))),
         QualityScore(e("t")),
         BpeTokenCount(e("t"), BpeVocab.resourceMerges),

@@ -21,6 +21,48 @@ class TextAnalysisSpec extends AnyFunSuite with SparkFixture {
       .getString(0) === "hello world")
   }
 
+  test("the normalize kernel equals the regex form the oracle replays, " +
+      "with and without ICU case mapping") {
+    // the pre-kernel formulation, kept verbatim as the truth here
+    def regexNormalize(t: org.apache.spark.sql.Column) =
+      trim(regexp_replace(regexp_replace(lower(t), "[^a-z0-9]+", " "),
+        "\\s+", " "))
+    val edge = Seq[String](null, "", " ", "   \t\n ", "\t\n",
+      "!!Hello, World??", "...a", "b...", "tab\there\nnew\r\nline",
+      "nbsp\u00A0space", "ideographic\u3000space", "\u0130stanbul \u0130",
+      "\u212A kelvin", "Stra\u00DFe \u00DF", "\u03A3\u03C3\u03C2 \u03A3",
+      "\u4E2D\u6587 text \u65E5\u672C", "emoji \uD83D\uDE00 x\uD83D\uDE00y",
+      "A1-B2_c3", "\u00C0\u00E9\u00EE")
+      .zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text")
+    // invalid UTF-8 from binary: the bytes reach both forms unchecked
+    val invalid = spark.sql(
+      "SELECT 1000 AS id, CAST(X'C341FF62' AS STRING) AS text UNION ALL " +
+        "SELECT 1001, CAST(X'41E282' AS STRING) UNION ALL " +
+        "SELECT 1002, CAST(X'F09F98' AS STRING)")
+    val docs = spark.read.parquet(
+      s"${new java.io.File(sf).getParent}/sf0.01/documents.parquet")
+      .select(col("doc_id").cast("int").as("id"), col("text"))
+    val inputs = edge.unionByName(invalid).unionByName(docs)
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val prev = spark.conf.getOption(key)
+    try {
+      for (icu <- Seq("true", "false")) {
+        spark.conf.set(key, icu)
+        val differ = inputs.select(col("id"),
+            TextAnalysis.normalize(col("text")).as("kernel"),
+            regexNormalize(col("text")).as("regex"))
+          .where(!(col("kernel") <=> col("regex")))
+        assert(differ.count() === 0,
+          s"icu=$icu: ${differ.limit(5).collect().mkString("; ")}")
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the adversarial rows produce what the regex produces, spelled out
+    assert(one(TextAnalysis.normalize($"text"), "\u0130stanbul")
+      .getString(0) === "i stanbul")
+    assert(one(TextAnalysis.normalize($"text"), " \u212A-9 ").getString(0) ===
+      "k 9")
+  }
+
   test("stopword and punct ratios are int/int doubles") {
     val r = Seq("the cat, the hat").toDF("text").select(
       TextAnalysis.stopwordRatio($"text").as("s"),
