@@ -9,6 +9,19 @@ import org.apache.spark.sql.SparkSession
   * physical planning). AQE is on so reducer counts / skew handling are decided
   * at runtime from shuffle statistics — the Spark-native answer to the
   * reference's static `reducers` knob (`MapReduceExecutorTask.java:44`).
+  *
+  * [[builder]] also points `file:` at graft's local filesystem, which sets
+  * permissions in-process ([[localFsConfs]]), so a write forks no `chmod`
+  * per directory, data file and `.crc`. Two cautions:
+  *  - Without it, `file:` resolves to Hive's
+  *    `org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem` (registered
+  *    through the `FileSystem` service loader; it wraps `LocalFileSystem`).
+  *    A graft session replaces it with a `LocalFileSystem` subclass.
+  *  - Hadoop caches one `FileSystem` per scheme and user for the JVM's
+  *    life, keyed without the configuration. The setting holds only if the
+  *    session is built before anything in the JVM creates a `file:`
+  *    FileSystem: one made earlier keeps its class for every later
+  *    session, and writes fork `chmod` again.
   */
 object GraftSession {
 
@@ -108,6 +121,17 @@ object GraftSession {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
 
+  /** `file:` through [[graft.sources.NioLocalFileSystem]] (the `FileSystem`
+    * API DataSource writes use) and [[graft.sources.NioLocalFs]] (the
+    * `FileContext` API streaming checkpoints use). Applied by [[builder]]
+    * and by Verify's dump session.
+    */
+  val localFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.sources.NioLocalFs].getName)
+
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -122,6 +146,7 @@ object GraftSession {
         (cores * 2).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config(contractConfs)
+      .config(localFsConfs)
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

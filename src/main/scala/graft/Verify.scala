@@ -19,6 +19,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config(GraftSession.contractConfs)
+      .config(GraftSession.localFsConfs)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -8,6 +8,14 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * in `EmbulkPartitioningMapReduce.java:186`, task-side in
   * `EmbulkMapReduce.java`). Each format is a Spark DataSource writer; graft
   * standardizes partitioned layout and file sizing.
+  *
+  * Every output file costs its directory, the file and its `.crc`, each with
+  * a permission change. In a session built by `GraftSession.builder`,
+  * `file:` paths go through [[NioLocalFileSystem]], which makes that change
+  * in-process; the stock local filesystem forks a `chmod` for each (97 for
+  * a 30-bucket write), so without it a partitioned write's time grows with
+  * its file count rather than its rows. The output's names and modes are
+  * the same either way.
   */
 object Sinks {
 
