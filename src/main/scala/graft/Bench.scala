@@ -608,7 +608,7 @@ object Bench {
     // the wh tree (warehouse + spark.local.dir + fork subtrees) lives on
     // RAM-backed tmpfs: reclaim it now — it can't go through tempDirs,
     // whose purge runs between timings while the session still needs it
-    Queries.rmTree(wh.toFile)
+    graft.sources.Sinks.rmTree(wh.toFile)
   }
 }
 

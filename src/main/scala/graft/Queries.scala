@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators._
 import graft.pipeline.{ConfigJson, Pipeline, TaskReport}
+import graft.sources.Sinks
 import graft.multimodal.Multimodal
+import graft.streaming.{StatefulSessionize, StreamingIngest}
 
 /** Registered engine queries (SURVEY §2) + their DuckDB oracle SQL.
   *
@@ -15,6 +18,13 @@ import graft.multimodal.Multimodal
   * in the oracle; time buckets are integer `div`; every query ends with a
   * total ORDER BY (Spark default asc = NULLS FIRST, mirrored explicitly in
   * the SQL).
+  *
+  * A fragment that a second query needs becomes one private helper here:
+  * engine fragments build DataFrames (`sessionMarked`, `clusterCensus`),
+  * oracle fragments build SQL strings (`cosSql`, `reachSql`). An oracle
+  * fragment is made of other SQL strings only, never of an engine
+  * DataFrame, Column or helper, so each oracle stays an independent
+  * replay of its query.
   */
 object Queries {
   import Tables._
@@ -81,20 +91,13 @@ object Queries {
   private val tempDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
 
-  private[graft] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val fs = f.listFiles(); if (fs != null) fs.foreach(rmTree)
-    }
-    f.delete(); ()
-  }
-
   /** Delete every queued harness temp dir now. Callers must be past every
     * action that reads them — Bench calls this after each noop-forced
     * timing, when the timed DataFrame is dead.
     */
   def purgeTempDirs(): Unit = {
     var p = tempDirs.poll()
-    while (p != null) { rmTree(p.toFile); p = tempDirs.poll() }
+    while (p != null) { Sinks.rmTree(p.toFile); p = tempDirs.poll() }
   }
 
   /** `/dev/shm` when it is writable with at least `bytes` usable, else
@@ -143,10 +146,8 @@ object Queries {
     * `StreamingIngest.statePartitionsFor` for the measured rationale).
     */
   private def withSizedState[T](s: SparkSession, dir: String)(body: => T): T =
-    graft.streaming.StreamingIngest.withStatePartitions(s,
-      graft.streaming.StreamingIngest.statePartitionsFor(
-        s.sparkContext.defaultParallelism,
-        GraftSession.inputBytes(dir)))(body)
+    StreamingIngest.withStatePartitions(s, StreamingIngest.statePartitionsFor(
+      s.sparkContext.defaultParallelism, GraftSession.inputBytes(dir)))(body)
 
   // ------------------------------------------- R2/R3 timestamp buckets ----
 
@@ -824,22 +825,59 @@ object Queries {
          FROM events) WHERE rn <= 3
        ORDER BY user_id, value DESC, event_id"""
 
-  def sessionize(s: SparkSession, dir: String): DataFrame = {
+  /** The E4 session build: events as (user_id, event_id, `extra`…, t_us)
+    * with each user's running session index `session_idx`; a gap above
+    * [[StatefulSessionize.GapUs]] opens a new session. One user shuffle.
+    */
+  private def sessionMarked(s: SparkSession, dir: String,
+      extra: String*): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("t_us").asc, col("event_id").asc)
     events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("t_us"))
+      .select((Seq("user_id", "event_id") ++ extra).map(col) :+
+        unix_micros(col("ts")).as("t_us"): _*)
       .withColumn("prev_us", lag(col("t_us"), 1).over(byUser))
       .withColumn("new_sess",
         when(col("prev_us").isNull ||
-          col("t_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
+          col("t_us") - col("prev_us") > StatefulSessionize.GapUs, 1L)
+          .otherwise(0L))
       .withColumn("session_idx", sum(col("new_sess"))
         .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** Each E4 session's first and last event time (`s_us`, `e_us`). */
+  private def sessionSpans(s: SparkSession, dir: String): DataFrame =
+    sessionMarked(s, dir)
+      .groupBy(col("user_id"), col("session_idx"))
+      .agg(min(col("t_us")).as("s_us"), max(col("t_us")).as("e_us"))
+
+  def sessionize(s: SparkSession, dir: String): DataFrame =
+    sessionMarked(s, dir)
       .groupBy(col("user_id"), col("session_idx"))
       .agg(count(lit(1)).as("n_events"),
         min(col("t_us")).as("start_us"), max(col("t_us")).as("end_us"))
       .orderBy(col("user_id"), col("session_idx"))
-  }
+
+  /** `marked`: the E4 session build in SQL — `outer` over events (`inner`
+    * plus t_us) with each user's running `session_idx`, a gap over 30
+    * minutes opening a session; `tie` follows the event time in every
+    * ORDER BY.
+    */
+  private def sessMarkedSql(outer: String = "user_id, t_us",
+      inner: String = "user_id, event_id",
+      tie: String = ", event_id"): String =
+    s"""marked AS (
+         SELECT $outer,
+           SUM(new_sess) OVER (PARTITION BY user_id ORDER BY t_us$tie
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+         FROM (
+           SELECT $inner, epoch_us(ts) AS t_us,
+             CASE WHEN lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
+                 ORDER BY epoch_us(ts)$tie) IS NULL
+               OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER (PARTITION BY
+                 user_id ORDER BY epoch_us(ts)$tie) > 1800000000
+             THEN 1 ELSE 0 END AS new_sess
+           FROM events))"""
 
   val sessionizeSql: String =
     """SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
@@ -990,23 +1028,37 @@ object Queries {
       .orderBy(col("id"))
   }
 
-  val dedupLevenshteinClustersSql: String =
-    """WITH RECURSIVE
-       pairs AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM documents a JOIN documents b
-           ON a.lang = b.lang AND a.doc_id < b.doc_id
-           AND abs(strlen(a.text) - strlen(b.text)) <= 60
-         WHERE levenshtein(a.text, b.text) <= 60),
-       edges AS (
+  /** Connected components in SQL over a `pairs(id_a, id_b)` CTE:
+    * symmetric `edges`, then `reach(id, root)` from every `id` of `table`
+    * along them. An id's component is its MIN(root).
+    */
+  private def reachSql(id: String, table: String): String =
+    s"""edges AS (
          SELECT id_a AS src, id_b AS dst FROM pairs
          UNION ALL
          SELECT id_b AS src, id_a AS dst FROM pairs),
        reach(id, root) AS (
-         SELECT doc_id, doc_id FROM documents
+         SELECT $id, $id FROM $table
          UNION
-         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id)
+         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id)"""
+
+  /** (id, root) per id of `table` over the `pairs` CTE that `ctes` ends
+    * with.
+    */
+  private def componentsSql(ctes: String, id: String,
+      table: String): String =
+    s"""WITH RECURSIVE
+       $ctes,
+       ${reachSql(id, table)}
        SELECT id, MIN(root) AS root FROM reach GROUP BY id ORDER BY id"""
+
+  val dedupLevenshteinClustersSql: String =
+    componentsSql("""pairs AS (
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b
+         FROM documents a JOIN documents b
+           ON a.lang = b.lang AND a.doc_id < b.doc_id
+           AND abs(strlen(a.text) - strlen(b.text)) <= 60
+         WHERE levenshtein(a.text, b.text) <= 60)""", "doc_id", "documents")
 
   // --------------------------------------- pivot / cube / semi-anti ------
 
@@ -1108,7 +1160,7 @@ object Queries {
     * pinned-conf window so the restore can't re-plan it.
     */
   def asofPackedQ(s: SparkSession, dir: String): DataFrame = {
-    graft.sources.Sinks.dropManagedTable(s, "graft_asof_packed_q")
+    Sinks.dropManagedTable(s, "graft_asof_packed_q")
     val ev = events(s, dir)
     // bucket count scales with input (GraftSession.bucketsFor): the
     // bucketed layout is the probe's parallelism ceiling, and the fixed
@@ -1215,6 +1267,17 @@ object Queries {
        WHERE $jaccardSql >= 0.5
        ORDER BY id_a, id_b"""
 
+  /** `s`, each doc's shingle set, and `pairs` of docs with `a.doc_id <
+    * b.doc_id` whose Jaccard is at least 0.5; `block` prefixes the join.
+    */
+  private def shinglePairsSql(block: String,
+      where: String = s"$jaccardSql >= 0.5"): String =
+    s"""s AS (SELECT doc_id, lang, $shingleSql AS sh FROM ($shingleSrcSql)),
+       pairs AS (
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b
+         FROM s a JOIN s b ON ${block}a.doc_id < b.doc_id
+         WHERE $where)"""
+
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
     // minhashEdges, not minhashPairs: components need CONNECTIVITY, not
@@ -1230,21 +1293,7 @@ object Queries {
     * recursive CTE (min reachable id per doc).
     */
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE
-       s AS (SELECT doc_id, lang, $shingleSql AS sh FROM ($shingleSrcSql)),
-       pairs AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM s a JOIN s b ON a.doc_id < b.doc_id
-         WHERE $jaccardSql >= 0.5),
-       edges AS (
-         SELECT id_a AS src, id_b AS dst FROM pairs
-         UNION ALL
-         SELECT id_b AS src, id_a AS dst FROM pairs),
-       reach(id, root) AS (
-         SELECT doc_id, doc_id FROM documents
-         UNION
-         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id)
-       SELECT id, MIN(root) AS root FROM reach GROUP BY id ORDER BY id"""
+    componentsSql(shinglePairsSql(""), "doc_id", "documents")
 
   /** SimHash-LSH near-dup dedup, exact-verified. The banded + 1-bit
     * multiprobe candidate generation guarantees recall for hamming ≤ 15
@@ -1320,20 +1369,11 @@ object Queries {
   }
 
   val dedupEmbeddingClustersSql: String =
-    s"""WITH RECURSIVE
-       pairs AS (
+    componentsSql(s"""pairs AS (
          SELECT a.vec_id AS id_a, b.vec_id AS id_b
          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.46),
-       edges AS (
-         SELECT id_a AS src, id_b AS dst FROM pairs
-         UNION ALL
-         SELECT id_b AS src, id_a AS dst FROM pairs),
-       reach(id, root) AS (
-         SELECT vec_id, vec_id FROM embeddings
-         UNION
-         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id)
-       SELECT id, MIN(root) AS root FROM reach GROUP BY id ORDER BY id"""
+         WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.46)""",
+      "vec_id", "embeddings")
 
   /** IVF-cell ANN. Centroid seeding is deterministic (the 16 lowest-id
     * vectors), so the entire index build — cell assignment, probe choice,
@@ -1347,37 +1387,61 @@ object Queries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  val annIvfSql: String =
-    s"""WITH cent AS (
-         SELECT vec_id AS cell, embedding AS c_vec FROM embeddings
-         WHERE vec_id < 16),
-       assign AS (
+  /** Each query's 5 best (query_id, neighbor_id, cos) rows of `from`,
+    * ranked by cosine, ties to the lower neighbor id.
+    */
+  private def top5Sql(from: String): String =
+    s"""SELECT query_id, neighbor_id, cos, rank FROM (
+         SELECT query_id, neighbor_id, cos,
+           CAST(row_number() OVER (PARTITION BY query_id
+             ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
+         FROM $from)
+       WHERE rank <= 5 ORDER BY query_id, rank"""
+
+  /** `name`: every embedding's argmax-cosine cell under the centroids
+    * `cent(cell, c_vec)`, ties to the lower cell.
+    */
+  private def ivfAssignSql(name: String, cent: String): String =
+    s"""$name AS (
          SELECT vec_id, embedding, cell FROM (
            SELECT e.vec_id, e.embedding, c.cell,
              row_number() OVER (PARTITION BY e.vec_id
                ORDER BY ${cosSql("e.embedding", "c.c_vec")} DESC, c.cell)
                AS rn
-           FROM embeddings e CROSS JOIN cent c)
-         WHERE rn = 1),
-       probes AS (
+           FROM embeddings e CROSS JOIN $cent c)
+         WHERE rn = 1)"""
+
+  /** `probes`: the 4 best cells under `cent` of each query vector (the
+    * embeddings with vec_id below `nQuery`).
+    */
+  private def ivfProbesSql(cent: String, nQuery: Int): String =
+    s"""probes AS (
          SELECT query_id, q_vec, cell FROM (
            SELECT q.vec_id AS query_id, q.embedding AS q_vec, c.cell,
              row_number() OVER (PARTITION BY q.vec_id
                ORDER BY ${cosSql("q.embedding", "c.c_vec")} DESC, c.cell)
                AS rn
-           FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 10)
-         WHERE rn <= 4),
+           FROM embeddings q CROSS JOIN $cent c WHERE q.vec_id < $nQuery)
+         WHERE rn <= 4)"""
+
+  /** IVF top-5 search of the first 10 vectors under `cent`: assignment,
+    * probes, in-cell cosine and the ranked neighbors.
+    */
+  private def annIvfSearchSql(cent: String): String =
+    s"""${ivfAssignSql("assign", cent)},
+       ${ivfProbesSql(cent, 10)},
        cand AS (
          SELECT p.query_id, a.vec_id AS neighbor_id,
            ${cosSql("p.q_vec", "a.embedding")} AS cos
          FROM probes p JOIN assign a
            ON p.cell = a.cell AND a.vec_id != p.query_id)
-       SELECT query_id, neighbor_id, cos, rank FROM (
-         SELECT query_id, neighbor_id, cos,
-           CAST(row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-         FROM cand)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+       ${top5Sql("cand")}"""
+
+  val annIvfSql: String =
+    s"""WITH cent AS (
+         SELECT vec_id AS cell, embedding AS c_vec FROM embeddings
+         WHERE vec_id < 16),
+       ${annIvfSearchSql("cent")}"""
 
   /** IVF-cell ANN over a Lloyd-REFINED index (`IvfIndex.refine`: 2
     * deterministic k-means rounds over the seeded centroids, cells keep
@@ -1411,14 +1475,7 @@ object Queries {
     // then per-(cell, dim) member means folded back into a list (cells
     // with no members keep the previous centroid via the left join)
     def round(prev: String, a: String, m: String, next: String): String =
-      s"""$a AS (
-         SELECT vec_id, embedding, cell FROM (
-           SELECT e.vec_id, e.embedding, c.cell,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY ${cosSql("e.embedding", "c.c_vec")} DESC, c.cell)
-               AS rn
-           FROM embeddings e CROSS JOIN $prev c)
-         WHERE rn = 1),
+      s"""${ivfAssignSql(a, prev)},
        $m AS (
          SELECT a.cell, d.d AS dim,
            list_reduce(
@@ -1438,33 +1495,7 @@ object Queries {
          FROM embeddings WHERE vec_id < 16),
        ${round("cent0", "a0", "m0", "cent1")},
        ${round("cent1", "a1", "m1", "cent2")},
-       assign AS (
-         SELECT vec_id, embedding, cell FROM (
-           SELECT e.vec_id, e.embedding, c.cell,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY ${cosSql("e.embedding", "c.c_vec")} DESC, c.cell)
-               AS rn
-           FROM embeddings e CROSS JOIN cent2 c)
-         WHERE rn = 1),
-       probes AS (
-         SELECT query_id, q_vec, cell FROM (
-           SELECT q.vec_id AS query_id, q.embedding AS q_vec, c.cell,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY ${cosSql("q.embedding", "c.c_vec")} DESC, c.cell)
-               AS rn
-           FROM embeddings q CROSS JOIN cent2 c WHERE q.vec_id < 10)
-         WHERE rn <= 4),
-       cand AS (
-         SELECT p.query_id, a.vec_id AS neighbor_id,
-           ${cosSql("p.q_vec", "a.embedding")} AS cos
-         FROM probes p JOIN assign a
-           ON p.cell = a.cell AND a.vec_id != p.query_id)
-       SELECT query_id, neighbor_id, cos, rank FROM (
-         SELECT query_id, neighbor_id, cos,
-           CAST(row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-         FROM cand)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+       ${annIvfSearchSql("cent2")}"""
   }
 
   /** The L6 ANN scale path, oracle-gated: `Similarity.annTopKLsh` bucket
@@ -1508,12 +1539,7 @@ object Queries {
            ${cosSql("q.embedding", "c.embedding")} AS cos
          FROM b q JOIN b c ON c.vec_id != q.vec_id AND ($orCond)
          WHERE q.vec_id < 10)
-       SELECT query_id, neighbor_id, cos, rank FROM (
-         SELECT query_id, neighbor_id, cos,
-           CAST(row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-         FROM cand)
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+       ${top5Sql("cand")}"""
   }
 
   def annTopk(s: SparkSession, dir: String): DataFrame = {
@@ -1524,16 +1550,11 @@ object Queries {
   }
 
   val annTopkSql: String =
-    s"""SELECT query_id, neighbor_id, cos, rank FROM (
-         SELECT query_id, neighbor_id, cos,
-           CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id)
-             AS BIGINT) AS rank
-         FROM (
+    top5Sql(s"""(
            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              ${cosSql("q.embedding", "c.embedding")} AS cos
            FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-           WHERE q.vec_id < 10))
-       WHERE rank <= 5 ORDER BY query_id, rank"""
+           WHERE q.vec_id < 10)""")
 
   /** ANN over int8-QUANTIZED embeddings (operators/Quantize.scala): the
     * retrieval-scale memory move — 4× smaller vectors, integer dot
@@ -1668,14 +1689,7 @@ object Queries {
                AS rn
            FROM embeddings e CROSS JOIN cent c WHERE e.vec_id >= 50)
          WHERE rn = 1),
-       probes AS (
-         SELECT query_id, q_vec, cell FROM (
-           SELECT q.vec_id AS query_id, q.embedding AS q_vec, c.cell,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY ${cosSql("q.embedding", "c.c_vec")} DESC, c.cell)
-               AS rn
-           FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 50)
-         WHERE rn <= 4),
+       ${ivfProbesSql("cent", 50)},
        cand AS (
          SELECT p.query_id AS vec_id, a.vec_id AS neighbor_id,
            ${cosSql("p.q_vec", "a.embedding")} AS cos,
@@ -1879,16 +1893,24 @@ object Queries {
        enc AS (SELECT w, len(syms) AS ntok FROM wsyms)"""
   }
 
+  /** `toks(key…, w)`: the pre-tokens of `text` per row of `from`; then
+    * `words`, their distinct multi-char alphanumeric ones, and the
+    * [[bpeReplaySql]] CTEs over those.
+    */
+  private def bpeWordsSql(key: String, text: String, from: String,
+      toks: String = "toks"): String =
+    s"""$toks AS (
+         SELECT $key, unnest(regexp_extract_all($text,
+           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS w
+         FROM $from),
+       words AS (
+         SELECT DISTINCT w FROM $toks
+         WHERE length(w) > 1 AND w SIMILAR TO '[A-Za-z0-9]+'),
+       $bpeReplaySql"""
+
   val textBpeTokensSql: String =
     s"""WITH RECURSIVE
-       toks AS (
-         SELECT doc_id, unnest(regexp_extract_all(text,
-           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS w
-         FROM documents),
-       words AS (
-         SELECT DISTINCT w FROM toks
-         WHERE length(w) > 1 AND w SIMILAR TO '[A-Za-z0-9]+'),
-       $bpeReplaySql,
+       ${bpeWordsSql("doc_id", "text", "documents")},
        perdoc AS (
          SELECT t.doc_id, COUNT(*) AS n_pre,
            SUM(COALESCE(e.ntok, 1)) AS n_bpe
@@ -1919,14 +1941,7 @@ object Queries {
 
   val textBpeNamesSql: String =
     s"""WITH RECURSIVE
-       toks AS (
-         SELECT c_custkey, unnest(regexp_extract_all(c_name,
-           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS w
-         FROM customer),
-       words AS (
-         SELECT DISTINCT w FROM toks
-         WHERE length(w) > 1 AND w SIMILAR TO '[A-Za-z0-9]+'),
-       $bpeReplaySql,
+       ${bpeWordsSql("c_custkey", "c_name", "customer")},
        percust AS (
          SELECT t.c_custkey, COUNT(*) AS n_pre,
            SUM(COALESCE(e.ntok, 1)) AS n_bpe
@@ -2281,8 +2296,7 @@ object Queries {
           timestamp_micros(call_function("div", col("ts"), lit(1000L))))
       else stream0
     val name = s"graft_stream_hourly_${System.nanoTime()}"
-    graft.streaming.StreamingIngest
-      .runAvailableNow(graft.streaming.StreamingIngest.hourlyCounts(stream), name)
+    StreamingIngest.runAvailableNow(StreamingIngest.hourlyCounts(stream), name)
       .awaitTermination()
     s.table(name)
       .select(unix_micros(col("hour_start")).as("h_us"), col("event_type"),
@@ -2313,7 +2327,7 @@ object Queries {
     val outDir = s"$tmp/out"
     raw.write.mode("overwrite").parquet(landing)
     val staged = s.read.parquet(landing)
-    graft.streaming.StreamingIngest.drainAppendToDir(s, landing,
+    StreamingIngest.drainAppendToDir(s, landing,
       staged.schema, { stream0 =>
         val stream =
           if (staged.schema("ts").dataType == LongType)
@@ -2386,7 +2400,7 @@ object Queries {
     */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
     Seq("graft_li_b", "graft_ord_b")
-      .foreach(graft.sources.Sinks.dropManagedTable(s, _))
+      .foreach(Sinks.dropManagedTable(s, _))
     lineitem(s, dir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -2497,6 +2511,21 @@ object Queries {
            SELECT DISTINCT md5(text) FROM documents WHERE doc_id % 2 = 0)
        GROUP BY 1 ORDER BY fp"""
 
+  /** The two-drain landing harness: land `first`, drain the landing dir
+    * through the checkpointed AvailableNow query `sink` starts, then land
+    * `second` beside it and drain again — the second run, resuming the
+    * checkpoint, reads only the new drop.
+    */
+  private def drainTwice(landing: String, first: DataFrame,
+      second: DataFrame)(sink: DataFrame => StreamingQuery): Unit = {
+    first.write.mode("overwrite").parquet(landing)
+    def drain(): Unit = sink(first.sparkSession.readStream
+      .schema(first.schema).parquet(landing)).awaitTermination()
+    drain()
+    second.write.mode("append").parquet(landing)
+    drain()
+  }
+
   /** Batch-replayable correctness surface for the STREAMING incremental
     * corpus dedup (E8c, `StreamingIngest.incrementalDedupSink`): the
     * documents table is split into two parquet drops (even ids, then odd
@@ -2510,20 +2539,22 @@ object Queries {
     */
   def dedupIncrementalStream(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
     val tmp = tempDir("graft_stream_")
-    val landing = s"$tmp/landing"; val fpDir = s"$tmp/fps"
-    val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
+    evenOddDedup(s, dir, tmp) { (docs, outDir, ckpt) =>
+      StreamingIngest.incrementalDedupSink(docs, "doc_id", "text",
+        s"$tmp/fps", outDir, checkpointDir = Some(ckpt), availableNow = true)
+    }
+  }
+
+  /** The E8c replay: the documents land as even ids, then odd ids, each
+    * drop drained by `sink(stream, outDir, ckpt)`; returns the (fp,
+    * keep_id) rows the drains emitted.
+    */
+  private def evenOddDedup(s: SparkSession, dir: String, tmp: String)(
+      sink: (DataFrame, String, String) => StreamingQuery): DataFrame = {
+    val outDir = s"$tmp/out"
     val d = documents(s, dir).select(col("doc_id"), col("text"))
-    d.where(pmod(col("doc_id"), lit(2)) === 0)
-      .write.mode("overwrite").parquet(landing)
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.incrementalDedupSink(
-        s.readStream.schema(d.schema).parquet(landing), "doc_id", "text",
-        fpDir, outDir, checkpointDir = Some(ckpt), availableNow = true)
-        .awaitTermination()
-    drain()
-    d.where(pmod(col("doc_id"), lit(2)) === 1)
-      .write.mode("append").parquet(landing)
-    drain()
+    drainTwice(s"$tmp/landing", d.where(pmod(col("doc_id"), lit(2)) === 0),
+      d.where(pmod(col("doc_id"), lit(2)) === 1))(sink(_, outDir, s"$tmp/ckpt"))
     s.read.parquet(outDir).select(col("fp"), col("keep_id"))
       .orderBy(col("fp"))
   }
@@ -2550,25 +2581,12 @@ object Queries {
     * Same oracle gates both forms.
     */
   def dedupIncrementalBucketed(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
-    val tmp = tempDir("graft_bstream_")
-    val landing = s"$tmp/landing"
-    val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val fpTable = "graft_fp_store_q"
-    graft.sources.Sinks.dropManagedTable(s, fpTable)
-    val d = documents(s, dir).select(col("doc_id"), col("text"))
-    d.where(pmod(col("doc_id"), lit(2)) === 0)
-      .write.mode("overwrite").parquet(landing)
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.incrementalDedupSinkBucketed(
-        s.readStream.schema(d.schema).parquet(landing), "doc_id", "text",
+    Sinks.dropManagedTable(s, fpTable)
+    evenOddDedup(s, dir, tempDir("graft_bstream_")) { (docs, outDir, ckpt) =>
+      StreamingIngest.incrementalDedupSinkBucketed(docs, "doc_id", "text",
         fpTable, outDir, checkpointDir = Some(ckpt), availableNow = true)
-        .awaitTermination()
-    drain()
-    d.where(pmod(col("doc_id"), lit(2)) === 1)
-      .write.mode("append").parquet(landing)
-    drain()
-    s.read.parquet(outDir).select(col("fp"), col("keep_id"))
-      .orderBy(col("fp"))
+    }
   }
 
   val dedupIncrementalBucketedSql: String = dedupIncrementalStreamSql
@@ -2779,14 +2797,7 @@ object Queries {
                FROM documents WHERE doc_id < 200),
            UNNEST(range(0, greatest(1, CAST(ceil(len(w) / 50.0) AS BIGINT))))
              AS u(ci)),
-       ctoks AS (
-         SELECT doc_id, chunk_idx, unnest(regexp_extract_all(ctext,
-           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS w
-         FROM chunks),
-       words AS (
-         SELECT DISTINCT w FROM ctoks
-         WHERE length(w) > 1 AND w SIMILAR TO '[A-Za-z0-9]+'),
-       $bpeReplaySql,
+       ${bpeWordsSql("doc_id, chunk_idx", "ctext", "chunks", "ctoks")},
        cbpe AS (
          SELECT t.doc_id, t.chunk_idx, SUM(COALESCE(e.ntok, 1)) AS n_bpe
          FROM ctoks t LEFT JOIN enc e ON t.w = e.w
@@ -2819,14 +2830,7 @@ object Queries {
 
   val docBlocksSql: String =
     s"""WITH RECURSIVE
-       toks AS (
-         SELECT doc_id, unnest(regexp_extract_all(text,
-           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS w
-         FROM documents),
-       words AS (
-         SELECT DISTINCT w FROM toks
-         WHERE length(w) > 1 AND w SIMILAR TO '[A-Za-z0-9]+'),
-       $bpeReplaySql,
+       ${bpeWordsSql("doc_id", "text", "documents")},
        perdoc AS (
          SELECT t.doc_id, SUM(COALESCE(e.ntok, 1)) AS n_bpe
          FROM toks t LEFT JOIN enc e ON t.w = e.w GROUP BY 1),
@@ -3349,6 +3353,27 @@ object Queries {
        CAST(octet_length(encode(text)) AS BIGINT) AS num_bytes, md5(text) AS content_md5
        FROM documents WHERE doc_id < 50 ORDER BY doc_id"""
 
+  /** Frame `f` of doc `id`'s deterministic w×h RGB fixture, as PNG bytes.
+    * Callers turn ImageIO's disk cache off once per partition.
+    */
+  private def fixturePng(id: Long, f: Int, w: Int, h: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        img.setRGB(x, y, (((id + f + x) % 251).toInt << 16) |
+          (((id + y) % 241).toInt << 8) | ((f + x * y) % 239))
+        x += 1
+      }
+      y += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
   /** REAL image decode, oracle-gated end-to-end: each row encodes an actual
     * PNG whose dimensions derive from its doc_id, and
     * `Multimodal.decodeImageBatch` (the JDK `javax.imageio` reader, not a
@@ -3364,25 +3389,8 @@ object Queries {
       .select(col("doc_id")).as[Long]
     val withPng = ids.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { id =>
-        val w = (id % 13 + 1).toInt
-        val h = (id % 7 + 1).toInt
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            img.setRGB(x, y, (((id + x) % 251).toInt << 16) |
-              (((id + y) % 241).toInt << 8) | ((x * y) % 239))
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        (id, bos.toByteArray)
-      }
+      it.map(id => (id, fixturePng(id, 0, (id % 13 + 1).toInt,
+        (id % 7 + 1).toInt)))
     }.toDF("doc_id", "payload")
     Multimodal.decodeImageBatch(withPng)
       .select(col("id").as("doc_id"), col("width"), col("height"),
@@ -3459,23 +3467,7 @@ object Queries {
         val nFrames = (id % 9 + 2).toInt
         val w = (id % 11 + 1).toInt
         val h = (id % 5 + 1).toInt
-        val frames = (0 until nFrames).map { f =>
-          val img = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              img.setRGB(x, y, (((id + f + x) % 251).toInt << 16) |
-                (((id + y) % 241).toInt << 8) | ((f + x * y) % 239))
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          bos.toByteArray
-        }
+        val frames = (0 until nFrames).map(fixturePng(id, _, w, h))
         (id, Multimodal.encodeVideo(frames))
       }
     }.toDF("doc_id", "payload")
@@ -3529,7 +3521,6 @@ object Queries {
     * `sessionize` truth — same oracle SQL gates both.
     */
   def streamingSessionize(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
-    import graft.streaming.StatefulSessionize
     val tmp = tempDir("graft_sess_stream_")
     val landing = s"$tmp/landing"; val ckpt = s"$tmp/ckpt"
     val outDir = s"$tmp/out"
@@ -3574,8 +3565,8 @@ object Queries {
     val ev = events(s, dir).select(col("user_id"), col("event_type"), col("ts"))
     ev.coalesce(1).write.mode("overwrite").parquet(landing)
     ev.coalesce(1).write.mode("append").parquet(landing)
-    graft.streaming.StreamingIngest.drainAppendToDir(s, landing, ev.schema,
-      st => graft.streaming.StreamingIngest.dedupStream(
+    StreamingIngest.drainAppendToDir(s, landing, ev.schema,
+      st => StreamingIngest.dedupStream(
         st, Seq("user_id", "event_type")),
       ckpt, outDir)
     s.read.parquet(outDir)
@@ -3586,6 +3577,28 @@ object Queries {
   val dedupStreamExactSql: String =
     """SELECT DISTINCT user_id, event_type, epoch_us(ts) AS t_us
        FROM events ORDER BY user_id, event_type, t_us"""
+
+  /** The E12 two-drain lateness replay under `tmp`: drain 1 lands `ev`
+    * (events from `mnUs` to `mxUs`) plus an `advancer` row 3 h past its
+    * end; drain 2 lands a replay of its first hour, behind the watermark
+    * by then, plus an advancer 6 h past. Each drain runs `transform` in
+    * append mode on one checkpoint; returns the batches' output dir.
+    */
+  private def lateReplay(tmp: String, ev: DataFrame, mnUs: Long, mxUs: Long,
+      advancer: Long => DataFrame)(transform: DataFrame => DataFrame): String = {
+    val landing = s"$tmp/landing"; val outDir = s"$tmp/out"
+    val hourUs = 3600L * 1000 * 1000
+    def drain(): Unit = StreamingIngest.drainAppendToDir(ev.sparkSession,
+      landing, ev.schema, transform, s"$tmp/ckpt", outDir)
+    ev.coalesce(1).write.mode("overwrite").parquet(landing)
+    advancer(mxUs + 3 * hourUs).coalesce(1).write.mode("append").parquet(landing)
+    drain()
+    ev.where(unix_micros(col("ts")) < mnUs + hourUs)
+      .coalesce(1).write.mode("append").parquet(landing)
+    advancer(mxUs + 6 * hourUs).coalesce(1).write.mode("append").parquet(landing)
+    drain()
+    outDir
+  }
 
   /** Watermark lateness, oracle-gated (E12): two file-landing drains over
     * the watermarked hourly aggregation. Drain 1 processes the full event
@@ -3601,10 +3614,6 @@ object Queries {
     * are filtered on readback; their own windows never close.
     */
   def streamingLateDrop(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
-    import graft.streaming.StreamingIngest
-    val tmp = tempDir("graft_late_")
-    val landing = s"$tmp/landing"; val ckpt = s"$tmp/ckpt"
-    val outDir = s"$tmp/out"
     // fixture windowed to the first 3 days (oracle filters identically):
     // the lateness GATE needs only (a) a full drain advancing the
     // watermark past every window and (b) a replay of the earliest hour
@@ -3620,19 +3629,10 @@ object Queries {
     def advancer(tUs: Long) = s.range(1).select(
       timestamp_micros(lit(tUs)).as("ts"),
       lit("zz_advance").as("event_type"), lit(0.0).as("value"))
-    def drain(): Unit = StreamingIngest.drainAppendToDir(s, landing,
-      ev.schema, df => StreamingIngest.hourlyCounts(df), ckpt, outDir)
-    // drain 1: full history + advancer → watermark ends past every window
-    ev.coalesce(1).write.mode("overwrite").parquet(landing)
-    advancer(mxUs + 3 * hourUs).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    // drain 2: late replay of the earliest hour (all behind the watermark
-    // now) + a second advancer; the real windows emit here, late rows die
-    ev.where(unix_micros(col("ts")) < mnUs + hourUs)
-      .coalesce(1).write.mode("append").parquet(landing)
-    advancer(mxUs + 6 * hourUs).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    s.read.parquet(outDir)
+    // drain 1's watermark ends past every window; in drain 2 the real
+    // windows emit and the late rows die
+    s.read.parquet(lateReplay(tempDir("graft_late_"), ev, mnUs, mxUs,
+        advancer)(StreamingIngest.hourlyCounts(_)))
       .where(col("event_type") =!= "zz_advance")
       .select(hourBucket(col("hour_start")).as("bucket"), col("event_type"),
         col("n"), col("sum_value"))
@@ -3782,10 +3782,24 @@ object Queries {
     * One union + max_by hash agg — the oracle runs the textbook window
     * formulation the operator exists to avoid.
     */
-  def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
+  def mergeUpsert(s: SparkSession, dir: String): DataFrame =
+    Compaction.mergeChangelog(orderRows(s, dir), orderChanges(s, dir),
+        "o_orderkey", "seq", "op", Seq("o_custkey", "status", "total"))
+      .orderBy(col("o_orderkey"))
+
+  /** Orders as the E23 merge's rows: (o_orderkey, o_custkey, status,
+    * total), the total exact to the cent.
+    */
+  private def orderRows(s: SparkSession, dir: String): DataFrame =
+    orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
       col("o_orderstatus").as("status"),
       dec2(col("o_totalprice")).cast("double").as("total"))
+
+  /** The E23 changelog: seq 1 upserts every 5th order (status 'M', price
+    * doubled), seq 2 deletes every 10th; columns (o_orderkey, seq, op,
+    * o_custkey, status, total).
+    */
+  private def orderChanges(s: SparkSession, dir: String): DataFrame = {
     val ups = orders(s, dir).where(pmod(col("o_orderkey"), lit(5)) === 0)
       .select(col("o_orderkey"), lit(1L).as("seq"), lit("U").as("op"),
         col("o_custkey"), lit("M").as("status"),
@@ -3795,9 +3809,7 @@ object Queries {
       .select(col("o_orderkey"), lit(2L).as("seq"), lit("D").as("op"),
         col("o_custkey"), lit(null).cast("string").as("status"),
         lit(null).cast("double").as("total"))
-    Compaction.mergeChangelog(base, ups.unionByName(dels), "o_orderkey",
-        "seq", "op", Seq("o_custkey", "status", "total"))
-      .orderBy(col("o_orderkey"))
+    ups.unionByName(dels)
   }
 
   val mergeUpsertSql: String =
@@ -4078,16 +4090,21 @@ object Queries {
         86400000000L, windowDays = 7)
       .orderBy(col("day_bucket"))
 
-  val rollingDistinctUsersSql: String =
-    """WITH ud AS (
+  /** Distinct users per trailing 7-day window, per day up to the last
+    * event day, then the `extra` columns.
+    */
+  private def users7dSql(extra: String): String =
+    s"""WITH ud AS (
          SELECT DISTINCT user_id AS u, epoch_us(ts) // 86400000000 AS d
          FROM events),
        tg AS (
          SELECT DISTINCT u, d + o AS td
          FROM ud, generate_series(0, 6) AS t(o))
-       SELECT td AS day_bucket, COUNT(*) AS n_users_7d
+       SELECT td AS day_bucket, COUNT(*) AS n_users_7d$extra
        FROM tg WHERE td <= (SELECT MAX(d) FROM ud)
        GROUP BY 1 ORDER BY 1"""
+
+  val rollingDistinctUsersSql: String = users7dSql("")
 
   // ------------------------------------------- E33 time-weighted avg ------
 
@@ -4121,6 +4138,17 @@ object Queries {
     * same mutation and the same counters.
     */
   def snapshotDiff(s: SparkSession, dir: String): DataFrame = {
+    val (base, rebuilt) = snapshotVersions(s, dir)
+    Reconcile.snapshotDiff(base, rebuilt, "o_orderkey",
+      Seq("o_custkey", "o_orderstatus", "total"))
+  }
+
+  /** The E34 snapshot pair: orders as (key, custkey, status, exact total)
+    * and its rebuild with %7 keys repriced +1, %13 keys dropped and the
+    * %11 keys copied 30M higher.
+    */
+  private def snapshotVersions(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
     val base = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
       col("o_orderstatus"), dec2(col("o_totalprice")).as("total"))
     val rebuilt = base
@@ -4132,8 +4160,7 @@ object Queries {
       .unionByName(base.where(pmod(col("o_orderkey"), lit(11)) === 0)
         .select((col("o_orderkey") + lit(30000000L)).as("o_orderkey"),
           col("o_custkey"), col("o_orderstatus"), col("total")))
-    Reconcile.snapshotDiff(base, rebuilt, "o_orderkey",
-      Seq("o_custkey", "o_orderstatus", "total"))
+    (base, rebuilt)
   }
 
   val snapshotDiffSql: String =
@@ -4192,18 +4219,8 @@ object Queries {
     */
   def snapshotDiffBucketed(s: SparkSession, dir: String): DataFrame = {
     Seq("graft_snap_old", "graft_snap_new")
-      .foreach(graft.sources.Sinks.dropManagedTable(s, _))
-    val base = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
-      col("o_orderstatus"), dec2(col("o_totalprice")).as("total"))
-    val rebuilt = base
-      .where(pmod(col("o_orderkey"), lit(13)) =!= 0)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        when(pmod(col("o_orderkey"), lit(7)) === 0,
-          col("total") + lit(1).cast("decimal(3,0)"))
-          .otherwise(col("total")).as("total"))
-      .unionByName(base.where(pmod(col("o_orderkey"), lit(11)) === 0)
-        .select((col("o_orderkey") + lit(30000000L)).as("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("total")))
+      .foreach(Sinks.dropManagedTable(s, _))
+    val (base, rebuilt) = snapshotVersions(s, dir)
     base.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .mode("overwrite").saveAsTable("graft_snap_old")
     rebuilt.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -4226,34 +4243,17 @@ object Queries {
     * merge_upsert truth, so that query's oracle gates this one verbatim.
     */
   def mergeUpsertStream(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
-    import org.apache.spark.sql.types.LongType
     val tmp = tempDir("graft_cdc_")
     val landing = s"$tmp/landing"; val snapDir = s"$tmp/snap"
     val ckpt = s"$tmp/ckpt"
     val payload = Seq("o_custkey", "status", "total")
-    val base = orders(s, dir).select(col("o_orderkey"),
-      lit(0L).as("seq"), lit("U").as("op"), col("o_custkey"),
-      col("o_orderstatus").as("status"),
-      dec2(col("o_totalprice")).cast("double").as("total"))
-    val ups = orders(s, dir).where(pmod(col("o_orderkey"), lit(5)) === 0)
-      .select(col("o_orderkey"), lit(1L).as("seq"), lit("U").as("op"),
-        col("o_custkey"), lit("M").as("status"),
-        (dec2(col("o_totalprice")) * lit(2).cast("decimal(2,0)"))
-          .cast("double").as("total"))
-    val dels = orders(s, dir).where(pmod(col("o_orderkey"), lit(10)) === 0)
-      .select(col("o_orderkey"), lit(2L).as("seq"), lit("D").as("op"),
-        col("o_custkey"), lit(null).cast("string").as("status"),
-        lit(null).cast("double").as("total"))
-    base.write.mode("overwrite").parquet(landing)
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.cdcMergeSink(
-        s.readStream.schema(base.schema).parquet(landing),
-        "o_orderkey", "seq", "op", payload, snapDir,
-        checkpointDir = Some(ckpt), availableNow = true)
-        .awaitTermination()
-    drain()
-    ups.unionByName(dels).write.mode("append").parquet(landing)
-    drain()
+    val base = orderRows(s, dir).select(col("o_orderkey"),
+      lit(0L).as("seq"), lit("U").as("op"), col("o_custkey"), col("status"),
+      col("total"))
+    drainTwice(landing, base, orderChanges(s, dir)) {
+      StreamingIngest.cdcMergeSink(_, "o_orderkey", "seq", "op", payload,
+        snapDir, checkpointDir = Some(ckpt), availableNow = true)
+    }
     val snaps = s.read.parquet(snapDir)
     val vmax = snaps.agg(max(col("version"))).collect()(0)
       .get(0).asInstanceOf[Number].longValue
@@ -4290,7 +4290,7 @@ object Queries {
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_events"))
     val name = s"graft_ss_static_${System.nanoTime()}"
-    graft.streaming.StreamingIngest.runAvailableNow(stream, name)
+    StreamingIngest.runAvailableNow(stream, name)
       .awaitTermination()
     s.table(name).orderBy(col("c_nationkey"))
   }
@@ -5179,18 +5179,12 @@ object Queries {
     val toks = documents(s, dir).select(col("doc_id"),
       explode(regexp_extract_all(lower(col("text")),
         lit("[a-z0-9]+"), lit(0))).as("t"))
-    toks.where(pmod(col("doc_id"), lit(2)) === 0).select(col("t"))
-      .write.mode("overwrite").parquet(landing)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("t STRING")
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.heavyHitterSink(
-        s.readStream.schema(schema).parquet(landing), "t", countsDir,
+    drainTwice(landing,
+        toks.where(pmod(col("doc_id"), lit(2)) === 0).select(col("t")),
+        toks.where(pmod(col("doc_id"), lit(2)) === 1).select(col("t"))) {
+      StreamingIngest.heavyHitterSink(_, "t", countsDir,
         checkpointDir = Some(ckpt), availableNow = true)
-        .awaitTermination()
-    drain()
-    toks.where(pmod(col("doc_id"), lit(2)) === 1).select(col("t"))
-      .write.mode("append").parquet(landing)
-    drain()
+    }
     val counts = s.read.parquet(countsDir)
       .groupBy(col("item")).agg(sum(col("cnt")).as("cnt"))
     counts
@@ -5299,37 +5293,12 @@ object Queries {
     * shape (one user shuffle); the sweep is two endpoint-frame shuffles
     * plus a |days|-window carry — never a global ordered window over data.
     */
-  def maxConcurrency(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us").asc, col("event_id").asc)
-    val sessions = events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("t_us"))
-      .withColumn("prev_us", lag(col("t_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          col("t_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("new_sess"))
-        .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(min(col("t_us")).as("s_us"), max(col("t_us")).as("e_us"))
-    SweepLine.maxConcurrency(sessions, col("s_us"), col("e_us"))
+  def maxConcurrency(s: SparkSession, dir: String): DataFrame =
+    SweepLine.maxConcurrency(sessionSpans(s, dir), col("s_us"), col("e_us"))
       .orderBy(col("day_bucket"))
-  }
 
   val maxConcurrencySql: String =
-    """WITH marked AS (
-         SELECT user_id, t_us,
-           SUM(new_sess) OVER (PARTITION BY user_id ORDER BY t_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-         FROM (
-           SELECT user_id, event_id, epoch_us(ts) AS t_us,
-             CASE WHEN lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-                 ORDER BY epoch_us(ts), event_id) IS NULL
-               OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-                 ORDER BY epoch_us(ts), event_id) > 1800000000
-             THEN 1 ELSE 0 END AS new_sess
-           FROM events)),
+    s"""WITH ${sessMarkedSql()},
        ivals AS (
          SELECT MIN(t_us) AS s_us, MAX(t_us) AS e_us
          FROM marked GROUP BY user_id, session_idx),
@@ -5615,7 +5584,7 @@ object Queries {
     ev.repartition(48, col("day"), pmod(col("event_id"), lit(12L)))
       .write.partitionBy("day").mode("overwrite").parquet(s"$tmp/frag")
     val frag = s.read.parquet(s"$tmp/frag")
-    graft.sources.Sinks.compactPartitions(frag, "day", s"$tmp/compact")
+    Sinks.compactPartitions(frag, "day", s"$tmp/compact")
     s.read.parquet(s"$tmp/compact")
       .groupBy(col("day").cast("long").as("day_bucket"))
       .agg(count(lit(1)).as("n_events"),
@@ -5652,52 +5621,27 @@ object Queries {
     * O(sessions closed this trigger), not O(all sessions ever).
     */
   def streamingSessionWindow(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
-    import graft.streaming.StreamingIngest
-    val tmp = tempDir("graft_sesswin_")
-    val landing = s"$tmp/landing"; val ckpt = s"$tmp/ckpt"
-    val outDir = s"$tmp/out"
     val ev = events(s, dir).select(col("user_id"), col("ts"))
     val bounds = ev.agg(
       min(unix_micros(col("ts"))).as("mn"),
       max(unix_micros(col("ts"))).as("mx")).head()
     val mnUs = bounds.getLong(0); val mxUs = bounds.getLong(1)
-    val hourUs = 3600L * 1000 * 1000
     def advancer(tUs: Long) = s.range(1).select(
       lit(-1L).as("user_id"), timestamp_micros(lit(tUs)).as("ts"))
-    def drain(): Unit = StreamingIngest.drainAppendToDir(s, landing,
-      ev.schema, df => StreamingIngest.sessionWindowCountsAppend(
-        df, "user_id", "ts", "30 minutes", "1 hour"), ckpt, outDir)
-    // drain 1: full history + advancer → watermark (mx+3h−1h) passes
-    // every real session's close (≤ mx+30min); all sessions emit once
-    ev.coalesce(1).write.mode("overwrite").parquet(landing)
-    advancer(mxUs + 3 * hourUs).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    // drain 2: late replay of the earliest hour (behind the watermark —
-    // must be DROPPED, or duplicate sessions emit) + a second advancer
-    // that closes advancer 1's own session
-    ev.where(unix_micros(col("ts")) < mnUs + hourUs)
-      .coalesce(1).write.mode("append").parquet(landing)
-    advancer(mxUs + 6 * hourUs).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    s.read.parquet(outDir)
+    // drain 1's watermark (mx+3h−1h) passes every real session's close
+    // (≤ mx+30min), so all sessions emit once; drain 2's late replay must
+    // be DROPPED, or duplicate sessions emit, and its advancer closes
+    // advancer 1's own session
+    s.read.parquet(lateReplay(tempDir("graft_sesswin_"), ev, mnUs, mxUs,
+        advancer)(StreamingIngest.sessionWindowCountsAppend(
+        _, "user_id", "ts", "30 minutes", "1 hour")))
       .where(col("user_id") >= 0L)
       .select(col("user_id"), col("start_us"), col("n_events"))
       .orderBy(col("user_id"), col("start_us"))
   }
 
   val streamingSessionWindowSql: String =
-    """WITH marked AS (
-         SELECT user_id, t_us,
-           SUM(new_sess) OVER (PARTITION BY user_id ORDER BY t_us
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-         FROM (
-           SELECT user_id, epoch_us(ts) AS t_us,
-             CASE WHEN lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-                 ORDER BY epoch_us(ts)) IS NULL
-               OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER (PARTITION BY
-                 user_id ORDER BY epoch_us(ts)) > 1800000000
-             THEN 1 ELSE 0 END AS new_sess
-           FROM events))
+    s"""WITH ${sessMarkedSql(inner = "user_id", tie = "")}
        SELECT user_id, MIN(t_us) AS start_us, COUNT(*) AS n_events
        FROM marked GROUP BY user_id, session_idx
        ORDER BY user_id, start_us"""
@@ -5721,9 +5665,9 @@ object Queries {
     // file-sink drain, not a memory sink: the emitted set is every
     // distinct event, and a memory sink funnels all of it through the
     // driver heap (the E8b lesson — see dedupStreamExact)
-    graft.streaming.StreamingIngest.drainAppendToDir(s, landing, ev.schema,
-      st => graft.streaming.StreamingIngest
-        .dedupWithinWatermark(st, Seq("event_id"), "ts", "2 hours"),
+    StreamingIngest.drainAppendToDir(s, landing, ev.schema,
+      st => StreamingIngest.dedupWithinWatermark(st, Seq("event_id"), "ts",
+        "2 hours"),
       ckpt, outDir)
     s.read.parquet(outDir)
       .select(col("event_id"), col("user_id"),
@@ -5737,23 +5681,28 @@ object Queries {
 
   // ------------------------------------------ E54 Gini concentration ------
 
+  /** Per customer: its market segment, its exact order revenue in cents
+    * `x` and its order count `w`.
+    */
+  private def segmentCents(s: SparkSession, dir: String): DataFrame =
+    orders(s, dir).groupBy(col("o_custkey"))
+      .agg((sum(dec2(col("o_totalprice"))) * lit(100)).cast("long").as("x"),
+        count(lit(1)).as("w"))
+      .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
+      .select(col("c_mktsegment"), col("c_custkey"), col("x"), col("w"))
+
   /** Revenue concentration per market segment: the Gini coefficient of
     * per-customer order revenue ([[Stats.gini]]) — exact decimal(38,0)
     * rank sums, one double division; the oracle replays the rank form in
     * HUGEINT and crosses to double via VARCHAR (the E39 lesson, since the
     * sums exceed 2⁵³).
     */
-  def giniConcentration(s: SparkSession, dir: String): DataFrame = {
-    val rev = orders(s, dir).groupBy(col("o_custkey"))
-      .agg((sum(dec2(col("o_totalprice"))) * lit(100)).cast("long").as("x"))
-    val perCust = rev.join(customer(s, dir),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment"), col("c_custkey"), col("x"))
-    Stats.gini(perCust, col("c_mktsegment"), col("c_custkey"), col("x"))
+  def giniConcentration(s: SparkSession, dir: String): DataFrame =
+    Stats.gini(segmentCents(s, dir).drop("w"), col("c_mktsegment"),
+        col("c_custkey"), col("x"))
       .select(col("g").as("c_mktsegment"), col("n").as("n_customers"),
         col("gini"))
       .orderBy(col("c_mktsegment"))
-  }
 
   /** E54's wide-group escape, REGISTERED: the same Gini through the
     * two-level range rank ([[Ranks.runningByRange]]) — every group's
@@ -5761,18 +5710,12 @@ object Queries {
     * hash-match `gini_concentration`'s oracle exactly (identical ranks ⇒
     * identical decimal sums ⇒ identical division).
     */
-  def giniRanked(s: SparkSession, dir: String): DataFrame = {
-    val rev = orders(s, dir).groupBy(col("o_custkey"))
-      .agg((sum(dec2(col("o_totalprice"))) * lit(100)).cast("long").as("x"))
-    val perCust = rev.join(customer(s, dir),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment"), col("c_custkey"), col("x"))
-    Stats.gini(perCust, col("c_mktsegment"), col("c_custkey"), col("x"),
-        twoLevelRank = true)
+  def giniRanked(s: SparkSession, dir: String): DataFrame =
+    Stats.gini(segmentCents(s, dir).drop("w"), col("c_mktsegment"),
+        col("c_custkey"), col("x"), twoLevelRank = true)
       .select(col("g").as("c_mktsegment"), col("n").as("n_customers"),
         col("gini"))
       .orderBy(col("c_mktsegment"))
-  }
 
   val giniConcentrationSql: String =
     """WITH rev AS (
@@ -5810,19 +5753,7 @@ object Queries {
     * (the session build); everything after is |distinct duration|-sized.
     */
   def survivalKm(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us").asc, col("event_id").asc)
-    val sessions = events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("t_us"))
-      .withColumn("prev_us", lag(col("t_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          col("t_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("new_sess"))
-        .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(min(col("t_us")).as("s_us"), max(col("t_us")).as("e_us"))
+    val sessions = sessionSpans(s, dir)
     val maxT = events(s, dir).agg(max(unix_micros(col("ts"))).as("max_t"))
     val perSession = sessions.crossJoin(broadcast(maxT))
       .select(
@@ -5837,18 +5768,7 @@ object Queries {
   }
 
   val survivalKmSql: String =
-    """WITH RECURSIVE marked AS (
-         SELECT user_id, t_us,
-           SUM(new_sess) OVER (PARTITION BY user_id ORDER BY t_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-         FROM (
-           SELECT user_id, event_id, epoch_us(ts) AS t_us,
-             CASE WHEN lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-                 ORDER BY epoch_us(ts), event_id) IS NULL
-               OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER (PARTITION BY
-                 user_id ORDER BY epoch_us(ts), event_id) > 1800000000
-             THEN 1 ELSE 0 END AS new_sess
-           FROM events)),
+    s"""WITH RECURSIVE ${sessMarkedSql()},
        mx AS (SELECT MAX(epoch_us(ts)) AS max_t FROM events),
        pu AS (
          SELECT (MAX(t_us) - MIN(t_us)) // 60000000 AS lt,
@@ -6076,6 +5996,20 @@ object Queries {
 
   // ---------------------------------------- E13b nearest as-of join -------
 
+  /** Purchases as (event_id, user_id, pt) and views as (user_id, vt),
+    * event times in µs: the two sides of a purchase → view as-of join.
+    */
+  private def purchasesAndViews(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val ev = events(s, dir)
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("pt"))
+    val views = ev.where(col("event_type") === "view")
+      .select(col("user_id"), unix_micros(col("ts")).as("vt"))
+    (purchases, views)
+  }
+
   /** Purchase → NEAREST view attribution ([[AsOfJoin.asOfNearest]]):
     * backward or forward in time, whichever is closer (ties backward) —
     * the enrichment mode backward-only ASOF can't express (a purchase
@@ -6083,12 +6017,7 @@ object Queries {
     * ingestion). Output: 10-minute |Δt| histogram per direction.
     */
   def asofNearestQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("pt"))
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id"), unix_micros(col("ts")).as("vt"))
+    val (purchases, views) = purchasesAndViews(s, dir)
     AsOfJoin.asOfNearest(purchases, col("user_id"), col("pt"),
         views, col("user_id"), col("vt"), Seq("vt" -> col("vt")))
       .groupBy(col("asof_dir"),
@@ -6201,17 +6130,7 @@ object Queries {
     */
   def streamAsofEnrich(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
     val tmp = tempDir("graft_sae_")
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us").asc, col("event_id").asc)
-    val dim = events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("t_us"))
-      .withColumn("prev_us", lag(col("t_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          col("t_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("new_sess"))
-        .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val dim = sessionMarked(s, dir)
       .groupBy(col("user_id").as("d_user"), col("session_idx"))
       .agg(min(col("t_us")).as("s_us"))
     val purchases = events(s, dir)
@@ -6226,7 +6145,7 @@ object Queries {
     // timed query; scan-shaped parallelism costs nothing at sf0.1.
     purchases.write.mode("overwrite").parquet(landing)
     val stream = s.readStream.schema(purchases.schema).parquet(landing)
-    graft.streaming.StreamingIngest.asofEnrichSink(stream, dim,
+    StreamingIngest.asofEnrichSink(stream, dim,
         "user_id", "pt", col("d_user"), col("s_us"),
         Seq("session_idx" -> col("session_idx")),
         s"$tmp/out", s"$tmp/ckpt")
@@ -6237,18 +6156,8 @@ object Queries {
   }
 
   val streamAsofEnrichSql: String =
-    """WITH marked AS (
-         SELECT event_id, event_type,
-           SUM(new_sess) OVER (PARTITION BY user_id ORDER BY t_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-         FROM (
-           SELECT user_id, event_id, event_type, epoch_us(ts) AS t_us,
-             CASE WHEN lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
-                 ORDER BY epoch_us(ts), event_id) IS NULL
-               OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER (PARTITION BY
-                 user_id ORDER BY epoch_us(ts), event_id) > 1800000000
-             THEN 1 ELSE 0 END AS new_sess
-           FROM events))
+    s"""WITH ${sessMarkedSql("event_id, event_type",
+         "user_id, event_id, event_type")}
        SELECT event_id, CAST(session_idx AS BIGINT) AS session_idx
        FROM marked WHERE event_type = 'purchase' ORDER BY event_id"""
 
@@ -6517,19 +6426,8 @@ object Queries {
 
   val sampleClusterDedupSql: String =
     s"""WITH RECURSIVE
-       s AS (SELECT doc_id, lang, $shingleSql AS sh FROM ($shingleSrcSql)),
-       pairs AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM s a JOIN s b ON a.doc_id < b.doc_id
-         WHERE $jaccardSql >= 0.5),
-       edges AS (
-         SELECT id_a AS src, id_b AS dst FROM pairs
-         UNION ALL
-         SELECT id_b AS src, id_a AS dst FROM pairs),
-       reach(id, root) AS (
-         SELECT doc_id, doc_id FROM documents
-         UNION
-         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
+       ${shinglePairsSql("")},
+       ${reachSql("doc_id", "documents")},
        reps AS (
          SELECT id AS doc_id FROM (
            SELECT id, MIN(root) AS root FROM reach GROUP BY id)
@@ -6553,11 +6451,7 @@ object Queries {
     * (the E54 wide-group wall).
     */
   def weightedMedian(s: SparkSession, dir: String): DataFrame = {
-    val perCust = orders(s, dir).groupBy(col("o_custkey"))
-      .agg((sum(dec2(col("o_totalprice"))) * lit(100)).cast("long").as("x"),
-        count(lit(1)).as("w"))
-      .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment"), col("c_custkey"), col("x"), col("w"))
+    val perCust = segmentCents(s, dir)
     Ranks.running(perCust, Seq("c_mktsegment"), Seq("x", "c_custkey"),
         Seq("cum" -> col("w")))
       .where(lit(2L) * col("cum") >= col("cum_total"))
@@ -6567,7 +6461,11 @@ object Queries {
       .orderBy(col("c_mktsegment"))
   }
 
-  val weightedMedianSql: String =
+  /** `cw`: per segment, each customer's revenue in cents `x`, order count
+    * `w`, its running weight `cum` in (x, c_custkey) order and the total
+    * `tot` — the weighted-quantile prefix sum in SQL.
+    */
+  private val weightedCumSql: String =
     """WITH pc AS (
          SELECT c_mktsegment, c_custkey,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -6582,7 +6480,10 @@ object Queries {
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
              AS cum,
            CAST(SUM(w) OVER (PARTITION BY c_mktsegment) AS BIGINT) AS tot
-         FROM pc)
+         FROM pc)"""
+
+  val weightedMedianSql: String =
+    s"""$weightedCumSql
        SELECT c_mktsegment, MIN(x) AS median_rev_c,
          CAST(MIN(tot) AS BIGINT) AS n_orders
        FROM cw WHERE 2 * cum >= tot
@@ -6618,16 +6519,7 @@ object Queries {
       .orderBy(col("day_bucket"))
   }
 
-  val slidingDistinctHllSql: String =
-    """WITH ud AS (
-         SELECT DISTINCT user_id AS u, epoch_us(ts) // 86400000000 AS d
-         FROM events),
-       tg AS (
-         SELECT DISTINCT u, d + o AS td
-         FROM ud, generate_series(0, 6) AS t(o))
-       SELECT td AS day_bucket, COUNT(*) AS n_users_7d, true AS hll_ok
-       FROM tg WHERE td <= (SELECT MAX(d) FROM ud)
-       GROUP BY 1 ORDER BY 1"""
+  val slidingDistinctHllSql: String = users7dSql(", true AS hll_ok")
 
   // ---------------------------------- E63 power-iteration PCA -------------
 
@@ -6836,6 +6728,14 @@ object Queries {
       .groupBy(col("t")).agg(count(lit(1)).as("exact_cnt"))
       .localCheckpoint() // one tokenization pass feeds grid + cut + recount
     val cells = CountMin.sketchWeighted(exact, col("t"), col("exact_cnt"))
+    cmsTop10(cells, exact)
+  }
+
+  /** The 10 most frequent tokens of `exact(t, exact_cnt)` with their
+    * Count-Min estimate from the `cells` grid, and whether it over-counts
+    * or matches.
+    */
+  private def cmsTop10(cells: DataFrame, exact: DataFrame): DataFrame = {
     val top = graft.plans.TopKPerKey.topK(exact.withColumn("_k", lit(0)),
         keys = Seq("_k"), order = Seq("exact_cnt" -> "desc", "t" -> "asc"),
         k = 10)
@@ -7069,15 +6969,17 @@ object Queries {
     * window — no recursion, no driver loop. All-integer: deviations are
     * n-scaled (y = n·x − Σx), both engines carry identical BIGINTs.
     */
-  def cusumDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily = orders(s, dir)
+  def cusumDaily(s: SparkSession, dir: String): DataFrame =
+    dailyCusum(orders(s, dir)
       .groupBy(dayBucket(col("o_orderdate")).as("day_bucket"))
-      .agg(count(lit(1)).as("n_orders"))
+      .agg(count(lit(1)).as("n_orders")))
+
+  /** The E67 CUSUM series over `daily(day_bucket, n_orders)`. */
+  private def dailyCusum(daily: DataFrame): DataFrame =
     TimeSeries.cusum(daily, col("day_bucket"), col("n_orders"))
       .select(col("bucket").as("day_bucket"), col("x").as("n_orders"),
         col("cusum_up"), col("cusum_dn"))
       .orderBy(col("day_bucket"))
-  }
 
   val cusumDailySql: String =
     """WITH daily AS (
@@ -7125,29 +7027,16 @@ object Queries {
       .select(col("doc_id"),
         explode(regexp_extract_all(lower(col("text")),
           lit("[a-z0-9]+"), lit(0))).as("t"))
-    toks.where(pmod(col("doc_id"), lit(8)) === 0).select(col("t"))
-      .write.mode("overwrite").parquet(landing)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("t STRING")
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.cmsSink(
-        s.readStream.schema(schema).parquet(landing), "t", cellsDir,
-        checkpointDir = Some(ckpt), availableNow = true)
-        .awaitTermination()
-    drain()
-    toks.where(pmod(col("doc_id"), lit(8)) === 4).select(col("t"))
-      .write.mode("append").parquet(landing)
-    drain()
+    drainTwice(landing,
+        toks.where(pmod(col("doc_id"), lit(8)) === 0).select(col("t")),
+        toks.where(pmod(col("doc_id"), lit(8)) === 4).select(col("t"))) {
+      StreamingIngest.cmsSink(_, "t", cellsDir, checkpointDir = Some(ckpt),
+        availableNow = true)
+    }
     val cells = s.read.parquet(cellsDir)
       .groupBy(col("j"), col("b")).agg(sum(col("cnt")).as("cnt"))
     val exact = toks.groupBy(col("t")).agg(count(lit(1)).as("exact_cnt"))
-    val top = graft.plans.TopKPerKey.topK(exact.withColumn("_k", lit(0)),
-        keys = Seq("_k"), order = Seq("exact_cnt" -> "desc", "t" -> "asc"),
-        k = 10)
-      .select(col("t"), col("exact_cnt"))
-    CountMin.estimate(cells, top, col("t"))
-      .select(col("t").as("token"), col("exact_cnt"), col("est_cnt"),
-        (col("est_cnt") >= col("exact_cnt")).as("over_ok"))
-      .orderBy(col("exact_cnt").desc, col("token"))
+    cmsTop10(cells, exact)
   }
 
   val streamCmsSql: String = cmsCountsSqlFor("WHERE doc_id % 4 = 0")
@@ -7339,12 +7228,7 @@ object Queries {
     * no prior view drop (they never entered the funnel).
     */
   def timeToConvert(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("pt"))
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id"), unix_micros(col("ts")).as("vt"))
+    val (purchases, views) = purchasesAndViews(s, dir)
     AsOfJoin.asOf(purchases, col("user_id"), col("pt"),
         views, col("user_id"), col("vt"), Seq("vt" -> col("vt")))
       .where(col("right_vt").isNotNull)
@@ -7528,26 +7412,14 @@ object Queries {
     val ckpt = s"$tmp/ckpt"
     val src = orders(s, dir).select(
       dayBucket(col("o_orderdate")).as("day_bucket"), col("o_orderkey"))
-    src.where(pmod(col("o_orderkey"), lit(2)) === 0)
-      .write.mode("overwrite").parquet(landing)
-    val schema = org.apache.spark.sql.types.StructType
-      .fromDDL("day_bucket BIGINT, o_orderkey BIGINT")
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.heavyHitterSink(
-        s.readStream.schema(schema).parquet(landing), "day_bucket",
-        countsDir, checkpointDir = Some(ckpt), availableNow = true)
-        .awaitTermination()
-    drain()
-    src.where(pmod(col("o_orderkey"), lit(2)) === 1)
-      .write.mode("append").parquet(landing)
-    drain()
-    val daily = s.read.parquet(countsDir)
+    drainTwice(landing, src.where(pmod(col("o_orderkey"), lit(2)) === 0),
+        src.where(pmod(col("o_orderkey"), lit(2)) === 1)) {
+      StreamingIngest.heavyHitterSink(_, "day_bucket", countsDir,
+        checkpointDir = Some(ckpt), availableNow = true)
+    }
+    dailyCusum(s.read.parquet(countsDir)
       .groupBy(col("item")).agg(sum(col("cnt")).as("n_orders"))
-      .select(col("item").cast("long").as("day_bucket"), col("n_orders"))
-    TimeSeries.cusum(daily, col("day_bucket"), col("n_orders"))
-      .select(col("bucket").as("day_bucket"), col("x").as("n_orders"),
-        col("cusum_up"), col("cusum_dn"))
-      .orderBy(col("day_bucket"))
+      .select(col("item").cast("long").as("day_bucket"), col("n_orders")))
   }
 
   val streamCusumSql: String = cusumDailySql
@@ -7583,14 +7455,7 @@ object Queries {
 
   val bpeFertilitySql: String =
     s"""WITH RECURSIVE
-       toks AS (
-         SELECT doc_id, unnest(regexp_extract_all(text,
-           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS w
-         FROM documents),
-       words AS (
-         SELECT DISTINCT w FROM toks
-         WHERE length(w) > 1 AND w SIMILAR TO '[A-Za-z0-9]+'),
-       $bpeReplaySql,
+       ${bpeWordsSql("doc_id", "text", "documents")},
        perdoc AS (
          SELECT t.doc_id, SUM(COALESCE(e.ntok, 1)) AS n_bpe
          FROM toks t LEFT JOIN enc e ON t.w = e.w
@@ -7623,17 +7488,7 @@ object Queries {
     * TopKPerKeyExec — never a global sort of the census.
     */
   def sessionPaths(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("t_us").asc, col("event_id").asc)
-    val sess = events(s, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("t_us"))
-      .withColumn("prev_us", lag(col("t_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          col("t_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("new_sess"))
-        .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = sessionMarked(s, dir, "event_type")
     val paths = sess.groupBy(col("user_id"), col("session_idx"))
       .agg(array_join(
         transform(
@@ -7693,9 +7548,15 @@ object Queries {
     */
   def dedupStats(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
-    val pairs = Dedup.minhashEdges(docs, col("doc_id"), col("text"),
-      threshold = 0.5)
-    val asg = Dedup.clusters(docs.select(col("doc_id").as("id")), pairs)
+    clusterCensus(docs, Dedup.minhashEdges(docs, col("doc_id"), col("text"),
+      threshold = 0.5))
+  }
+
+  /** The cluster-size histogram of the doc components over `edges`: per
+    * size, the cluster count, their docs and that share of all docs.
+    */
+  private def clusterCensus(docs: DataFrame, edges: DataFrame): DataFrame = {
+    val asg = Dedup.clusters(docs.select(col("doc_id").as("id")), edges)
     val sizes = asg.groupBy(col("root"))
       .agg(count(lit(1)).as("cluster_size"))
     val tot = asg.agg(count(lit(1)).as("n"))
@@ -7709,21 +7570,13 @@ object Queries {
       .orderBy(col("cluster_size"))
   }
 
-  val dedupStatsSql: String =
+  val dedupStatsSql: String = clusterCensusSql(shinglePairsSql(""))
+
+  /** [[clusterCensus]] in SQL over the doc `pairs` CTE `ctes` ends with. */
+  private def clusterCensusSql(ctes: String): String =
     s"""WITH RECURSIVE
-       s AS (SELECT doc_id, lang, $shingleSql AS sh FROM ($shingleSrcSql)),
-       pairs AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM s a JOIN s b ON a.doc_id < b.doc_id
-         WHERE $jaccardSql >= 0.5),
-       edges AS (
-         SELECT id_a AS src, id_b AS dst FROM pairs
-         UNION ALL
-         SELECT id_b AS src, id_a AS dst FROM pairs),
-       reach(id, root) AS (
-         SELECT doc_id, doc_id FROM documents
-         UNION
-         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
+       $ctes,
+       ${reachSql("doc_id", "documents")},
        asg AS (SELECT id, MIN(root) AS root FROM reach GROUP BY id),
        sizes AS (SELECT root, COUNT(*) AS cluster_size FROM asg GROUP BY 1),
        tot AS (SELECT COUNT(*) AS n FROM asg)
@@ -7747,11 +7600,7 @@ object Queries {
     * per-quantile nth-element passes.
     */
   def weightedPercentiles(s: SparkSession, dir: String): DataFrame = {
-    val perCust = orders(s, dir).groupBy(col("o_custkey"))
-      .agg((sum(dec2(col("o_totalprice"))) * lit(100)).cast("long").as("x"),
-        count(lit(1)).as("w"))
-      .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment"), col("c_custkey"), col("x"), col("w"))
+    val perCust = segmentCents(s, dir)
     val tot = col("cum_total")
     Ranks.running(perCust, Seq("c_mktsegment"), Seq("x", "c_custkey"),
         Seq("cum" -> col("w")))
@@ -7766,21 +7615,7 @@ object Queries {
   }
 
   val weightedPercentilesSql: String =
-    """WITH pc AS (
-         SELECT c_mktsegment, c_custkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-             AS x,
-           COUNT(*) AS w
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment, c_custkey),
-       cw AS (
-         SELECT c_mktsegment, x, w,
-           CAST(SUM(w) OVER (PARTITION BY c_mktsegment
-             ORDER BY x, c_custkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS cum,
-           CAST(SUM(w) OVER (PARTITION BY c_mktsegment) AS BIGINT) AS tot
-         FROM pc)
+    s"""$weightedCumSql
        SELECT c_mktsegment,
          MIN(CASE WHEN 4 * cum >= tot THEN x END) AS p25_rev_c,
          MIN(CASE WHEN 2 * cum >= tot THEN x END) AS p50_rev_c,
@@ -8102,49 +7937,16 @@ object Queries {
     */
   def containmentStats(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
-    val edges = Dedup.containmentEdges(docs, col("doc_id"), col("text"),
-      block = col("lang"), threshold = 0.8)
-    val asg = Dedup.clusters(docs.select(col("doc_id").as("id")), edges)
-    val sizes = asg.groupBy(col("root"))
-      .agg(count(lit(1)).as("cluster_size"))
-    val tot = asg.agg(count(lit(1)).as("n"))
-    sizes.groupBy(col("cluster_size"))
-      .agg(count(lit(1)).as("n_clusters"))
-      .crossJoin(broadcast(tot))
-      .select(col("cluster_size"), col("n_clusters"),
-        (col("cluster_size") * col("n_clusters")).as("n_docs"),
-        ((col("cluster_size") * col("n_clusters")).cast("double")
-          / col("n").cast("double")).as("frac_docs"))
-      .orderBy(col("cluster_size"))
+    clusterCensus(docs, Dedup.containmentEdges(docs, col("doc_id"),
+      col("text"), block = col("lang"), threshold = 0.8))
   }
 
   val containmentStatsSql: String = {
     val containSql =
       """CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
          / CAST(LEAST(len(a.sh), len(b.sh)) AS DOUBLE)"""
-    s"""WITH RECURSIVE
-       s AS (SELECT doc_id, lang, $shingleSql AS sh FROM ($shingleSrcSql)),
-       pairs AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-         WHERE $containSql >= 0.8),
-       edges AS (
-         SELECT id_a AS src, id_b AS dst FROM pairs
-         UNION ALL
-         SELECT id_b AS src, id_a AS dst FROM pairs),
-       reach(id, root) AS (
-         SELECT doc_id, doc_id FROM documents
-         UNION
-         SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id),
-       asg AS (SELECT id, MIN(root) AS root FROM reach GROUP BY id),
-       sizes AS (SELECT root, COUNT(*) AS cluster_size FROM asg GROUP BY 1),
-       tot AS (SELECT COUNT(*) AS n FROM asg)
-       SELECT cluster_size, COUNT(*) AS n_clusters,
-         CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs,
-         CAST(cluster_size * COUNT(*) AS DOUBLE) / CAST(n AS DOUBLE)
-           AS frac_docs
-       FROM sizes CROSS JOIN tot
-       GROUP BY cluster_size, n ORDER BY cluster_size"""
+    clusterCensusSql(
+      shinglePairsSql("a.lang = b.lang AND ", s"$containSql >= 0.8"))
   }
 
   // ------------------------------ E74 two-sample KS drift ----------------

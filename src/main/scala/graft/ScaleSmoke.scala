@@ -57,7 +57,7 @@ object ScaleSmoke {
     // reclaim it on exit (shutdown hook covers the killed-run case that
     // leaked a dozen empty dirs into /dev/shm across r13-r14)
     Runtime.getRuntime.addShutdownHook(
-      new Thread(() => Queries.rmTree(local.toFile)))
+      new Thread(() => graft.sources.Sinks.rmTree(local.toFile)))
     // SPARK_GRAFT_MASTER overrides the single-JVM local[k] master — the
     // r15 verdict's open question was whether 300×-decade tail rows are
     // plan behavior or artifacts of ONE 48 GB JVM aging across reps; a

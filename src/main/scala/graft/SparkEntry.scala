@@ -316,24 +316,24 @@ object SparkEntry {
     * four pure queries regress 2.7–4.2× with unchanged code from sharing
     * a run with three new write-heavy neighbours.
     */
-  def queryClass: Map[String, String] = {
-    val writeDemo = Set(
-      "pipeline_config_out", "pipeline_config_composite", "join_bucketed",
-      "pipeline_resume_partial", "snapshot_diff_bucketed", "compact_files",
-      "mv_incremental", "tx_publish", "ann_index_persist", "asof_packed")
-    val streamHarness = Set(
-      "streaming_hourly_counts", "streaming_sessionize", "streaming_late_drop",
-      "dedup_stream_exact", "dedup_incremental_stream",
-      "dedup_incremental_bucketed", "stream_stream_join",
-      "merge_upsert_stream", "stream_static_join", "stream_heavy_hitters",
-      "streaming_session_window", "dedup_within_watermark",
-      "stream_asof_enrich", "stream_cms", "stream_cusum")
+  def queryClass: Map[String, String] =
     queries.keys.map { n =>
       n -> (if (writeDemo(n)) "write_demo"
             else if (streamHarness(n)) "stream_harness"
             else "pure")
     }.toMap
-  }
+
+  private[graft] val writeDemo = Set(
+    "pipeline_config_out", "pipeline_config_composite", "join_bucketed",
+    "pipeline_resume_partial", "snapshot_diff_bucketed", "compact_files",
+    "mv_incremental", "tx_publish", "ann_index_persist", "asof_packed")
+  private[graft] val streamHarness = Set(
+    "streaming_hourly_counts", "streaming_sessionize", "streaming_late_drop",
+    "dedup_stream_exact", "dedup_incremental_stream",
+    "dedup_incremental_bucketed", "stream_stream_join",
+    "merge_upsert_stream", "stream_static_join", "stream_heavy_hitters",
+    "streaming_session_window", "dedup_within_watermark",
+    "stream_asof_enrich", "stream_cms", "stream_cusum")
 
   /** DuckDB oracle SQL per query — every registered query has one.
     * Non-replayable internals are oracled through their *contract*:

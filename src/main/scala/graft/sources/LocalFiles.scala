@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
@@ -32,6 +32,16 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
       Files.setPosixFilePermissions(pathToFile(p).toPath,
         NioRawLocalFileSystem.posix(mode))
   }
+
+  /** The stock lookup, which `FileContext` (streaming checkpoints) calls
+    * on every status check, forks `readlink` without native IO, and hands
+    * it the qualified `file:` path, so a link is never found there and the
+    * result is `getFileStatus`. That is answered here without the fork;
+    * a real symbolic link still goes to the stock method.
+    */
+  override def getFileLinkStatus(p: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(p).toPath)) super.getFileLinkStatus(p)
+    else getFileStatus(p)
 }
 
 object NioRawLocalFileSystem {

@@ -130,14 +130,16 @@ object Sinks {
     // and raw getPath on the latter is null/CWD-ambiguous
     val wh = new java.io.File(new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath).getAbsoluteFile
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) {
-        val fs = f.listFiles(); if (fs != null) fs.foreach(rm)
-      }
-      f.delete(); ()
-    }
     val d = new java.io.File(wh, table)
-    if (d.exists()) rm(d)
+    if (d.exists()) rmTree(d)
+  }
+
+  /** Delete `f` and, if it is a directory, everything under it. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) {
+      val fs = f.listFiles(); if (fs != null) fs.foreach(rmTree)
+    }
+    f.delete(); ()
   }
 
   def parquet(df: DataFrame, path: String, bucket: Option[Column] = None): Unit =

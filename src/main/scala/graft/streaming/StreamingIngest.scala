@@ -206,33 +206,53 @@ object StreamingIngest {
   def incrementalDedupSink(docs: DataFrame, idCol: String, textCol: String,
       fpDir: String, outDir: String,
       checkpointDir: Option[String] = None,
-      availableNow: Boolean = false): StreamingQuery = {
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch
-          .select(md5(col(textCol)).as("fp"), col(idCol).as("id"))
-          .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
+      availableNow: Boolean = false): StreamingQuery =
+    dedupBatches(docs, idCol, textCol, outDir, checkpointDir, availableNow) {
+      spark =>
         // only a missing table means "first batch / empty corpus" — any
         // other read failure (corrupt footer, FS hiccup) must FAIL the
         // batch, or previously-seen documents would silently re-emit as
         // fresh against an accidentally-empty corpus
         val fpPath = new org.apache.hadoop.fs.Path(fpDir)
         val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val corpus =
-          if (fs.exists(fpPath))
-            spark.read.parquet(fpDir)
-              .where(col("batch_id") < batchId).select(col("fp"))
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            new StructType().add("fp", "string"))
-        val fresh = hashed.join(corpus, Seq("fp"), "left_anti")
-          .localCheckpoint() // two sinks below; don't recompute the anti-join
-        fresh.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        fresh.select(col("fp"))
-          .write.mode("overwrite").parquet(s"$fpDir/batch_id=$batchId")
-        ()
-      }
+        Option.when(fs.exists(fpPath))(spark.read.parquet(fpDir))
+    } { (fresh, batchId) =>
+      fresh.select(col("fp"))
+        .write.mode("overwrite").parquet(s"$fpDir/batch_id=$batchId")
+    }
+
+  /** The incremental dedup batch both sinks run: hash each document,
+    * keep the smallest id per fingerprint, anti-join the fingerprints of
+    * earlier batches in the `corpus` store (None: none yet), emit the fresh
+    * rows to `outDir/batch_id=N`, then `commit` their fingerprints.
+    */
+  private def dedupBatches(docs: DataFrame, idCol: String, textCol: String,
+      outDir: String, checkpointDir: Option[String], availableNow: Boolean)(
+      corpus: SparkSession => Option[DataFrame])(
+      commit: (DataFrame, Long) => Unit): StreamingQuery =
+    startBatches(docs, checkpointDir, availableNow) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val hashed = batch
+        .select(md5(col(textCol)).as("fp"), col(idCol).as("id"))
+        .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
+      val seen = corpus(spark)
+        .map(_.where(col("batch_id") < batchId).select(col("fp")))
+        .getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          new StructType().add("fp", "string")))
+      val fresh = hashed.join(seen, Seq("fp"), "left_anti")
+        .localCheckpoint() // two sinks below; don't recompute the anti-join
+      fresh.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      commit(fresh, batchId)
+    }
+
+  /** Start `rows` through `foreachBatch(run)`, checkpointed at
+    * `checkpointDir` when given, as one AvailableNow drain when
+    * `availableNow`.
+    */
+  private def startBatches(rows: DataFrame, checkpointDir: Option[String],
+      availableNow: Boolean)(run: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = rows.writeStream.foreachBatch(run)
     val withCkpt =
       checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c))
     (if (availableNow) withCkpt.trigger(Trigger.AvailableNow()) else withCkpt)
@@ -261,33 +281,15 @@ object StreamingIngest {
   def incrementalDedupSinkBucketed(docs: DataFrame, idCol: String,
       textCol: String, fpTable: String, outDir: String,
       buckets: Int = 32, checkpointDir: Option[String] = None,
-      availableNow: Boolean = false): StreamingQuery = {
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch
-          .select(md5(col(textCol)).as("fp"), col(idCol).as("id"))
-          .groupBy(col("fp")).agg(min(col("id")).as("keep_id"))
-        val corpus =
-          if (spark.catalog.tableExists(fpTable))
-            spark.table(fpTable)
-              .where(col("batch_id") < batchId).select(col("fp"))
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            new StructType().add("fp", "string"))
-        val fresh = hashed.join(corpus, Seq("fp"), "left_anti")
-          .localCheckpoint() // two sinks below; don't recompute the anti-join
-        fresh.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        fresh.select(col("fp"), lit(batchId).as("batch_id"))
-          .write.bucketBy(buckets, "fp")
-          .mode("append").saveAsTable(fpTable)
-        ()
-      }
-    val withCkpt =
-      checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow) withCkpt.trigger(Trigger.AvailableNow()) else withCkpt)
-      .start()
-  }
+      availableNow: Boolean = false): StreamingQuery =
+    dedupBatches(docs, idCol, textCol, outDir, checkpointDir, availableNow) {
+      spark =>
+        Option.when(spark.catalog.tableExists(fpTable))(spark.table(fpTable))
+    } { (fresh, batchId) =>
+      fresh.select(col("fp"), lit(batchId).as("batch_id"))
+        .write.bucketBy(buckets, "fp")
+        .mode("append").saveAsTable(fpTable)
+    }
 
   /** Streaming incremental heavy hitters — continuous maintenance of a
     * global frequency aggregate (the streaming twin of
@@ -305,19 +307,12 @@ object StreamingIngest {
     */
   def heavyHitterSink(items: DataFrame, itemCol: String,
       countsDir: String, checkpointDir: Option[String] = None,
-      availableNow: Boolean = false): StreamingQuery = {
-    val writer = items.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col(itemCol).cast("string").as("item"))
-          .groupBy(col("item")).agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$countsDir/batch_id=$batchId")
-        ()
-      }
-    val withCkpt =
-      checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow) withCkpt.trigger(Trigger.AvailableNow()) else withCkpt)
-      .start()
-  }
+      availableNow: Boolean = false): StreamingQuery =
+    startBatches(items, checkpointDir, availableNow) { (batch, batchId) =>
+      batch.select(col(itemCol).cast("string").as("item"))
+        .groupBy(col("item")).agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(s"$countsDir/batch_id=$batchId")
+    }
 
   /** Continuous Count-Min maintenance — the E38b heavy-hitter-sink
     * discipline applied to the [[graft.operators.CountMin]] grid: each
@@ -329,18 +324,11 @@ object StreamingIngest {
     */
   def cmsSink(items: DataFrame, itemCol: String, cellsDir: String,
       d: Int = 4, w: Int = 256, checkpointDir: Option[String] = None,
-      availableNow: Boolean = false): StreamingQuery = {
-    val writer = items.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.CountMin.sketch(batch, col(itemCol), d, w)
-          .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-        ()
-      }
-    val withCkpt =
-      checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow) withCkpt.trigger(Trigger.AvailableNow()) else withCkpt)
-      .start()
-  }
+      availableNow: Boolean = false): StreamingQuery =
+    startBatches(items, checkpointDir, availableNow) { (batch, batchId) =>
+      graft.operators.CountMin.sketch(batch, col(itemCol), d, w)
+        .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
+    }
 
   /** Continuous CDC apply (streaming twin of
     * [[graft.operators.Compaction.mergeChangelog]]): each microbatch of
@@ -361,46 +349,39 @@ object StreamingIngest {
   def cdcMergeSink(changes: DataFrame, key: String, seq: String,
       op: String, payload: Seq[String], snapDir: String,
       checkpointDir: Option[String] = None,
-      availableNow: Boolean = false): StreamingQuery = {
-    val writer = changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val snapPath = new org.apache.hadoop.fs.Path(snapDir)
-        val fs = snapPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val baseSchema = new StructType(
-          batch.select(col(key) +: payload.map(col): _*).schema.fields)
-        val base =
-          if (fs.exists(snapPath)) {
-            val prior = spark.read.parquet(snapDir)
-              .where(col("version") < batchId)
-            // O(1) driver scalar: the latest committed version id
-            val vrow = prior.agg(max(col("version"))).collect()(0)
-            if (vrow.isNullAt(0))
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                baseSchema)
-            else {
-              // hive partition discovery types `version` as int — read
-              // the scalar numerically, not as a long
-              val vmax = vrow.get(0).asInstanceOf[Number].longValue
-              prior.where(col("version") === vmax)
-                .select(col(key) +: payload.map(col): _*)
-            }
-          } else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            baseSchema)
-        graft.operators.Compaction
-          .mergeChangelog(base, batch, key, seq, op, payload)
-          .write.mode("overwrite")
-          .parquet(s"$snapDir/version=$batchId")
-        ()
-      }
-    val withCkpt =
-      checkpointDir.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow) withCkpt.trigger(Trigger.AvailableNow()) else withCkpt)
-      .start()
-  }
+      availableNow: Boolean = false): StreamingQuery =
+    startBatches(changes, checkpointDir, availableNow) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val snapPath = new org.apache.hadoop.fs.Path(snapDir)
+      val fs = snapPath.getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val baseSchema = new StructType(
+        batch.select(col(key) +: payload.map(col): _*).schema.fields)
+      val base =
+        if (fs.exists(snapPath)) {
+          val prior = spark.read.parquet(snapDir)
+            .where(col("version") < batchId)
+          // O(1) driver scalar: the latest committed version id
+          val vrow = prior.agg(max(col("version"))).collect()(0)
+          if (vrow.isNullAt(0))
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              baseSchema)
+          else {
+            // hive partition discovery types `version` as int — read
+            // the scalar numerically, not as a long
+            val vmax = vrow.get(0).asInstanceOf[Number].longValue
+            prior.where(col("version") === vmax)
+              .select(col(key) +: payload.map(col): _*)
+          }
+        } else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          baseSchema)
+      graft.operators.Compaction
+        .mergeChangelog(base, batch, key, seq, op, payload)
+        .write.mode("overwrite")
+        .parquet(s"$snapDir/version=$batchId")
+    }
 
   /** Input-conditional state-store partition count (the streaming twin of
     * `GraftSession.initPartitionsFor`): every stateful operator keeps one

@@ -139,7 +139,7 @@ class AnalyticsOpsSpec extends AnyFunSuite with SparkFixture {
       // the stored generation only holds pre-delta days
       val stored = spark.read.parquet(dir)
       assert(stored.agg(max("day_bucket")).head.getLong(0) === 0L)
-    } finally Queries.rmTree(new java.io.File(dir))
+    } finally graft.sources.Sinks.rmTree(new java.io.File(dir))
   }
 
   test("pseudonym: deterministic, salt-sensitive, join-consistent") {
@@ -186,7 +186,7 @@ class AnalyticsOpsSpec extends AnyFunSuite with SparkFixture {
       assert(back.count() === 2000L)
       assert(back.select(sum(col("id"))).head.getLong(0) ===
         df.select(sum(col("id"))).head.getLong(0))
-    } finally Queries.rmTree(new java.io.File(dir))
+    } finally graft.sources.Sinks.rmTree(new java.io.File(dir))
   }
 
   test("matview delta pass prunes old days at the scan") {

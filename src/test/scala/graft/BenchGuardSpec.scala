@@ -214,7 +214,7 @@ class BenchGuardSpec extends AnyFunSuite with SparkFixture {
       java.nio.file.Files.writeString(sub.resolve("b"), "123")
       assert(GraftSession.inputBytes(d.toString) == 8L)
       assert(GraftSession.inputBytes(d.resolve("nope").toString) == 0L)
-    } finally Queries.rmTree(d.toFile)
+    } finally graft.sources.Sinks.rmTree(d.toFile)
   }
 
   test("median: true median on odd and even counts") {
@@ -392,5 +392,14 @@ class BenchGuardSpec extends AnyFunSuite with SparkFixture {
     assert(m == Map("a_b" -> 0.544, "c_d9" -> 4.158))
     assert(Bench.parseColdMap("{}").isEmpty)
     assert(Bench.parseColdMap("""{"queries_cold":{}}""").isEmpty)
+  }
+
+  test("every registered query has oracle SQL, and every bench class " +
+      "name is a registered query") {
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    // a misspelt name would silently bench its harness as `pure`
+    assert((SparkEntry.writeDemo ++ SparkEntry.streamHarness) --
+      SparkEntry.queries.keySet === Set.empty[String])
+    assert((SparkEntry.writeDemo & SparkEntry.streamHarness) === Set.empty[String])
   }
 }

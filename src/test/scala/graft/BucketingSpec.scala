@@ -175,7 +175,7 @@ class BucketingSpec extends AnyFunSuite with SparkFixture {
     } finally {
       spark.sql("DROP TABLE IF EXISTS aes_dim_auto_spec")
       Seq(landing, outDir, ckpt)
-        .foreach(p => Queries.rmTree(p.toFile))
+        .foreach(p => graft.sources.Sinks.rmTree(p.toFile))
     }
   }
 }

@@ -142,7 +142,7 @@ class LocalFilesSpec extends AnyFunSuite with SparkFixture {
     val ckpt = tmp("graft_nochmod_ck_")
     val stream = StreamingIngest.readParquetStream(spark, landing,
       spark.read.parquet(landing).schema)
-    val n = chmods {
+    val starts = processStarts {
       val q = stream.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -150,9 +150,39 @@ class LocalFilesSpec extends AnyFunSuite with SparkFixture {
         .start()
       assert(q.awaitTermination(120000), "stream did not finish")
     }
-    assert(n === 0)
+    assert(starts.count(_ == "chmod") === 0)
+    // FileContext's link lookups on the checkpoint files fork no readlink
+    assert(starts.count(_ == "readlink") === 0)
     assert(new File(s"$ckpt/offsets/0").isFile)
     assert(spark.read.parquet(out).agg(sum($"id")).as[Long].head() ===
       (0L until 500L).sum)
+  }
+
+  test("link status matches the stock raw FS for links, files and dirs, " +
+      "and forks no readlink for a non-link") {
+    val dir = Files.createTempDirectory("graft_link_")
+    val file = Files.write(dir.resolve("f.bin"), Array[Byte](1, 2, 3))
+    val link = Files.createSymbolicLink(dir.resolve("l.bin"), file)
+    def open(fs: RawLocalFileSystem): RawLocalFileSystem = {
+      fs.initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
+      fs
+    }
+    val stock = open(new RawLocalFileSystem)
+    val nio = open(new NioRawLocalFileSystem)
+    try {
+      // qualified (file:) paths, as FileContext passes them, and bare ones
+      for (f <- Seq(link, file, dir);
+           p <- Seq(new Path(f.toUri), new Path(f.toString)))
+        assert(nio.getFileLinkStatus(p).toString ===
+          stock.getFileLinkStatus(p).toString, s"$p")
+      assert(nio.getFileLinkStatus(new Path(link.toString)).isSymlink)
+      assert(processStarts(nio.getFileLinkStatus(new Path(file.toUri)))
+        .count(_ == "readlink") === 0)
+      intercept[java.io.FileNotFoundException](
+        nio.getFileLinkStatus(new Path(dir.resolve("missing").toUri)))
+    } finally {
+      stock.close(); nio.close()
+      Seq(link, file, dir).foreach(Files.delete)
+    }
   }
 }

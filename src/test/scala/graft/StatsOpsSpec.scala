@@ -160,7 +160,7 @@ class StatsOpsSpec extends AnyFunSuite with SparkFixture {
           spark.read.parquet(s"$dir/centroids"))
         .orderBy("query_id", "rank").collect()
       assert(mem.map(_.toSeq).toSeq === disk.map(_.toSeq).toSeq)
-    } finally Queries.rmTree(new java.io.File(dir))
+    } finally graft.sources.Sinks.rmTree(new java.io.File(dir))
   }
 
   test("txPublish: readers never see a torn version (fault injection)") {
@@ -184,7 +184,7 @@ class StatsOpsSpec extends AnyFunSuite with SparkFixture {
         "t2" -> Seq((2L, 20L)).toDF("k", "n")), base, 2L)
       assert(TxPublish.read(spark, base, "t1").head.getString(1) === "b")
       assert(TxPublish.read(spark, base, "t2").head.getLong(1) === 20L)
-    } finally Queries.rmTree(new java.io.File(base))
+    } finally graft.sources.Sinks.rmTree(new java.io.File(base))
   }
 
   test("weightedSystematic: hand grid, hit conservation, PPS multiplicity") {
@@ -339,6 +339,6 @@ class StatsOpsSpec extends AnyFunSuite with SparkFixture {
       .createTempDirectory("graft_txpub_spec2_").toString
     try intercept[IllegalStateException] {
       TxPublish.read(spark, base, "t1")
-    } finally Queries.rmTree(new java.io.File(base))
+    } finally graft.sources.Sinks.rmTree(new java.io.File(base))
   }
 }

@@ -222,7 +222,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkFixture {
         for (rep <- Seq(d + 1000000L, d + 2000000L) if byId.contains(d))
           assert(byId(rep) === byId(d), s"replica $rep of doc $d")
       }
-    } finally Queries.rmTree(dir.toFile)
+    } finally graft.sources.Sinks.rmTree(dir.toFile)
   }
 
   test("redactPii masks emails, IPv4s, and phone numbers; counts match") {

@@ -13,9 +13,16 @@ dir (or only the named ones) this checks, through DuckDB:
     row dropped or added does).
 It prints one line per differing or missing query, then a summary line, and
 exits 1 if any query differs or is missing.
+
+When both dirs hold `oracle_sql.json` (the query → DuckDB SQL map Verify
+writes), it also compares the two maps entry by entry after collapsing every
+run of whitespace to one space, printing `SQLDIFF <name>` for each entry that
+differs or is on one side only; any such entry also makes the exit status 1.
 """
 import argparse
+import json
 import os
+import re
 import sys
 
 import duckdb
@@ -52,6 +59,25 @@ def diff(con, a, b, name):
     return None
 
 
+def oracle_sql(d):
+    """The dump's query → SQL map with whitespace runs collapsed, or None."""
+    path = os.path.join(d, "oracle_sql.json")
+    if not os.path.isfile(path):
+        return None
+    with open(path) as f:
+        return {k: re.sub(r"\s+", " ", v).strip() for k, v in json.load(f).items()}
+
+
+def sql_diffs(a, b, only=None):
+    """(names compared, names whose collapsed SQL differs or is on one side
+    only), or None unless both dumps hold oracle_sql.json."""
+    sa, sb = oracle_sql(a), oracle_sql(b)
+    if sa is None or sb is None:
+        return None
+    names = sorted((sa.keys() | sb.keys()) & (only or (sa.keys() | sb.keys())))
+    return names, [n for n in names if sa.get(n) != sb.get(n)]
+
+
 def main(argv=None):
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("parent")
@@ -74,7 +100,16 @@ def main(argv=None):
             bad += 1
             print(f"DIFF {name}: {why}")
     print(f"{len(names) - bad}/{len(names)} dumps identical")
-    return 1 if bad else 0
+    sql = sql_diffs(args.parent, args.change,
+                    set(names) if args.only else None)
+    sql_bad = []
+    if sql is not None:
+        compared, sql_bad = sql
+        for name in sql_bad:
+            print(f"SQLDIFF {name}")
+        print(f"{len(compared) - len(sql_bad)}/{len(compared)} "
+              "oracle SQL entries equal")
+    return 1 if bad or sql_bad else 0
 
 
 if __name__ == "__main__":

@@ -4,6 +4,7 @@ Run from the repo root: python3 -m unittest tools/test_diff_dumps.py
 """
 import contextlib
 import io
+import json
 import os
 import sys
 import tempfile
@@ -75,6 +76,35 @@ class DiffDumpsTest(unittest.TestCase):
         self.assertEqual(lines[0], "DIFF gone: missing from the change dump")
         self.assertTrue(lines[1].startswith("DIFF typed: schema:"), lines)
         self.assertEqual(lines[2], "0/2 dumps identical")
+
+    def sql(self, root, entries):
+        os.makedirs(root, exist_ok=True)
+        with open(os.path.join(root, "oracle_sql.json"), "w") as f:
+            json.dump(entries, f)
+
+    def test_oracle_sql_compared_after_whitespace_collapse(self):
+        for root in (self.parent, self.change):
+            self.dump(root, "q", 0, "SELECT 1 AS k")
+        self.sql(self.parent, {"q": "SELECT 1\n  FROM t", "r": "SELECT 2",
+                               "gone": "SELECT 3"})
+        self.sql(self.change, {"q": "SELECT 1 FROM\tt ", "r": "SELECT  3",
+                               "new": "SELECT 4"})
+        code, lines = self.run_diff()
+        self.assertEqual(code, 1)
+        self.assertEqual(lines, ["1/1 dumps identical", "SQLDIFF gone",
+                                 "SQLDIFF new", "SQLDIFF r",
+                                 "1/4 oracle SQL entries equal"])
+        # --only limits the SQL compare to the named queries too
+        code, lines = self.run_diff("--only", "q")
+        self.assertEqual((code, lines), (0, [
+            "1/1 dumps identical", "1/1 oracle SQL entries equal"]))
+
+    def test_oracle_sql_skipped_unless_both_dumps_hold_it(self):
+        for root in (self.parent, self.change):
+            self.dump(root, "q", 0, "SELECT 1 AS k")
+        self.sql(self.parent, {"q": "SELECT 1"})
+        code, lines = self.run_diff()
+        self.assertEqual((code, lines), (0, ["1/1 dumps identical"]))
 
 
 if __name__ == "__main__":
