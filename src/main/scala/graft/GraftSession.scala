@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * at runtime from shuffle statistics — the Spark-native answer to the
   * reference's static `reducers` knob (`MapReduceExecutorTask.java:44`).
   *
-  * [[builder]] also points `file:` at graft's local filesystem, which sets
+  * [[builder]] installs [[graft.plans.GraftExtensions]] (so a
+  * `get_json_object(c, '$.name')` runs on graft's `JsonField` kernel) and
+  * points `file:` at graft's local filesystem, which sets
   * permissions in-process ([[localFsConfs]]), so a write forks no `chmod`
   * per directory, data file and `.crc`. Two cautions:
   *  - Without it, `file:` resolves to Hive's
@@ -134,6 +136,7 @@ object GraftSession {
 
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions)
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

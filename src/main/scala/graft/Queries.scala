@@ -257,17 +257,16 @@ object Queries {
 
   // ------------------------------------------- R11 invalid-record policy --
 
-  private def parsedEvents(s: SparkSession, dir: String): DataFrame =
-    ErrorPolicy(events(s, dir),
-      Seq("k" -> get_json_object(col("props"), "$.k").cast("long")),
-      valid = get_json_object(col("props"), "$.k").cast("long").isNotNull,
-      policy = ErrorPolicy.Permissive)
+  /** `props.k` as a long: graft's `JsonField` kernel after the rewrite. */
+  private def propsK: Column = get_json_object(col("props"), "$.k").cast("long")
+
+  private def parsedEvents(s: SparkSession, dir: String,
+      policy: ErrorPolicy.Policy): DataFrame =
+    ErrorPolicy(events(s, dir), Seq("k" -> propsK), valid = propsK.isNotNull,
+      policy = policy)
 
   def invalidRecordDrop(s: SparkSession, dir: String): DataFrame =
-    ErrorPolicy(events(s, dir),
-      Seq("k" -> get_json_object(col("props"), "$.k").cast("long")),
-      valid = get_json_object(col("props"), "$.k").cast("long").isNotNull,
-      policy = ErrorPolicy.Drop)
+    parsedEvents(s, dir, ErrorPolicy.Drop)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
       .orderBy(col("event_type"))
@@ -280,7 +279,7 @@ object Queries {
        GROUP BY event_type ORDER BY event_type"""
 
   def invalidRecordPermissive(s: SparkSession, dir: String): DataFrame =
-    parsedEvents(s, dir)
+    parsedEvents(s, dir, ErrorPolicy.Permissive)
       .agg(count(lit(1)).as("n_total"), count(col("k")).as("n_valid"),
         sum(when(col("_corrupt"), 1L).otherwise(0L)).as("n_corrupt"))
 

@@ -199,17 +199,6 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   }
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` — or config
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    // the graft_* SQL kernel surface (see functions/SqlFunctions.scala)
-    graft.functions.SqlFunctions.injectables.foreach(e.injectFunction)
-  }
-}
-
 object TopKPerKey {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute

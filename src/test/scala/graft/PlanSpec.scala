@@ -461,6 +461,41 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       sl.toString.toLowerCase.contains("spark_partition_id"), sl.toString)
   }
 
+  test("get_json_object on one literal root field plans the JsonField " +
+      "kernel; other paths and collated inputs keep Spark's expression") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject}
+    import graft.functions.JsonField
+    def count(df: DataFrame)(p: PartialFunction[Expression, Unit]): Int =
+      df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect(p))).length
+    // the shared session comes from GraftSession.builder, which must
+    // install the rewrite: the load_partitioned filter chain
+    val cfg = graft.pipeline.ConfigJson.parse(s"""{
+      "in": {"path": "$sf/events.parquet", "format": "parquet"},
+      "filters": [
+        {"type": "where", "predicate": "event_type <> 'error'"},
+        {"type": "derive", "name": "k",
+         "expression": "get_json_object(props, '$$.k')"},
+        {"type": "cast", "col": "k", "to": "int"}]}""")
+    val load = graft.pipeline.Pipeline.plan(spark, cfg)
+    val plan = load.queryExecution.optimizedPlan.toString
+    assert(count(load) { case JsonField(_, "k") => } === 1, plan)
+    assert(count(load) { case _: GetJsonObject => } === 0, plan)
+    assert(count(spark.read.parquet(s"$sf/events.parquet")
+      .select(get_json_object(col("props"), "$['k']"))) {
+        case JsonField(_, "k") => } === 1)
+
+    val events = spark.read.parquet(s"$sf/events.parquet")
+    Seq("get_json_object(props, '$.a.b')", "get_json_object(props, '$[0]')",
+      "get_json_object(props, '$.*')",
+      "get_json_object(props, concat('$.', event_type))",
+      "get_json_object(collate(props, 'UNICODE'), '$.k')").foreach { e =>
+      val df = events.selectExpr(e)
+      assert(count(df) { case _: GetJsonObject => } === 1, e)
+      assert(count(df) { case _: JsonField => } === 0, e)
+    }
+  }
+
   test("flagship queries keep whole-stage codegen in the hot path") {
     // AQE finalizes the physical plan lazily — execute first. Codegen'd
     // operators print with a `*(stageId)` prefix in the final plan.

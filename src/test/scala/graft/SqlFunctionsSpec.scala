@@ -72,23 +72,27 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkFixture {
       StructField("fa", ArrayType(FloatType, containsNull = false)),
       StructField("da", ArrayType(DoubleType, containsNull = false)),
       StructField("la", longs), StructField("lb", longs),
-      StructField("sh", ArrayType(StringType, containsNull = false))))
+      StructField("sh", ArrayType(StringType, containsNull = false)),
+      StructField("j", StringType)))
     def f(xs: Double*) = xs.map(_.toFloat)
     val rows = Seq(
       Row(1L, "the quick brown fox jumps over the lazy dog", "the quick cat",
         f(1, 2, 3), Seq(3.0, 2.0, 1.0), Seq(1L, 2L, 3L), Seq(2L, 3L, 4L),
-        Seq("the quick", "quick brown")),
-      Row(2L, null, null, null, null, null, null, null),
-      Row(3L, "", "", f(), Seq(), Seq(), Seq(), Seq()),
+        Seq("the quick", "quick brown"), """{"a": [1], "k": "fox", "k": 2}"""),
+      Row(2L, null, null, null, null, null, null, null, null),
+      Row(3L, "", "", f(), Seq(), Seq(), Seq(), Seq(), ""),
       // zero-norm vectors (NaN cosine and affinity), disjoint walks
       Row(4L, "der und die ist le et", "der und", f(0, 0, 0),
-        Seq(0.0, 0.0, 0.0), Seq(1L, 2L, 3L), Seq(4L, 5L, 6L), Seq("der und")),
+        Seq(0.0, 0.0, 0.0), Seq(1L, 2L, 3L), Seq(4L, 5L, 6L), Seq("der und"),
+        """{"k": null, "k": -0}"""),
       // float vs double widening of the same decimals, identical walks
       Row(5L, "née Zürich é 中 a\tb  c!", "nee Zurich", f(0.1, 0.2, 0.3),
-        Seq(0.1, 0.2, 0.3), Seq(5L, 7L, 9L), Seq(5L, 7L, 9L), Seq("é 中")),
+        Seq(0.1, 0.2, 0.3), Seq(5L, 7L, 9L), Seq(5L, 7L, 9L), Seq("é 中"),
+        """{"k": 1.50}"""),
       // equal affinity to cells 7 and 9 (duplicate centroids)
       Row(6L, "el y los es el", "el y", f(1, 0, 0), Seq(2.0, 0.0, 0.0),
-        Seq(1L, 3L), Seq(1L, 2L, 3L, 4L), Seq("el y", "y los")))
+        Seq(1L, 3L), Seq(1L, 2L, 3L, 4L), Seq("el y", "y los"),
+        """{"k": true} trailing"""))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
       schema)
 
@@ -126,7 +130,8 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkFixture {
         TokenSetCount(e("t"), Seq(Seq("the", "der"), Seq("el", "y"))),
         QualityScore(e("t")),
         BpeTokenCount(e("t"), BpeVocab.resourceMerges),
-        BpeEncode(e("t"), BpeVocab.resourceMerges))
+        BpeEncode(e("t"), BpeVocab.resourceMerges),
+        JsonField(e("j"), "k"), JsonField(e("t"), "k"))
     val cols = col("id") +: kernels.zipWithIndex.map { case (k, i) =>
       ColumnBridge.column(k).as(s"k$i") }
 
@@ -178,5 +183,122 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkFixture {
     val cos = SqlFunctions.builders.toMap.apply("graft_cosine")(
       Seq(Literal(1), Literal(2)))
     assert(cos.isInstanceOf[graft.functions.CosineSim])
+  }
+
+  test("JsonField gives get_json_object's bytes on generated JSON, traps included") {
+    import java.nio.charset.StandardCharsets.{UTF_16BE, UTF_16LE, UTF_8}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import graft.functions.{JsonField, JsonFieldKernel}
+
+    def u(s: String): Array[Byte] = s.getBytes(UTF_8)
+    def raw(bs: Int*): Array[Byte] = bs.map(_.toByte).toArray
+    // invalid UTF-8: a lone lead, a lone continuation, overlong NUL and 'A',
+    // a UTF-8-encoded surrogate, a code point above U+10FFFF, a bad lead
+    val invalid = Seq(raw(0xC3), raw(0x80), raw(0xC0, 0x80), raw(0xC1, 0x81),
+      raw(0xED, 0xA0, 0x80), raw(0xF4, 0x90, 0x80, 0x80), raw(0xFF))
+    // Spark 4.1.2's get_json_object(doc, '$.k') for each trap
+    val traps: Seq[(Array[Byte], Option[String])] = Seq(
+      """{"k": 1} x""" -> Some("1"), """{"k": 1}{""" -> Some("1"),
+      """{"k": 1}]""" -> Some("1"), """{"k": 5""" -> None,
+      "{\u0000\"k\":1}" -> None, "\uFEFF{\"k\": 1}" -> None,
+      "{\"k\": \"a\u0000b\"}" -> Some("a\u0000b"), "{'k': 'x'}" -> Some("x"),
+      """{"k": -0}""" -> Some("0"),
+      """{"k": 12345678901234567890123}""" -> Some("12345678901234567890123"),
+      """{"k": 1.50}""" -> Some("1.5"), """{"k": 1e2}""" -> Some("100.0"),
+      """{"k": 007}""" -> None, """{"k": NaN}""" -> None,
+      """{"k": 1, "k": 2}""" -> Some("1"), """{"k": null}""" -> None,
+      """[{"k": 1}]""" -> None, """{"K": 1}""" -> None,
+      """{"k": {"a": [1, 2]}}""" -> Some("""{"a":[1,2]}"""),
+      "{\"k\": \"\\u00e9\\ud83d\\ude00\\n\"}" -> Some("é😀\n"),
+      "{\"\\u006b\": true}" -> Some("true"))
+      .map { case (d, want) => u(d) -> want } :+
+      (raw('{', '"', 'k', '"', ':', '"', 0xC3, '"', '}') -> Some("\uFFFD"))
+
+    // a JSON string's body: plain runs, escapes, \u sequences (lone
+    // surrogates too), raw multibyte and raw control characters
+    val chunk: Gen[String] = Gen.frequency(
+      3 -> Gen.alphaNumStr.map(_.take(5)),
+      4 -> Gen.oneOf("\\n", "\\\"", "\\\\", "\\/", "\\t", "\\u00e9", "\\u006b",
+        "\\ud83d\\ude00", "\\ud800", "\\udc00x", "\\'", "é", "中", "😀",
+        "\u0000", "\u0001", " ", "'", "k"))
+    val body = Gen.choose(0, 4).flatMap(Gen.listOfN(_, chunk)).map(_.mkString)
+    val str = Gen.oneOf(body.map(b => s""""$b""""), body.map(b => s"'$b'"))
+    val number = Gen.oneOf(Gen.choose(-1000L, 1000L).map(_.toString),
+      Gen.oneOf("-0", "0", "007", "1.50", "1e2", "-1E-2", "NaN", "+1", "1.",
+        "12345678901234567890123", "9223372036854775808", "-2147483649"))
+    val key = Gen.oneOf("\"k\"", "'k'", "\"K\"", "\"\\u006b\"", "\"ключ\"",
+      "\"a\"", "\"k \"", "\"\"", "\"😀\"", "\"k\\u0000\"")
+    val ws = Gen.oneOf("", " ", "\n", "\t")
+    def value(depth: Int): Gen[String] = Gen.frequency(Seq(
+      4 -> str, 3 -> number, 2 -> Gen.oneOf("true", "false", "null")) ++
+      Option.when(depth > 0)(Seq(1 -> obj(depth - 1),
+        1 -> Gen.choose(0, 3).flatMap(Gen.listOfN(_, value(depth - 1)))
+          .map(_.mkString("[", ",", "]")))).getOrElse(Nil): _*)
+    def obj(depth: Int): Gen[String] = Gen.choose(0, 4).flatMap(Gen.listOfN(_,
+      for (k <- key; w <- ws; v <- value(depth)) yield s"$k$w:$w$v"))
+      .map(_.mkString("{", ", ", "}"))
+    val doc: Gen[Array[Byte]] = Gen.frequency(
+      8 -> obj(2).map(u),
+      2 -> (for (o <- obj(2); tail <- Gen.oneOf(" x", "{", "]", "}", ",",
+        """ {"k": 9}""")) yield u(o + tail)),
+      2 -> (for (o <- obj(2); cut <- Gen.choose(0, o.length))
+        yield u(o.take(cut))),
+      1 -> obj(1).map(o => u("\uFEFF" + o)),
+      1 -> obj(1).map(o => raw(0) ++ u(o)),
+      1 -> obj(1).map(o => u(o.take(1) + "\u0000" + o.drop(1))),
+      1 -> obj(1).map(_.getBytes(UTF_16BE)),
+      1 -> obj(1).map(_.getBytes(UTF_16LE)),
+      1 -> value(1).map(u),
+      2 -> (for (o <- obj(2); at <- Gen.choose(0, o.length);
+        bad <- Gen.oneOf(invalid)) yield u(o.take(at)) ++ bad ++ u(o.drop(at))),
+      1 -> Gen.listOf(Gen.choose(0, 255)).map(bs => raw(bs.take(24): _*)))
+
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("b", BinaryType)))
+    def frame(docs: Seq[Array[Byte]]): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        docs.zipWithIndex.map { case (d, i) => Row(i.toLong, d) }, 2), schema)
+    // the reference side runs Spark's expression: the rewrite excluded
+    def extract(df: DataFrame, path: String,
+        rewrite: Boolean): Seq[Option[Seq[Byte]]] = {
+      val key = "spark.sql.optimizer.excludedRules"
+      val prev = spark.conf.getOption(key)
+      if (!rewrite) spark.conf.set(key, "graft.plans.JsonFieldRewrite")
+      try {
+        val out = df.select(col("id"),
+          get_json_object(col("b").cast("string"), path).cast("binary"))
+        assert(out.queryExecution.optimizedPlan.expressions.exists(
+          _.find(_.isInstanceOf[JsonField]).isDefined) === rewrite, path)
+        out.collect().sortBy(_.getLong(0)).toSeq
+          .map(r => Option(r.getAs[Array[Byte]](1)).map(_.toSeq))
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val paths = Seq("$.k", "$['k']", "$.ключ", "$['k ']")
+    def differences(docs: Seq[Array[Byte]]): Seq[String] = {
+      val df = frame(docs)
+      for {
+        path <- paths
+        ((kernel, reference), d) <- extract(df, path, rewrite = true)
+          .zip(extract(df, path, rewrite = false)).zip(docs)
+        if kernel != reference
+      } yield s"$path on ${d.map(b => f"${b & 0xFF}%02x").mkString}: " +
+        s"kernel $kernel, Spark $reference"
+    }
+
+    val (trapDocs, wants) = traps.unzip
+    assert(extract(frame(trapDocs), "$.k", rewrite = false)
+      .map(_.map(b => new String(b.toArray, UTF_8))) === wants)
+    assert(differences(trapDocs).isEmpty)
+    paths.foreach(p => assert(JsonFieldKernel.fieldName(p).map(
+      JsonFieldKernel.pathOf).flatMap(JsonFieldKernel.fieldName) ===
+      JsonFieldKernel.fieldName(p), p))
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(8),
+      Prop.forAllNoShrink(Gen.listOfN(300, doc)) { docs =>
+        val diff = differences(docs)
+        Prop(diff.isEmpty) :| diff.take(5).mkString("\n")
+      })
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 }

@@ -2,6 +2,7 @@
 """Where a JFR recording of a graft job spends its time, forks and allocations.
 
 Usage: python3 tools/jfr_summary.py <recording.jfr | print.json> [--top N] [--depth N]
+                                   [--frame REGEX]
 
 Reads the JSON that `jfr print --json` writes (a .jfr file is passed through
 `jfr print` once per event type below; a .json file is read as that output)
@@ -10,6 +11,8 @@ and prints three things:
     "Executor task launch worker" threads): the top self frames (the frame
     on top of the stack) and the top inclusive frames (anywhere in the
     stack, counted once per sample), each as a share of those samples;
+    with --frame REGEX, also how many of those samples have a frame
+    matching REGEX (`re.search`) anywhere on the stack, 0 included;
   - `jdk.ProcessStart`: every process the JVM started, grouped by
     executable, with one example command line;
   - `jdk.ObjectAllocationSample`: the top allocation sites (the allocating
@@ -78,7 +81,7 @@ def most_common(counter, top):
     return sorted(counter.items(), key=lambda kv: (-kv[1], kv[0]))[:top]
 
 
-def summarize(events, top):
+def summarize(events, top, frame=None):
     """The report's lines."""
     by_type = collections.defaultdict(list)
     for e in events:
@@ -89,6 +92,11 @@ def summarize(events, top):
     execs = [frames(e) for e in samples if thread_name(e).startswith(EXECUTOR_THREAD)]
     lines.append(f"executor CPU samples: {len(execs)} of {len(samples)} "
                  "execution samples")
+    if frame is not None:
+        rx = re.compile(frame)
+        n = sum(1 for fs in execs if any(rx.search(f) for f in fs))
+        lines.append(f"executor samples with a frame matching {frame}: "
+                     f"{n} of {len(execs)} ({pct(n, len(execs)):.1f}%)")
     self_c = collections.Counter(fs[0] for fs in execs if fs)
     incl_c = collections.Counter(f for fs in execs for f in set(fs))
     for title, c in (("top self frames", self_c),
@@ -127,8 +135,11 @@ def main(argv=None):
     ap.add_argument("--top", type=int, default=15, help="rows per table")
     ap.add_argument("--depth", type=int, default=48,
                     help="stack depth of execution samples read from a .jfr")
+    ap.add_argument("--frame", metavar="REGEX",
+                    help="count executor samples with a matching frame")
     args = ap.parse_args(argv)
-    print("\n".join(summarize(load(args.recording, args.depth), args.top)))
+    print("\n".join(summarize(load(args.recording, args.depth), args.top,
+                              args.frame)))
     return 0
 
 

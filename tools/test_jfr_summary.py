@@ -49,6 +49,19 @@ class JfrSummaryTest(unittest.TestCase):
             ["66.7%", "2", "org.apache.spark.executor.Executor$TaskRunner$$Lambda.apply"],
             ["33.3%", "1", "graft.A.loop"]])
 
+    def test_frame_regex_counts_executor_samples_once(self):
+        # graft.A.loop is twice in one worker sample; graft.Driver.plan is
+        # on the scheduler thread, which is not an executor
+        lines = self.report("--frame", r"graft\.A\.loop|Driver")
+        self.assertIn("executor samples with a frame matching "
+                      r"graft\.A\.loop|Driver: 1 of 3 (33.3%)".split(), lines)
+        lines = self.report("--frame", "GetJsonObjectEvaluator")
+        self.assertIn("executor samples with a frame matching "
+                      "GetJsonObjectEvaluator: 0 of 3 (0.0%)".split(), lines)
+        # without --frame there is no such line
+        self.assertFalse(any(ln[:2] == ["executor", "samples"]
+                             for ln in self.report()))
+
     def test_process_starts_group_by_executable(self):
         lines = self.report()
         self.assertIn("process starts: 3".split(), lines)
