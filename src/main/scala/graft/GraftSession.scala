@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   * at runtime from shuffle statistics — the Spark-native answer to the
   * reference's static `reducers` knob (`MapReduceExecutorTask.java:44`).
   *
-  * [[builder]] installs [[graft.plans.GraftExtensions]] (so a
-  * `get_json_object(c, '$.name')` runs on graft's `JsonField` kernel) and
+  * [[builder]] installs the `get_json_object` field rewrite of
+  * [[graft.plans.GraftExtensions]] (so a `get_json_object(c, '$.name')`
+  * runs on graft's `JsonField` kernel) and
   * points `file:` at graft's local filesystem, which sets
   * permissions in-process ([[localFsConfs]]), so a write forks no `chmod`
   * per directory, data file and `.crc`. Two cautions:
@@ -136,7 +137,7 @@ object GraftSession {
 
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
+      .withExtensions(graft.plans.GraftExtensions.jsonField)
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

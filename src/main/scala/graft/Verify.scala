@@ -14,7 +14,7 @@ object Verify {
     // the warehouse: keep it on the harness tmpfs, not the repo CWD
     val wh = Files.createTempDirectory(Queries.tempBase, "graft_wh_")
     val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
+      .withExtensions(graft.plans.GraftExtensions.jsonField)
       .master(s"local[$cpus]")
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
       .config("spark.sql.shuffle.partitions", cpus)

@@ -21,16 +21,14 @@ import scala.util.control.NonFatal
   * and stops at the root's `END_OBJECT` without reading what follows it
   * (Spark ignores trailing content too). The first field named `name`
   * whose value is not JSON `null` decides the result, as in Spark:
-  *  - a string gives its unescaped text;
-  *  - an integer gives the number's own rendering (`-0` gives `0`);
-  *  - `true` and `false` give themselves;
+  *  - an integer in the `long` range gives its rendering (`-0` gives `0`);
   *  - no such field, or a non-object root, gives NULL.
   *
   * Fallback: the row goes to Spark's own `GetJsonObjectEvaluator`, so its
-  * rendering rules stay in one place, when the match is a nested object
-  * or array, a float or any other token; when the string holds an
-  * unpaired surrogate; when the parser throws (a truncated document gives
-  * NULL there, not here); and for any input the fast path does not take.
+  * rendering rules stay in one place, when the match is anything else (a
+  * string, a boolean, a wider integer, a float, a nested object or array);
+  * when the parser throws (a truncated document gives NULL there, not
+  * here); and for any input the fast path does not take.
   *
   * The encoding trap: Jackson's byte source guesses the encoding, but
   * Spark's `Reader` decodes UTF-8 with replacement. So the fast path only
@@ -48,26 +46,20 @@ object JsonFieldKernel {
     .build()
 
   /** The field of a path that reads one root field (`$.name`, `$['name']`),
-    * as Spark's own path parser reads it. A name holding a single quote is
-    * left to Spark, so [[pathOf]] can give the evaluator `$['name']`.
+    * as Spark's own path parser reads it.
     */
   def fieldName(path: String): Option[String] = JsonPathParser.parse(path) match {
     // `named` is the only production ending in `Named`; it yields `Key, Named`
-    case Some(List(_, PathInstruction.Named(n))) if !n.contains('\'') => Some(n)
+    case Some(List(_, PathInstruction.Named(n))) => Some(n)
     case _ => None
   }
-
-  /** The path Spark's evaluator reads as the one field `name`. */
-  def pathOf(name: String): String = s"$$['$name']"
 
   /** A new evaluator of Spark's own for the fallback; not thread-safe, so
     * one per expression instance (interpreted) or generated class.
     */
-  def evaluator(name: String): GetJsonObjectEvaluator =
-    new GetJsonObjectEvaluator(UTF8String.fromString(pathOf(name)))
+  def evaluator(path: String): GetJsonObjectEvaluator =
+    new GetJsonObjectEvaluator(UTF8String.fromString(path))
 
-  private val True = UTF8String.fromString("true")
-  private val False = UTF8String.fromString("false")
   /** Returned by [[fast]] when the row must go to Spark; compared by identity. */
   private val Fallback = UTF8String.fromString("fallback")
 
@@ -100,8 +92,10 @@ object JsonFieldKernel {
         val hit = out == null && p.currentName == name
         t = p.nextToken()
         if (hit && t != JsonToken.VALUE_NULL) {
-          out = value(p, t)
-          if (out eq Fallback) return Fallback
+          if (t != JsonToken.VALUE_NUMBER_INT ||
+              p.getNumberType == JsonParser.NumberType.BIG_INTEGER)
+            return Fallback
+          out = UTF8String.fromString(java.lang.Long.toString(p.getLongValue))
         } else p.skipChildren()
         t = p.nextToken()
       }
@@ -109,66 +103,20 @@ object JsonFieldKernel {
     } catch { case NonFatal(_) => Fallback }
     finally if (p != null) p.close()
   }
-
-  /** The text Spark's generator would write for the matched scalar. */
-  private def value(p: JsonParser, t: JsonToken): UTF8String = t match {
-    case JsonToken.VALUE_STRING =>
-      utf8(p.getTextCharacters, p.getTextOffset, p.getTextLength)
-    case JsonToken.VALUE_NUMBER_INT => UTF8String.fromString(
-      if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER)
-        p.getBigIntegerValue.toString
-      else java.lang.Long.toString(p.getLongValue))
-    case JsonToken.VALUE_TRUE => True
-    case JsonToken.VALUE_FALSE => False
-    case _ => Fallback
-  }
-
-  /** UTF-8 of `cs[off, off + n)`, or [[Fallback]] on an unpaired surrogate
-    * (Jackson's raw writer has its own rules for those).
-    */
-  private def utf8(cs: Array[Char], off: Int, n: Int): UTF8String = {
-    val out = new Array[Byte](n * 3)
-    var o = 0
-    var i = off
-    val end = off + n
-    while (i < end) {
-      val c = cs(i).toInt
-      if (c < 0x80) { out(o) = c.toByte; o += 1 }
-      else if (c < 0x800) {
-        out(o) = (0xC0 | (c >> 6)).toByte
-        out(o + 1) = (0x80 | (c & 0x3F)).toByte
-        o += 2
-      } else if (!Character.isSurrogate(c.toChar)) {
-        out(o) = (0xE0 | (c >> 12)).toByte
-        out(o + 1) = (0x80 | ((c >> 6) & 0x3F)).toByte
-        out(o + 2) = (0x80 | (c & 0x3F)).toByte
-        o += 3
-      } else if (Character.isHighSurrogate(c.toChar) && i + 1 < end &&
-          Character.isLowSurrogate(cs(i + 1))) {
-        val cp = Character.toCodePoint(c.toChar, cs(i + 1))
-        out(o) = (0xF0 | (cp >> 18)).toByte
-        out(o + 1) = (0x80 | ((cp >> 12) & 0x3F)).toByte
-        out(o + 2) = (0x80 | ((cp >> 6) & 0x3F)).toByte
-        out(o + 3) = (0x80 | (cp & 0x3F)).toByte
-        o += 4
-        i += 1
-      } else return Fallback
-      i += 1
-    }
-    UTF8String.fromBytes(out, 0, o)
-  }
 }
 
 /** [[JsonFieldKernel]] over a plain string child. Built by
-  * `graft.plans.JsonFieldRewrite` from `get_json_object(child, '$.name')`;
-  * users keep writing `get_json_object`.
+  * `graft.plans.JsonFieldRewrite` from `get_json_object(child, path)` when
+  * `path` reads the one root field `name`; the fallback evaluates `path`
+  * itself. Users keep writing `get_json_object`.
   */
-case class JsonField(child: Expression, name: String) extends UnaryKernel {
+case class JsonField(child: Expression, name: String, path: String)
+    extends UnaryKernel {
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 
-  @transient private lazy val evaluator = JsonFieldKernel.evaluator(name)
+  @transient private lazy val evaluator = JsonFieldKernel.evaluator(path)
 
   override def nullSafeEval(input: Any): Any =
     JsonFieldKernel.compute(input.asInstanceOf[UTF8String], name, evaluator)
@@ -177,10 +125,11 @@ case class JsonField(child: Expression, name: String) extends UnaryKernel {
 
   override protected def kernelArgs(ctx: CodegenContext): Seq[String] = {
     val cls = classOf[GetJsonObjectEvaluator].getName
-    val nameRef = ctx.addReferenceObj("jsonFieldName", name)
-    Seq(nameRef, ctx.addMutableState(cls, "jsonFieldEval",
-      v => s"$v = graft.functions.JsonFieldKernel.evaluator($nameRef);",
-      forceInline = true))
+    val pathRef = ctx.addReferenceObj("jsonFieldPath", path)
+    Seq(ctx.addReferenceObj("jsonFieldName", name),
+      ctx.addMutableState(cls, "jsonFieldEval",
+        v => s"$v = graft.functions.JsonFieldKernel.evaluator($pathRef);",
+        forceInline = true))
   }
 
   /** The kernel returns null for a NULL result, so `isNull` follows it. */

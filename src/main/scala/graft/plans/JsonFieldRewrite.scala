@@ -19,6 +19,7 @@ object JsonFieldRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case g @ GetJsonObject(c, Literal(path: UTF8String, _: StringType))
         if c.dataType == StringType =>
-      JsonFieldKernel.fieldName(path.toString).map(JsonField(c, _)).getOrElse(g)
+      val p = path.toString
+      JsonFieldKernel.fieldName(p).map(JsonField(c, _, p)).getOrElse(g)
   }
 }

@@ -479,11 +479,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         {"type": "cast", "col": "k", "to": "int"}]}""")
     val load = graft.pipeline.Pipeline.plan(spark, cfg)
     val plan = load.queryExecution.optimizedPlan.toString
-    assert(count(load) { case JsonField(_, "k") => } === 1, plan)
+    assert(count(load) { case JsonField(_, "k", "$.k") => } === 1, plan)
     assert(count(load) { case _: GetJsonObject => } === 0, plan)
     assert(count(spark.read.parquet(s"$sf/events.parquet")
       .select(get_json_object(col("props"), "$['k']"))) {
-        case JsonField(_, "k") => } === 1)
+        case JsonField(_, "k", "$['k']") => } === 1)
 
     val events = spark.read.parquet(s"$sf/events.parquet")
     Seq("get_json_object(props, '$.a.b')", "get_json_object(props, '$[0]')",
