@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Text-analysis operators for LLM training-data pipelines (SURVEY §2
   * L8-L11). Most are pure `functions._` compositions; `langId`,
@@ -126,11 +127,16 @@ object TextAnalysis {
   /** Replace every PII match with its `[TAG]`, applied in declaration order
     * (emails first, so an address is one `[EMAIL]`, not an `[EMAIL]` with a
     * phone-shaped tail).
+    *
+    * One [[graft.functions.RedactPii]] kernel, byte-identical to the
+    * `regexp_replace` chain over these patterns that the DuckDB oracle
+    * replays: a byte pre-scan skips a pattern whose every match needs a
+    * byte the row lacks (`@` for EMAIL, a digit for IPV4 and PHONE), the
+    * row is decoded once and encoded once, and invalid UTF-8 is re-encoded
+    * as the chain does it. TextAnalysisSpec pins it to the chain.
     */
   def redactPii(text: Column): Column =
-    piiPatterns.foldLeft(text) { case (c, (tag, pat)) =>
-      regexp_replace(c, pat, s"[$tag]")
-    }
+    ColumnBridge.column(graft.functions.RedactPii(ColumnBridge.expression(text)))
 
   /** Per-pattern match counts summed over the ORIGINAL text (audit metric:
     * how much PII a document carried, independent of redaction order).

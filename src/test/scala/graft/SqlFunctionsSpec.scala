@@ -131,7 +131,10 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkFixture {
         QualityScore(e("t")),
         BpeTokenCount(e("t"), BpeVocab.resourceMerges),
         BpeEncode(e("t"), BpeVocab.resourceMerges),
-        JsonField(e("j"), "k", "$.k"), JsonField(e("t"), "k", "$.k"))
+        JsonField(e("j"), "k", "$.k"), JsonField(e("t"), "k", "$.k"),
+        RedactPii(e("t")), RedactPii(e("j")),
+        RedactPii(ColumnBridge.expression(concat(col("t"),
+          lit(" é a.b@ex.org 10.0.3.7 +1 555-012-3456")))))
     val cols = col("id") +: kernels.zipWithIndex.map { case (k, i) =>
       ColumnBridge.column(k).as(s"k$i") }
 

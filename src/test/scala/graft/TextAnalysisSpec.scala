@@ -236,4 +236,103 @@ class TextAnalysisSpec extends AnyFunSuite with SparkFixture {
     assert(one(TextAnalysis.redactPii($"text"), clean).getString(0) === clean)
     assert(one(TextAnalysis.piiCount($"text"), clean).getInt(0) === 0)
   }
+
+  // the regex chain the oracle replays, built here from the same patterns
+  private def regexRedact(t: org.apache.spark.sql.Column) =
+    TextAnalysis.piiPatterns.foldLeft(t) { case (c, (tag, pat)) =>
+      regexp_replace(c, pat, s"[$tag]")
+    }
+
+  /** Rows of `inputs` (id, text) where the kernel and the chain differ. */
+  private def redactDiffers(inputs: org.apache.spark.sql.DataFrame) =
+    inputs.select(col("id"), col("text"),
+        TextAnalysis.redactPii(col("text")).as("kernel"),
+        regexRedact(col("text")).as("regex"))
+      .where(!(col("kernel") <=> col("regex")))
+
+  test("redactPii equals the regex chain on the corpus, edge rows and " +
+      "invalid UTF-8") {
+    // the tags go into appendReplacement as written: no group reference
+    assert(TextAnalysis.piiPatterns.map(_._1) === Seq("EMAIL", "IPV4", "PHONE"))
+    val edge = Seq[String](null, "", " ", "no digit, but a@sign",
+      "no at sign: version 1.2 at 5pm", "digits matching nothing: 555-01 1.2.3",
+      "only zeros 0.0.0.0", "only nines 9.9.9.9", "0 000 000 0000",
+      "é a@b.co", "中文 192.168.0.1 😀 x@y.deé",
+      "a@b.coc@d.org", "1.2.3.4 5.6.7.8", "a@b.io 1.2.3.4+1 555-012-3456",
+      "mail 1-555-012-3456@ex.com now", "a@555-012-3456.com",
+      "+1 192.168.100.1234", "+12 345.678.9012", "10.20.30.40.5678",
+      "1 (555) 012-3456 and +44 (555) 012 3456", "a@b.c 999.999.999.999",
+      "100% of a.b+c@ex-1.org (call 1.555.012.3456)")
+      .zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text")
+    // invalid UTF-8 from binary: re-encoded by the chain even with no match
+    val invalid = spark.sql(
+      "SELECT 1000 AS id, CAST(X'FF41' AS STRING) AS text UNION ALL " +
+        "SELECT 1001, CAST(X'C3A9206140622E636F' AS STRING) UNION ALL " +
+        "SELECT 1002, CAST(X'3132372EFF2E302E31' AS STRING) UNION ALL " +
+        "SELECT 1003, CAST(X'EDA0803140322E696F' AS STRING) UNION ALL " +
+        "SELECT 1004, CAST(X'C080F490808040' AS STRING)")
+    val docs = spark.read.parquet(
+      s"${new java.io.File(sf).getParent}/sf0.01/documents.parquet")
+      .select(col("doc_id").cast("int").as("id"), col("text"))
+    // the pii_redact query's splice, over every document
+    val salted = docs.select((col("id") + 1000000).as("id"),
+      concat(col("text"), lit(" contact user"), col("id"),
+        lit("@example.com from 10.0."), pmod(col("id"), lit(256)),
+        lit(".7 call +1 555-012-3456.")).as("text"))
+    val inputs = edge.unionByName(invalid).unionByName(docs)
+      .unionByName(salted)
+    val differ = redactDiffers(inputs)
+    assert(differ.count() === 0, differ.limit(5).collect().mkString("; "))
+    assert(salted.where(TextAnalysis.redactPii(col("text")) === col("text"))
+      .count() === 0)
+
+    // the traps, spelled out
+    def redactHex(h: String): String =
+      Seq(h).toDF("h").select(hex(TextAnalysis.redactPii(
+        unhex(col("h")).cast("string")).cast("binary"))).head().getString(0)
+    assert(redactHex("FF41") === "EFBFBD41")
+    assert(redactHex("C3A9206140622E636F") ===
+      "C3A920" + "[EMAIL]".getBytes("UTF-8").map(b => f"$b%02X").mkString)
+    assert(redactHex("3132372EFF2E302E31") === "3132372EEFBFBD2E302E31")
+  }
+
+  test("redactPii equals the regex chain on generated text") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // pieces that build and break the patterns: their characters, a few
+    // multibyte ones, whole matches, and invalid UTF-8
+    val piece: Gen[Array[Byte]] = Gen.frequency(
+      6 -> Gen.oneOf("a", "Z", "x", "0", "1", "5", "9", "@", ".", "-", "+",
+        "(", ")", "%", " ", " ", "é", "中", "😀").map(_.getBytes(UTF_8)),
+      2 -> Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.numChar))
+        .map(_.mkString.getBytes(UTF_8)),
+      1 -> Gen.oneOf("a@b.co", "x.y@ex-1.org", "10.0.3.7", "192.168.0.1",
+        "+1 555-012-3456", "555 012 3456", "(555)").map(_.getBytes(UTF_8)),
+      1 -> Gen.oneOf(Seq(0xFF), Seq(0xC3), Seq(0x80), Seq(0xC0, 0x80),
+        Seq(0xED, 0xA0, 0x80), Seq(0xF4, 0x90, 0x80, 0x80))
+        .map(_.map(_.toByte).toArray))
+    val text: Gen[Array[Byte]] = Gen.choose(0, 30)
+      .flatMap(Gen.listOfN(_, piece)).map(_.toArray.flatten)
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(8),
+      Prop.forAllNoShrink(Gen.listOfN(300, text)) { texts =>
+        val inputs = texts.zipWithIndex.map { case (t, i) => (i, t) }
+          .toDF("id", "b").select(col("id"), col("b").cast("string").as("text"))
+        val diff = redactDiffers(inputs).limit(5).collect()
+        Prop(diff.isEmpty) :| diff.mkString("\n")
+      })
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
+  test("redactPii refuses a collated string at analysis") {
+    val lcase = spark.sql("SELECT 'A@B.CO 10.0.0.1' COLLATE UTF8_LCASE AS text")
+    // regexp_replace takes it (and matches case-insensitively); the kernel
+    // is for plain strings only
+    assert(lcase.select(regexRedact(col("text"))).head().getString(0) ===
+      "[EMAIL] [IPV4]")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      lcase.select(TextAnalysis.redactPii(col("text"))).collect()
+    }
+    assert(e.getMessage.contains("redact_pii requires a string input"),
+      e.getMessage)
+  }
 }
