@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators._
 import graft.pipeline.{ConfigJson, Pipeline, TaskReport}
-import graft.sources.Sinks
+import graft.sources.{Sinks, Sources}
 import graft.multimodal.Multimodal
 import graft.streaming.{StatefulSessionize, StreamingIngest}
 
@@ -479,7 +479,7 @@ object Queries {
       "reducers": 8
     }"""
     Pipeline.run(s, ConfigJson.parse(json), outDir)
-    s.read.parquet(outDir)
+    Sources.parquet(s, outDir)
       .groupBy(col("bucket").cast("long").as("bucket"), col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         sum(dec2(col("o_totalprice"))).cast("double").as("sum_total"))
@@ -2283,11 +2283,11 @@ object Queries {
     import org.apache.spark.sql.types.LongType
     // file-stream sources need a directory: stage the table into a temp
     // landing dir (the continuous-ingest layout this operator serves)
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Sources.parquet(s, s"$dir/events.parquet")
     val landing =
       tempDir("graft_hourly_land_")
     raw.write.mode("overwrite").parquet(landing)
-    val staged = s.read.parquet(landing)
+    val staged = Sources.parquet(s, landing)
     val stream0 = s.readStream.schema(staged.schema).parquet(landing)
     val stream =
       if (staged.schema("ts").dataType == LongType)
@@ -2320,12 +2320,12 @@ object Queries {
     */
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame = withSizedState(s, dir) {
     import org.apache.spark.sql.types.LongType
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Sources.parquet(s, s"$dir/events.parquet")
     val tmp = tempDir("graft_ssj_land_")
     val landing = s"$tmp/landing"; val ckpt = s"$tmp/ckpt"
     val outDir = s"$tmp/out"
     raw.write.mode("overwrite").parquet(landing)
-    val staged = s.read.parquet(landing)
+    val staged = Sources.parquet(s, landing)
     StreamingIngest.drainAppendToDir(s, landing,
       staged.schema, { stream0 =>
         val stream =
@@ -2340,7 +2340,7 @@ object Queries {
             (unix_micros(col("b_ts")) - unix_micros(col("a_ts")))
               .as("delay_us"))
       }, ckpt, outDir)
-    s.read.parquet(outDir).select(col("view_id"), col("purchase_id"),
+    Sources.parquet(s, outDir).select(col("view_id"), col("purchase_id"),
         col("user_id"), col("delay_us"))
       .orderBy(col("view_id"), col("purchase_id"))
   }
@@ -2554,7 +2554,7 @@ object Queries {
     val d = documents(s, dir).select(col("doc_id"), col("text"))
     drainTwice(s"$tmp/landing", d.where(pmod(col("doc_id"), lit(2)) === 0),
       d.where(pmod(col("doc_id"), lit(2)) === 1))(sink(_, outDir, s"$tmp/ckpt"))
-    s.read.parquet(outDir).select(col("fp"), col("keep_id"))
+    Sources.parquet(s, outDir).select(col("fp"), col("keep_id"))
       .orderBy(col("fp"))
   }
 
@@ -3534,7 +3534,7 @@ object Queries {
       .select(col("user_id"), lit(-1L).as("event_id"), col("t_us"))
       .coalesce(1).write.mode("append").parquet(landing)
     StatefulSessionize.drainToDir(s, landing, ev.schema, ckpt, outDir)
-    s.read.parquet(outDir)
+    Sources.parquet(s, outDir)
       .select(col("user_id"), col("session_idx"), col("n_events"),
         col("start_us"), col("end_us"))
       .orderBy(col("user_id"), col("session_idx"))
@@ -3568,7 +3568,7 @@ object Queries {
       st => StreamingIngest.dedupStream(
         st, Seq("user_id", "event_type")),
       ckpt, outDir)
-    s.read.parquet(outDir)
+    Sources.parquet(s, outDir)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t_us"))
       .orderBy(col("user_id"), col("event_type"), col("t_us"))
   }
@@ -3630,7 +3630,7 @@ object Queries {
       lit("zz_advance").as("event_type"), lit(0.0).as("value"))
     // drain 1's watermark ends past every window; in drain 2 the real
     // windows emit and the late rows die
-    s.read.parquet(lateReplay(tempDir("graft_late_"), ev, mnUs, mxUs,
+    Sources.parquet(s, lateReplay(tempDir("graft_late_"), ev, mnUs, mxUs,
         advancer)(StreamingIngest.hourlyCounts(_)))
       .where(col("event_type") =!= "zz_advance")
       .select(hourBucket(col("hour_start")).as("bucket"), col("event_type"),
@@ -4253,7 +4253,7 @@ object Queries {
       StreamingIngest.cdcMergeSink(_, "o_orderkey", "seq", "op", payload,
         snapDir, checkpointDir = Some(ckpt), availableNow = true)
     }
-    val snaps = s.read.parquet(snapDir)
+    val snaps = Sources.parquet(s, snapDir)
     val vmax = snaps.agg(max(col("version"))).collect()(0)
       .get(0).asInstanceOf[Number].longValue
     snaps.where(col("version") === vmax)
@@ -4280,7 +4280,7 @@ object Queries {
     val ev = events(s, dir).select(col("event_id"), col("user_id"),
       col("event_type"))
     ev.write.mode("overwrite").parquet(landing)
-    val staged = s.read.parquet(landing)
+    val staged = Sources.parquet(s, landing)
     val dim = customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey"))
     val stream = s.readStream.schema(staged.schema).parquet(landing)
@@ -5184,7 +5184,7 @@ object Queries {
       StreamingIngest.heavyHitterSink(_, "t", countsDir,
         checkpointDir = Some(ckpt), availableNow = true)
     }
-    val counts = s.read.parquet(countsDir)
+    val counts = Sources.parquet(s, countsDir)
       .groupBy(col("item")).agg(sum(col("cnt")).as("cnt"))
     counts
       .crossJoin(broadcast(counts.agg(sum(col("cnt")).as("n_total"))))
@@ -5582,9 +5582,9 @@ object Queries {
     // de-fragment the fixture (observed: every leaf already at 1 file)
     ev.repartition(48, col("day"), pmod(col("event_id"), lit(12L)))
       .write.partitionBy("day").mode("overwrite").parquet(s"$tmp/frag")
-    val frag = s.read.parquet(s"$tmp/frag")
+    val frag = Sources.parquet(s, s"$tmp/frag")
     Sinks.compactPartitions(frag, "day", s"$tmp/compact")
-    s.read.parquet(s"$tmp/compact")
+    Sources.parquet(s, s"$tmp/compact")
       .groupBy(col("day").cast("long").as("day_bucket"))
       .agg(count(lit(1)).as("n_events"),
         sum(dec2(col("value"))).cast("double").as("sum_value"))
@@ -5631,7 +5631,7 @@ object Queries {
     // (≤ mx+30min), so all sessions emit once; drain 2's late replay must
     // be DROPPED, or duplicate sessions emit, and its advancer closes
     // advancer 1's own session
-    s.read.parquet(lateReplay(tempDir("graft_sesswin_"), ev, mnUs, mxUs,
+    Sources.parquet(s, lateReplay(tempDir("graft_sesswin_"), ev, mnUs, mxUs,
         advancer)(StreamingIngest.sessionWindowCountsAppend(
         _, "user_id", "ts", "30 minutes", "1 hour")))
       .where(col("user_id") >= 0L)
@@ -5668,7 +5668,7 @@ object Queries {
       st => StreamingIngest.dedupWithinWatermark(st, Seq("event_id"), "ts",
         "2 hours"),
       ckpt, outDir)
-    s.read.parquet(outDir)
+    Sources.parquet(s, outDir)
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("t_us"))
       .orderBy(col("event_id"))
@@ -5933,8 +5933,8 @@ object Queries {
     cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
     IvfIndex.assign(e, cent).write.mode("overwrite")
       .parquet(s"$idxDir/corpus")
-    val centR = s.read.parquet(s"$idxDir/centroids")
-    val corpusR = s.read.parquet(s"$idxDir/corpus")
+    val centR = Sources.parquet(s, s"$idxDir/centroids")
+    val corpusR = Sources.parquet(s, s"$idxDir/corpus")
     IvfIndex.annTopKIndexed(e.where(col("id") < 10), corpusR, k = 5,
         nprobe = 4, centR)
       .orderBy(col("query_id"), col("rank"))
@@ -6149,7 +6149,7 @@ object Queries {
         Seq("session_idx" -> col("session_idx")),
         s"$tmp/out", s"$tmp/ckpt")
       .awaitTermination()
-    s.read.parquet(s"$tmp/out")
+    Sources.parquet(s, s"$tmp/out")
       .select(col("event_id"), col("right_session_idx").as("session_idx"))
       .orderBy(col("event_id"))
   }
@@ -7032,7 +7032,7 @@ object Queries {
       StreamingIngest.cmsSink(_, "t", cellsDir, checkpointDir = Some(ckpt),
         availableNow = true)
     }
-    val cells = s.read.parquet(cellsDir)
+    val cells = Sources.parquet(s, cellsDir)
       .groupBy(col("j"), col("b")).agg(sum(col("cnt")).as("cnt"))
     val exact = toks.groupBy(col("t")).agg(count(lit(1)).as("exact_cnt"))
     cmsTop10(cells, exact)
@@ -7416,7 +7416,7 @@ object Queries {
       StreamingIngest.heavyHitterSink(_, "day_bucket", countsDir,
         checkpointDir = Some(ckpt), availableNow = true)
     }
-    dailyCusum(s.read.parquet(countsDir)
+    dailyCusum(Sources.parquet(s, countsDir)
       .groupBy(col("item")).agg(sum(col("cnt")).as("n_orders"))
       .select(col("item").cast("long").as("day_bucket"), col("n_orders")))
   }

@@ -10,8 +10,13 @@ import org.apache.spark.sql.types.LongType
   * a scan here is already split into per-file(-range) tasks.
   */
 object Tables {
+  /** One table, through [[graft.sources.Sources.parquet]]: a driver table is
+    * one file (or a directory of files), so its schema comes from the one
+    * footer Spark's inference would read, without the Spark job that
+    * inference runs. Any other layout is Spark's own read.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

@@ -15,7 +15,7 @@ object TriProfile {
       val t0 = System.nanoTime(); f
       println(f"TRI $n%-12s ${(System.nanoTime - t0) / 1e9}%6.2f s")
     }
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = graft.sources.Sources.parquet(spark, s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey"))
     time("warm") { spark.range(100000L).selectExpr("sum(id)").collect() }
     val edges = li.select(col("l_orderkey").as("k"), col("l_partkey").as("pa"))

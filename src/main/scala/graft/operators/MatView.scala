@@ -43,7 +43,7 @@ object MatView {
   def buildThenMaintain(spark: SparkSession, old: DataFrame,
       delta: DataFrame, mvDir: String): DataFrame = {
     dailyPartials(old).write.mode("overwrite").parquet(mvDir)
-    val stored = spark.read.parquet(mvDir)
+    val stored = graft.sources.Sources.parquet(spark, mvDir)
     merge(stored.unionByName(dailyPartials(delta)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.{ErrorPolicy, TimePartitioning}
+import graft.sources.Sources
 
 /** Config-driven ETL pipeline — the Spark re-expression of the reference's
   * executor contract: an Embulk run is `input → filters → (partitioning?) →
@@ -143,7 +144,7 @@ object Pipeline {
           row(i, r, col(s"_v$i")) }: _*)))
     }
     val fkRows = rules.zipWithIndex.collect { case (r, i) if r.rule == "fk" =>
-      val ref = spark.read.parquet(r.refPath.get)
+      val ref = Sources.parquet(spark, r.refPath.get)
         .select(col(r.refColumn.get).as("_ref")).distinct()
       df.select(col(r.column).as("_k")).where(col("_k").isNotNull)
         .join(ref, col("_k") === col("_ref"), "left_anti")
@@ -237,7 +238,7 @@ object Pipeline {
     // labels every job this pipeline triggers (ib:20-22 → job name).
     config.sparkConf.foreach { case (k, v) => spark.conf.set(k, v) }
     config.jobName.foreach(spark.sparkContext.setJobDescription)
-    val in = spark.read.format(config.format).load(config.inputPath)
+    val in = Sources.load(spark, config.format, config.inputPath)
     val transformed = config.transforms.foldLeft(in) { (df, t) =>
       t match {
         case Select(cs)      => df.select(cs.map(col): _*)
@@ -308,7 +309,7 @@ object Pipeline {
             .where(col("_gq_band").isin(keep.map(_.toLong): _*))
             .drop("_gq_score", "_gq_band")
         case Decontaminate(textCol, evalPath, fmt, evalWhere, n) =>
-          val evalRaw = spark.read.format(fmt).load(evalPath)
+          val evalRaw = Sources.load(spark, fmt, evalPath)
           val evalSet = evalWhere.fold(evalRaw)(evalRaw.where)
           // the set dedups the grams: no shuffle for a `distinct`
           val grams = new java.util.HashSet[UTF8String]()

@@ -169,5 +169,5 @@ object ResumableWrite {
 
   /** The written layout read back (partition column `bucket` included). */
   def readBack(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
+    graft.sources.Sources.parquet(spark, outDir)
 }

@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graftbridge.BusMarker
 import scala.collection.mutable
 
 /** Per-task execution reporting — the Spark-native surface for the
@@ -21,6 +24,7 @@ final case class TaskRow(stageId: Int, taskId: Long, attempt: Int,
 final class TaskReport extends SparkListener {
   private val rows = mutable.ArrayBuffer.empty[TaskRow]
   private var failed = 0
+  private val drained = new CountDownLatch(1)
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
@@ -35,13 +39,26 @@ final class TaskReport extends SparkListener {
       if (m != null) m.shuffleWriteMetrics.recordsWritten else 0L)
   }
 
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case BusMarker(owner) if owner eq this => drained.countDown()
+    case _ =>
+  }
+
   /** Wait until every event posted so far has reached this report, then
     * remove it from the session, so it stops recording later tasks. The
-    * rows recorded so far stay readable.
+    * rows recorded so far stay readable. The wait is for this report's own
+    * marker ([[org.apache.spark.sql.graftbridge.BusMarker]]) to come
+    * through its queue: no polling, and no wait on queues it does not use.
+    * Like the bus's own drain, it gives up after 10 s, loudly.
     */
   def detach(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftbridge.BusDrain(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(this)
+    val sc = spark.sparkContext
+    BusMarker.post(sc, this)
+    try {
+      if (!sc.isStopped && !drained.await(10, TimeUnit.SECONDS))
+        throw new TimeoutException(
+          "the task report's listener queue did not drain within 10 s")
+    } finally sc.removeSparkListener(this)
   }
 
   def taskRows: Seq[TaskRow] = synchronized(rows.toSeq)

@@ -66,6 +66,6 @@ object TxPublish {
   def read(spark: SparkSession, base: String, table: String): DataFrame = {
     val v = currentVersion(base).getOrElse(
       throw new IllegalStateException(s"no committed version under $base"))
-    spark.read.parquet(s"$base/$table/v=$v")
+    graft.sources.Sources.parquet(spark, s"$base/$table/v=$v")
   }
 }

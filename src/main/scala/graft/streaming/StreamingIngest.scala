@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.sources.Sources
 
 /** Streaming ingest (SURVEY §2 E7): the continuous version of the
   * reference's bulk load. Where the reference runs a finite MapReduce job
@@ -215,7 +216,7 @@ object StreamingIngest {
         // fresh against an accidentally-empty corpus
         val fpPath = new org.apache.hadoop.fs.Path(fpDir)
         val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Option.when(fs.exists(fpPath))(spark.read.parquet(fpDir))
+        Option.when(fs.exists(fpPath))(Sources.parquet(spark, fpDir))
     } { (fresh, batchId) =>
       fresh.select(col("fp"))
         .write.mode("overwrite").parquet(s"$fpDir/batch_id=$batchId")
@@ -359,7 +360,7 @@ object StreamingIngest {
         batch.select(col(key) +: payload.map(col): _*).schema.fields)
       val base =
         if (fs.exists(snapPath)) {
-          val prior = spark.read.parquet(snapDir)
+          val prior = Sources.parquet(spark, snapDir)
             .where(col("version") < batchId)
           // O(1) driver scalar: the latest committed version id
           val vrow = prior.agg(max(col("version"))).collect()(0)

@@ -395,28 +395,30 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       Pipeline.DqRule("fk", "a", refPath = Some("p"), refColumn = Some("k"))))))
   }
 
-  test("a non-failing dq_check starts no job at plan time and names a " +
-      "missing column") {
+  /** The Spark jobs started while `Pipeline.plan` plans `cfg`. */
+  private def planJobs(cfg: Pipeline.Config): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.graftbridge.BusDrain
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    BusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.plan(spark, cfg)
+      BusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
+
+  test("a non-failing dq_check starts no job at plan time and names a " +
+      "missing column") {
     def config(dq: String) = graft.pipeline.ConfigJson.parse(s"""{
       "in": {"path": "$sf/orders.parquet"},
       "filters": [{"type": "where", "predicate": "o_totalprice > 0"}$dq]}""")
-    def jobs(cfg: Pipeline.Config): Int = {
-      val sc = spark.sparkContext
-      val started = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          started.incrementAndGet()
-      }
-      BusDrain(sc)
-      sc.addSparkListener(listener)
-      try {
-        Pipeline.plan(spark, cfg)
-        BusDrain(sc)
-      } finally sc.removeSparkListener(listener)
-      started.get
-    }
     // every rule kind, the fk reference included: none of them is counted
     val dq = s""", {"type": "dq_check", "fail": false, "rules": [
       {"rule": "not_null", "column": "o_custkey"},
@@ -425,15 +427,57 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       {"rule": "max", "column": "o_totalprice", "value": "1e9"},
       {"rule": "fk", "column": "o_custkey",
        "ref_path": "$sf/customer.parquet", "ref_column": "c_custkey"}]}"""
-    jobs(config("")) // warm the file listing and schema reads
-    val without = jobs(config(""))
-    assert(jobs(config(dq)) === without)
+    assert(planJobs(config("")) === 0)
+    assert(planJobs(config(dq)) === 0)
     val e = intercept[IllegalArgumentException](Pipeline.plan(spark, config(
       """, {"type": "dq_check", "rules": [
         {"rule": "not_null", "column": "o_custkey"},
         {"rule": "unique", "column": "o_nokey"}]}""")))
     assert(e.getMessage.startsWith("dq_check: no column o_nokey in the input"),
       e.getMessage)
+  }
+
+  test("planning reads no parquet schema with a job: the load config " +
+      "starts none, the curation config only its eval collect") {
+    import graft.pipeline.ConfigJson
+    // Spark-written multi-file inputs, as a bulk load meets them
+    val dir = java.nio.file.Files.createTempDirectory("graft_planjobs_")
+    spark.read.parquet(s"$sf/events.parquet").repartition(3)
+      .write.parquet(s"$dir/events")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    docs.repartition(3).write.parquet(s"$dir/documents")
+    docs.orderBy("doc_id").limit(5).write.parquet(s"$dir/eval")
+    val load = ConfigJson.parse(s"""{
+      "in": {"path": "$dir/events", "format": "parquet"},
+      "filters": [
+        {"type": "where", "predicate": "event_type <> 'error'"},
+        {"type": "derive", "name": "k",
+         "expression": "get_json_object(props, '$$.k')"},
+        {"type": "cast", "col": "k", "to": "int"},
+        {"type": "rename", "from": "value", "to": "amount"}],
+      "partitioning": {"type": "timestamp", "column": "ts", "unit": "day",
+        "map_side_partition_split": 4},
+      "out": {"format": "parquet"}}""")
+    val curate = ConfigJson.parse(s"""{
+      "in": {"path": "$dir/documents", "format": "parquet"},
+      "filters": [
+        {"type": "nfc_clean", "column": "text"},
+        {"type": "dq_check", "fail": false, "rules": [
+          {"rule": "not_null", "column": "doc_id"},
+          {"rule": "min", "column": "n_chars", "value": "1"}]},
+        {"type": "dedup", "id": "doc_id", "column": "text",
+         "normalized": true},
+        {"type": "lang_filter", "column": "text", "keep": ["en", "de"]},
+        {"type": "quality_filter", "column": "text", "min_score": 0.6},
+        {"type": "pii_redact", "column": "text"},
+        {"type": "decontaminate", "column": "text", "id": "doc_id",
+         "eval": {"path": "$dir/eval"}, "ngram": 8},
+        {"type": "source_quota", "key": "source", "column": "text",
+         "id": "doc_id", "k": 5}],
+      "out": {"format": "parquet"}}""")
+    // no warm-up: a first plan must not need a schema job either
+    assert(planJobs(load) === 0)
+    assert(planJobs(curate) === 1)
   }
 
   test("ConfigJson rejects unknown keys at the root and in `in` and `out`") {

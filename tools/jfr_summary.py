@@ -2,7 +2,7 @@
 """Where a JFR recording of a graft job spends its time, forks and allocations.
 
 Usage: python3 tools/jfr_summary.py <recording.jfr | print.json> [--top N] [--depth N]
-                                   [--frame REGEX]
+                                   [--frame REGEX] [--thread REGEX]
 
 Reads the JSON that `jfr print --json` writes (a .jfr file is passed through
 `jfr print` once per event type below; a .json file is read as that output)
@@ -13,6 +13,9 @@ and prints three things:
     stack, counted once per sample), each as a share of those samples;
     with --frame REGEX, also how many of those samples have a frame
     matching REGEX (`re.search`) anywhere on the stack, 0 included;
+    with --thread REGEX, the same for the samples of every thread whose
+    name matches REGEX (`re.search`) instead, e.g. `--thread '^main$'` for
+    the driver's main thread;
   - `jdk.ProcessStart`: every process the JVM started, grouped by
     executable, with one example command line;
   - `jdk.ObjectAllocationSample`: the top allocation sites (the allocating
@@ -81,7 +84,7 @@ def most_common(counter, top):
     return sorted(counter.items(), key=lambda kv: (-kv[1], kv[0]))[:top]
 
 
-def summarize(events, top, frame=None):
+def summarize(events, top, frame=None, thread=None):
     """The report's lines."""
     by_type = collections.defaultdict(list)
     for e in events:
@@ -89,13 +92,17 @@ def summarize(events, top, frame=None):
     lines = []
 
     samples = by_type[SAMPLE]
-    execs = [frames(e) for e in samples if thread_name(e).startswith(EXECUTOR_THREAD)]
-    lines.append(f"executor CPU samples: {len(execs)} of {len(samples)} "
+    if thread is None:
+        who, picked = "executor", lambda name: name.startswith(EXECUTOR_THREAD)
+    else:
+        who, picked = f"thread {thread}", re.compile(thread).search
+    execs = [frames(e) for e in samples if picked(thread_name(e))]
+    lines.append(f"{who} CPU samples: {len(execs)} of {len(samples)} "
                  "execution samples")
     if frame is not None:
         rx = re.compile(frame)
         n = sum(1 for fs in execs if any(rx.search(f) for f in fs))
-        lines.append(f"executor samples with a frame matching {frame}: "
+        lines.append(f"{who} samples with a frame matching {frame}: "
                      f"{n} of {len(execs)} ({pct(n, len(execs)):.1f}%)")
     self_c = collections.Counter(fs[0] for fs in execs if fs)
     incl_c = collections.Counter(f for fs in execs for f in set(fs))
@@ -137,9 +144,12 @@ def main(argv=None):
                     help="stack depth of execution samples read from a .jfr")
     ap.add_argument("--frame", metavar="REGEX",
                     help="count executor samples with a matching frame")
+    ap.add_argument("--thread", metavar="REGEX",
+                    help="summarize the samples of threads whose name matches "
+                         "instead of the executor threads")
     args = ap.parse_args(argv)
     print("\n".join(summarize(load(args.recording, args.depth), args.top,
-                              args.frame)))
+                              args.frame, args.thread)))
     return 0
 
 

@@ -62,6 +62,24 @@ class JfrSummaryTest(unittest.TestCase):
         self.assertFalse(any(ln[:2] == ["executor", "samples"]
                              for ln in self.report()))
 
+    def test_thread_regex_picks_the_samples_summarized(self):
+        # the scheduler thread's one sample, instead of the workers'
+        lines = self.report("--thread", "^dag-scheduler", "--frame", "Driver")
+        self.assertIn("thread ^dag-scheduler CPU samples: 1 of 4 execution "
+                      "samples".split(), lines)
+        self.assertIn("thread ^dag-scheduler samples with a frame matching "
+                      "Driver: 1 of 1 (100.0%)".split(), lines)
+        self.assertEqual(self.section(lines, "top self frames:"), [
+            ["100.0%", "1", "graft.Driver.plan"]])
+        # a regex, not a prefix: "main" has no execution sample here
+        lines = self.report("--thread", "^main$")
+        self.assertIn("thread ^main$ CPU samples: 0 of 4 execution "
+                      "samples".split(), lines)
+        self.assertEqual(self.section(lines, "top self frames:"), [])
+        # the executor prefix stays the default
+        self.assertIn("executor CPU samples: 3 of 4 execution samples".split(),
+                      self.report())
+
     def test_process_starts_group_by_executable(self):
         lines = self.report()
         self.assertIn("process starts: 3".split(), lines)
